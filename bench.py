@@ -1,9 +1,9 @@
 """Benchmark runner: times every registered query at $SPARK_GRAFT_SF_DIR
 (default sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line.
 
-Each query is forced to full execution with a count-style noop action
-(``df.write.format("noop")``) so timings measure the whole plan without
-driver materialization cost.
+Each query is forced to full execution with a noop-sink write
+(``runner.timed_runs``) so timings measure the whole plan without driver
+materialization cost.
 
 Noise hygiene (r06 verdict: same-code runs differed up to 37% per
 query, making per-query regression tables noise): each query now runs
@@ -17,7 +17,8 @@ recorded next to the median in BENCH_FULL.json (``spread``), plus the
 suite-level ``median_rel_spread``, so a future delta can be judged
 against the measured same-run variance instead of guessed.  Spark's
 cache and the operator-library persist() handles are dropped between
-repeats so no repeat reuses a prior run's materialized blocks.
+repeats (``runner.release``) so no repeat reuses a prior run's
+materialized blocks.
 """
 
 from __future__ import annotations
@@ -26,36 +27,11 @@ import json
 import os
 import statistics
 import sys
-import time
 
-from pyspark_pipelining_spark import cache
-from pyspark_pipelining_spark.queries import QUERIES
-from pyspark_pipelining_spark.session import get_spark
+from pyspark_pipelining_spark import runner
 
-
-def _host_probe() -> dict:
-    """Snapshot host contention counters (Linux /proc; empty elsewhere).
-
-    ``load1`` BEFORE the run is the ambient signal (the run itself
-    drives load up afterwards); the steal-tick delta across the run is
-    the hypervisor-contention signal a same-code slowdown cannot fake.
-    Recorded so a bench delta can be adjudicated from the artifact
-    itself instead of re-deriving uniform-inflation arguments (r08)."""
-    probe: dict = {}
-    try:
-        with open("/proc/loadavg") as fh:
-            parts = fh.read().split()
-        probe["load1"], probe["load5"] = float(parts[0]), float(parts[1])
-    except (OSError, ValueError, IndexError):
-        pass
-    try:
-        with open("/proc/stat") as fh:
-            vals = [int(x) for x in fh.readline().split()[1:]]
-        probe["total_ticks"] = sum(vals)
-        probe["steal_ticks"] = vals[7] if len(vals) > 7 else 0
-    except (OSError, ValueError, IndexError):
-        pass
-    return probe
+# re-exported: perfbench/worker.py reads the same probe around its runs
+_host_probe = runner.host_probe
 
 
 def _contention(before: dict, after: dict) -> dict:
@@ -79,26 +55,14 @@ def main() -> None:
     warmups = max(0, int(os.environ.get("SPARK_GRAFT_BENCH_WARMUPS", "1")))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
     probe_before = _host_probe()  # before the JVM starts: ambient load
-    spark = get_spark("bench")
+    spark = runner.session("bench")
     # warm the JVM + parquet footers with one tiny action
     spark.read.parquet(f"{sf_dir}/region.parquet").count()
     timings: dict[str, float] = {}
     spreads: dict[str, float] = {}
-    for name, fn in sorted(QUERIES.items()):
-        times: list[float] = []
+    for name, fn in sorted(runner.resolve().items()):
         try:
-            for rep in range(warmups + reps):
-                start = time.perf_counter()
-                try:
-                    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                    if rep >= warmups:
-                        times.append(round(time.perf_counter() - start, 3))
-                finally:
-                    # drop intra-operator persist() handles AND the session
-                    # cache so no repeat (or later query) reuses materialized
-                    # blocks from a previous execution
-                    cache.release_all()
-                    spark.catalog.clearCache()
+            times = runner.timed_runs(spark, fn, sf_dir, reps, warmups)
         except Exception as exc:  # keep the bench line parseable on failure
             print(f"bench: query {name} failed: {exc}", file=sys.stderr)
             times = []

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pyspark_pipelining_spark import cache
+from pyspark_pipelining_spark.operators.graph import symmetrize
 from pyspark_pipelining_spark.operators.text import with_words
 
 
@@ -281,32 +282,10 @@ def cluster_assignments(
     cluster with lost-executor concerns, swap for reliable
     ``checkpoint()`` with a checkpoint dir; semantics are identical.
     """
-    # symmetrize with a map-side explode (r17): the former
-    # union-of-two-scans referenced the pair pipeline from two branches,
-    # which forced an EAGER checkpoint of `p` (two union branches would
-    # race-compute the LSH pipeline inside one job; within-job stage
-    # sharing dedups by RDD identity, but the two branches were distinct
-    # scans of the same cached RDD executing in one stage's disjoint
-    # task ranges — each task range computing partitions concurrently).
-    # One explode = one reference = the whole pair pipeline runs exactly
-    # once inside the first block job, and the separate pair
-    # materialization action disappears.
-    edges = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("doc_1").alias("src"), F.col("doc_2").alias("dst")
-                    ),
-                    F.struct(
-                        F.col("doc_2").alias("src"), F.col("doc_1").alias("dst")
-                    ),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .localCheckpoint(eager=False)
-    )
+    # one map-side explode (graph.symmetrize) = one reference to the
+    # pair pipeline, so it runs exactly once inside the first block job
+    # and needs no separate materialization action
+    edges = symmetrize(pairs, "doc_1", "doc_2", "src", "dst").localCheckpoint(eager=False)
     # fused round 0: every vertex appears as src in the symmetrized edge
     # list, so one groupBy yields both the vertex set and its first label
     labels = (
@@ -359,6 +338,8 @@ def cluster_assignments(
         for i, f in enumerate(probe[1:], start=1):
             tagged = tagged.unionByName(f.select(F.lit(i).alias("i"), "cluster_id"))
         rows = tagged.groupBy("i").agg(F.sum("cluster_id").alias("s")).collect()
+        if not rows:  # no pairs: every frame is empty, nothing to label
+            return labels
         sums = [r["s"] for r in sorted(rows, key=lambda r: r["i"])]
         chain = ([] if prev_sum is None else [prev_sum]) + sums
         for j in range(1, len(chain)):

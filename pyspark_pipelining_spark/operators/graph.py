@@ -88,7 +88,9 @@ def pagerank_int(
     ed2 = ed.join(deg, on="id").localCheckpoint(eager=False)
     # n as a driver scalar (the cluster_assignments convergence-check
     # pattern): it parameterizes integer constants the oracle mirrors
-    n = ed2.select("id").distinct().count()
+    # an empty edge list has no nodes: any n > 0 yields the same empty
+    # ``id, r`` frame without dividing by zero
+    n = max(ed2.select("id").distinct().count(), 1)
     r0 = scale // n
     base_c = (scale * (damp_den - damp_num) // damp_den) // n
     # symmetrized input ⇒ every node has in-edges ⇒ the (dst) aggregation

@@ -799,62 +799,80 @@ from pyspark_pipelining_spark.queries_mining import (  # noqa: E402
 )
 from pyspark_pipelining_spark.queries_relational import ORACLES_REL, QUERIES_REL  # noqa: E402
 
-QUERIES: dict[str, QueryFn] = {
-    "reach_overall": q_reach_overall,
-    "reach_by_etype": q_reach_by_etype,
-    "reach_all_dims": q_reach_all_dims,
-    "friendly_reach": q_friendly_reach,
-    "frequency_overall": q_frequency_overall,
-    "frequency_by_etype": q_frequency_by_etype,
-    "reach_week": q_reach_week,
-    "pairwise_matrix": q_pairwise_matrix,
-    "pairwise_pairs": q_pairwise_pairs,
-    "mapping": q_mapping,
-    "project_univ": q_project_univ,
-    "before_after_lift": q_before_after_lift,
-    "before_after_counts": q_before_after_counts,
-    "qa_log_vs_adserver": q_qa_log_vs_adserver,
-    "qa_grouping_sets": q_qa_grouping_sets,
-    "qa_trailing_window": q_qa_trailing_window,
-    "qa_distinct_meta": q_qa_distinct_meta,
-    "qa_hourshift": q_qa_hourshift,
-    "sessionize": q_sessionize,
-    "salted_event_counts": q_salted_event_counts,
-    **QUERIES_LLM,
-    **QUERIES_REL,
-    **QUERIES_CORPUS,
-    **QUERIES_ANALYTICS,
-    **QUERIES_COVERAGE,
-    **QUERIES_ANN_MEDIA,
-    **QUERIES_MINING,
-}
 
-ORACLES: dict[str, str] = {
-    "reach_overall": SQL_REACH_OVERALL,
-    "reach_by_etype": SQL_REACH_BY_ETYPE,
-    "reach_all_dims": SQL_REACH_ALL_DIMS,
-    "friendly_reach": SQL_FRIENDLY_REACH,
-    "frequency_overall": SQL_FREQUENCY_OVERALL,
-    "frequency_by_etype": SQL_FREQUENCY_BY_ETYPE,
-    "reach_week": SQL_REACH_WEEK,
-    "pairwise_matrix": SQL_PAIRWISE_MATRIX,
-    "pairwise_pairs": SQL_PAIRWISE_PAIRS,
-    "mapping": SQL_MAPPING,
-    "project_univ": SQL_PROJECT_UNIV,
-    "before_after_lift": SQL_BEFORE_AFTER_LIFT,
-    "before_after_counts": SQL_BEFORE_AFTER_COUNTS,
-    "qa_log_vs_adserver": SQL_QA_LOG_VS_ADSERVER,
-    "qa_grouping_sets": SQL_QA_GROUPING_SETS,
-    "qa_trailing_window": SQL_QA_TRAILING_WINDOW,
-    "qa_distinct_meta": SQL_QA_DISTINCT_META,
-    "qa_hourshift": SQL_QA_HOURSHIFT,
-    "sessionize": SQL_SESSIONIZE,
-    "salted_event_counts": SQL_SALTED_EVENT_COUNTS,
-    **ORACLES_LLM,
-    **ORACLES_REL,
-    **ORACLES_CORPUS,
-    **ORACLES_ANALYTICS,
-    **ORACLES_COVERAGE,
-    **ORACLES_ANN_MEDIA,
-    **ORACLES_MINING,
-}
+def _merge(*parts: dict) -> dict:
+    """One registry from the core and family dicts.  A name registered
+    twice would silently shadow the other query or oracle, so it fails
+    the import instead."""
+    merged: dict = {}
+    for part in parts:
+        clash = merged.keys() & part.keys()
+        if clash:
+            raise ValueError(f"query names registered twice: {sorted(clash)}")
+        merged.update(part)
+    return merged
+
+
+QUERIES: dict[str, QueryFn] = _merge(
+    {
+        "reach_overall": q_reach_overall,
+        "reach_by_etype": q_reach_by_etype,
+        "reach_all_dims": q_reach_all_dims,
+        "friendly_reach": q_friendly_reach,
+        "frequency_overall": q_frequency_overall,
+        "frequency_by_etype": q_frequency_by_etype,
+        "reach_week": q_reach_week,
+        "pairwise_matrix": q_pairwise_matrix,
+        "pairwise_pairs": q_pairwise_pairs,
+        "mapping": q_mapping,
+        "project_univ": q_project_univ,
+        "before_after_lift": q_before_after_lift,
+        "before_after_counts": q_before_after_counts,
+        "qa_log_vs_adserver": q_qa_log_vs_adserver,
+        "qa_grouping_sets": q_qa_grouping_sets,
+        "qa_trailing_window": q_qa_trailing_window,
+        "qa_distinct_meta": q_qa_distinct_meta,
+        "qa_hourshift": q_qa_hourshift,
+        "sessionize": q_sessionize,
+        "salted_event_counts": q_salted_event_counts,
+    },
+    QUERIES_LLM,
+    QUERIES_REL,
+    QUERIES_CORPUS,
+    QUERIES_ANALYTICS,
+    QUERIES_COVERAGE,
+    QUERIES_ANN_MEDIA,
+    QUERIES_MINING,
+)
+
+ORACLES: dict[str, str] = _merge(
+    {
+        "reach_overall": SQL_REACH_OVERALL,
+        "reach_by_etype": SQL_REACH_BY_ETYPE,
+        "reach_all_dims": SQL_REACH_ALL_DIMS,
+        "friendly_reach": SQL_FRIENDLY_REACH,
+        "frequency_overall": SQL_FREQUENCY_OVERALL,
+        "frequency_by_etype": SQL_FREQUENCY_BY_ETYPE,
+        "reach_week": SQL_REACH_WEEK,
+        "pairwise_matrix": SQL_PAIRWISE_MATRIX,
+        "pairwise_pairs": SQL_PAIRWISE_PAIRS,
+        "mapping": SQL_MAPPING,
+        "project_univ": SQL_PROJECT_UNIV,
+        "before_after_lift": SQL_BEFORE_AFTER_LIFT,
+        "before_after_counts": SQL_BEFORE_AFTER_COUNTS,
+        "qa_log_vs_adserver": SQL_QA_LOG_VS_ADSERVER,
+        "qa_grouping_sets": SQL_QA_GROUPING_SETS,
+        "qa_trailing_window": SQL_QA_TRAILING_WINDOW,
+        "qa_distinct_meta": SQL_QA_DISTINCT_META,
+        "qa_hourshift": SQL_QA_HOURSHIFT,
+        "sessionize": SQL_SESSIONIZE,
+        "salted_event_counts": SQL_SALTED_EVENT_COUNTS,
+    },
+    ORACLES_LLM,
+    ORACLES_REL,
+    ORACLES_CORPUS,
+    ORACLES_ANALYTICS,
+    ORACLES_COVERAGE,
+    ORACLES_ANN_MEDIA,
+    ORACLES_MINING,
+)

@@ -1423,3 +1423,111 @@ SQL_SIM_SQ8_RERANK = _sql_sim_sq8_rerank()
 
 QUERIES_ANN_MEDIA["sim_sq8_rerank"] = q_sim_sq8_rerank
 ORACLES_ANN_MEDIA["sim_sq8_rerank"] = SQL_SIM_SQ8_RERANK
+
+
+# ---------------------------------------------------------------------------
+# Round-18 registration (formerly queries_staged.py): learned-centroid
+# IVF ANN.  The iterative k-means trainer is not SQL-expressible, so
+# it ran ONCE (tools/gen_ann_fixtures.py) and the committed
+# integer-lattice centroid table fixtures/ann/centroids.parquet is the
+# query's input — assignment and probe selection are exact int64 L2²,
+# the semantic_dedup lattice convention, so the whole search pipeline
+# carries a DuckDB oracle.  Gates in tests/test_ivf_learned.py.
+# ---------------------------------------------------------------------------
+
+#: must match tools/gen_ann_fixtures.py CENT_GRID (the committed
+#: lattice); asserted equal in tests/test_ivf_learned.py
+CENT_GRID = 1 << 20
+IVF_LEARNED_NPROBE = 2
+
+
+def _centroid_fixture_path() -> str:
+    import os
+
+    from pyspark_pipelining_spark.sources.registry import fixtures_dir
+
+    return os.path.join(fixtures_dir("ann"), "centroids.parquet")
+
+
+def q_sim_ivf_learned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF ANN against the committed TRAINED coarse quantizer
+    (``operators/similarity.ivf_topk_learned_q``): the scale story a
+    100 TB ANN deployment actually uses — k-means centroids trained
+    once on a sample, frozen, broadcast; every corpus vector assigned
+    by exact int64 lattice L2²; each query probes its nprobe nearest
+    cells and exact-cosine re-ranks only those vectors."""
+    from pyspark_pipelining_spark.operators import similarity
+    from pyspark_pipelining_spark.queries_llm import TOPK, _query_vecs
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    cents = spark.read.parquet(_centroid_fixture_path())
+    return similarity.ivf_topk_learned_q(
+        emb,
+        _query_vecs(spark, sf_dir),
+        cents,
+        grid=CENT_GRID,
+        k=TOPK,
+        nprobe=IVF_LEARNED_NPROBE,
+    )
+
+
+def _sql_sim_ivf_learned_topk() -> str:
+    from pyspark_pipelining_spark.queries_llm import _DOT, _NE, _NQ, N_QUERIES, TOPK
+    from pyspark_pipelining_spark.sources.registry import sql_str_literal
+
+    g = CENT_GRID
+    path = sql_str_literal(_centroid_fixture_path())
+    d2 = (
+        "list_sum(list_transform(range(1, 65),"
+        " i -> (xq[CAST(i AS INT)] - c.centroid_q[CAST(i AS INT)])"
+        " * (xq[CAST(i AS INT)] - c.centroid_q[CAST(i AS INT)])))"
+    )
+    return f"""
+WITH cents AS (SELECT cell, centroid_q FROM '{path}'),
+embq AS (
+    SELECT vec_id, embedding,
+           list_transform(embedding,
+               x -> CAST(round(CAST(x AS DOUBLE) * {g}) AS BIGINT)) AS xq
+    FROM embeddings
+),
+corpus_d AS (
+    SELECT e.vec_id, e.embedding, c.cell, {d2} AS d
+    FROM embq e CROSS JOIN cents c
+),
+corpus AS (
+    SELECT vec_id, embedding, cell FROM (
+        SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
+        FROM corpus_d
+    ) WHERE rn = 1
+),
+qs AS (
+    SELECT vec_id AS query_id, embedding AS query_vec, xq
+    FROM embq WHERE vec_id < {N_QUERIES}
+),
+probes_d AS (
+    SELECT qs.query_id, qs.query_vec, c.cell, {d2} AS d
+    FROM qs CROSS JOIN cents c
+),
+probes AS (
+    SELECT query_id, query_vec, cell FROM (
+        SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY d, cell) AS pr
+        FROM probes_d
+    ) WHERE pr <= {IVF_LEARNED_NPROBE}
+),
+pairs AS (
+    SELECT q.query_id, e.vec_id,
+           round({_DOT} / ({_NE} * {_NQ}), 6) AS cosine
+    FROM corpus e JOIN probes q ON e.cell = q.cell AND e.vec_id != q.query_id
+),
+ranked AS (
+    SELECT *, CAST(row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id ASC) AS INTEGER) AS rank
+    FROM pairs
+)
+SELECT query_id, vec_id, cosine, rank FROM ranked WHERE rank <= {TOPK}
+"""
+
+
+SQL_SIM_IVF_LEARNED_TOPK = _sql_sim_ivf_learned_topk()
+
+QUERIES_ANN_MEDIA["sim_ivf_learned_topk"] = q_sim_ivf_learned_topk
+ORACLES_ANN_MEDIA["sim_ivf_learned_topk"] = SQL_SIM_IVF_LEARNED_TOPK

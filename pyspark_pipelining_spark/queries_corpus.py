@@ -2243,3 +2243,187 @@ SQL_UNIMAX_ALLOCATION = _sql_unimax_allocation()
 
 QUERIES_CORPUS["unimax_allocation"] = q_unimax_allocation
 ORACLES_CORPUS["unimax_allocation"] = SQL_UNIMAX_ALLOCATION
+
+
+# ---------------------------------------------------------------------------
+# Round-18 registration (formerly queries_staged.py): CCNet
+# perplexity-bucket filtering (Wenzek et al. 2020; the published
+# LM-quality rung above the raw lm_score).  Gates in tests/test_ccnet.py.
+# ---------------------------------------------------------------------------
+
+CCNET_BIN_W = 2_000
+CCNET_OFFSET = 10_000_000
+
+
+def q_ccnet_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CCNet head/middle/tail perplexity buckets over ``documents``
+    (``operators/corpus.ccnet_ppl_buckets``): per-source thirds of the
+    char-bigram LM score distribution via integer histogram cuts —
+    the paper's per-language percentile filter with ``source`` as the
+    language analog; ``kept`` = head+middle.  Every arithmetic step
+    after the one re-quantizing division is exact integer, so the
+    oracle replays bucket boundaries bit-identically."""
+    from pyspark_pipelining_spark.operators import corpus
+
+    docs = load_table(spark, sf_dir, "documents")
+    return corpus.ccnet_ppl_buckets(
+        docs, bin_w=CCNET_BIN_W, offset=CCNET_OFFSET
+    ).orderBy("doc_id")
+
+
+def _sql_ccnet_ppl_buckets() -> str:
+    w, off = CCNET_BIN_W, CCNET_OFFSET
+    return f"""
+WITH base AS (SELECT doc_id, lower(text) AS t FROM documents),
+idx AS (
+    SELECT doc_id, t, unnest(generate_series(1, length(t) - 1)) AS i
+    FROM base WHERE length(t) >= 2
+),
+toks AS (SELECT doc_id, substring(t, i, 2) AS bg FROM idx),
+c2 AS (SELECT bg, count(*) AS c2 FROM toks GROUP BY bg),
+c1 AS (SELECT substring(bg, 1, 1) AS ch, sum(c2) AS c1 FROM c2 GROUP BY 1),
+model AS (
+    SELECT bg, CAST(round((ln(c2) - ln(c1)) * 1000000) AS BIGINT) AS logp_q6
+    FROM c2 JOIN c1 ON substring(bg, 1, 1) = c1.ch
+),
+per AS (
+    SELECT doc_id, count(*) AS n_bigrams, sum(logp_q6) AS total_q6
+    FROM toks JOIN model USING (bg) GROUP BY doc_id
+),
+scored AS (
+    SELECT p.doc_id, d.source,
+           CAST(round(p.total_q6 / CAST(p.n_bigrams AS DOUBLE)) AS BIGINT)
+             AS score_q6
+    FROM per p JOIN documents d USING (doc_id)
+),
+binned AS (
+    SELECT doc_id, source, score_q6, (score_q6 + {off}) // {w} AS bin
+    FROM scored
+),
+hist AS (SELECT source, bin, count(*) AS c FROM binned GROUP BY source, bin),
+cum AS (
+    SELECT source, bin, c,
+           sum(c) OVER (PARTITION BY source ORDER BY bin
+                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+    FROM hist
+),
+tot AS (SELECT source, sum(c) AS n FROM hist GROUP BY source),
+cuts AS (
+    SELECT cum.source,
+           min(CASE WHEN 3 * cum >= n THEN bin END) AS t1,
+           min(CASE WHEN 3 * cum >= 2 * n THEN bin END) AS t2
+    FROM cum JOIN tot ON cum.source = tot.source
+    GROUP BY cum.source
+)
+SELECT b.doc_id, b.source, b.score_q6, CAST(b.bin AS BIGINT) AS bin,
+       CASE WHEN b.bin <= c.t1 THEN 'tail'
+            WHEN b.bin <= c.t2 THEN 'middle'
+            ELSE 'head' END AS bucket,
+       CAST(CASE WHEN b.bin <= c.t1 THEN 0 ELSE 1 END AS BIGINT) AS kept
+FROM binned b JOIN cuts c ON b.source = c.source
+ORDER BY b.doc_id
+"""
+
+
+SQL_CCNET_PPL_BUCKETS = _sql_ccnet_ppl_buckets()
+
+QUERIES_CORPUS["ccnet_ppl_buckets"] = q_ccnet_ppl_buckets
+ORACLES_CORPUS["ccnet_ppl_buckets"] = SQL_CCNET_PPL_BUCKETS
+
+
+# ---------------------------------------------------------------------------
+# Round-18 registration (formerly queries_staged.py): DCLM /
+# fastText-style model-based quality filter (Li et al. 2024 filter with
+# a fastText classifier; Joulin et al. 2016 fastText is LINEAR over
+# hashed n-gram bags, so the FROZEN model — trained once offline by
+# tools/gen_fasttext_fixture.py, int64-quantized, committed as
+# fixtures/fasttext/weights.parquet — replays bit-identically in SQL,
+# the sim_ivf_learned_topk trainer/scorer split).  Gates in
+# tests/test_fasttext.py.
+# ---------------------------------------------------------------------------
+
+def _fasttext_fixture_path() -> str:
+    import os
+
+    from pyspark_pipelining_spark.sources.registry import fixtures_dir
+
+    return os.path.join(fixtures_dir("fasttext"), "weights.parquet")
+
+
+def q_fasttext_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Model-based quality scores over ``documents``
+    (``operators/text.linear_quality_score``): every doc scored by the
+    committed frozen linear hashed-bigram classifier — exact int64
+    weight sums, ``kept`` = sign of the mean score as an integer
+    comparison, ``score_q6`` the one correctly-rounded division —
+    joined to ``source``/``lang`` so keep-rate by slice reads
+    directly."""
+    from pyspark_pipelining_spark.operators import text as text_ops
+
+    docs = load_table(spark, sf_dir, "documents")
+    weights = spark.read.parquet(_fasttext_fixture_path())
+    scored = text_ops.linear_quality_score(docs, weights)
+    return (
+        scored.join(docs.select("doc_id", "source", "lang"), "doc_id")
+        .select(
+            "doc_id",
+            "source",
+            "lang",
+            "n_grams",
+            "sum_q6",
+            "score_q6",
+            "kept",
+        )
+        .orderBy("doc_id")
+    )
+
+
+def _sql_fasttext_quality() -> str:
+    from pyspark_pipelining_spark.operators.text import FASTTEXT_BUCKETS
+    from pyspark_pipelining_spark.sources.registry import sql_str_literal
+
+    b = FASTTEXT_BUCKETS
+    path = sql_str_literal(_fasttext_fixture_path())
+    return f"""
+WITH wt AS (SELECT bucket, w_q6 FROM '{path}'),
+bias AS (SELECT w_q6 AS bias_q6 FROM wt WHERE bucket = -1),
+wrds AS (
+    SELECT doc_id, string_split_regex(lower(text), ' +') AS w
+    FROM documents
+),
+grams AS (
+    SELECT doc_id,
+           ('0x' || substr(md5(g), 1, 15))::BIGINT % {b} AS bucket
+    FROM (
+        SELECT doc_id, w[CAST(i AS INT)] || ' ' || w[CAST(i AS INT) + 1] AS g
+        FROM (SELECT doc_id, w, unnest(range(1, len(w))) AS i
+              FROM wrds WHERE len(w) >= 2)
+    )
+),
+per AS (
+    SELECT doc_id, count(*) AS n_grams, sum(w_q6) AS sum_q6
+    FROM grams JOIN wt USING (bucket)
+    GROUP BY doc_id
+)
+SELECT d.doc_id, d.source, d.lang,
+       CAST(coalesce(p.n_grams, 0) AS BIGINT) AS n_grams,
+       CAST(coalesce(p.sum_q6, 0) AS BIGINT) AS sum_q6,
+       CAST(CASE WHEN coalesce(p.n_grams, 0) > 0
+            THEN CAST(round((coalesce(p.sum_q6, 0)
+                             + bias.bias_q6 * p.n_grams)
+                            / CAST(p.n_grams AS DOUBLE)) AS BIGINT)
+            ELSE 0 END AS BIGINT) AS score_q6,
+       CAST(CASE WHEN coalesce(p.n_grams, 0) > 0
+                  AND coalesce(p.sum_q6, 0) + bias.bias_q6 * p.n_grams > 0
+            THEN 1 ELSE 0 END AS BIGINT) AS kept
+FROM documents d
+LEFT JOIN per p ON d.doc_id = p.doc_id
+CROSS JOIN bias
+ORDER BY d.doc_id
+"""
+
+
+SQL_FASTTEXT_QUALITY = _sql_fasttext_quality()
+
+QUERIES_CORPUS["fasttext_quality"] = q_fasttext_quality
+ORACLES_CORPUS["fasttext_quality"] = SQL_FASTTEXT_QUALITY

@@ -1992,3 +1992,248 @@ SQL_GOPHER_REPETITION = _sql_gopher_repetition()
 
 QUERIES_LLM["gopher_repetition"] = q_gopher_repetition
 ORACLES_LLM["gopher_repetition"] = SQL_GOPHER_REPETITION
+
+
+# ---------------------------------------------------------------------------
+# Round-18 registration (formerly queries_staged.py): FineWeb-style
+# composed heuristic battery (Penedo et al. 2024 compose the C4 +
+# Gopher rule sets into per-rule flags and one keep decision; this
+# corpus is single-line so the battery composes the applicable
+# DOCUMENT-level Gopher rules with the repetition composite —
+# thresholds corpus-adapted and documented in operators/text.py).
+# Gates in tests/test_fineweb.py.
+# ---------------------------------------------------------------------------
+
+def q_quality_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Composed per-document quality battery over ``documents``
+    (``operators/text.quality_battery``): exact-integer word-count /
+    mean-word-length / stopword rules plus the gopher_repetition
+    composite, each as its own flag, with ``kept`` = all pass —
+    joined to ``source`` so per-source filter pressure reads
+    directly."""
+    from pyspark_pipelining_spark.operators import text as text_ops
+
+    docs = load_table(spark, sf_dir, "documents")
+    bat = text_ops.quality_battery(docs)
+    return (
+        bat.join(docs.select("doc_id", "source"), "doc_id")
+        .select(
+            "doc_id",
+            "source",
+            "n_words",
+            "sum_word_len",
+            "n_stopwords",
+            "flag_word_count",
+            "flag_word_len",
+            "flag_stopword",
+            "flag_repetition",
+            "kept",
+        )
+        .orderBy("doc_id")
+    )
+
+
+def _sql_quality_battery() -> str:
+    from pyspark_pipelining_spark.operators.text import (
+        BATTERY_MAX_WORDS,
+        BATTERY_MIN_STOPWORDS,
+        BATTERY_MIN_WORDS,
+        BATTERY_STOPWORDS,
+        BATTERY_WORDLEN,
+    )
+
+    lo, hi = BATTERY_WORDLEN
+    stop_list = ", ".join(f"'{s}'" for s in BATTERY_STOPWORDS)
+    # reuse the registered gopher oracle verbatim as a subquery (minus
+    # its display ORDER BY — the battery join re-sorts)
+    rep = SQL_GOPHER_REPETITION.strip()
+    rep = rep[: rep.rindex("ORDER BY")]
+    return f"""
+WITH qw AS (
+    SELECT doc_id, source, string_split_regex(lower(text), ' +') AS w
+    FROM documents
+),
+base AS (
+    SELECT doc_id, source,
+           CAST(len(w) AS BIGINT) AS n_words,
+           CAST(list_sum(list_transform(w, x -> length(x))) AS BIGINT)
+             AS sum_word_len,
+           CAST(len(list_filter(w, x -> x IN ({stop_list}))) AS BIGINT)
+             AS n_stopwords
+    FROM qw
+),
+rep AS (SELECT doc_id, flagged_repetition FROM ({rep})),
+flags AS (
+    SELECT b.doc_id, b.source, b.n_words, b.sum_word_len, b.n_stopwords,
+           CAST(CASE WHEN b.n_words < {BATTERY_MIN_WORDS}
+                       OR b.n_words > {BATTERY_MAX_WORDS}
+                THEN 1 ELSE 0 END AS BIGINT) AS flag_word_count,
+           CAST(CASE WHEN b.sum_word_len < {lo} * b.n_words
+                       OR b.sum_word_len > {hi} * b.n_words
+                THEN 1 ELSE 0 END AS BIGINT) AS flag_word_len,
+           CAST(CASE WHEN b.n_stopwords < {BATTERY_MIN_STOPWORDS}
+                THEN 1 ELSE 0 END AS BIGINT) AS flag_stopword,
+           CAST(r.flagged_repetition AS BIGINT) AS flag_repetition
+    FROM base b JOIN rep r ON b.doc_id = r.doc_id
+)
+SELECT *,
+       CAST(CASE WHEN flag_word_count = 0 AND flag_word_len = 0
+                  AND flag_stopword = 0 AND flag_repetition = 0
+            THEN 1 ELSE 0 END AS BIGINT) AS kept
+FROM flags
+ORDER BY doc_id
+"""
+
+
+SQL_QUALITY_BATTERY = _sql_quality_battery()
+
+QUERIES_LLM["quality_battery"] = q_quality_battery
+ORACLES_LLM["quality_battery"] = SQL_QUALITY_BATTERY
+
+
+# ---------------------------------------------------------------------------
+# Round-18 registration (formerly queries_staged.py): paragraph-
+# granularity MinHash dedup (Penedo et al. 2023 RefinedWeb / Soldaini
+# et al. 2024 Dolma run fuzzy dedup BELOW the document grain; repeated
+# boilerplate paragraphs inside otherwise-distinct documents are
+# invisible to the doc-level dedup_minhash).  The corpus is
+# single-line, so the paragraph grain is fixed 12-word chunks (the
+# unit swap is an index-source change if real newline paragraphs
+# exist — operators/dedup.paragraph_chunks).  Gates in
+# tests/test_paragraph_dedup.py.
+# ---------------------------------------------------------------------------
+
+PARA_W = 12
+#: minimum signature agreement (out of PARA_HASHES) for a candidate
+#: chunk pair to count as a near-dup — 12/16 = est_jaccard 0.75
+PARA_MIN_AGREE = 12
+PARA_HASHES, PARA_BANDS = 16, 8
+#: flag a doc when >= 3/10 of its paragraphs are near-duplicated
+PARA_FLAG_NUM, PARA_FLAG_DEN = 3, 10
+
+
+def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-document paragraph-level near-duplication pressure over
+    ``documents`` (``operators/dedup.paragraph_dup_stats``): chunk
+    every doc into 12-word pseudo-paragraphs, MinHash-LSH the CHUNKS
+    (the registered signature/banding machinery keyed on the composite
+    ``doc_id·PARA_KEY + idx`` pid), keep cross-document pairs at
+    signature agreement ≥ 12/16, and roll duplicated-paragraph counts
+    back to every document (clean docs appear with zeros) — joined to
+    ``source`` so per-source boilerplate pressure reads directly."""
+    from pyspark_pipelining_spark.operators import dedup as dedup_ops
+
+    docs = load_table(spark, sf_dir, "documents")
+    stats = dedup_ops.paragraph_dup_stats(
+        docs,
+        words_per_para=PARA_W,
+        min_est_num=PARA_MIN_AGREE,
+        num_hashes=PARA_HASHES,
+        bands=PARA_BANDS,
+        flag_num=PARA_FLAG_NUM,
+        flag_den=PARA_FLAG_DEN,
+    )
+    return (
+        stats.join(docs.select("doc_id", "source"), "doc_id")
+        .select(
+            "doc_id",
+            "source",
+            "n_paras",
+            "n_dup_paras",
+            "dup_frac",
+            "flagged",
+        )
+        .orderBy("doc_id")
+    )
+
+
+def _sql_paragraph_dedup() -> str:
+    from pyspark_pipelining_spark.operators.dedup import (
+        MERSENNE,
+        PARA_KEY,
+        minhash_coeffs,
+    )
+
+    w_, key = PARA_W, PARA_KEY
+    nh, bands = PARA_HASHES, PARA_BANDS
+    rows = nh // bands
+    coeffs = minhash_coeffs(nh)
+    mins = ",\n           ".join(
+        f"min((sid * {a} + {b}) % {MERSENNE}) AS h{i}"
+        for i, (a, b) in enumerate(coeffs)
+    )
+    band_match = " OR ".join(
+        "("
+        + " AND ".join(f"a.h{j} = b.h{j}" for j in range(bd * rows, (bd + 1) * rows))
+        + ")"
+        for bd in range(bands)
+    )
+    agree = " + ".join(
+        f"CASE WHEN a.h{i} = b.h{i} THEN 1 ELSE 0 END" for i in range(nh)
+    )
+    return f"""
+WITH wrds AS (
+    SELECT doc_id, source, string_split_regex(lower(text), ' +') AS w
+    FROM documents
+),
+paras AS (
+    SELECT doc_id, i AS para_idx, doc_id * {key} + i AS pid,
+           list_slice(w, CAST(i * {w_} + 1 AS BIGINT),
+                      least(len(w), CAST(i * {w_} + {w_} AS BIGINT))) AS pw
+    FROM (SELECT doc_id, w,
+                 unnest(range(0, (len(w) + {w_} - 1) // {w_})) AS i
+          FROM wrds)
+),
+pgrams AS (
+    SELECT pid,
+           list_transform(range(1, greatest(len(pw) - 1, 0) + 1),
+                          i -> pw[CAST(i AS INT)] || ' ' || pw[CAST(i AS INT) + 1])
+             AS ngrams
+    FROM paras
+),
+shing AS (SELECT DISTINCT pid, unnest(ngrams) AS shingle FROM pgrams),
+ds AS (
+    SELECT pid,
+           ('0x' || substr(md5(shingle), 1, 15))::BIGINT % {MERSENNE} AS sid
+    FROM shing
+),
+sig AS (
+    SELECT pid,
+           {mins}
+    FROM ds GROUP BY pid
+),
+dup_pairs AS (
+    SELECT a.pid AS p1, b.pid AS p2
+    FROM sig a JOIN sig b
+      ON a.pid < b.pid AND a.pid // {key} != b.pid // {key}
+     AND ({band_match})
+    WHERE ({agree}) >= {PARA_MIN_AGREE}
+),
+dups AS (
+    SELECT pid // {key} AS doc_id, count(*) AS n_dup_paras
+    FROM (SELECT p1 AS pid FROM dup_pairs
+          UNION SELECT p2 FROM dup_pairs)
+    GROUP BY 1
+),
+tot AS (SELECT doc_id, count(*) AS n_paras FROM paras GROUP BY doc_id)
+SELECT d.doc_id, d.source,
+       CAST(coalesce(t.n_paras, 0) AS BIGINT) AS n_paras,
+       CAST(coalesce(u.n_dup_paras, 0) AS BIGINT) AS n_dup_paras,
+       CASE WHEN coalesce(t.n_paras, 0) > 0
+            THEN round(coalesce(u.n_dup_paras, 0) / CAST(t.n_paras AS DOUBLE), 6)
+            ELSE 0.0 END AS dup_frac,
+       CAST(CASE WHEN coalesce(t.n_paras, 0) > 0
+                  AND coalesce(u.n_dup_paras, 0) * {PARA_FLAG_DEN}
+                      >= {PARA_FLAG_NUM} * coalesce(t.n_paras, 0)
+            THEN 1 ELSE 0 END AS BIGINT) AS flagged
+FROM documents d
+LEFT JOIN tot t ON d.doc_id = t.doc_id
+LEFT JOIN dups u ON d.doc_id = u.doc_id
+ORDER BY d.doc_id
+"""
+
+
+SQL_PARAGRAPH_DEDUP = _sql_paragraph_dedup()
+
+QUERIES_LLM["paragraph_dedup"] = q_paragraph_dedup
+ORACLES_LLM["paragraph_dedup"] = SQL_PARAGRAPH_DEDUP

@@ -12,6 +12,17 @@ from pyspark_pipelining_spark.session import get_spark
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
+#: the last batch registered through the retired staging tier; their
+#: pre-registration gates keep running strictly (no nullable-float64
+#: allowlist) over exactly these names
+FORMERLY_STAGED = (
+    "ccnet_ppl_buckets",
+    "fasttext_quality",
+    "paragraph_dedup",
+    "quality_battery",
+    "sim_ivf_learned_topk",
+)
+
 #: sampled-rotating certification tiers (r13 verdict item 3): the
 #: registry-proportional SECONDARY gates (the sf0.01 oracle tier and
 #: the hostile-layout sweep) each cover a deterministic ~1/PERIOD slice

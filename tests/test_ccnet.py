@@ -1,5 +1,5 @@
 """CCNet perplexity-bucket filtering (``operators/corpus.
-ccnet_ppl_buckets``; queued query ``ccnet_ppl_buckets`` — Wenzek et
+ccnet_ppl_buckets``; registered query ``ccnet_ppl_buckets`` — Wenzek et
 al. 2020, the published LM-quality percentile rung above the
 registered ``lm_score``).
 
@@ -21,7 +21,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from pyspark_pipelining_spark.operators.corpus import ccnet_ppl_buckets
-from pyspark_pipelining_spark.queries_staged import (
+from pyspark_pipelining_spark.queries_corpus import (
     CCNET_BIN_W,
     CCNET_OFFSET,
     SQL_CCNET_PPL_BUCKETS,

@@ -1,5 +1,5 @@
 """DCLM / fastText-style model-based quality filter (``operators/
-text.linear_quality_score``; queued query ``fasttext_quality`` — Li et
+text.linear_quality_score``; registered query ``fasttext_quality`` — Li et
 al. 2024 "DataComp-LM" filter with the fastText linear-over-hashed-
 n-grams architecture of Joulin et al. 2016; the frozen int64-quantized
 model is the committed fixture ``fixtures/fasttext/weights.parquet``,
@@ -27,7 +27,7 @@ from pyspark_pipelining_spark.operators.text import (
     FASTTEXT_BUCKETS,
     linear_quality_score,
 )
-from pyspark_pipelining_spark.queries_staged import (
+from pyspark_pipelining_spark.queries_corpus import (
     SQL_FASTTEXT_QUALITY,
     _fasttext_fixture_path,
     q_fasttext_quality,

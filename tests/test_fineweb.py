@@ -1,5 +1,5 @@
 """FineWeb-style composed quality battery (``operators/text.
-quality_battery``; queued query ``quality_battery`` — Penedo et al.
+quality_battery``; registered query ``quality_battery`` — Penedo et al.
 2024's per-rule-flag composition over the applicable document-level
 Gopher rules; thresholds corpus-adapted, see operators/text.py).
 
@@ -25,7 +25,7 @@ from pyspark_pipelining_spark.operators.text import (
     BATTERY_WORDLEN,
     quality_battery,
 )
-from pyspark_pipelining_spark.queries_staged import (
+from pyspark_pipelining_spark.queries_llm import (
     SQL_QUALITY_BATTERY,
     q_quality_battery,
 )

@@ -1,5 +1,5 @@
 """Learned-centroid IVF ANN (``operators/similarity.
-ivf_topk_learned_q``; queued query ``sim_ivf_learned_topk`` — r14
+ivf_topk_learned_q``; registered query ``sim_ivf_learned_topk`` — r14
 verdict stretch item 7): search against the committed integer-lattice
 coarse quantizer ``fixtures/ann/centroids.parquet``.
 
@@ -19,7 +19,7 @@ from pyspark_pipelining_spark.operators.similarity import (
     cosine_topk,
     ivf_topk_learned_q,
 )
-from pyspark_pipelining_spark.queries_staged import (
+from pyspark_pipelining_spark.queries_ann_media import (
     CENT_GRID,
     SQL_SIM_IVF_LEARNED_TOPK,
     _centroid_fixture_path,

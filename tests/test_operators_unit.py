@@ -215,6 +215,26 @@ def test_cluster_assignments_known_components(spark):
     assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20}
 
 
+def test_cluster_assignments_empty_pair_set(spark):
+    pairs = spark.createDataFrame([], "doc_1 bigint, doc_2 bigint")
+    out = cluster_assignments(pairs)
+    assert out.columns == ["doc_id", "cluster_id"]
+    assert out.collect() == []
+    # every doc is then its own cluster
+    docs = spark.createDataFrame([(1,), (2,)], "doc_id bigint")
+    assert sorted(tuple(r) for r in dedup_clusters(docs, pairs).collect()) == [(1, 1), (2, 2)]
+
+
+def test_pagerank_int_empty_edge_list(spark):
+    from pyspark_pipelining_spark.operators.graph import pagerank_int
+
+    star = spark.createDataFrame([(0, 1), (1, 0)], "src long, dst long")
+    empty = spark.createDataFrame([], "src long, dst long")
+    out = pagerank_int(empty)
+    assert out.collect() == []
+    assert out.schema == pagerank_int(star).schema
+
+
 def test_cluster_assignments_long_chain_propagates(spark):
     # a 6-hop chain forces multiple propagation rounds (diameter > 1)
     edges = [(i, i + 1) for i in range(1, 7)]

@@ -1,5 +1,5 @@
 """Paragraph-granularity MinHash dedup (``operators/dedup.
-paragraph_chunks`` / ``paragraph_dup_stats``; queued query
+paragraph_chunks`` / ``paragraph_dup_stats``; registered query
 ``paragraph_dedup`` — the RefinedWeb (Penedo et al. 2023) / Dolma
 (Soldaini et al. 2024) below-document fuzzy-dedup rung on top of the
 registered doc-level ``dedup_minhash`` machinery).
@@ -28,7 +28,7 @@ from pyspark_pipelining_spark.operators.dedup import (
     paragraph_chunks,
     paragraph_dup_stats,
 )
-from pyspark_pipelining_spark.queries_staged import (
+from pyspark_pipelining_spark.queries_llm import (
     PARA_BANDS,
     PARA_FLAG_DEN,
     PARA_FLAG_NUM,

@@ -25,32 +25,21 @@ def plan_of(spark, name: str) -> str:
 
 @pytest.fixture(scope="module")
 def all_plan_texts(spark):
-    """Formatted explain of EVERY registered + staged query, built once
-    per module and shared by the repo-wide invariant gates and the
+    """Formatted explain of EVERY registered query, built once per
+    module and shared by the repo-wide invariant gate and the
     plan-shape lock gate (building 200+ plans — the iterative ones
     execute their loops during construction — is the expensive part,
-    so the three gates split one pass).
+    so the gates split one pass).
 
-    Each build is cache-isolated (clearCache before it): query builders
-    persist() internal frames and never unpersist, so without this a
-    later query's plan can pick up an InMemoryTableScan from an earlier
-    query's cache entry, making the plan text depend on build ORDER —
-    the lock gate needs order-independent shapes (the standalone tool
-    builds in sorted order, this fixture in registration order)."""
-    from pyspark_pipelining_spark.queries_staged import (
-        QUERIES_QUEUED,
-        QUERIES_STAGED,
-    )
+    Each build is cache-isolated (``runner.release`` before it), like
+    ``tools/plan_lock.py``: plan text must not depend on build ORDER."""
+    from pyspark_pipelining_spark import runner
 
     texts = {}
     for name in QUERIES:
-        spark.catalog.clearCache()
+        runner.release(spark)
         texts[name] = plan_of(spark, name)
-    for name, fn in {**QUERIES_STAGED, **QUERIES_QUEUED}.items():
-        assert name not in texts, f"staged name collides with registered: {name}"
-        spark.catalog.clearCache()
-        texts[name] = formatted_plan(spark, fn(spark, SF_SMOKE))
-    spark.catalog.clearCache()
+    runner.release(spark)
     return texts
 
 
@@ -577,6 +566,27 @@ def test_no_query_has_cartesian_or_python_row_udf(spark, all_plan_texts):
     assert not offenders, f"plan invariant violations: {offenders}"
 
 
+@pytest.mark.quick
+def test_staged_plans_have_no_cartesian_or_python_row_udf(spark, all_plan_texts):
+    """The repo-wide plan invariant over the last staged batch, now
+    registered: no CartesianProduct, no BatchEvalPython — and each of
+    the five is still in the registry the lock gate builds."""
+    from tests.conftest import FORMERLY_STAGED
+
+    offenders = {}
+    for name in FORMERLY_STAGED:
+        assert name in QUERIES, f"formerly staged query unregistered: {name}"
+        plan = all_plan_texts[name]
+        bad = [
+            marker
+            for marker in ("CartesianProduct", "BatchEvalPython")
+            if marker in plan
+        ]
+        if bad:
+            offenders[name] = bad
+    assert not offenders, f"staged plan invariant violations: {offenders}"
+
+
 def test_ohlc_daily_has_no_window(spark):
     """open/close come from min_by/max_by aggregation (map-side
     combinable), never a row_number window — a hot (type, day) group
@@ -695,10 +705,14 @@ def test_convergence_probes_are_bounded_actions_on_checkpointed_state(
     count stays bounded by rounds+1 (convergence detection fires) and
     (2) every probed plan is a scan/agg of materialized state
     (LogicalRDD), never a join/recompute pipeline — so a refactor
-    cannot silently turn loop control into a data-path collect."""
+    cannot silently turn loop control into a data-path collect.
+    Only actions issued inside the operator call are recorded (the
+    block probe is a bounded ``collect``), not the test's own result
+    collect; an action nested in another (``first`` -> ``collect``)
+    counts once."""
     # patch the CONCRETE class: pyspark.sql.DataFrame is the abstract
     # API in Spark 4; sessions hand out classic.dataframe.DataFrame,
-    # whose own first/count would shadow a base-class patch
+    # whose own first/count/collect would shadow a base-class patch
     try:
         from pyspark.sql.classic.dataframe import DataFrame
     except ImportError:  # older pyspark: one concrete class
@@ -707,57 +721,49 @@ def test_convergence_probes_are_bounded_actions_on_checkpointed_state(
     from pyspark_pipelining_spark.operators import dedup, graph
 
     probed: list[str] = []
-    orig_first, orig_count = DataFrame.first, DataFrame.count
+    recording = False
 
-    def spy_first(self):
-        probed.append(self._jdf.queryExecution().optimizedPlan().toString())
-        return orig_first(self)
+    def spy(orig):
+        def action(self, *args, **kwargs):
+            nonlocal recording
+            if not recording:
+                return orig(self, *args, **kwargs)
+            probed.append(self._jdf.queryExecution().optimizedPlan().toString())
+            recording = False
+            try:
+                return orig(self, *args, **kwargs)
+            finally:
+                recording = True
 
-    def spy_count(self):
-        probed.append(self._jdf.queryExecution().optimizedPlan().toString())
-        return orig_count(self)
+        return action
 
-    monkeypatch.setattr(DataFrame, "first", spy_first)
-    monkeypatch.setattr(DataFrame, "count", spy_count)
+    for name in ("first", "count", "collect"):
+        monkeypatch.setattr(DataFrame, name, spy(getattr(DataFrame, name)))
+
+    def probes_of(build) -> list[str]:
+        nonlocal recording
+        probed.clear()
+        recording = True
+        try:
+            result = build()
+        finally:
+            recording = False
+        result.collect()
+        return list(probed)
 
     # triangle (its own 2-core) + a pendant edge that peels away
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (4, 5)], "doc_1 bigint, doc_2 bigint"
     )
-    dedup.cluster_assignments(pairs, max_iter=12).collect()
-    cc_probes, probed[:] = list(probed), []
-    # initial sum + one per executed block; converges after one block here
-    assert 2 <= len(cc_probes) <= (12 + 1) // 2 + 1
-    graph.kcore_fixpoint(pairs, k=2).collect()
-    kc_probes = list(probed)
+    cc_probes = probes_of(lambda: dedup.cluster_assignments(pairs, max_iter=12))
+    # one tagged-sum probe per executed block (the first also sums the
+    # init labels); converges inside the first block here
+    assert 1 <= len(cc_probes) <= (12 + 3) // 4
+    kc_probes = probes_of(lambda: graph.kcore_fixpoint(pairs, k=2))
     # initial count + peel round + fixpoint-confirm round — NOT max_rounds
     assert 2 <= len(kc_probes) <= 4
     for plan in cc_probes + kc_probes:
         assert "LogicalRDD" in plan and "Join" not in plan, plan
-
-
-@pytest.mark.quick
-def test_staged_plans_have_no_cartesian_or_python_row_udf(spark, all_plan_texts):
-    """The repo-wide plan invariant, applied to the current staging
-    area AND queue BEFORE registration (same gate every staged set
-    since round 7 has passed): no CartesianProduct, no
-    BatchEvalPython."""
-    from pyspark_pipelining_spark.queries_staged import (
-        QUERIES_QUEUED,
-        QUERIES_STAGED,
-    )
-
-    offenders = {}
-    for name in {**QUERIES_STAGED, **QUERIES_QUEUED}:
-        plan = all_plan_texts[name]
-        bad = [
-            marker
-            for marker in ("CartesianProduct", "BatchEvalPython")
-            if marker in plan
-        ]
-        if bad:
-            offenders[name] = bad
-    assert not offenders, f"staged plan invariant violations: {offenders}"
 
 
 def test_fingerprint_parser_buckets_and_ignores():
@@ -805,7 +811,7 @@ def test_fingerprint_parser_buckets_and_ignores():
 
 @pytest.mark.quick
 def test_plan_shapes_match_committed_lock(spark, all_plan_texts):
-    """Every registered and staged query's physical-plan SHAPE — its
+    """Every registered query's physical-plan SHAPE — its
     counts of shuffle exchanges, broadcasts, join strategies, windows,
     aggregates, scans, generates — must match the committed lock
     (`tools/plan_lock.json`).  Motivation is the round-12 DPP finding:
@@ -1295,11 +1301,6 @@ def test_ivf_plane_dot_folds_evaluate_once_per_row(spark):
     producer) fails here, not as a silent 9× slowdown.  Budget: 8
     corpus scores + 8 probe scores + cosine dot/norms and ranking ≈
     36; anything approaching the old 156 is the recomputation class."""
-    from pyspark_pipelining_spark.queries import QUERIES
-    from pyspark_pipelining_spark.queries_staged import QUERIES_STAGED
-    from tests.conftest import SF_SMOKE
-
-    registry = {**QUERIES, **QUERIES_STAGED}
     for name, budget in (
         ("sim_ivf_topk", 50),
         ("sim_ivfpq_topk", 60),
@@ -1310,7 +1311,7 @@ def test_ivf_plane_dot_folds_evaluate_once_per_row(spark):
         ("sim_ivf_learned_topk", 12),
     ):
         plan = (
-            registry[name](spark, SF_SMOKE)
+            QUERIES[name](spark, SF_SMOKE)
             ._jdf.queryExecution()
             .executedPlan()
             .toString()

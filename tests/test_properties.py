@@ -899,30 +899,25 @@ LAYOUT_SENSITIVE += [
     "semantic_dedup",
 ]
 
-# staged queries, swept under the same contract before they ever see
-# a driver row (never-validated names bypass the rotation, so these
-# run every round until their first green row).  The round-14 trio
-# (decontamination_spans / dsir_weights / dsir_sample_topk) registered
-# in round 15 and keeps resolving through the merged registry; the
-# round-15 staged trio joins here: the report's interval-union window
-# and left join, gopher's per-doc gram windows, and unimax's
-# prefix-sum waterfill are exactly the layout-sensitive shapes the
-# sweep exists to pin
-LAYOUT_SENSITIVE_STAGED = [
+# r15-r18 registrations (never-validated names bypass the rotation,
+# so these run every round until their first green driver row): the
+# decontamination report's interval-union window and left join,
+# gopher's per-doc gram windows, and unimax's prefix-sum waterfill are
+# exactly the layout-sensitive shapes the sweep exists to pin
+LAYOUT_SENSITIVE += [
     "decontamination_spans",
     "dsir_weights",
     "dsir_sample_topk",
     "decontamination_report",
     "gopher_repetition",
     "unimax_allocation",
-    # round-16 staged trio: the per-source histogram cut, the
-    # battery's gram windows, and the learned-IVF cell join
+    # the per-source histogram cut, the battery's gram windows, and
+    # the learned-IVF cell join
     "ccnet_ppl_buckets",
     "quality_battery",
     "sim_ivf_learned_topk",
-    # round-17 queue: the chunk-grain LSH band join and the broadcast
-    # weight-sum — the banding bucket and hash-sum shapes the sweep
-    # exists to pin
+    # the chunk-grain LSH band join and the broadcast weight-sum — the
+    # banding bucket and hash-sum shapes the sweep exists to pin
     "paragraph_dedup",
     "fasttext_quality",
 ]
@@ -936,38 +931,28 @@ def test_layout_invariance_sweep(spark):
     import pytest as _pytest
 
     from pyspark_pipelining_spark.queries import QUERIES
-    from pyspark_pipelining_spark.queries_staged import (
-        QUERIES_QUEUED,
-        QUERIES_STAGED,
-    )
-    from tests.conftest import SF_SMOKE
+    from tests.conftest import SF_SMOKE, in_rotation
 
-    from tests.conftest import in_rotation
-
-    registry = {**QUERIES, **QUERIES_STAGED, **QUERIES_QUEUED}
-    # staged names keep resolving after they migrate into QUERIES at
-    # the next round's registration — coverage never silently drops
-    all_names = LAYOUT_SENSITIVE + LAYOUT_SENSITIVE_STAGED
-    missing = [n for n in all_names if n not in registry]
-    assert not missing, f"sweep names not in any registry: {missing}"
+    missing = [n for n in LAYOUT_SENSITIVE if n not in QUERIES]
+    assert not missing, f"sweep names not registered: {missing}"
     # sampled-rotating slice (r13 verdict item 3): never-driver-
     # validated names always swept, the rest once every ROTATION_PERIOD
     # rounds — conftest.in_rotation, same scheme as the sf0.01 tier
-    names = [n for n in all_names if in_rotation(n)]
+    names = [n for n in LAYOUT_SENSITIVE if in_rotation(n)]
     if not names:
-        # Possible once every staged name is driver-validated and the
+        # Possible once every listed name is driver-validated and the
         # hash phases leave this round's slice empty (ADVICE r14):
         # don't fail the round's certification — sweep a minimal
         # deterministic always-on subset instead so coverage never
         # drops to zero.
-        names = sorted(all_names)[:3]
+        names = sorted(LAYOUT_SENSITIVE)[:3]
         print(
             "layout sweep: rotation slice empty this round; "
             f"falling back to minimal subset {names}"
         )
 
     def run(name):
-        return sorted(tuple(str(x) for x in r) for r in registry[name](spark, SF_SMOKE).collect())
+        return sorted(tuple(str(x) for x in r) for r in QUERIES[name](spark, SF_SMOKE).collect())
 
     base, hostile = {}, {}
     for name in names:

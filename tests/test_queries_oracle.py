@@ -86,44 +86,20 @@ def test_oracle_pandas_dtypes_match_spark_integrals(spark):
     assert not offenders, f"un-CAST integer aggregates in oracle SQL: {offenders}"
 
 
-
-# --- staged (round-9) queries: oracle-checked now, registered later ----
-# (the round-8 staging area registered into queries_analytics /
-# queries_llm / queries_coverage; this is the next batch under the
-# same freeze discipline)
-
-from pyspark_pipelining_spark.queries_staged import (  # noqa: E402
-    ORACLES_QUEUED,
-    ORACLES_STAGED,
-    QUERIES_QUEUED,
-    QUERIES_STAGED,
-)
-
-# queued queries run the exact same pre-registration gates as staged
-# ones — the only difference is driver exposure timing
-QUERIES_STAGED = {**QUERIES_STAGED, **QUERIES_QUEUED}
-ORACLES_STAGED = {**ORACLES_STAGED, **ORACLES_QUEUED}
-
-
-@pytest.mark.quick
-@pytest.mark.parametrize("name", sorted(QUERIES_STAGED))
-def test_staged_query_matches_oracle(spark, name):
-    compare(spark, SF_SMOKE, QUERIES_STAGED[name], ORACLES_STAGED[name])
-    assert QUERIES_STAGED[name](spark, SF_SMOKE).count() > 0
-
-
 @pytest.mark.quick
 def test_staged_oracle_pandas_dtypes_match_spark_integrals(spark):
-    """The registered-query dtype gate, applied to the staging area
-    BEFORE round-9 registration: an un-CAST HUGEINT or integer-width
-    mismatch must surface here, not as a driver red row next round."""
+    """The dtype gate over the last staged batch, now registered, held
+    to the strict pre-registration form: no nullable-float64 allowlist,
+    so an un-CAST HUGEINT or integer-width mismatch in their oracle SQL
+    fails even where the registry-wide gate would forgive it."""
+    from tests.conftest import FORMERLY_STAGED
     from tests.oracle_utils import duck_connection
 
     con = duck_connection(SF_SMOKE)
     offenders = []
     try:
-        for name in sorted(QUERIES_STAGED):
-            sdf = QUERIES_STAGED[name](spark, SF_SMOKE)
+        for name in FORMERLY_STAGED:
+            sdf = QUERIES[name](spark, SF_SMOKE)
             integral = {
                 f.name
                 for f in sdf.schema.fields
@@ -131,7 +107,7 @@ def test_staged_oracle_pandas_dtypes_match_spark_integrals(spark):
             }
             if not integral:
                 continue
-            pdf = con.execute(ORACLES_STAGED[name]).df()
+            pdf = con.execute(ORACLES[name]).df()
             for c, t in pdf.dtypes.items():
                 if c in integral and str(t).startswith("float"):
                     offenders.append((name, c, str(t)))
@@ -140,10 +116,13 @@ def test_staged_oracle_pandas_dtypes_match_spark_integrals(spark):
     assert not offenders, f"un-CAST integer aggregates in staged oracle SQL: {offenders}"
 
 
-def test_staged_names_do_not_collide_with_registry(spark):
-    from pyspark_pipelining_spark.queries import QUERIES
+def test_registry_merge_rejects_duplicate_names():
+    """A name in two family dicts would silently shadow one query (or
+    oracle) with the other; the registry merge fails instead."""
+    from pyspark_pipelining_spark.queries import _merge
 
-    assert not set(QUERIES_STAGED) & set(QUERIES)
+    with pytest.raises(ValueError, match="reach_overall"):
+        _merge({"reach_overall": "a"}, {"reach_overall": "b"})
 
 
 def test_compare_gate_detects_perturbations(spark):

@@ -35,19 +35,14 @@ pytestmark = pytest.mark.quick
 def test_slices_partition_registry_over_one_period(monkeypatch):
     """Over rounds N, N+1, ..., N+PERIOD-1 every registered query with
     a green driver row appears in EXACTLY one slice, and every
-    never-validated (registered, staged, or queued) query appears in
-    ALL of them."""
+    never-validated query appears in ALL of them."""
     import tests.conftest as cft
     import __spark_entry__ as entry
     from pyspark_pipelining_spark.queries import QUERIES
-    from pyspark_pipelining_spark.queries_staged import (
-        QUERIES_QUEUED,
-        QUERIES_STAGED,
-    )
 
     validated = set(entry._last_green_rounds())
     base = rotation_round()
-    all_names = list(QUERIES) + list(QUERIES_STAGED) + list(QUERIES_QUEUED)
+    all_names = list(QUERIES)
     assert all_names
 
     membership: dict[str, list[int]] = {n: [] for n in all_names}

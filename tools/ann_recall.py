@@ -37,7 +37,9 @@ VARIANTS = [
 BASELINE = "sim_bruteforce_topk"
 
 
-def _topk_sets(df) -> dict:
+def _topk_sets(df) -> dict | None:
+    if not {"query_id", "vec_id"} <= set(df.columns):
+        return None
     out: dict = {}
     for r in df.collect():
         out.setdefault(r["query_id"], set()).add(r["vec_id"])
@@ -49,27 +51,23 @@ def main(argv: list[str]) -> int:
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     args = ap.parse_args(argv)
 
-    from pyspark_pipelining_spark import cache
-    from pyspark_pipelining_spark.queries import QUERIES
-    from pyspark_pipelining_spark.session import get_spark
+    from pyspark_pipelining_spark import runner
 
-    spark = get_spark("ann-recall")
-    spark.sparkContext.setLogLevel("ERROR")
-    exact = _topk_sets(QUERIES[BASELINE](spark, args.sf))
-    cache.release_all()
+    queries = runner.resolve([BASELINE, *VARIANTS])
+    if queries is None:
+        return 2
+
+    spark = runner.session("ann-recall")
+    exact = _topk_sets(queries[BASELINE](spark, args.sf))
+    runner.release(spark)
     print(f"baseline {BASELINE}: {len(exact)} queries, k per query "
           f"{sorted({len(v) for v in exact.values()})}")
     for name in VARIANTS:
-        if name not in QUERIES:
-            print(f"{name}: not registered, skipped")
-            continue
-        df = QUERIES[name](spark, args.sf)
-        if not {"query_id", "vec_id"} <= set(df.columns):
-            cache.release_all()
+        got = _topk_sets(queries[name](spark, args.sf))
+        runner.release(spark)
+        if got is None:
             print(f"{name}: no query_id/vec_id columns, incomparable")
             continue
-        got = _topk_sets(df)
-        cache.release_all()
         qids = sorted(set(exact) & set(got))
         if not qids:
             print(f"{name}: no shared queries with baseline, incomparable")

@@ -4,15 +4,16 @@ node_jaccard, sim_lsh_multitable, corpus_prep), so a driver-run
 outlier can be settled with one command instead of an ad-hoc script:
 
     python tools/bracket.py sim_lsh_multitable corpus_prep [--reps 5]
-        [--sf /root/testdata/sf0.1] [--staged]
+        [--sf SF_DIR]
 
-Methodology (mirrors bench.py): one untimed warm-up execution per
-query, then N timed repeats to a noop sink; persist handles and the
-session cache dropped between repeats; ambient /proc/loadavg recorded
-BEFORE the JVM starts (the run itself drives load up afterwards).
-Prints per-query times, median, and [min, max] — compare a disputed
-number against the bracket, and check the ambient load before reading
-anything into a level shift.
+Methodology (``runner.timed_runs``, the same loop as bench.py): one
+untimed warm-up execution per query, then N timed repeats to a noop
+sink; persist handles and the session cache dropped between repeats;
+ambient load recorded BEFORE the JVM starts (the run itself drives
+load up afterwards).  Prints per-query times, median, and [min, max] —
+compare a disputed number against the bracket, and check the ambient
+load before reading anything into a level shift.  Unknown query names
+exit 2.
 """
 
 from __future__ import annotations
@@ -21,7 +22,6 @@ import argparse
 import os
 import statistics
 import sys
-import time
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
@@ -32,55 +32,20 @@ def main(argv: list[str]) -> int:
     ap.add_argument("queries", nargs="+")
     ap.add_argument("--reps", type=int, default=5)
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
-    ap.add_argument(
-        "--staged", action="store_true", help="also resolve staged queries"
-    )
     args = ap.parse_args(argv)
 
-    try:
-        with open("/proc/loadavg") as fh:
-            ambient = fh.read().split()[:2]
-    except OSError:
-        ambient = ["?", "?"]
+    from pyspark_pipelining_spark import runner
 
-    from pyspark_pipelining_spark import cache
-    from pyspark_pipelining_spark.queries import QUERIES
-    from pyspark_pipelining_spark.session import get_spark
-
-    registry = dict(QUERIES)
-    if args.staged:
-        from pyspark_pipelining_spark.queries_staged import (
-            QUERIES_QUEUED,
-            QUERIES_STAGED,
-        )
-
-        QUERIES_STAGED = {**QUERIES_STAGED, **QUERIES_QUEUED}
-
-        # a staged name colliding with a registered one would silently
-        # shadow the registered plan and time the wrong query (ADVICE r11)
-        clash = set(registry) & set(QUERIES_STAGED)
-        assert not clash, f"staged names shadow registered queries: {sorted(clash)}"
-        registry.update(QUERIES_STAGED)
-    unknown = [q for q in args.queries if q not in registry]
-    if unknown:
-        print(f"unknown queries: {unknown}", file=sys.stderr)
+    ambient = runner.ambient_load()
+    queries = runner.resolve(args.queries)
+    if queries is None:
         return 2
 
-    spark = get_spark("bracket")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = runner.session("bracket")
     spark.read.parquet(f"{args.sf}/region.parquet").count()
-    print(f"ambient load1/load5 before JVM: {ambient[0]}/{ambient[1]}")
-    for name in args.queries:
-        fn = registry[name]
-        times: list[float] = []
-        for rep in range(args.reps + 1):
-            t0 = time.perf_counter()
-            fn(spark, args.sf).write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
-            cache.release_all()
-            spark.catalog.clearCache()
-            if rep:  # first execution is the untimed warm-up
-                times.append(round(dt, 3))
+    print(f"ambient load1/load5 before JVM: {ambient}")
+    for name, fn in queries.items():
+        times = runner.timed_runs(spark, fn, args.sf, args.reps)
         print(
             f"{name}: {times} median={statistics.median(times):.3f}"
             f" bracket=[{min(times):.3f}, {max(times):.3f}]"

@@ -10,9 +10,11 @@ unhashable array cells).  Run this after any query/oracle change:
     python tools/driver_preflight.py --all      # every registered query
     python tools/driver_preflight.py q1 q2 ...  # specific queries
 
-Exit code 1 if any query fails.  `scd2_customer_priority` differs only
-in None-vs-NaT rendering (both sides genuinely null; driver-tolerated,
-green r04) and is allowlisted.
+The session is the plain one the driver hands to ``__spark_entry__``
+(``runner.session(vanilla=True)``), not the engine's tuned defaults.
+Exit code 1 if any query fails, 2 on an unknown query name.
+`scd2_customer_priority` differs only in None-vs-NaT rendering (both
+sides genuinely null; driver-tolerated, green r04) and is allowlisted.
 """
 
 from __future__ import annotations
@@ -49,17 +51,10 @@ def dtype_mismatches(spdf, dpdf) -> list[str]:
 
 
 def main(argv: list[str]) -> int:
-    import duckdb
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as e
+    from pyspark_pipelining_spark import runner
+    from tests.oracle_utils import duck_connection
 
-    spark = SparkSession.builder.master("local[16]").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    tables = "region nation customer supplier part orders lineitem events documents embeddings"
-    for t in tables.split():
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
     qs, os_ = e.queries(), e.oracle_sql()
     if argv and argv[0] == "--all":
         names = list(qs)
@@ -67,11 +62,17 @@ def main(argv: list[str]) -> int:
         names = argv
     else:
         names = list(qs)[:50]
+    queries = runner.resolve(names, qs)
+    if queries is None:
+        return 2
+
+    spark = runner.session("driver-preflight", master="local[16]", vanilla=True)
+    con = duck_connection(SF_DIR)
 
     fails = []
-    for name in names:
+    for name, fn in queries.items():
         try:
-            spdf = qs[name](spark, SF_DIR).toPandas()
+            spdf = fn(spark, SF_DIR).toPandas()
             dpdf = con.execute(os_[name]).df()
             widths = dtype_mismatches(spdf, dpdf)
             ok = (

@@ -41,7 +41,7 @@ ITERS = 2
 #: lattice grid for the committed centroid coordinates AND the query
 #: side's embedding quantization (|x| <= 1 and |c| <= 1, so quantized
 #: values fit comfortably: diff^2 <= (2*2^20)^2 ~ 4.4e12, x64 dims
-#: ~2.8e14 << 2^63) — must match CENT_GRID in queries_staged.py
+#: ~2.8e14 << 2^63) — must match CENT_GRID in queries_ann_media.py
 CENT_GRID = 1 << 20
 
 

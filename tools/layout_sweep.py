@@ -1,7 +1,7 @@
 """Exhaustive hostile-layout sweep — the full-registry version of the
 pytest sweep (``tests/test_properties.py::test_layout_invariance_sweep``
 runs a curated ~26-name list on a sampled rotation; this tool runs
-EVERY registered + staged + queued query):
+EVERY registered query):
 
     python tools/layout_sweep.py [query ...] [--sf /root/testdata/sf0.001]
 
@@ -14,7 +14,10 @@ This is the 1000-executor safety contract in miniature: a query that
 changes under local[8]+7 partitions would change under AQE re-plans,
 executor loss, or a different file layout at 100 TB.
 
-Prints one OK/FAIL line per query, exits non-zero on any mismatch.
+Each execution is cache-isolated (``runner.release``), so the hostile
+run recomputes every persisted frame under the hostile layout instead
+of reading blocks the normal run cached.  Prints one OK/FAIL line per
+query, exits 1 on any mismatch and 2 on an unknown query name.
 Run before a freeze for the strongest layout certification the
 committed testdata supports (~tens of minutes); the per-round pytest
 rotation keeps the curated high-risk shapes continuously covered.
@@ -48,33 +51,27 @@ def main(argv: list[str]) -> int:
     ns = parser.parse_args(argv)
     args, sf_dir = ns.queries, ns.sf_dir
 
-    from pyspark_pipelining_spark.queries import QUERIES
-    from pyspark_pipelining_spark.queries_staged import (
-        QUERIES_QUEUED,
-        QUERIES_STAGED,
-    )
-    from pyspark_pipelining_spark.session import get_spark
+    from pyspark_pipelining_spark import runner
 
-    registry = {**QUERIES, **QUERIES_STAGED, **QUERIES_QUEUED}
-    names = args or sorted(registry)
-    unknown = [n for n in names if n not in registry]
-    if unknown:
-        print(f"unknown queries: {unknown}", file=sys.stderr)
+    queries = runner.resolve(args)
+    if queries is None:
         return 2
 
-    spark = get_spark("layout-sweep", master="local[8]", shuffle_partitions=8)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = runner.session("layout-sweep", master="local[8]", shuffle_partitions=8)
 
     def run(name):
-        df = registry[name](spark, sf_dir)
-        return sorted(
-            tuple(str(x) for x in r)
-            for r in df.select(*sorted(df.columns)).collect()
-        )
+        df = queries[name](spark, sf_dir)
+        try:
+            return sorted(
+                tuple(str(x) for x in r)
+                for r in df.select(*sorted(df.columns)).collect()
+            )
+        finally:
+            runner.release(spark)
 
     failures = []
     saved = {k: spark.conf.get(k) for k in HOSTILE}
-    for name in names:
+    for name in queries:
         try:
             base = run(name)
             try:
@@ -101,7 +98,7 @@ def main(argv: list[str]) -> int:
     if failures:
         print(f"failures: {failures}")
         return 1
-    print(f"swept {len(names)} queries at {sf_dir}: all layout-invariant")
+    print(f"swept {len(queries)} queries at {sf_dir}: all layout-invariant")
     return 0
 
 

@@ -1,5 +1,5 @@
 """Generate / verify the committed physical-plan-shape lock
-(`tools/plan_lock.json`) over every registered AND staged query.
+(`tools/plan_lock.json`) over every registered query.
 
     python tools/plan_lock.py            # verify, print diffs, exit 1 on drift
     python tools/plan_lock.py --write    # regenerate the lock
@@ -31,24 +31,15 @@ SF_SMOKE = "/root/testdata/sf0.001"
 
 
 def compute_lock(spark) -> dict[str, dict[str, int]]:
+    from pyspark_pipelining_spark import runner
     from pyspark_pipelining_spark.plans.fingerprint import fingerprint
-    from pyspark_pipelining_spark.queries import QUERIES
-    from pyspark_pipelining_spark.queries_staged import (
-        QUERIES_QUEUED,
-        QUERIES_STAGED,
-    )
 
-    assert not set(QUERIES) & set(QUERIES_STAGED), "registry collision"
-    assert not (set(QUERIES) | set(QUERIES_STAGED)) & set(QUERIES_QUEUED)
-    # queued queries are plan-pinned rounds before their first driver row
-    registry = {**QUERIES, **QUERIES_STAGED, **QUERIES_QUEUED}
     out = {}
-    for name, fn in sorted(registry.items()):
-        # cache-isolate every build: query builders persist() internal
-        # frames and never unpersist, so without this a later query's
-        # plan can pick up an InMemoryTableScan from an EARLIER query's
-        # cache entry — making the fingerprint depend on build order
-        spark.catalog.clearCache()
+    for name, fn in sorted(runner.resolve().items()):
+        # cache-isolate every build: without it a later query's plan can
+        # pick up an InMemoryTableScan from an EARLIER query's cache
+        # entry, making the fingerprint depend on build order
+        runner.release(spark)
         out[name] = fingerprint(fn(spark, SF_SMOKE))
     return out
 
@@ -58,10 +49,9 @@ def main(argv: list[str]) -> int:
     ap.add_argument("--write", action="store_true")
     args = ap.parse_args(argv)
 
-    from pyspark_pipelining_spark.session import get_spark
+    from pyspark_pipelining_spark import runner
 
-    spark = get_spark("plan_lock", master="local[8]", shuffle_partitions=8)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = runner.session("plan_lock", master="local[8]", shuffle_partitions=8)
     current = compute_lock(spark)
 
     if args.write:

@@ -9,12 +9,13 @@ EXPONENT is directly measurable:
 
 Defaults to the five most expensive bench queries (`corpus_prep`,
 `dedup_clusters`, `dedup_impact`, `node_jaccard`, `harmonic_2hop`).
-Methodology mirrors tools/bracket.py (one untimed warm-up per
-(query, sf), then median of N timed repeats to a noop sink, persist
-handles and session cache dropped between repeats, ambient load
-recorded before the JVM starts).  For each adjacent sf decade it
-prints the fitted exponent e in t ∝ sf^e — e ≈ 1 is linear, e well
-over 1 is the superlinear surprise this tool exists to catch.
+Methodology is tools/bracket.py's (``runner.timed_runs``: one untimed
+warm-up per (query, sf), then median of N timed repeats to a noop
+sink, persist handles and session cache dropped between repeats,
+ambient load recorded before the JVM starts).  For each adjacent sf
+decade it prints the fitted exponent e in t ∝ sf^e — e ≈ 1 is
+linear, e well over 1 is the superlinear surprise this tool exists to
+catch.
 
 Reading the exponents honestly: at the small end, the per-query
 scheduling floor (stage dispatch, planning, the ~40-stage iterative
@@ -34,7 +35,6 @@ import math
 import os
 import statistics
 import sys
-import time
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
@@ -118,8 +118,7 @@ def _q_exact_substring_spans_w8(spark, sf_dir):
     ).orderBy("doc_a", "doc_b", "start_a", "start_b")
 
 
-# queued queries resolve via QUERIES_QUEUED in main(); EXTRA_QUERIES is
-# only for variants that exist nowhere else (parameter overrides)
+# variants that exist nowhere else (parameter overrides)
 EXTRA_QUERIES = {
     "exact_substring_spans_w8": _q_exact_substring_spans_w8,
 }
@@ -144,50 +143,23 @@ def main(argv: list[str]) -> int:
         else (TIER2_QUERIES if args.tier2 else DEFAULT_QUERIES)
     )
 
-    try:
-        with open("/proc/loadavg") as fh:
-            ambient = fh.read().split()[:2]
-    except OSError:
-        ambient = ["?", "?"]
-
-    from pyspark_pipelining_spark import cache
+    from pyspark_pipelining_spark import runner
     from pyspark_pipelining_spark.queries import QUERIES
-    from pyspark_pipelining_spark.queries_staged import (
-        QUERIES_QUEUED,
-        QUERIES_STAGED,
-    )
-    from pyspark_pipelining_spark.session import get_spark
 
-    # a name collision would silently time the wrong plan (ADVICE r13)
-    dicts = [QUERIES, QUERIES_STAGED, QUERIES_QUEUED, EXTRA_QUERIES]
-    seen: set = set()
-    for d in dicts:
-        assert not seen & set(d), seen & set(d)
-        seen |= set(d)
-    registry = {**QUERIES, **QUERIES_STAGED, **QUERIES_QUEUED, **EXTRA_QUERIES}
-    unknown = [q for q in names if q not in registry]
-    if unknown:
-        print(f"unknown queries: {unknown}", file=sys.stderr)
+    ambient = runner.ambient_load()
+    queries = runner.resolve(names, {**QUERIES, **EXTRA_QUERIES})
+    if queries is None:
         return 2
 
-    spark = get_spark("scaling")
-    spark.sparkContext.setLogLevel("ERROR")
-    print(f"ambient load1/load5 before JVM: {ambient[0]}/{ambient[1]}")
+    spark = runner.session("scaling")
+    print(f"ambient load1/load5 before JVM: {ambient}")
 
     results: dict[str, dict[float, float]] = {}
-    for name in names:
-        fn = registry[name]
-        results[name] = {}
-        for sf_dir, sf in SFS:
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            cache.release_all()
-            times = []
-            for _ in range(args.reps):
-                t0 = time.monotonic()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                times.append(time.monotonic() - t0)
-                cache.release_all()
-            results[name][sf] = statistics.median(times)
+    for name, fn in queries.items():
+        results[name] = {
+            sf: statistics.median(runner.timed_runs(spark, fn, sf_dir, args.reps))
+            for sf_dir, sf in SFS
+        }
         ts = results[name]
         e_small = math.log(ts[0.01] / ts[0.001]) / math.log(10)
         e_big = math.log(ts[0.1] / ts[0.01]) / math.log(10)

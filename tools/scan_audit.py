@@ -2,7 +2,7 @@
 parquet table appear in the executed plan's lineage, and is any reuse
 machinery (InMemoryTableScan / ReusedExchange) present?
 
-    python tools/scan_audit.py [min_scans] [--staged]
+    python tools/scan_audit.py [min_scans]
 
 Lineage strings over-count cached subtrees (an InMemoryRelation prints
 its full child plan), so a high scan count WITH InMemoryTableScan /
@@ -25,49 +25,19 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 def main() -> int:
-    from pyspark.sql import SparkSession
+    from pyspark_pipelining_spark import runner
 
-    from pyspark_pipelining_spark import cache
-    from pyspark_pipelining_spark.queries import QUERIES
-
-    registry = dict(QUERIES)
-    argv = [a for a in sys.argv[1:] if a != "--staged"]
-    if "--staged" in sys.argv[1:]:
-        # audit the staging area too (same resolution as bracket.py) —
-        # staged plans get the pytest invariant gate, but this
-        # diagnostic is where the multi-branch-recompute smell shows
-        from pyspark_pipelining_spark.queries_staged import (
-            QUERIES_QUEUED,
-            QUERIES_STAGED,
-        )
-
-        QUERIES_STAGED = {**QUERIES_STAGED, **QUERIES_QUEUED}
-
-        # a staged name colliding with a registered one would silently
-        # shadow the registered plan and audit the wrong query (ADVICE r11)
-        clash = set(registry) & set(QUERIES_STAGED)
-        assert not clash, f"staged names shadow registered queries: {sorted(clash)}"
-        registry.update(QUERIES_STAGED)
-
-    min_scans = int(argv[0]) if argv else 3
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .appName("scan-audit")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    min_scans = int(sys.argv[1]) if len(sys.argv) > 1 else 3
+    spark = runner.session("scan-audit", master="local[8]", shuffle_partitions=8)
     flagged = 0
-    for name in sorted(registry):
+    for name, fn in sorted(runner.resolve().items()):
         try:
-            df = registry[name](spark, SF_DIR)
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            plan = fn(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
         except Exception as exc:
             print(f"ERR  {name}: {type(exc).__name__}: {str(exc)[:120]}")
             continue
         finally:
-            cache.release_all()
-            spark.catalog.clearCache()
+            runner.release(spark)
         counts = {
             t: plan.count(f"{t}.parquet")
             for t in re.findall(r"(\w+)\.parquet", plan)

@@ -11,8 +11,8 @@ queries deserve one documented pass at that scale:
 Prints one OK/FAIL line per query and exits non-zero on any mismatch.
 The passing run is recorded in README.md (scale notes).  Not part of
 the default pytest run (costs ~2 min); re-run after touching any of
-the listed queries' arithmetic.  ``--all`` runs EVERY registered +
-staged query with an oracle — the full-registry sf0.1 certification
+the listed queries' arithmetic.  ``--all`` runs EVERY registered
+query with an oracle — the full-registry sf0.1 certification
 (~12 min; first recorded pass round 13: 213/213 match).
 """
 
@@ -115,33 +115,19 @@ SENSITIVE = [
 
 
 def main() -> int:
-    from pyspark.sql import SparkSession
-
-    from pyspark_pipelining_spark.queries import ORACLES, QUERIES
-    from pyspark_pipelining_spark.queries_staged import (
-        ORACLES_QUEUED,
-        ORACLES_STAGED,
-        QUERIES_QUEUED,
-        QUERIES_STAGED,
-    )
+    from pyspark_pipelining_spark import runner
+    from pyspark_pipelining_spark.queries import ORACLES
     from tests.oracle_utils import compare
 
-    queries = {**QUERIES_QUEUED, **QUERIES_STAGED, **QUERIES}
-    oracles = {**ORACLES_QUEUED, **ORACLES_STAGED, **ORACLES}
+    # --all: one-off FULL-registry pass (every registered query with an
+    # oracle) at sf0.1 — the strongest value-level certification the
+    # committed testdata supports; ~tens of minutes, so the default
+    # stays the SENSITIVE list
+    queries = runner.resolve([] if "--all" in sys.argv[1:] else SENSITIVE)
+    if queries is None:
+        return 2
 
-    # --all: one-off FULL-registry pass (every registered + staged
-    # query with an oracle) at sf0.1 — the strongest value-level
-    # certification the committed testdata supports; ~tens of minutes,
-    # so the default stays the SENSITIVE list
-    names = sorted(queries) if "--all" in sys.argv[1:] else SENSITIVE
-
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .appName("sf01-spotcheck")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = runner.session("sf01-spotcheck", master="local[8]", shuffle_partitions=16)
 
     # semantic_dedup lattice precondition at THIS scale (r14 ADVICE):
     # the decimal(38,0) headroom argument assumes |x| <= 1 per
@@ -170,23 +156,22 @@ def main() -> int:
         return 1
 
     failures = []
-    for name in names:
-        if name not in queries:
-            print(f"SKIP {name}: not registered or staged")
-            continue
-        if name not in oracles:
+    for name, fn in queries.items():
+        if name not in ORACLES:
             print(f"SKIP {name}: no oracle (rows-only driver check)")
             continue
         try:
-            compare(spark, SF_DIR, queries[name], oracles[name])
+            compare(spark, SF_DIR, fn, ORACLES[name])
             print(f"OK   {name}")
         except Exception as exc:  # record mismatches AND runtime errors
             failures.append(name)
             print(f"FAIL {name}: {type(exc).__name__}: {str(exc)[:300]}")
+        finally:
+            runner.release(spark)
     if failures:
         print(f"failures: {failures}")
         return 1
-    print(f"checked {len(names)} queries at {SF_DIR}: all match")
+    print(f"checked {len(queries)} queries at {SF_DIR}: all match")
     return 0
 
 
