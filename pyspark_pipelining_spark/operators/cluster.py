@@ -21,17 +21,88 @@ aggregation for centroids (map-side combined; k×dim result — always
 tiny), centroids broadcast back, assignment is a map-side argmin over
 k distance expressions.  The corpus shuffles only in the centroid
 aggregation, and only (cell, pos, coord) triples move — never whole
-vectors.  A fixed iteration count keeps the plan finite (the
-convergence-driven variant would reuse the scalar-count pattern of
-``dedup.cluster_assignments``).
+vectors.  A fixed iteration count keeps the plan finite (a
+convergence-driven variant would run through ``operators/iterate.py``).
+:func:`lloyd_int` is the one Lloyd step, shared with
+``similarity.pq_train_codes`` (one codebook per ``sub`` key there).
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 GRID = 1_000_000
+
+
+def lloyd_int(
+    points: DataFrame,
+    k: int,
+    iters: int,
+    id_col: str,
+    vec: str,
+    keys: Sequence[str] = (),
+) -> tuple[DataFrame, DataFrame]:
+    """``iters`` integer Lloyd steps over lattice vectors, one codebook
+    per ``keys`` group.
+
+    ``points`` carries ``id_col``, ``keys`` and the int64 lattice vector
+    ``vec``; seeding is ``cell = id mod k``.  Each step aggregates the
+    centroids as truncated means (``sum div count`` per (keys, cell,
+    pos)) and reassigns by a map-side argmin against ONE broadcast row
+    holding every (keys, cell, centroid) — the points never shuffle.
+    ``array_min`` over (d, cell) structs keeps the cell-ascending tie
+    rule and is insensitive to ``collect_list``'s nondeterministic
+    order; with ``keys`` each point only scores its own group's
+    centroids.
+
+    Returns ``(assigned, codebook)``: assigned = (id, keys, vec, cell,
+    d); codebook = (keys, cell, centroid) of the last step.  Needs
+    ``iters >= 1``: the distance exists only after a step.
+    """
+    cents = "cents"
+    if keys:
+        same_group = " AND ".join(f"c.{key} = {key}" for key in keys)
+        cents = f"filter(cents, c -> {same_group})"
+    best = F.expr(
+        f"array_min(transform({cents}, c -> struct("
+        f"  aggregate(zip_with({vec}, c.centroid, (a, b) -> (a - b) * (a - b)),"
+        "            CAST(0 AS BIGINT), (acc, x) -> acc + x) AS d,"
+        "  c.cell AS cell)))"
+    )
+    assigned = points.select(
+        id_col, *keys, vec, F.pmod(F.col(id_col), F.lit(k)).cast("long").alias("cell")
+    )
+    codebook = None
+    for _ in range(iters):
+        codebook = (
+            assigned.select(*keys, "cell", F.posexplode(vec).alias("pos", "x"))
+            .groupBy(*keys, "cell", "pos")
+            .agg(F.expr("sum(x) div count(*)").alias("c"))
+            .groupBy(*keys, "cell")
+            .agg(
+                F.expr(
+                    "transform(array_sort(collect_list(struct(pos, c))), p -> p.c)"
+                ).alias("centroid")
+            )
+        )
+        cent_row = codebook.agg(
+            F.collect_list(F.struct(*keys, "cell", "centroid")).alias("cents")
+        )
+        assigned = (
+            points.crossJoin(F.broadcast(cent_row))
+            .withColumn("best", best)
+            .select(
+                id_col,
+                *keys,
+                vec,
+                F.col("best.cell").alias("cell"),
+                F.col("best.d").alias("d"),
+            )
+        )
+    return assigned, codebook
 
 
 def kmeans_int(
@@ -43,7 +114,8 @@ def kmeans_int(
     grid: int = GRID,
     keep_vec: bool = False,
 ) -> DataFrame:
-    """Deterministic k-means assignment after ``iters`` Lloyd steps.
+    """Deterministic k-means assignment after ``iters`` Lloyd steps
+    (:func:`lloyd_int`).
 
     Seeding: ``cell = id mod k`` (engine-portable, data-independent).
     Output: ``<id_col>, cell, d`` — final cell and exact int64 squared
@@ -65,44 +137,6 @@ def kmeans_int(
             f" x -> CAST(round(CAST(x AS DOUBLE) * {grid}) AS BIGINT))"
         ).alias("s"),
     ).localCheckpoint(eager=True)
-    assigned = snapped.select(
-        id_col, "s", F.pmod(F.col(id_col), F.lit(k)).cast("long").alias("cell")
-    )
-    # map-side argmin: all k centroids ride in ONE broadcast row as an
-    # array of (cell, centroid) structs, and the assignment is a
-    # higher-order fold per vector — the corpus itself never shuffles
-    # (the earlier crossJoin + groupBy(id, vec) formulation re-shuffled
-    # every vector, array key included, once per Lloyd step).  array_min
-    # over (d, cell) structs keeps the cell-ascending tie rule and is
-    # insensitive to collect_list's nondeterministic order.
-    best = F.expr(
-        "array_min(transform(cents, c -> struct("
-        "  aggregate(zip_with(s, c.centroid, (a, b) -> (a - b) * (a - b)),"
-        "            CAST(0 AS BIGINT), (acc, x) -> acc + x) AS d,"
-        "  c.cell AS cell)))"
-    )
-    for _ in range(iters):
-        cent_row = (
-            assigned.select("cell", F.posexplode("s").alias("pos", "x"))
-            .groupBy("cell", "pos")
-            .agg(F.expr("sum(x) div count(*)").alias("c"))
-            .groupBy("cell")
-            .agg(
-                F.expr(
-                    "transform(array_sort(collect_list(struct(pos, c))), p -> p.c)"
-                ).alias("centroid")
-            )
-            .agg(F.collect_list(F.struct("cell", "centroid")).alias("cents"))
-        )
-        assigned = (
-            snapped.crossJoin(F.broadcast(cent_row))
-            .withColumn("best", best)
-            .select(
-                id_col,
-                "s",
-                F.col("best.cell").alias("cell"),
-                F.col("best.d").alias("d"),
-            )
-        )
+    assigned, _ = lloyd_int(snapped, k, iters, id_col, "s")
     cols = [id_col, "cell", "d"] + (["s"] if keep_vec else [])
     return assigned.select(*cols)

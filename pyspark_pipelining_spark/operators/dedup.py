@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from pyspark_pipelining_spark import cache
 from pyspark_pipelining_spark.operators.graph import symmetrize
+from pyspark_pipelining_spark.operators.iterate import iterate
 from pyspark_pipelining_spark.operators.text import with_words
 
 
@@ -228,9 +229,7 @@ def minhash_lsh_pairs(
     return cand
 
 
-def cluster_assignments(
-    pairs: DataFrame, max_iter: int = 12, block: int = 4
-) -> DataFrame:
+def cluster_assignments(pairs: DataFrame, max_iter: int = 12) -> DataFrame:
     """Connected-component labels over a candidate-pair edge list:
     every document maps to the smallest doc id reachable through the
     pair graph (min-id label propagation with pointer jumping).
@@ -254,33 +253,12 @@ def cluster_assignments(
       template chains (doc A ~ B ~ C ... with A ≁ C) produce diameters
       in the dozens, where plain propagation exhausts any sane round
       budget (measured: 13 rounds at sf0.1 vs 7 with the jump);
-    * rounds run in **blocks of ``block`` (default 4) per driver
-      action** (r17; guide §1.2 fewer passes): every round's label
-      frame is a LAZY ``localCheckpoint`` — LogicalRDD replaces the
-      plan at construction time, so each round's three references to
-      the previous frame (prop join, union branch, jump table) share
-      ONE materialization inside the block job instead of cloning the
-      subtree 3^k ways (what made deep fusion lose in r16, which
-      checkpointed only block boundaries);
-    * convergence: labels are monotonically non-increasing, so
-      ``sum(cluster_id)`` is unchanged iff no label moved, and a
-      stable round is a fixpoint of the round operator (a stable
-      labeling is component-constant, standard argument).  ONE action
-      per block computes every round's sum — the cached frames union
-      with a round tag into a single tiny grouped aggregate — and the
-      first adjacent equal pair inside the chain stops the loop, so
-      the fixpoint is detected mid-block and the old separate
-      init-sum action and confirmation block are gone.  At sf0.1 the
-      7-round fixpoint costs 2 block actions instead of the former 5
-      (init sum + 4 blocks); labels never collect to the driver.
-
-    Lineage control: iterative plans double in size per round if each
-    references the full upstream pipeline (e.g. the 16-hash minhash
-    expression), which OOMs the *driver* in Catalyst long before any
-    data moves — so the edge list and each round's labels are
-    ``localCheckpoint``-ed (materialized, plan truncated).  On a real
-    cluster with lost-executor concerns, swap for reliable
-    ``checkpoint()`` with a checkpoint dir; semantics are identical.
+    * the loop runs through :func:`iterate.iterate` in blocks of 4
+      rounds per driver action, probing ``sum(cluster_id)``: labels are
+      monotonically non-increasing, so the sum is unchanged iff no
+      label moved, and a stable labeling is component-constant
+      (standard argument).  At sf0.1 the 7-round fixpoint costs 2 block
+      actions; labels never collect to the driver.
     """
     # one map-side explode (graph.symmetrize) = one reference to the
     # pair pipeline, so it runs exactly once inside the first block job
@@ -319,37 +297,7 @@ def cluster_assignments(
             F.least("mid", F.coalesce("p_lbl", "mid")).alias("cluster_id"),
         )
 
-    prev_sum: int | None = None  # entry sum unknown before the first action
-    total = 0
-    while total < max_iter:
-        k = min(block, max_iter - total)
-        frames: list[DataFrame] = []
-        cur = labels
-        for _ in range(k):
-            cur = one_round(cur).localCheckpoint(eager=False)
-            frames.append(cur)
-            total += 1
-        # one action: every round's sum via a tagged union over the
-        # cached frames (the first block also tags the init frame, whose
-        # sum seeds the chain).  Stage graphs dedupe by RDD identity, so
-        # each frame materializes exactly once in this job.
-        probe = ([labels] if prev_sum is None else []) + frames
-        tagged = probe[0].select(F.lit(0).alias("i"), "cluster_id")
-        for i, f in enumerate(probe[1:], start=1):
-            tagged = tagged.unionByName(f.select(F.lit(i).alias("i"), "cluster_id"))
-        rows = tagged.groupBy("i").agg(F.sum("cluster_id").alias("s")).collect()
-        if not rows:  # no pairs: every frame is empty, nothing to label
-            return labels
-        sums = [r["s"] for r in sorted(rows, key=lambda r: r["i"])]
-        chain = ([] if prev_sum is None else [prev_sum]) + sums
-        for j in range(1, len(chain)):
-            if chain[j] == chain[j - 1]:
-                # round j changed nothing: chain[j-1]'s frame is the
-                # fixpoint (chain index 0 is the block-entry labels)
-                return labels if j == 1 else frames[j - 2]
-        prev_sum = chain[-1]
-        labels = frames[-1]
-    return labels
+    return iterate(labels, one_round, max_iter, until=F.sum("cluster_id"), block=4)
 
 
 def dedup_clusters(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:

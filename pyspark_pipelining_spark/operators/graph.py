@@ -21,8 +21,8 @@ finite.  The (src, dst, deg) edge table is materialized ONCE up front
 (``localCheckpoint``): the iterative plan references it every round,
 and without truncation Spark re-executes the whole upstream edge
 pipeline (an LSH candidate join here) per reference — measured 18–28 s
-→ ~2 s at sf0.1.  The node count becomes a driver scalar (the same
-pattern as cluster_assignments' convergence check) so per-round work
+→ ~2 s at sf0.1.  The node count becomes a driver scalar (the one
+action an operator issues outside ``operators/iterate.py``) so per-round work
 is exactly one join + one aggregation; a symmetrized graph needs no
 per-round re-join to the node set (every node has in-edges).
 """
@@ -31,6 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from pyspark_pipelining_spark.operators.iterate import iterate
 
 SCALE = 10**12
 
@@ -86,8 +88,8 @@ def pagerank_int(
     # it in the same job (distinct() sits above the opaque RDD scan, so
     # nothing is pruned), saving a full materialization pass per call.
     ed2 = ed.join(deg, on="id").localCheckpoint(eager=False)
-    # n as a driver scalar (the cluster_assignments convergence-check
-    # pattern): it parameterizes integer constants the oracle mirrors
+    # n as a driver scalar (allowlisted in tests/test_operator_actions.py):
+    # it parameterizes integer constants the oracle mirrors;
     # an empty edge list has no nodes: any n > 0 yields the same empty
     # ``id, r`` frame without dividing by zero
     n = max(ed2.select("id").distinct().count(), 1)
@@ -228,6 +230,26 @@ def node_jaccard(pairs: DataFrame) -> DataFrame:
     )
 
 
+def _degrees(edges: DataFrame) -> DataFrame:
+    """``node, degree`` of a symmetrized ``s, d`` edge table."""
+    return edges.groupBy(F.col("s").alias("node")).agg(F.count(F.lit(1)).alias("degree"))
+
+
+def _peel(k: int):
+    """One synchronous peel round: drop every directed edge with an
+    endpoint of degree below ``k`` — one node-keyed degree aggregation
+    and two semi-joins against the surviving nodes, all shuffles keyed
+    on node id."""
+
+    def step(edges: DataFrame) -> DataFrame:
+        keep = _degrees(edges).filter(F.col("degree") >= k).select(F.col("node").alias("s"))
+        return edges.join(keep, "s", "leftsemi").join(
+            keep.select(F.col("s").alias("d")), "d", "leftsemi"
+        )
+
+    return step
+
+
 def kcore_peel(
     pairs: DataFrame,
     k: int = 2,
@@ -238,32 +260,20 @@ def kcore_peel(
     """Bounded k-core peeling: ``rounds`` synchronous rounds of
     removing nodes whose current degree is below ``k`` (and their
     edges).  A fixed round count keeps the plan finite and the oracle
-    expressible (the SQL unrolls the same rounds); full-fixpoint coreness
-    would iterate to convergence with the same per-round shape.
+    expressible (the SQL unrolls the same rounds); :func:`kcore_fixpoint`
+    iterates the same round to convergence.
 
-    Scale shape per round: one node-keyed degree aggregation and one
-    semi-join of edges against surviving nodes — both shuffles keyed on
-    node id.  The edge table is ``localCheckpoint``-ed up front so the
-    iterative plan never re-executes the upstream candidate-pair
-    pipeline (same pattern as pagerank_int).
+    The rounds run through :func:`iterate.iterate`'s fixed mode: the
+    edge table and every round's survivors are lazily
+    ``localCheckpoint``-ed, so the iterative plan never re-executes the
+    upstream candidate-pair pipeline and no round costs a job of its
+    own.
 
     Output: ``node, degree`` for nodes surviving all rounds, with their
     post-peel degree.
     """
-    edges = symmetrize(pairs, a, b).localCheckpoint(eager=True)
-    for _ in range(rounds):
-        deg = edges.groupBy("s").agg(F.count(F.lit(1)).alias("degree"))
-        keep = deg.filter(F.col("degree") >= k).select("s")
-        edges = (
-            edges.join(keep, "s", "leftsemi")
-            .join(keep.select(F.col("s").alias("d")), "d", "leftsemi")
-            .localCheckpoint(eager=True)
-        )
-    return (
-        edges.groupBy(F.col("s").alias("node"))
-        .agg(F.count(F.lit(1)).alias("degree"))
-        .orderBy("node")
-    )
+    edges = symmetrize(pairs, a, b).localCheckpoint(eager=False)
+    return _degrees(iterate(edges, _peel(k), rounds)).orderBy("node")
 
 
 def kcore_fixpoint(
@@ -277,33 +287,17 @@ def kcore_fixpoint(
     (every surviving node has degree ≥ k — the true k-core), with
     ``max_rounds`` as a safety bound only.
 
-    Convergence is detected with one driver-side ``count()`` per round
-    over the checkpointed (already materialized) edge set — a scalar
-    loop-control action, not data movement; the per-round dataflow is
-    identical to :func:`kcore_peel` (degree agg + two semi-joins,
-    shuffles keyed on node id, ``localCheckpoint`` truncating lineage
-    each round).  Peeling is monotone so "edge count unchanged" is
-    exactly "no node fell below k" — the fixpoint.
+    The per-round dataflow is :func:`kcore_peel`'s; convergence is
+    :func:`iterate.iterate`'s fixpoint mode probing the edge count one
+    round per driver action — a scalar loop-control action over
+    checkpointed state, not data movement.  Peeling is monotone, so
+    "edge count unchanged" is exactly "no node fell below k".  Larger
+    probe blocks lose here: at sf0.1 the last edge falls in round 8, so
+    one round per probe runs 9 rounds where blocks of 4 run 12.
     """
-    edges = symmetrize(pairs, a, b).localCheckpoint(eager=True)
-    n_edges = edges.count()
-    for _ in range(max_rounds):
-        deg = edges.groupBy("s").agg(F.count(F.lit(1)).alias("degree"))
-        keep = deg.filter(F.col("degree") >= k).select("s")
-        edges = (
-            edges.join(keep, "s", "leftsemi")
-            .join(keep.select(F.col("s").alias("d")), "d", "leftsemi")
-            .localCheckpoint(eager=True)
-        )
-        remaining = edges.count()
-        if remaining == n_edges:
-            break
-        n_edges = remaining
-    return (
-        edges.groupBy(F.col("s").alias("node"))
-        .agg(F.count(F.lit(1)).alias("degree"))
-        .orderBy("node")
-    )
+    edges = symmetrize(pairs, a, b).localCheckpoint(eager=False)
+    core = iterate(edges, _peel(k), max_rounds, until=F.count(F.lit(1)))
+    return _degrees(core).orderBy("node")
 
 
 def lpa_communities(
@@ -322,33 +316,29 @@ def lpa_communities(
 
     Scale shape per round: one edge ⋈ labels shuffle keyed on node id,
     one (node, label) count with map-side partials, one per-node
-    argmax window — all keyed on node.  Rounds run in BLOCKS OF TWO
-    per ``localCheckpoint`` (the cluster_assignments block discipline):
-    each label frame is referenced exactly once by the next round, so
-    fusing two rounds into one job executes the same shuffles while
-    skipping a materialization pass — measured 2.60 s → 2.23 s median
-    at sf0.1 for rounds=2 — and the checkpoint every second round
-    still truncates lineage before Catalyst plans grow.  The final
-    round never checkpoints (the caller's action materializes it).
+    argmax window — all keyed on node.  The rounds run through
+    :func:`iterate.iterate`'s fixed mode, so the edge table and every
+    round's labels are lazily ``localCheckpoint``-ed.
 
     Output: ``node, community`` (community = converged-or-bounded
     label), one row per node appearing in ``pairs``.
     """
-    edges = symmetrize(pairs, a, b).localCheckpoint(eager=True)
+    edges = symmetrize(pairs, a, b).localCheckpoint(eager=False)
     labels = edges.select(F.col("s").alias("node")).distinct().select(
         "node", F.col("node").alias("lbl")
     )
     w = Window.partitionBy("node").orderBy(F.desc("cnt"), F.asc("lbl"))
-    for i in range(rounds):
-        nbr = edges.join(
-            labels.select(F.col("node").alias("d"), "lbl"), "d"
-        ).select(F.col("s").alias("node"), "lbl")
+
+    def propagate(lbl: DataFrame) -> DataFrame:
+        nbr = edges.join(lbl.select(F.col("node").alias("d"), "lbl"), "d").select(
+            F.col("s").alias("node"), "lbl"
+        )
         counts = nbr.groupBy("node", "lbl").agg(F.count(F.lit(1)).alias("cnt"))
-        labels = (
+        return (
             counts.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .select("node", "lbl")
         )
-        if (i + 1) % 2 == 0 and i + 1 < rounds:
-            labels = labels.localCheckpoint(eager=True)
+
+    labels = iterate(labels, propagate, rounds)
     return labels.select("node", F.col("lbl").alias("community")).orderBy("node")

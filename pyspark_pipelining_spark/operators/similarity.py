@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pyspark_pipelining_spark import cache
+from pyspark_pipelining_spark.operators.cluster import lloyd_int
 from pyspark_pipelining_spark.sources.registry import spread
 
 
@@ -324,8 +325,11 @@ def learned_centroids(
     each step is one posexplode→groupBy mean (shuffle on (cell, pos))
     and one broadcast-reassignment (centroids are k×dim — always tiny).
     Returns (cell, centroid array<double>).  No oracle entry: iterative
-    refinement is not expressible as one SQL statement; correctness is
-    pinned by the probe-all-cells ≡ brute-force property test instead.
+    refinement is not expressible as one SQL statement.  Its output,
+    snapped to a lattice, is the committed ``fixtures/ann/centroids.parquet``
+    (``tools/gen_ann_fixtures.py``) that :func:`ivf_topk_learned_q`
+    searches; probing every cell of it reproduces brute force
+    (``tests/test_ivf_learned.py``).
     """
     assigned = emb_df.select(
         id_col, vec_col, F.pmod(F.col(id_col), F.lit(cells)).alias("cell")
@@ -358,53 +362,6 @@ def learned_centroids(
         .groupBy("cell")
         .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
         .select("cell", F.transform("pm", lambda s: s["m"]).alias("centroid"))
-    )
-
-
-def ivf_topk_learned(
-    emb_df: DataFrame,
-    query_df: DataFrame,
-    centroids: DataFrame,
-    k: int = 5,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF search against trained centroids: assign the corpus once
-    (broadcast centroid argmin), probe each query's ``nprobe`` nearest
-    cells, exact-cosine re-rank within them.  With ``nprobe`` = number
-    of cells this is exactly brute force (property-tested)."""
-    cent = cache.keep(centroids)
-    l2 = lambda v: F.aggregate(
-        F.zip_with(v, "centroid", lambda x, c: (x.cast("double") - c) ** 2),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    corpus = (
-        spread(emb_df).crossJoin(F.broadcast(cent))
-        .withColumn("d", l2(F.col(vec_col)))
-        .groupBy(id_col, vec_col)
-        .agg(F.min(F.struct("d", "cell")).alias("best"))
-        .select(id_col, vec_col, F.col("best.cell").alias("cell"))
-    )
-    probe_w = Window.partitionBy("query_id").orderBy("d", "cell")
-    probes = (
-        query_df.crossJoin(F.broadcast(cent))
-        .withColumn("d", l2(F.col("query_vec")))
-        .withColumn("pr", F.row_number().over(probe_w))
-        .filter(F.col("pr") <= nprobe)
-        .select("query_id", "query_vec", "cell")
-    )
-    joined = corpus.join(F.broadcast(probes), on="cell").filter(F.col(id_col) != F.col("query_id"))
-    cos = _dot(F.col(vec_col), F.col("query_vec")) / (
-        _norm(F.col(vec_col)) * _norm(F.col("query_vec"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        joined.select("query_id", F.col(id_col), F.round(cos, 6).alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
     )
 
 
@@ -538,15 +495,15 @@ def pq_train_codes(
     memory budget ANN search needs.
 
     The vector splits into ``m`` contiguous subvectors of ``dim/m``
-    coordinates; each subspace runs the deterministic integer Lloyd of
-    ``cluster.kmeans_int`` (1/``grid`` lattice snap, truncated integer
-    centroid means, exact int64 squared-L2, ties on cell id, seeding
-    ``cell = id mod k``) — all ``m`` subspaces advance together in ONE
-    plan keyed by ``sub``.
+    coordinates; each subspace runs the deterministic integer Lloyd
+    step of ``cluster.kmeans_int`` (:func:`cluster.lloyd_int`: 1/``grid``
+    lattice snap, truncated integer centroid means, exact int64
+    squared-L2, ties on cell id, seeding ``cell = id mod k``) — all
+    ``m`` subspaces advance together in ONE plan keyed by ``sub``.
 
     Scale shape: assignment is a map-side higher-order argmin against
     one broadcast (sub, cell, centroid) row — vectors NEVER shuffle;
-    the only exchanges are the (sub, cell, spos) centroid aggregations
+    the only exchanges are the (sub, cell, pos) centroid aggregations
     (≤ m·k·dim/m rows) per Lloyd step.
 
     Returns ``(codes, codebook)``: codes = (id, sub, cell, d);
@@ -577,42 +534,7 @@ def pq_train_codes(
             )
         ).alias("e"),
     ).select(id_col, "e.sub", "e.ss").localCheckpoint(eager=True)
-    assigned = subs.select(
-        id_col, "sub", "ss", F.pmod(F.col(id_col), F.lit(k)).cast("long").alias("cell")
-    )
-    best = F.expr(
-        "array_min(transform(filter(cents, c -> c.sub = sub), c -> struct("
-        "  aggregate(zip_with(ss, c.centroid, (a, b) -> (a - b) * (a - b)),"
-        "            CAST(0 AS BIGINT), (acc, x) -> acc + x) AS d,"
-        "  c.cell AS cell)))"
-    )
-    codebook = None
-    for _ in range(iters):
-        codebook = (
-            assigned.select("sub", "cell", F.posexplode("ss").alias("spos", "x"))
-            .groupBy("sub", "cell", "spos")
-            .agg(F.expr("sum(x) div count(*)").alias("c"))
-            .groupBy("sub", "cell")
-            .agg(
-                F.expr(
-                    "transform(array_sort(collect_list(struct(spos, c))), p -> p.c)"
-                ).alias("centroid")
-            )
-        )
-        cent_row = codebook.agg(
-            F.collect_list(F.struct("sub", "cell", "centroid")).alias("cents")
-        )
-        assigned = (
-            subs.crossJoin(F.broadcast(cent_row))
-            .withColumn("b", best)
-            .select(
-                id_col,
-                "sub",
-                "ss",
-                F.col("b.cell").alias("cell"),
-                F.col("b.d").alias("d"),
-            )
-        )
+    assigned, codebook = lloyd_int(subs, k, iters, id_col, "ss", keys=["sub"])
     return assigned.select(id_col, "sub", "cell", "d"), codebook
 
 
@@ -1239,9 +1161,9 @@ def ivf_topk_learned_q(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF search against FROZEN integer-quantized centroids — the
-    oracle-replayable sibling of :func:`ivf_topk_learned` (whose
-    iterative Lloyd trainer is not single-SQL-expressible): given a
+    """IVF search against FROZEN integer-quantized centroids (the
+    iterative :func:`learned_centroids` trainer is not
+    single-SQL-expressible, so it runs once, offline): given a
     committed ``(cell, centroid_q array<bigint>)`` table (the trained
     coarse quantizer snapped to a ``grid`` lattice), assignment and
     probe selection are EXACT int64 L2² arithmetic — both engines

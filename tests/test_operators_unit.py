@@ -18,6 +18,11 @@ from pyspark_pipelining_spark.operators.dedup import (
     word_ngrams,
 )
 from pyspark_pipelining_spark.operators.frequency import frequency_histogram
+from pyspark_pipelining_spark.operators.graph import (
+    kcore_fixpoint,
+    kcore_peel,
+    lpa_communities,
+)
 from pyspark_pipelining_spark.operators.media import make_media, union_frames
 from pyspark_pipelining_spark.operators.reach import reach_count
 from pyspark_pipelining_spark.operators.reach_week import incremental_weekly_reach
@@ -181,48 +186,50 @@ def test_salted_join_matches_plain_join(spark):
     assert got == want and len(got) == 41
 
 
-def test_learned_ivf_full_probe_equals_brute_force(spark):
-    """Probing every cell of the trained index must reproduce exact
-    brute-force top-k — the correctness anchor for the learned-quantizer
-    path (recall < 1 can only come from probing fewer cells)."""
-    from pyspark_pipelining_spark.operators.similarity import (
-        cosine_topk,
-        ivf_topk_learned,
-        learned_centroids,
-    )
-    from pyspark_pipelining_spark.sources.registry import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    queries = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    cells = 4
-    cent = learned_centroids(emb, cells=cells, iters=1)
-    full = ivf_topk_learned(emb, queries, cent, k=5, nprobe=cells)
-    brute = cosine_topk(emb, queries, k=5)
-    assert sorted(map(tuple, full.collect())) == sorted(map(tuple, brute.collect()))
-    # and a partial probe returns k results per query (recall may dip,
-    # coverage must not)
-    part = ivf_topk_learned(emb, queries, cent, k=5, nprobe=2).collect()
-    assert len(part) == 15
-
-
 def test_cluster_assignments_known_components(spark):
     # components: {1,2,3} (via 1-2, 2-3), {10,11}; 20 appears in no pair
     pairs = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], ["doc_1", "doc_2"])
     docs = spark.createDataFrame([(i,) for i in (1, 2, 3, 10, 11, 20)], ["doc_id"])
     out = {r["doc_id"]: r["cluster_id"] for r in dedup_clusters(docs, pairs).collect()}
     assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20}
+    # no pairs at all: every doc is its own cluster
+    no_pairs = pairs.limit(0)
+    out = {r["doc_id"]: r["cluster_id"] for r in dedup_clusters(docs, no_pairs).collect()}
+    assert out == {i: i for i in (1, 2, 3, 10, 11, 20)}
 
 
-def test_cluster_assignments_empty_pair_set(spark):
-    pairs = spark.createDataFrame([], "doc_1 bigint, doc_2 bigint")
-    out = cluster_assignments(pairs)
-    assert out.columns == ["doc_id", "cluster_id"]
-    assert out.collect() == []
-    # every doc is then its own cluster
-    docs = spark.createDataFrame([(1,), (2,)], "doc_id bigint")
-    assert sorted(tuple(r) for r in dedup_clusters(docs, pairs).collect()) == [(1, 1), (2, 2)]
+# every loop that runs through operators/iterate.py, with its result on
+# a single pair and on the path 1-2-3-4 (k=2 peels the path to nothing:
+# the fixpoint probe then sees no rows for the last two rounds)
+_LOOPS = {
+    "cluster_assignments": (
+        cluster_assignments,
+        {(1, 1), (2, 1)},
+        {(1, 1), (2, 1), (3, 1), (4, 1)},
+    ),
+    "kcore_peel": (lambda p: kcore_peel(p, k=2, rounds=3), set(), set()),
+    "kcore_fixpoint": (lambda p: kcore_fixpoint(p, k=2), set(), set()),
+    # synchronous LPA: a lone pair swaps labels each round; on the path
+    # ties break to the smaller label
+    "lpa_communities": (
+        lambda p: lpa_communities(p, rounds=2),
+        {(1, 1), (2, 2)},
+        {(1, 1), (2, 2), (3, 1), (4, 2)},
+    ),
+}
+
+
+@pytest.mark.parametrize("loop", sorted(_LOOPS))
+def test_iterative_loops_on_degenerate_pair_sets(spark, loop):
+    run, want_single, want_path = _LOOPS[loop]
+    schema = "doc_1 bigint, doc_2 bigint"
+    empty = run(spark.createDataFrame([], schema))
+    single = run(spark.createDataFrame([(1, 2)], schema))
+    path = run(spark.createDataFrame([(1, 2), (2, 3), (3, 4)], schema))
+    assert empty.collect() == []
+    assert empty.schema == single.schema == path.schema
+    assert {tuple(r) for r in single.collect()} == want_single
+    assert {tuple(r) for r in path.collect()} == want_path
 
 
 def test_pagerank_int_empty_edge_list(spark):
