@@ -37,6 +37,14 @@ from pyspark.sql import functions as F
 GRID = 1_000_000
 
 
+def snap(vec, grid: int):
+    """The ``1/grid`` lattice snap of an array column, as int64: the
+    float is widened BEFORE the multiply (a float-precision product
+    rounds differently across engines), so DuckDB's
+    ``CAST(round(CAST(x AS DOUBLE) * grid) AS BIGINT)`` matches it."""
+    return F.transform(vec, lambda x: F.round(x.cast("double") * grid).cast("long"))
+
+
 def lloyd_int(
     points: DataFrame,
     k: int,
@@ -127,16 +135,9 @@ def kmeans_int(
     """
     if iters < 1:
         raise ValueError("iters must be >= 1 (distance needs a centroid)")
-    # snap via the proven centroid_cosines idiom: widen float->double
-    # BEFORE the multiply (a float-precision product rounds differently
-    # across engines), then round — portable on both engines
-    snapped = emb_df.select(
-        id_col,
-        F.expr(
-            f"transform({vec_col},"
-            f" x -> CAST(round(CAST(x AS DOUBLE) * {grid}) AS BIGINT))"
-        ).alias("s"),
-    ).localCheckpoint(eager=True)
+    snapped = emb_df.select(id_col, snap(vec_col, grid).alias("s")).localCheckpoint(
+        eager=True
+    )
     assigned, _ = lloyd_int(snapped, k, iters, id_col, "s")
     cols = [id_col, "cell", "d"] + (["s"] if keep_vec else [])
     return assigned.select(*cols)

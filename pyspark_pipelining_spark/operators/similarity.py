@@ -1,31 +1,49 @@
-"""Similarity search over embedding columns (beyond-reference scope).
+"""Similarity search over embedding columns: the ANN ladder.
 
-Two tiers, the standard ANN architecture:
+Every rung has the filter-and-refine shape of the similarity-search
+literature (REPOSE, ICDE'21; Continuously Adaptive Similarity Search,
+SIGMOD'20), and each stage of that shape is written once here:
 
-* **brute-force cosine top-k** — the exact baseline: broadcast the query
-  set, compute cosine with JVM higher-order functions
-  (``zip_with`` + ``aggregate`` left-fold — deterministic summation
-  order, unlike a shuffle-order-dependent explode/sum), rank with a
-  per-query window.  At 100 TB this is one broadcast-join map stage +
-  one top-k shuffle on query_id.
-* **LSH-bucketed** — random-hyperplane signatures (sign of dot with H
-  deterministic hyperplanes) shrink the candidate set to same-bucket
-  vectors before exact re-ranking; the scale path when the corpus side
-  is too big for full scans per query.
+1. **encode**: a cheap key per vector: a hyperplane bucket
+   (:func:`hyperplane_signature`), a coarse IVF cell
+   (:func:`with_ivf_cell`; learned cells in :func:`ivf_topk_learned_q`),
+   PQ codes (:func:`_code_arrays`), sign-bit words (:func:`bq_encode`)
+   or int8 codes (:func:`sq8_encode`).  Brute force
+   (:func:`cosine_topk`) skips it.
+2. **shortlist**: a query's candidates are the vectors that share its
+   bucket or one of its probed cells (:func:`_ivf_probes`), or its best
+   ``shortlist`` by a compressed score (Hamming, the SQ8 integer dot, the
+   PQ asymmetric distance :func:`_adc` over :func:`_adc_tables`).
+3. **refine**: exact scores on the survivors: the rounded cosine
+   :func:`_cosine` over in-join candidates (:func:`_cosine_topk`) or
+   over an id shortlist (:func:`_rerank_cosine`), or the exact lattice
+   L2² :func:`_l2sq` (IVF-PQ re-rank).
+4. **top-k**: :func:`_topk`, one per-query ``row_number`` window that
+   Spark plans as a WindowGroupLimit.
 
-All dots are computed in double precision over the float32 embeddings;
-the left-fold makes results bit-deterministic and oracle-comparable
-(rounded to 6 decimals to absorb engine-side float→double cast noise).
+The corpus is ``(vec_id, embedding)``, the broadcast query set
+``(query_id, query_vec)``, and a vector is never its own neighbor.
+Float dots are double-precision left folds (``zip_with`` +
+``aggregate``): a fixed summation order, unlike a shuffle-order
+dependent explode/sum, so results are bit-deterministic and
+oracle-comparable (cosines rounded to 6 decimals to absorb engine-side
+float→double cast noise).  The integer rungs snap coordinates to a
+lattice (:func:`cluster.snap`) and stay in exact int64.
 """
 
 from __future__ import annotations
+
+from functools import reduce
+from operator import add
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pyspark_pipelining_spark import cache
-from pyspark_pipelining_spark.operators.cluster import lloyd_int
+from pyspark_pipelining_spark.operators.cluster import GRID, lloyd_int, snap
 from pyspark_pipelining_spark.sources.registry import spread
+
+_NOT_SELF = "vec_id != query_id"
 
 
 def _dot(a, b):
@@ -46,33 +64,71 @@ def _norm(a):
     )
 
 
-def cosine_topk(
-    emb_df: DataFrame,
-    query_df: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact top-k cosine neighbors for every query vector.
+def _cosine(a, b):
+    """Cosine of two array columns, rounded to 6 decimals."""
+    return F.round(_dot(a, b) / (_norm(a) * _norm(b)), 6)
 
-    ``query_df`` must have (query_id, query_vec).  Output:
-    query_id, vec_id, cosine (rounded 6dp), rank.
-    """
-    joined = spread(emb_df).crossJoin(F.broadcast(query_df)).filter(
-        F.col(id_col) != F.col("query_id")
+
+def _l2sq(a, b):
+    """Exact int64 squared L2 distance of two lattice vectors."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
     )
-    cos = _dot(F.col(vec_col), F.col("query_vec")) / (
-        _norm(F.col(vec_col)) * _norm(F.col("query_vec"))
+
+
+def _topk(df: DataFrame, k: int, order: list, rank: str = "rank") -> DataFrame:
+    """The ``k`` first rows of each query by ``order``, numbered in ``rank``."""
+    w = Window.partitionBy("query_id").orderBy(*order)
+    return df.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= k)
+
+
+def _cosine_topk(pairs: DataFrame, k: int, dedup: bool = False) -> DataFrame:
+    """Refine candidate ``pairs`` (vec_id, embedding, query_id,
+    query_vec) by exact cosine: query_id, vec_id, cosine, rank (ties on
+    vec_id).  ``dedup`` scores a pair found several times once."""
+    scored = pairs.select(
+        "query_id", "vec_id", _cosine(F.col("embedding"), F.col("query_vec")).alias("cosine")
     )
-    scored = joined.select(
-        "query_id", F.col(id_col), F.round(cos, 6).alias("cosine")
+    if dedup:
+        scored = scored.dropDuplicates(["query_id", "vec_id", "cosine"])
+    return _topk(scored, k, [F.desc("cosine"), F.asc("vec_id")]).orderBy("query_id", "rank")
+
+
+def _rerank_cosine(
+    short: DataFrame, emb_df: DataFrame, query_df: DataFrame, k: int
+) -> DataFrame:
+    """Exact-cosine top-k over a ``(query_id, vec_id)`` shortlist: one
+    broadcast hash join of the |q|·shortlist ids against the corpus, so
+    full floats are touched for shortlisted rows only."""
+    pairs = (
+        F.broadcast(short)
+        .join(spread(emb_df).select("vec_id", "embedding"), "vec_id")
+        .join(F.broadcast(query_df.select("query_id", "query_vec")), "query_id")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc(id_col))
+    return _cosine_topk(pairs, k)
+
+
+def _rank_distance(scored: DataFrame, dist: str, topk: int) -> DataFrame:
+    """The ``topk`` smallest integer ``dist`` per query (ties on
+    vec_id), ranked in a bigint ``rn``."""
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
+        _topk(scored, topk, [F.asc(dist), F.asc("vec_id")], rank="rn")
+        .withColumn("rn", F.col("rn").cast("long"))
+        .orderBy("query_id", "rn")
     )
+
+
+def cosine_topk(emb_df: DataFrame, query_df: DataFrame, k: int = 5) -> DataFrame:
+    """Exact top-k cosine neighbors for every query vector: the ladder's
+    baseline, every corpus vector is a candidate (one broadcast-join map
+    stage + one top-k shuffle on query_id).
+
+    Output: query_id, vec_id, cosine (rounded 6dp), rank.
+    """
+    pairs = spread(emb_df).crossJoin(F.broadcast(query_df)).filter(_NOT_SELF)
+    return _cosine_topk(pairs, k)
 
 
 def hyperplane_signature(vec_col, num_planes: int = 8, dim: int = 64, offset: int = 0):
@@ -108,8 +164,6 @@ def lsh_cosine_topk(
     k: int = 5,
     num_planes: int = 8,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     num_tables: int = 1,
 ) -> DataFrame:
     """Approximate top-k: candidates share the query's hyperplane
@@ -131,68 +185,35 @@ def lsh_cosine_topk(
         # collides at most once) — measured 1.34× faster than routing
         # through the 1-element posexplode
         corpus = spread(emb_df).withColumn(
-            "bucket", hyperplane_signature(F.col(vec_col), num_planes, dim)
+            "bucket", hyperplane_signature(F.col("embedding"), num_planes, dim)
         )
         queries = query_df.withColumn(
             "bucket", hyperplane_signature(F.col("query_vec"), num_planes, dim)
         )
-        cand = corpus.join(F.broadcast(queries), on="bucket").filter(
-            F.col(id_col) != F.col("query_id")
-        )
-    else:
-        table_sigs = [
-            hyperplane_signature(F.col(vec_col), num_planes, dim, offset=t * num_planes)
-            for t in range(num_tables)
-        ]
-        corpus = spread(emb_df).select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.posexplode(F.array(*table_sigs)).alias("tbl", "bucket"),
-        )
-        q_sigs = [
-            hyperplane_signature(F.col("query_vec"), num_planes, dim, offset=t * num_planes)
-            for t in range(num_tables)
-        ]
-        queries = query_df.select(
-            "query_id",
-            "query_vec",
-            F.posexplode(F.array(*q_sigs)).alias("tbl", "bucket"),
-        )
-        joined = corpus.join(F.broadcast(queries), on=["tbl", "bucket"]).filter(
-            F.col(id_col) != F.col("query_id")
-        )
-        # a pair colliding in several tables must score once — but the
-        # cosine is a pure function of the two vectors, so every
-        # colliding copy carries the identical score: compute it
-        # map-side per collision and dedup the NARROW (query, vec,
-        # cosine) rows instead of shipping both 64-float vectors
-        # through a first()-aggregate (r17, guide §2.3: the dedup
-        # exchange drops from ~1 KB to 24 B per candidate row, and the
-        # keys-only dedup stays a HashAggregate; the re-scored
-        # duplicates are bounded by the table count).  A/B at sf0.1:
-        # 2.55 → 2.23 s median, results identical.
-        mt_cos = _dot(F.col(vec_col), F.col("query_vec")) / (
-            _norm(F.col(vec_col)) * _norm(F.col("query_vec"))
-        )
-        scored = joined.select(
-            "query_id", F.col(id_col), F.round(mt_cos, 6).alias("cosine")
-        ).dropDuplicates(["query_id", id_col, "cosine"])
-        w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc(id_col))
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .orderBy("query_id", "rank")
-        )
-    cos = _dot(F.col(vec_col), F.col("query_vec")) / (
-        _norm(F.col(vec_col)) * _norm(F.col("query_vec"))
-    )
-    scored = cand.select("query_id", F.col(id_col), F.round(cos, 6).alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
+        return _cosine_topk(corpus.join(F.broadcast(queries), on="bucket").filter(_NOT_SELF), k)
+
+    def buckets(vec):
+        return F.posexplode(
+            F.array(
+                *[
+                    hyperplane_signature(F.col(vec), num_planes, dim, offset=t * num_planes)
+                    for t in range(num_tables)
+                ]
+            )
+        ).alias("tbl", "bucket")
+
+    corpus = spread(emb_df).select("vec_id", "embedding", buckets("embedding"))
+    queries = query_df.select("query_id", "query_vec", buckets("query_vec"))
+    joined = corpus.join(F.broadcast(queries), on=["tbl", "bucket"]).filter(_NOT_SELF)
+    # a pair colliding in several tables must score once — but the
+    # cosine is a pure function of the two vectors, so every colliding
+    # copy carries the identical score: compute it map-side per
+    # collision and dedup the NARROW (query, vec, cosine) rows instead of
+    # shipping both 64-float vectors through a first()-aggregate (r17,
+    # guide §2.3: the dedup exchange drops from ~1 KB to 24 B per
+    # candidate row, and the keys-only dedup stays a HashAggregate).
+    # A/B at sf0.1: 2.55 → 2.23 s median, results identical.
+    return _cosine_topk(joined, k, dedup=True)
 
 
 def _int_plane_dot(vec_col, j: int, dim: int):
@@ -246,20 +267,37 @@ def ivf_assign(vec_col, k: int, dim: int):
     return _argmax_first(F.array(*ivf_cell_scores(vec_col, k, dim)))
 
 
-def with_ivf_cell(
-    df: DataFrame, cells: int, dim: int, vec_col: str, out_col: str = "cell"
-) -> DataFrame:
-    """Attach the IVF cell id with the k plane-dot folds evaluated
-    EXACTLY once per row: the scores array is projected into its own
-    column first, and the argmax reads that column in a second
-    projection — CollapseProject keeps the two apart (the producer is
-    non-cheap and consumed twice), so the optimized plan carries k
-    ``aggregate(`` folds per row, not 9k (see :func:`ivf_assign`)."""
-    scores = F.array(*ivf_cell_scores(F.col(vec_col), cells, dim))
+def with_ivf_cell(df: DataFrame, cells: int, dim: int) -> DataFrame:
+    """Attach the IVF ``cell`` of ``embedding`` with the k plane-dot
+    folds evaluated EXACTLY once per row: the scores array is projected
+    into its own column first, and the argmax reads that column in a
+    second projection — CollapseProject keeps the two apart (the
+    producer is non-cheap and consumed twice), so the optimized plan
+    carries k ``aggregate(`` folds per row, not 9k (see
+    :func:`ivf_assign`)."""
+    scores = F.array(*ivf_cell_scores(F.col("embedding"), cells, dim))
     return (
         df.withColumn("_ivf_scores", scores)
-        .withColumn(out_col, _argmax_first(F.col("_ivf_scores")))
+        .withColumn("cell", _argmax_first(F.col("_ivf_scores")))
         .drop("_ivf_scores")
+    )
+
+
+def _ivf_probes(query_df: DataFrame, cells: int, nprobe: int, dim: int) -> DataFrame:
+    """(query_id, query_vec, cell): each query's ``nprobe`` best coarse
+    cells by plane-dot score, ties on the smaller cell."""
+    scores = ivf_cell_scores(F.col("query_vec"), cells, dim)
+    probes = query_df.select(
+        "query_id",
+        "query_vec",
+        F.explode(
+            F.array(
+                *[F.struct(F.lit(j).alias("cell"), s.alias("score")) for j, s in enumerate(scores)]
+            )
+        ).alias("p"),
+    ).select("query_id", "query_vec", "p.cell", "p.score")
+    return _topk(probes, nprobe, [F.desc("score"), F.asc("cell")], rank="probe_rank").select(
+        "query_id", "query_vec", "cell"
     )
 
 
@@ -270,8 +308,6 @@ def ivf_topk(
     cells: int = 8,
     nprobe: int = 2,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-style ANN: corpus vectors are bucketed into ``cells`` coarse
     cells once (argmax dot with fixed centroids); each query probes its
@@ -282,42 +318,25 @@ def ivf_topk(
     scan; recall is tuned by ``nprobe`` (cells scanned per query) and
     ``cells`` (inverse of cell size).
     """
-    corpus = with_ivf_cell(spread(emb_df), cells, dim, vec_col)
-    scores = ivf_cell_scores(F.col("query_vec"), cells, dim)
-    probes = (
-        query_df.select(
-            "query_id",
-            "query_vec",
-            F.explode(
-                F.array(*[F.struct(F.lit(j).alias("cell"), scores[j].alias("score")) for j in range(cells)])
-            ).alias("p"),
-        )
-        .select("query_id", "query_vec", F.col("p.cell").alias("cell"), F.col("p.score").alias("score"))
-    )
-    w_probe = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("cell"))
-    probes = probes.withColumn("probe_rank", F.row_number().over(w_probe)).filter(
-        F.col("probe_rank") <= nprobe
-    ).select("query_id", "query_vec", "cell")
-    joined = corpus.join(F.broadcast(probes), on="cell").filter(F.col(id_col) != F.col("query_id"))
-    cos = _dot(F.col(vec_col), F.col("query_vec")) / (
-        _norm(F.col(vec_col)) * _norm(F.col("query_vec"))
-    )
-    scored = joined.select("query_id", F.col(id_col), F.round(cos, 6).alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc(id_col))
+    corpus = with_ivf_cell(spread(emb_df), cells, dim)
+    probes = _ivf_probes(query_df, cells, nprobe, dim)
+    return _cosine_topk(corpus.join(F.broadcast(probes), on="cell").filter(_NOT_SELF), k)
+
+
+def _mean_centroids(assigned: DataFrame) -> DataFrame:
+    """(cell, centroid array<double>): the float mean of each cell's
+    ``embedding`` vectors."""
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
+        assigned.select("cell", F.posexplode("embedding").alias("pos", "x"))
+        .groupBy("cell", "pos")
+        .agg(F.avg(F.col("x").cast("double")).alias("m"))
+        .groupBy("cell")
+        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
+        .select("cell", F.transform("pm", lambda s: s["m"]).alias("centroid"))
     )
 
 
-def learned_centroids(
-    emb_df: DataFrame,
-    cells: int = 8,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def learned_centroids(emb_df: DataFrame, cells: int = 8, iters: int = 2) -> DataFrame:
     """K-means-style coarse quantizer training (the scale upgrade over
     the fixed-formula centroids in :func:`ivf_assign`).
 
@@ -332,37 +351,22 @@ def learned_centroids(
     (``tests/test_ivf_learned.py``).
     """
     assigned = emb_df.select(
-        id_col, vec_col, F.pmod(F.col(id_col), F.lit(cells)).alias("cell")
+        "vec_id", "embedding", F.pmod(F.col("vec_id"), F.lit(cells)).alias("cell")
+    )
+    dist = F.aggregate(
+        F.zip_with("embedding", "centroid", lambda x, c: (x.cast("double") - c) ** 2),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
     )
     for _ in range(iters):
-        cent = (
-            assigned.select("cell", F.posexplode(vec_col).alias("pos", "x"))
-            .groupBy("cell", "pos")
-            .agg(F.avg(F.col("x").cast("double")).alias("m"))
-            .groupBy("cell")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-            .select("cell", F.transform("pm", lambda s: s["m"]).alias("centroid"))
-        )
-        dist = F.aggregate(
-            F.zip_with(vec_col, "centroid", lambda x, c: (x.cast("double") - c) ** 2),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
         assigned = (
-            emb_df.crossJoin(F.broadcast(cent))
+            emb_df.crossJoin(F.broadcast(_mean_centroids(assigned)))
             .withColumn("d", dist)
-            .groupBy(id_col, vec_col)
+            .groupBy("vec_id", "embedding")
             .agg(F.min(F.struct("d", "cell")).alias("best"))
-            .select(id_col, vec_col, F.col("best.cell").alias("cell"))
+            .select("vec_id", "embedding", F.col("best.cell").alias("cell"))
         )
-    return (
-        assigned.select("cell", F.posexplode(vec_col).alias("pos", "x"))
-        .groupBy("cell", "pos")
-        .agg(F.avg(F.col("x").cast("double")).alias("m"))
-        .groupBy("cell")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-        .select("cell", F.transform("pm", lambda s: s["m"]).alias("centroid"))
-    )
+    return _mean_centroids(assigned)
 
 
 def embedding_near_dup_pairs(
@@ -370,8 +374,6 @@ def embedding_near_dup_pairs(
     threshold: float = 0.95,
     num_planes: int = 6,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via LSH blocking: vectors
     sharing a hyperplane bucket whose exact cosine ≥ threshold.
@@ -380,36 +382,27 @@ def embedding_near_dup_pairs(
     # num_planes folds over the full vector — too costly to compute per branch
     sig = cache.keep(
         spread(emb_df).withColumn(
-            "bucket", hyperplane_signature(F.col(vec_col), num_planes, dim)
+            "bucket", hyperplane_signature(F.col("embedding"), num_planes, dim)
         )
     )
     a = sig.alias("a")
-    b = sig.select(id_col, vec_col, "bucket").alias("b")
+    b = sig.select("vec_id", "embedding", "bucket").alias("b")
     cand = a.join(
         b,
-        on=[F.col("a.bucket") == F.col("b.bucket"), F.col(f"a.{id_col}") < F.col(f"b.{id_col}")],
-    )
-    cos = _dot(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}")) / (
-        _norm(F.col(f"a.{vec_col}")) * _norm(F.col(f"b.{vec_col}"))
+        on=[F.col("a.bucket") == F.col("b.bucket"), F.col("a.vec_id") < F.col("b.vec_id")],
     )
     return (
         cand.select(
-            F.col(f"a.{id_col}").alias("id_1"),
-            F.col(f"b.{id_col}").alias("id_2"),
-            F.round(cos, 6).alias("cosine"),
+            F.col("a.vec_id").alias("id_1"),
+            F.col("b.vec_id").alias("id_2"),
+            _cosine(F.col("a.embedding"), F.col("b.embedding")).alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
         .orderBy("id_1", "id_2")
     )
 
 
-def centroid_cosines(
-    emb_df: DataFrame,
-    label_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    grid: int = 1_000_000,
-) -> DataFrame:
+def centroid_cosines(emb_df: DataFrame, grid: int = 1_000_000) -> DataFrame:
     """Per-vector cosine to its own label's centroid — the standard
     cluster-coherence / outlier score over an embedding column (low
     cosine = the vector sits far from its group's center).
@@ -442,19 +435,13 @@ def centroid_cosines(
     inflation is dims × 16 bytes per row, bandwidth-bounded, no skew
     (dims are uniform).
     """
-    q = spread(emb_df).select(
-        id_col,
-        label_col,
-        F.transform(
-            vec_col, lambda x: F.round(x.cast("double") * grid).cast("long")
-        ).alias("qv"),
-    )
-    dims = q.select(id_col, label_col, F.posexplode("qv").alias("pos", "v"))
-    cent = dims.groupBy(label_col, "pos").agg(F.sum("v").alias("s"))
+    q = spread(emb_df).select("vec_id", "label", snap("embedding", grid).alias("qv"))
+    dims = q.select("vec_id", "label", F.posexplode("qv").alias("pos", "v"))
+    cent = dims.groupBy("label", "pos").agg(F.sum("v").alias("s"))
     dec_s = F.col("s").cast("decimal(38,0)")
     parts = (
-        dims.join(F.broadcast(cent), on=[label_col, "pos"])
-        .groupBy(id_col, label_col)
+        dims.join(F.broadcast(cent), on=["label", "pos"])
+        .groupBy("vec_id", "label")
         .agg(
             F.sum(F.col("v").cast("decimal(38,0)") * F.col("s")).alias("dot"),
             F.sum(F.col("v") * F.col("v")).alias("n1"),
@@ -462,8 +449,8 @@ def centroid_cosines(
         )
     )
     return parts.select(
-        id_col,
-        label_col,
+        "vec_id",
+        "label",
         F.round(
             F.col("dot").cast("double")
             / (F.sqrt(F.col("n1").cast("double")) * F.sqrt(F.col("n2").cast("double"))),
@@ -476,7 +463,25 @@ def centroid_cosines(
 # Product quantization (PQ) — the compressed-domain ANN scale path
 # ---------------------------------------------------------------------------
 
-PQ_GRID = 1_000_000
+
+def _subvectors(df: DataFrame, key: str, vec: str, m: int, dim: int) -> DataFrame:
+    """(key, sub, sv): each vector snapped to the ``1/GRID`` lattice and
+    split into ``m`` contiguous subvectors of ``dim/m`` coordinates."""
+    d2 = dim // m
+    return (
+        df.select(key, snap(vec, GRID).alias("_s"))
+        .select(
+            key,
+            F.explode(
+                F.expr(
+                    f"transform(sequence(0, {m - 1}),"
+                    f" j -> struct(CAST(j AS BIGINT) AS sub,"
+                    f" slice(_s, j * {d2} + 1, {d2}) AS sv))"
+                )
+            ).alias("e"),
+        )
+        .select(key, "e.sub", "e.sv")
+    )
 
 
 def pq_train_codes(
@@ -485,9 +490,6 @@ def pq_train_codes(
     k: int = 8,
     iters: int = 2,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    grid: int = PQ_GRID,
 ) -> tuple[DataFrame, DataFrame]:
     """Train per-subspace codebooks and encode every vector — the
     FAISS-style product quantizer that compresses a ``dim``-float
@@ -496,7 +498,7 @@ def pq_train_codes(
 
     The vector splits into ``m`` contiguous subvectors of ``dim/m``
     coordinates; each subspace runs the deterministic integer Lloyd
-    step of ``cluster.kmeans_int`` (:func:`cluster.lloyd_int`: 1/``grid``
+    step of ``cluster.kmeans_int`` (:func:`cluster.lloyd_int`: 1/``GRID``
     lattice snap, truncated integer centroid means, exact int64
     squared-L2, ties on cell id, seeding ``cell = id mod k``) — all
     ``m`` subspaces advance together in ONE plan keyed by ``sub``.
@@ -506,7 +508,7 @@ def pq_train_codes(
     the only exchanges are the (sub, cell, pos) centroid aggregations
     (≤ m·k·dim/m rows) per Lloyd step.
 
-    Returns ``(codes, codebook)``: codes = (id, sub, cell, d);
+    Returns ``(codes, codebook)``: codes = (vec_id, sub, cell, d);
     codebook = (sub, cell, centroid) of the final iteration.
     """
     if dim % m:
@@ -516,37 +518,79 @@ def pq_train_codes(
             f"iters must be >= 1 (got {iters}): the codebook and the "
             "distance column only exist after the first Lloyd step"
         )
-    d2 = dim // m
-    snapped = emb_df.select(
-        id_col,
+    subs = _subvectors(emb_df, "vec_id", "embedding", m, dim).localCheckpoint(eager=True)
+    assigned, codebook = lloyd_int(subs, k, iters, "vec_id", "sv", keys=["sub"])
+    return assigned.select("vec_id", "sub", "cell", "d"), codebook
+
+
+def _code_arrays(
+    emb_df: DataFrame, m: int, k: int, iters: int, dim: int
+) -> tuple[DataFrame, DataFrame]:
+    """PQ-encode the corpus: ``((vec_id, code), codebook)``, ``code`` the
+    vector's ``m`` cell ids in sub order."""
+    codes, codebook = pq_train_codes(emb_df, m=m, k=k, iters=iters, dim=dim)
+    code_arr = codes.groupBy("vec_id").agg(
         F.expr(
-            f"transform({vec_col},"
-            f" x -> CAST(round(CAST(x AS DOUBLE) * {grid}) AS BIGINT))"
-        ).alias("s"),
+            "transform(array_sort(collect_list(struct(sub, cell))), p -> p.cell)"
+        ).alias("code")
     )
-    subs = snapped.select(
-        id_col,
-        F.explode(
+    return code_arr, codebook
+
+
+def _adc_tables(
+    query_df: DataFrame, codebook: DataFrame, m: int, k: int, dim: int
+) -> DataFrame:
+    """(query_id, tabs): per query an m×k table of exact integer L2²
+    from each query subvector to every centroid of its subspace."""
+    dt = (
+        _subvectors(query_df, "query_id", "query_vec", m, dim)
+        .join(F.broadcast(codebook), "sub")
+        .select("query_id", "sub", "cell", _l2sq(F.col("sv"), F.col("centroid")).alias("d"))
+    )
+    # Densify each (query, sub) table to exactly k slots indexed BY CELL
+    # ID, not by position: if a Lloyd cell empties during training the
+    # surviving cell ids are non-contiguous, and a positional
+    # collect_list lookup would read the wrong cell's distance (or NULL
+    # out of bounds).  Codes can only ever reference cells present in
+    # the final codebook, so the NULL filler slots are never read.
+    return (
+        dt.groupBy("query_id", "sub")
+        .agg(F.expr("map_from_entries(collect_list(struct(cell, d)))").alias("dmap"))
+        .select(
+            "query_id",
+            "sub",
             F.expr(
-                f"transform(sequence(0, {m - 1}),"
-                f" j -> struct(CAST(j AS BIGINT) AS sub,"
-                f" slice(s, j * {d2} + 1, {d2}) AS ss))"
-            )
-        ).alias("e"),
-    ).select(id_col, "e.sub", "e.ss").localCheckpoint(eager=True)
-    assigned, codebook = lloyd_int(subs, k, iters, id_col, "ss", keys=["sub"])
-    return assigned.select(id_col, "sub", "cell", "d"), codebook
+                f"transform(sequence(0, {k - 1}),"
+                f" c -> element_at(dmap, CAST(c AS BIGINT)))"
+            ).alias("tab"),
+        )
+        .groupBy("query_id")
+        .agg(
+            F.expr(
+                "transform(array_sort(collect_list(struct(sub, tab))), p -> p.tab)"
+            ).alias("tabs")
+        )
+    )
+
+
+def _adc(tabs: str, m: int) -> str:
+    """SQL of the asymmetric distance of ``code`` under the tables
+    ``tabs``: the integer sum of ``m`` table lookups."""
+    return (
+        f"aggregate(sequence(0, {m - 1}), CAST(0 AS BIGINT),"
+        f" (acc, j) -> acc + element_at(element_at({tabs}, CAST(j + 1 AS INT)),"
+        f"  CAST(element_at(code, CAST(j + 1 AS INT)) + 1 AS INT)))"
+    )
 
 
 def pq_adc_topk(
     emb_df: DataFrame,
-    queries_df: DataFrame,
+    query_df: DataFrame,
     m: int = 4,
     k: int = 8,
     iters: int = 2,
     dim: int = 64,
     topk: int = 5,
-    grid: int = PQ_GRID,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k over PQ codes: each query
     precomputes an m×k table of exact integer distances to every
@@ -561,84 +605,27 @@ def pq_adc_topk(
     over (query, score)-pruned rows.
 
     Output: ``query_id, vec_id, adc_d, rn`` (rn ≤ topk per query,
-    ties on vec_id).
+    ties on vec_id, self-matches excluded).
     """
-    codes, codebook = pq_train_codes(
-        emb_df, m=m, k=k, iters=iters, dim=dim, grid=grid
-    )
-    d2 = dim // m
-    qsubs = queries_df.select(
-        F.col("query_id").alias("qid"),
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {m - 1}),"
-                f" j -> struct(CAST(j AS BIGINT) AS sub,"
-                f" slice(transform(query_vec,"
-                f"   x -> CAST(round(CAST(x AS DOUBLE) * {grid}) AS BIGINT)),"
-                f"   j * {d2} + 1, {d2}) AS qs))"
-            )
-        ).alias("e"),
-    ).select("qid", "e.sub", "e.qs")
-    dt = qsubs.join(F.broadcast(codebook), "sub").select(
-        "qid",
-        "sub",
-        "cell",
-        F.expr(
-            "aggregate(zip_with(qs, centroid, (a, b) -> (a - b) * (a - b)),"
-            " CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-        ).alias("d"),
-    )
-    # Densify each (qid, sub) table to exactly k slots indexed BY CELL
-    # ID, not by position: if a Lloyd cell empties during training the
-    # surviving cell ids are non-contiguous, and a positional
-    # collect_list lookup would read the wrong cell's distance (or NULL
-    # out of bounds).  Codes can only ever reference cells present in
-    # the final codebook, so the NULL filler slots are never read.
-    qtabs_row = (
-        dt.groupBy("qid", "sub")
-        .agg(F.expr("map_from_entries(collect_list(struct(cell, d)))").alias("dmap"))
-        .select(
-            "qid",
-            "sub",
-            F.expr(
-                f"transform(sequence(0, {k - 1}),"
-                f" c -> element_at(dmap, CAST(c AS BIGINT)))"
-            ).alias("tab"),
-        )
-        .groupBy("qid")
-        .agg(
-            F.expr(
-                "transform(array_sort(collect_list(struct(sub, tab))), p -> p.tab)"
-            ).alias("tabs")
-        )
-        .agg(F.collect_list(F.struct("qid", "tabs")).alias("qtabs"))
-    )
-    code_arr = codes.groupBy("vec_id").agg(
-        F.expr(
-            "transform(array_sort(collect_list(struct(sub, cell))), p -> p.cell)"
-        ).alias("code")
+    code_arr, codebook = _code_arrays(emb_df, m, k, iters, dim)
+    tables = _adc_tables(query_df, codebook, m, k, dim).agg(
+        F.collect_list(F.struct("query_id", "tabs")).alias("qtabs")
     )
     scored = (
-        code_arr.crossJoin(F.broadcast(qtabs_row))
+        code_arr.crossJoin(F.broadcast(tables))
         .select(
             "vec_id",
             F.explode(
                 F.expr(
-                    f"transform(qtabs, q -> struct(q.qid AS qid,"
-                    f" aggregate(sequence(0, {m - 1}), CAST(0 AS BIGINT),"
-                    f"  (acc, j) -> acc + element_at(element_at(q.tabs, CAST(j + 1 AS INT)),"
-                    f"   CAST(element_at(code, CAST(j + 1 AS INT)) + 1 AS INT))) AS adc_d))"
+                    "transform(qtabs, q -> struct(q.query_id AS query_id,"
+                    f" {_adc('q.tabs', m)} AS adc_d))"
                 )
             ).alias("e"),
         )
-        .select(F.col("e.qid").alias("query_id"), "vec_id", F.col("e.adc_d").alias("adc_d"))
+        .select("e.query_id", "vec_id", "e.adc_d")
+        .filter(_NOT_SELF)
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_d"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= topk)
-        .orderBy("query_id", "rn")
-    )
+    return _rank_distance(scored, "adc_d", topk)
 
 
 # ---------------------------------------------------------------------------
@@ -663,12 +650,7 @@ def rp_signs(dim: int, k: int) -> list[list[int]]:
 
 
 def rp_project(
-    emb_df: DataFrame,
-    k: int = 8,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    grid: int = 10**6,
+    emb_df: DataFrame, k: int = 8, dim: int = 64, grid: int = 10**6
 ) -> DataFrame:
     """Johnson–Lindenstrauss sketch: project each embedding to ``k``
     Rademacher-signed sums — the dimensionality-reduction pre-pass that
@@ -680,26 +662,17 @@ def rp_project(
     far below overflow), so the sketch is bit-identical on any engine
     or layout.  Pure map-side work — zero shuffle.
 
-    Output: ``<id_col>, r0..r{k-1}`` (int64) and ``norm2`` (Σ r_j²).
+    Output: ``vec_id, r0..r{k-1}`` (int64) and ``norm2`` (Σ r_j²).
     """
-    signs = rp_signs(dim, k)
-    snapped = F.expr(
-        f"transform({vec_col}, x -> CAST(round(CAST(x AS DOUBLE) * {grid}) AS BIGINT))"
-    )
-    cols = []
-    for j in range(k):
-        lits = ", ".join(str(v) for v in signs[j])
-        cols.append(
-            F.expr(
-                f"aggregate(zip_with(_s, array({lits}), (a, b) -> a * b),"
-                " CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-            ).alias(f"r{j}")
-        )
-    out = emb_df.select(id_col, snapped.alias("_s")).select(id_col, *cols)
-    norm2 = None
-    for j in range(k):
-        term = F.col(f"r{j}") * F.col(f"r{j}")
-        norm2 = term if norm2 is None else norm2 + term
+    cols = [
+        F.expr(
+            f"aggregate(zip_with(_s, array({', '.join(map(str, signs))}), (a, b) -> a * b),"
+            " CAST(0 AS BIGINT), (acc, x) -> acc + x)"
+        ).alias(f"r{j}")
+        for j, signs in enumerate(rp_signs(dim, k))
+    ]
+    out = emb_df.select("vec_id", snap("embedding", grid).alias("_s")).select("vec_id", *cols)
+    norm2 = reduce(add, [F.col(f"r{j}") * F.col(f"r{j}") for j in range(k)])
     return out.withColumn("norm2", norm2)
 
 
@@ -713,7 +686,6 @@ def ivfpq_topk(
     cells: int = 8,
     nprobe: int = 2,
     topk: int = 5,
-    grid: int = PQ_GRID,
     rerank: int = 0,
 ) -> DataFrame:
     """IVF-PQ — the production ANN index shape, composed from the two
@@ -743,146 +715,36 @@ def ivfpq_topk(
     hash join touching only shortlisted ids; output becomes
     ``query_id, vec_id, exact_d, rn``.
     """
-    codes, codebook = pq_train_codes(
-        emb_df, m=m, k=k, iters=iters, dim=dim, grid=grid
+    code_arr, codebook = _code_arrays(emb_df, m, k, iters, dim)
+    cand_side = code_arr.join(
+        with_ivf_cell(spread(emb_df), cells, dim).select("vec_id", "cell"), "vec_id"
     )
-    code_arr = codes.groupBy("vec_id").agg(
-        F.expr(
-            "transform(array_sort(collect_list(struct(sub, cell))), p -> p.cell)"
-        ).alias("code")
+    probes = _ivf_probes(query_df, cells, nprobe, dim).select("query_id", "cell")
+    scored = (
+        cand_side.join(F.broadcast(probes), "cell")
+        .filter(_NOT_SELF)
+        .join(F.broadcast(_adc_tables(query_df, codebook, m, k, dim)), "query_id")
+        .select("query_id", "vec_id", F.expr(_adc("tabs", m)).alias("adc_d"))
     )
-    cell_df = with_ivf_cell(
-        spread(emb_df), cells, dim, "embedding", out_col="ivf_cell"
-    ).select("vec_id", "ivf_cell")
-    cand_side = code_arr.join(cell_df, "vec_id")
-
-    qscores = ivf_cell_scores(F.col("query_vec"), cells, dim)
-    probes = (
-        query_df.select(
-            F.col("query_id").alias("qid"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(F.lit(j).alias("c"), qscores[j].alias("s"))
-                        for j in range(cells)
-                    ]
-                )
-            ).alias("p"),
-        )
-        .select("qid", F.col("p.c").alias("ivf_cell"), F.col("p.s").alias("s"))
-    )
-    w_probe = Window.partitionBy("qid").orderBy(F.desc("s"), F.asc("ivf_cell"))
-    probes = (
-        probes.withColumn("pr", F.row_number().over(w_probe))
-        .filter(F.col("pr") <= nprobe)
-        .select("qid", "ivf_cell")
-    )
-
-    d2 = dim // m
-    qsubs = query_df.select(
-        F.col("query_id").alias("qid"),
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {m - 1}),"
-                f" j -> struct(CAST(j AS BIGINT) AS sub,"
-                f" slice(transform(query_vec,"
-                f"   x -> CAST(round(CAST(x AS DOUBLE) * {grid}) AS BIGINT)),"
-                f"   j * {d2} + 1, {d2}) AS qs))"
-            )
-        ).alias("e"),
-    ).select("qid", "e.sub", "e.qs")
-    dtq = (
-        qsubs.join(F.broadcast(codebook), "sub")
-        .select(
-            "qid",
-            "sub",
-            "cell",
-            F.expr(
-                "aggregate(zip_with(qs, centroid, (a, b) -> (a - b) * (a - b)),"
-                " CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-            ).alias("d"),
-        )
-        .groupBy("qid", "sub")
-        # dense k-slot table indexed by cell id (see pq_adc_topk: a
-        # positional lookup breaks when a Lloyd cell empties)
-        .agg(F.expr("map_from_entries(collect_list(struct(cell, d)))").alias("dmap"))
-        .select(
-            "qid",
-            "sub",
-            F.expr(
-                f"transform(sequence(0, {k - 1}),"
-                f" c -> element_at(dmap, CAST(c AS BIGINT)))"
-            ).alias("tab"),
-        )
-        .groupBy("qid")
-        .agg(
-            F.expr(
-                "transform(array_sort(collect_list(struct(sub, tab))), p -> p.tab)"
-            ).alias("tabs")
-        )
-    )
-
-    cand = cand_side.join(F.broadcast(probes), "ivf_cell").filter(
-        F.col("vec_id") != F.col("qid")
-    )
-    scored = cand.join(F.broadcast(dtq), "qid").select(
-        F.col("qid").alias("query_id"),
-        "vec_id",
-        F.expr(
-            f"aggregate(sequence(0, {m - 1}), CAST(0 AS BIGINT),"
-            f" (acc, j) -> acc + element_at(element_at(tabs, CAST(j + 1 AS INT)),"
-            f"  CAST(element_at(code, CAST(j + 1 AS INT)) + 1 AS INT)))"
-        ).alias("adc_d"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_d"), F.asc("vec_id"))
     if not rerank:
-        return (
-            scored.withColumn("rn", F.row_number().over(w).cast("long"))
-            .filter(F.col("rn") <= topk)
-            .orderBy("query_id", "rn")
-        )
-    short = (
-        scored.withColumn("rr", F.row_number().over(w))
-        .filter(F.col("rr") <= rerank)
-        .select("query_id", "vec_id")
+        return _rank_distance(scored, "adc_d", topk)
+    short = _topk(scored, rerank, [F.asc("adc_d"), F.asc("vec_id")], rank="rr").select(
+        "query_id", "vec_id"
     )
-    snap = (
-        f"transform({{}}, x -> CAST(round(CAST(x AS DOUBLE) * {grid}) AS BIGINT))"
-    )
-    emb_s = emb_df.select("vec_id", F.expr(snap.format("embedding")).alias("sv"))
-    q_s = query_df.select(
-        F.col("query_id"), F.expr(snap.format("query_vec")).alias("qv")
-    )
+    queries = query_df.select("query_id", snap("query_vec", GRID).alias("qv"))
     exact = (
         F.broadcast(short)
-        .join(emb_s, "vec_id")
-        .join(F.broadcast(q_s), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            F.expr(
-                "aggregate(zip_with(sv, qv, (a, b) -> (a - b) * (a - b)),"
-                " CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-            ).alias("exact_d"),
-        )
+        .join(emb_df.select("vec_id", snap("embedding", GRID).alias("sv")), "vec_id")
+        .join(F.broadcast(queries), "query_id")
+        .select("query_id", "vec_id", _l2sq(F.col("sv"), F.col("qv")).alias("exact_d"))
     )
-    w2 = Window.partitionBy("query_id").orderBy(F.asc("exact_d"), F.asc("vec_id"))
-    return (
-        exact.withColumn("rn", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rn") <= topk)
-        .orderBy("query_id", "rn")
-    )
+    return _rank_distance(exact, "exact_d", topk)
 
 
 # --- binary quantization (sign bits) + Hamming search --------------------
 
 
-def bq_encode(
-    emb_df: DataFrame,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def bq_encode(emb_df: DataFrame, dim: int = 64) -> DataFrame:
     """Binary quantization: each vector collapses to ``ceil(dim/64)``
     int64 words of sign bits (bit i set ⟺ x_i > 0) — a 256× compression
     of a float64 vector that preserves angular neighborhoods well
@@ -893,30 +755,31 @@ def bq_encode(
     with the same fold (`xor`/`bit_count` on BIGINT are available
     there for the search half).
 
-    Output: ``<id_col>, bq`` (array of int64 words, little-word
-    first).
+    Output: ``vec_id, bq`` (array of int64 words, little-word first).
     """
     n_words = (dim + 63) // 64
     words = [
         F.expr(
             f"aggregate(sequence({w * 64}, {min(dim, (w + 1) * 64) - 1}),"
             " CAST(0 AS BIGINT),"
-            f" (acc, i) -> acc + CASE WHEN element_at({vec_col}, i + 1) > 0"
+            " (acc, i) -> acc + CASE WHEN element_at(embedding, i + 1) > 0"
             f" THEN shiftleft(CAST(1 AS BIGINT), i - {w * 64})"
             " ELSE CAST(0 AS BIGINT) END)"
         )
         for w in range(n_words)
     ]
-    return emb_df.select(F.col(id_col), F.array(*words).alias("bq"))
+    return emb_df.select("vec_id", F.array(*words).alias("bq"))
+
+
+def _query_corpus(query_df: DataFrame) -> DataFrame:
+    """The query set renamed to the corpus columns, to encode it alike."""
+    return query_df.select(
+        F.col("query_id").alias("vec_id"), F.col("query_vec").alias("embedding")
+    )
 
 
 def bq_hamming_topk(
-    emb_df: DataFrame,
-    query_df: DataFrame,
-    k: int = 5,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    emb_df: DataFrame, query_df: DataFrame, k: int = 5, dim: int = 64
 ) -> DataFrame:
     """Exact Hamming top-k over the binary-quantized corpus: encode
     both sides, broadcast the (tiny) query codes, score with
@@ -931,15 +794,10 @@ def bq_hamming_topk(
     Output: ``query_id, vec_id, hamming, rank`` (deterministic
     ``(distance, vec_id)`` tiebreak, self-matches excluded).
     """
-    corpus = bq_encode(spread(emb_df), dim=dim, id_col=id_col, vec_col=vec_col)
-    queries = bq_encode(
-        query_df.select(
-            F.col("query_id").alias(id_col), F.col("query_vec").alias(vec_col)
-        ),
-        dim=dim,
-        id_col=id_col,
-        vec_col=vec_col,
-    ).select(F.col(id_col).alias("query_id"), F.col("bq").alias("qbq"))
+    corpus = bq_encode(spread(emb_df), dim=dim)
+    queries = bq_encode(_query_corpus(query_df), dim=dim).select(
+        F.col("vec_id").alias("query_id"), F.col("bq").alias("qbq")
+    )
     n_words = (dim + 63) // 64
     ham = sum(
         F.bit_count(
@@ -949,15 +807,10 @@ def bq_hamming_topk(
     )
     scored = (
         corpus.crossJoin(F.broadcast(queries))
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select("query_id", id_col, ham.cast("int").alias("hamming"))
+        .filter(_NOT_SELF)
+        .select("query_id", "vec_id", ham.cast("int").alias("hamming"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("hamming"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
+    return _topk(scored, k, [F.asc("hamming"), F.asc("vec_id")]).orderBy("query_id", "rank")
 
 
 def bq_rerank_topk(
@@ -966,8 +819,6 @@ def bq_rerank_topk(
     k: int = 5,
     shortlist: int = 50,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """The production BQ deployment: Hamming over sign bits prunes the
     corpus to a ``shortlist`` per query, exact cosine re-scores only
@@ -975,36 +826,17 @@ def bq_rerank_topk(
     final ranking (same two-stage shape as ``ivfpq_topk(rerank=...)``).
 
     Scale shape: stage 1 streams the corpus as int64 words; stage 2 is
-    one broadcast hash join of the |q|·shortlist id list against the
-    vectors — full floats are touched for shortlisted rows only.
+    :func:`_rerank_cosine`.
 
     Output: ``query_id, vec_id, cosine, rank``.
     """
-    short = bq_hamming_topk(
-        emb_df, query_df, k=shortlist, dim=dim, id_col=id_col, vec_col=vec_col
-    ).select("query_id", id_col)
-    vecs = spread(emb_df).select(id_col, F.col(vec_col).alias("_v"))
-    qv = query_df.select("query_id", "query_vec")
-    cos = _dot(F.col("_v"), F.col("query_vec")) / (
-        _norm(F.col("_v")) * _norm(F.col("query_vec"))
+    short = bq_hamming_topk(emb_df, query_df, k=shortlist, dim=dim).select(
+        "query_id", "vec_id"
     )
-    scored = (
-        F.broadcast(short)
-        .join(vecs, id_col)
-        .join(F.broadcast(qv), "query_id")
-        .select("query_id", id_col, F.round(cos, 6).alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
+    return _rerank_cosine(short, emb_df, query_df, k)
 
 
-def sq8_stats(
-    emb_df: DataFrame, dim: int = 64, vec_col: str = "embedding"
-) -> DataFrame:
+def sq8_stats(emb_df: DataFrame, dim: int = 64) -> DataFrame:
     """Corpus-calibrated per-dimension quantization bounds for
     :func:`sq8_encode`: ONE row carrying ``mins`` / ``maxs`` arrays of
     length ``dim`` (doubles).
@@ -1018,7 +850,7 @@ def sq8_stats(
     calibration CONSISTENT: corpus and queries quantize against the
     same bounds."""
     ex = spread(emb_df).select(
-        F.posexplode(F.col(vec_col)).alias("i", "x")
+        F.posexplode("embedding").alias("i", "x")
     ).select("i", F.col("x").cast("double").alias("x"))
     dims = ex.groupBy("i").agg(
         F.min("x").alias("mn"), F.max("x").alias("mx")
@@ -1032,13 +864,7 @@ def sq8_stats(
     )
 
 
-def sq8_encode(
-    emb_df: DataFrame,
-    stats_df: DataFrame,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def sq8_encode(emb_df: DataFrame, stats_df: DataFrame, dim: int = 64) -> DataFrame:
     """Scalar quantization to int8-range codes — the classic SQ8 rung
     between binary quantization (:func:`bq_encode`, 1 bit/dim) and
     product quantization (:func:`pq_train_codes`, sub-byte/dim with a
@@ -1056,20 +882,22 @@ def sq8_encode(
     compute the same three double ops in the same order, so codes are
     bit-identical by construction.
 
-    Output: ``<id_col>, sq`` (array<int> of length ``dim``, values in
+    Output: ``vec_id, sq`` (array<int> of length ``dim``, values in
     [0, 255]); encoding is one map-side ``transform`` against the
     broadcast 1-row stats — nothing shuffles."""
+    # try_element_at: an empty corpus calibrates to empty bounds, and
+    # the query side must still encode (to all zeros) instead of raising
     code = (
         f"transform(sequence(0, {dim - 1}), i -> CASE"
-        f" WHEN element_at(maxs, i + 1) > element_at(mins, i + 1) THEN"
-        f" least(255, CAST(floor((CAST(element_at({vec_col}, i + 1) AS DOUBLE)"
+        f" WHEN try_element_at(maxs, i + 1) > try_element_at(mins, i + 1) THEN"
+        f" least(255, CAST(floor((CAST(element_at(embedding, i + 1) AS DOUBLE)"
         f" - element_at(mins, i + 1)) * 256.0D"
         f" / (element_at(maxs, i + 1) - element_at(mins, i + 1))) AS INT))"
         f" ELSE 0 END)"
     )
     return (
         emb_df.crossJoin(F.broadcast(stats_df))
-        .select(F.col(id_col), F.expr(code).alias("sq"))
+        .select("vec_id", F.expr(code).alias("sq"))
     )
 
 
@@ -1079,8 +907,6 @@ def sq8_rerank_topk(
     k: int = 5,
     shortlist: int = 50,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """The production SQ8 deployment (the FAISS ``SQ8`` /
     vector-store "scalar quantization" mode): a SYMMETRIC
@@ -1096,8 +922,7 @@ def sq8_rerank_topk(
     offset); every term is |·| ≤ 128², the sum ≤ dim·2¹⁴ — exact int64
     on any engine, so the shortlist is deterministic and
     oracle-reproducible bit-for-bit (ties break on id).  Stage 2 is
-    one broadcast hash join of the |q|·shortlist id list against the
-    float vectors — full precision touched for shortlisted rows only.
+    :func:`_rerank_cosine`.
 
     Scale shape: both sides quantize against the SAME broadcast 1-row
     corpus calibration (:func:`sq8_stats` — one dim-keyed map-side
@@ -1105,17 +930,11 @@ def sq8_rerank_topk(
     vectors; everything is whole-stage-codegen integer MACs.
 
     Output: ``query_id, vec_id, cosine, rank``."""
-    stats = sq8_stats(emb_df, dim=dim, vec_col=vec_col)
-    corpus = sq8_encode(spread(emb_df), stats, dim=dim, id_col=id_col, vec_col=vec_col)
-    queries = sq8_encode(
-        query_df.select(
-            F.col("query_id").alias(id_col), F.col("query_vec").alias(vec_col)
-        ),
-        stats,
-        dim=dim,
-        id_col=id_col,
-        vec_col=vec_col,
-    ).select(F.col(id_col).alias("query_id"), F.col("sq").alias("qsq"))
+    stats = sq8_stats(emb_df, dim=dim)
+    corpus = sq8_encode(spread(emb_df), stats, dim=dim)
+    queries = sq8_encode(_query_corpus(query_df), stats, dim=dim).select(
+        F.col("vec_id").alias("query_id"), F.col("sq").alias("qsq")
+    )
     idot = F.expr(
         "aggregate(zip_with(sq, qsq, (a, b) ->"
         " (CAST(a AS BIGINT) - 128) * (CAST(b AS BIGINT) - 128)),"
@@ -1123,32 +942,13 @@ def sq8_rerank_topk(
     )
     scored = (
         corpus.crossJoin(F.broadcast(queries))
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select("query_id", id_col, idot.alias("idot"))
+        .filter(_NOT_SELF)
+        .select("query_id", "vec_id", idot.alias("idot"))
     )
-    w_s = Window.partitionBy("query_id").orderBy(F.desc("idot"), F.asc(id_col))
-    short = (
-        scored.withColumn("_rn", F.row_number().over(w_s))
-        .filter(F.col("_rn") <= shortlist)
-        .select("query_id", id_col)
+    short = _topk(scored, shortlist, [F.desc("idot"), F.asc("vec_id")], rank="_rn").select(
+        "query_id", "vec_id"
     )
-    vecs = spread(emb_df).select(id_col, F.col(vec_col).alias("_v"))
-    qv = query_df.select("query_id", "query_vec")
-    cos = _dot(F.col("_v"), F.col("query_vec")) / (
-        _norm(F.col("_v")) * _norm(F.col("query_vec"))
-    )
-    rer = (
-        F.broadcast(short)
-        .join(vecs, id_col)
-        .join(F.broadcast(qv), "query_id")
-        .select("query_id", id_col, F.round(cos, 6).alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        rer.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
+    return _rerank_cosine(short, emb_df, query_df, k)
 
 
 def ivf_topk_learned_q(
@@ -1158,8 +958,6 @@ def ivf_topk_learned_q(
     grid: int,
     k: int = 5,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF search against FROZEN integer-quantized centroids (the
     iterative :func:`learned_centroids` trainer is not
@@ -1176,7 +974,7 @@ def ivf_topk_learned_q(
     * corpus assignment is one map-side pass: the ≤ ``cells`` centroid
       rows collapse to a single array via ``collect_list`` (1-row lazy
       crossJoin, repo scalar convention — never ``.collect()``), and
-      per corpus row ONE l2q fold per centroid builds a (d, cell)
+      per corpus row ONE l2 fold per centroid builds a (d, cell)
       struct array whose sorted head is the argmin (ties break to the
       smallest cell id) — the probes shape, so no distance is ever
       evaluated twice (r15 ADVICE);
@@ -1194,75 +992,33 @@ def ivf_topk_learned_q(
         F.array_sort(F.collect_list(F.struct("cell", "centroid_q"))).alias("cents")
     )
 
-    def quant(v):
-        return F.transform(v, lambda x: F.round(x.cast("double") * grid).cast("long"))
-
-    def l2q(xq_col, cent_col):
-        return F.aggregate(
-            F.zip_with(xq_col, cent_col, lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
+    def by_distance(df, vec):
+        # one l2 fold per centroid in a dedicated projection (the
+        # former fold-argmin re-evaluated each centroid's distance twice
+        # per step — the CodegenFallback recomputation class the r15
+        # ivf_assign rewrite removed): ``_d`` holds the (d, cell)
+        # structs sorted nearest first
+        return (
+            df.crossJoin(F.broadcast(cents_arr))
+            .withColumn("_q", snap(vec, grid))
+            .withColumn(
+                "_d",
+                F.array_sort(
+                    F.transform(
+                        "cents",
+                        lambda c: F.struct(
+                            _l2sq(F.col("_q"), c["centroid_q"]).alias("d"),
+                            c["cell"].cast("int").alias("cell"),
+                        ),
+                    )
+                ),
+            )
         )
 
-    # one l2q fold per centroid: pre-transform to (d, cell) structs in
-    # a dedicated projection (the probes shape; the former fold-argmin
-    # re-evaluated each centroid's l2q twice per step — the
-    # CodegenFallback recomputation class the r15 ivf_assign rewrite
-    # removed), then the min element of the sorted struct array is the
-    # (distance, smallest-cell) argmin
-    corpus = (
-        spread(emb_df)
-        .crossJoin(F.broadcast(cents_arr))
-        .withColumn("_xq", quant(F.col(vec_col)))
-        .withColumn(
-            "_dists",
-            F.array_sort(
-                F.transform(
-                    "cents",
-                    lambda c: F.struct(
-                        l2q(F.col("_xq"), c["centroid_q"]).alias("d"),
-                        c["cell"].cast("int").alias("cell"),
-                    ),
-                )
-            ),
-        )
-        .withColumn("cell", F.col("_dists")[0]["cell"])
-        .drop("_xq", "cents", "_dists")
+    corpus = by_distance(spread(emb_df), "embedding").select(
+        "vec_id", "embedding", F.col("_d")[0]["cell"].alias("cell")
     )
-    probes = (
-        query_df.crossJoin(F.broadcast(cents_arr))
-        .withColumn("_qq", quant(F.col("query_vec")))
-        .select(
-            "query_id",
-            "query_vec",
-            F.explode(
-                F.slice(
-                    F.array_sort(
-                        F.transform(
-                            "cents",
-                            lambda c: F.struct(
-                                l2q(F.col("_qq"), c["centroid_q"]).alias("d"),
-                                c["cell"].cast("int").alias("cell"),
-                            ),
-                        )
-                    ),
-                    1,
-                    nprobe,
-                )
-            ).alias("p"),
-        )
-        .select("query_id", "query_vec", F.col("p.cell").alias("cell"))
-    )
-    joined = corpus.join(F.broadcast(probes), on="cell").filter(
-        F.col(id_col) != F.col("query_id")
-    )
-    cos = _dot(F.col(vec_col), F.col("query_vec")) / (
-        _norm(F.col(vec_col)) * _norm(F.col("query_vec"))
-    )
-    scored = joined.select("query_id", F.col(id_col), F.round(cos, 6).alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
+    probes = by_distance(query_df, "query_vec").select(
+        "query_id", "query_vec", F.explode(F.slice("_d", 1, nprobe)).alias("p")
+    ).select("query_id", "query_vec", "p.cell")
+    return _cosine_topk(corpus.join(F.broadcast(probes), on="cell").filter(_NOT_SELF), k)

@@ -5,19 +5,9 @@ honor the driver's 50-slot snapshot freeze; see CLAUDE.md)."""
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from pyspark_pipelining_spark.queries_llm import DIM, N_QUERIES, TOPK, _query_vecs
 from pyspark_pipelining_spark.sources.registry import load_table
-
-BQ_N_QUERIES = 3
-BQ_TOPK = 5
-
-
-def _bq_query_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    return emb.filter(F.col("vec_id") < BQ_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
 
 
 def q_sim_bq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -27,7 +17,7 @@ def q_sim_bq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark_pipelining_spark.operators.similarity import bq_hamming_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return bq_hamming_topk(emb, _bq_query_vecs(spark, sf_dir), k=BQ_TOPK)
+    return bq_hamming_topk(emb, _query_vecs(spark, sf_dir), k=TOPK)
 
 
 def _sql_bq_word(vec_expr: str) -> str:
@@ -55,7 +45,7 @@ WITH corpus AS (
 ),
 q AS (
     SELECT vec_id AS query_id, {_sql_bq_word('embedding')} AS qbq
-    FROM embeddings WHERE vec_id < {BQ_N_QUERIES}
+    FROM embeddings WHERE vec_id < {N_QUERIES}
 ),
 scored AS (
     SELECT q.query_id, c.vec_id,
@@ -66,7 +56,7 @@ SELECT query_id, vec_id, hamming,
        CAST(row_number() OVER (PARTITION BY query_id
                                ORDER BY hamming ASC, vec_id ASC) AS INTEGER) AS rank
 FROM scored
-QUALIFY rank <= {BQ_TOPK}
+QUALIFY rank <= {TOPK}
 ORDER BY query_id, rank
 """
 
@@ -81,7 +71,7 @@ def q_sim_bq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     return bq_rerank_topk(
-        emb, _bq_query_vecs(spark, sf_dir), k=BQ_TOPK, shortlist=BQ_SHORTLIST
+        emb, _query_vecs(spark, sf_dir), k=TOPK, shortlist=BQ_SHORTLIST
     )
 
 
@@ -95,7 +85,7 @@ WITH corpus AS (
 ),
 qb AS (
     SELECT vec_id AS query_id, {_sql_bq_word('embedding')} AS qbq
-    FROM embeddings WHERE vec_id < {BQ_N_QUERIES}
+    FROM embeddings WHERE vec_id < {N_QUERIES}
 ),
 short AS (
     SELECT qb.query_id, c.vec_id
@@ -106,7 +96,7 @@ short AS (
 ),
 q AS (
     SELECT vec_id AS query_id, embedding AS query_vec
-    FROM embeddings WHERE vec_id < {BQ_N_QUERIES}
+    FROM embeddings WHERE vec_id < {N_QUERIES}
 ),
 rer AS (
     SELECT s.query_id, s.vec_id, round({dot} / ({ne} * {nq}), 6) AS cosine
@@ -118,7 +108,7 @@ SELECT query_id, vec_id, cosine,
        CAST(row_number() OVER (PARTITION BY query_id
                                ORDER BY cosine DESC, vec_id ASC) AS INTEGER) AS rank
 FROM rer
-QUALIFY rank <= {BQ_TOPK}
+QUALIFY rank <= {TOPK}
 ORDER BY query_id, rank
 """
 
@@ -1310,10 +1300,7 @@ ORACLES_ANN_MEDIA["wav_stereo_features"] = SQL_WAV_STEREO_FEATURES
 # --- Round-13 registration (formerly queries_staged.py): SQ8 ANN —
 # scalar-quantized integer-dot shortlist + exact cosine rerank --------
 
-SQ8_N_QUERIES = 3
-SQ8_TOPK = 5
 SQ8_SHORTLIST = 50
-SQ8_DIM = 64
 
 
 def q_sim_sq8_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1341,16 +1328,13 @@ def q_sim_sq8_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark_pipelining_spark.operators.similarity import sq8_rerank_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-    qv = emb.filter(F.col("vec_id") < SQ8_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
     return sq8_rerank_topk(
-        emb, qv, k=SQ8_TOPK, shortlist=SQ8_SHORTLIST, dim=SQ8_DIM
+        emb, _query_vecs(spark, sf_dir), k=TOPK, shortlist=SQ8_SHORTLIST, dim=DIM
     )
 
 
 def _sql_sim_sq8_rerank() -> str:
-    d = SQ8_DIM
+    d = DIM
 
     def code(vec: str) -> str:
         return (
@@ -1389,7 +1373,7 @@ corpus AS (
 qc AS (
     SELECT vec_id AS query_id, {code('embedding')} AS qsq
     FROM embeddings CROSS JOIN stats s
-    WHERE vec_id < {SQ8_N_QUERIES}
+    WHERE vec_id < {N_QUERIES}
 ),
 short AS (
     SELECT qc.query_id, c.vec_id
@@ -1402,7 +1386,7 @@ short AS (
 ),
 q AS (
     SELECT vec_id AS query_id, embedding AS query_vec
-    FROM embeddings WHERE vec_id < {SQ8_N_QUERIES}
+    FROM embeddings WHERE vec_id < {N_QUERIES}
 ),
 rer AS (
     SELECT s.query_id, s.vec_id, round({dot} / ({ne} * {nq}), 6) AS cosine
@@ -1414,7 +1398,7 @@ SELECT query_id, vec_id, cosine,
        CAST(row_number() OVER (PARTITION BY query_id
                                ORDER BY cosine DESC, vec_id ASC) AS INTEGER) AS rank
 FROM rer
-QUALIFY rank <= {SQ8_TOPK}
+QUALIFY rank <= {TOPK}
 ORDER BY query_id, rank
 """
 
@@ -1457,7 +1441,6 @@ def q_sim_ivf_learned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     by exact int64 lattice L2²; each query probes its nprobe nearest
     cells and exact-cosine re-ranks only those vectors."""
     from pyspark_pipelining_spark.operators import similarity
-    from pyspark_pipelining_spark.queries_llm import TOPK, _query_vecs
 
     emb = load_table(spark, sf_dir, "embeddings")
     cents = spark.read.parquet(_centroid_fixture_path())
@@ -1472,7 +1455,7 @@ def q_sim_ivf_learned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_sim_ivf_learned_topk() -> str:
-    from pyspark_pipelining_spark.queries_llm import _DOT, _NE, _NQ, N_QUERIES, TOPK
+    from pyspark_pipelining_spark.queries_llm import _DOT, _NE, _NQ
     from pyspark_pipelining_spark.sources.registry import sql_str_literal
 
     g = CENT_GRID

@@ -1308,6 +1308,7 @@ dt AS (
 scored AS (
     SELECT dt.qid AS query_id, a{iters}.vec_id, CAST(sum(dt.d) AS BIGINT) AS adc_d
     FROM a{iters} JOIN dt ON a{iters}.sub = dt.sub AND a{iters}.cell = dt.cell
+    WHERE a{iters}.vec_id <> dt.qid
     GROUP BY dt.qid, a{iters}.vec_id
 )
 SELECT query_id, vec_id, adc_d,

@@ -32,7 +32,7 @@ from collections import Counter
 from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -152,25 +152,35 @@ def test_weights_match_python_model(spark, raw_texts, tgt_texts, dups):
     n=st.integers(1, 8),
 )
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
+@example(filler=["cd cd"], m=1, n=1)  # "cd cd" shares the bucket of "qy qy"
 def test_target_only_grams_strictly_raise_weight(spark, filler, m, n):
-    """The verdict's target-alignment law: with fresh tokens qz / qy
-    (outside the filler alphabet), doc Z = "qz"×(m+1) — whose m grams
-    are all the target-only bigram "qz qz" — strictly outweighs doc
-    Y = "qy"×(m+1) — same gram count, bigram seen nowhere else.
+    """The verdict's target-alignment law: with fresh tokens z / y
+    (outside the filler alphabet), doc Z = "z"×(m+1) — whose m grams
+    are all the target-only bigram "z z" — strictly outweighs doc
+    Y = "y"×(m+1) — same gram count, bigram seen nowhere else.
     Provable from the λ formula: weight(Z) − weight(Y) =
     m·(λ_zz − λ_yy) and λ_zz − λ_yy ≈ q·ln(n_target+1) ≥ q·ln 2 ≫ the
     ±1 rounding slack, PROVIDED their buckets don't collide with each
-    other or any filler gram — asserted below, not assumed."""
-    z_doc = " ".join(["qz"] * (m + 1))
-    y_doc = " ".join(["qy"] * (m + 1))
+    other or any filler gram.  z and y are the first two of qz, qy,
+    qx, ... whose buckets are free for this filler, and the
+    collision-free setup is asserted below."""
+    taken = {_bucket(g, DSIR_BUCKETS) for t in filler for g in _grams(t)}
+    fresh = []
+    for tok in ("qz", "qy", "qx", "qw", "qv"):
+        if _bucket(f"{tok} {tok}", DSIR_BUCKETS) not in taken:
+            fresh.append(tok)
+            taken.add(_bucket(f"{tok} {tok}", DSIR_BUCKETS))
+    z, y = fresh[:2]
+    z_doc = " ".join([z] * (m + 1))
+    y_doc = " ".join([y] * (m + 1))
     raw_docs = dict(enumerate(filler)) | {50: z_doc, 51: y_doc}
-    tgt_texts = [" ".join(["qz"] * (n + 1))]
-    bz, by = _bucket("qz qz", DSIR_BUCKETS), _bucket("qy qy", DSIR_BUCKETS)
+    tgt_texts = [" ".join([z] * (n + 1))]
+    bz, by = _bucket(f"{z} {z}", DSIR_BUCKETS), _bucket(f"{y} {y}", DSIR_BUCKETS)
     other = {
         _bucket(g, DSIR_BUCKETS)
         for t in list(filler) + tgt_texts
         for g in _grams(t)
-        if g not in ("qz qz", "qy qy")
+        if g not in (f"{z} {z}", f"{y} {y}")
     }
     assert bz != by and bz not in other and by not in other  # collision-free setup
     raw, tgt = _frames(spark, raw_docs, tgt_texts)

@@ -2613,7 +2613,7 @@ def test_with_ivf_cell_equals_inline_assign(spark):
     }
     b = {
         r["vec_id"]: r["cell"]
-        for r in with_ivf_cell(df, cells, dim, "embedding")
+        for r in with_ivf_cell(df, cells, dim)
         .select("vec_id", "cell")
         .collect()
     }

@@ -37,13 +37,29 @@ VARIANTS = [
 BASELINE = "sim_bruteforce_topk"
 
 
-def _topk_sets(df) -> dict | None:
-    if not {"query_id", "vec_id"} <= set(df.columns):
-        return None
-    out: dict = {}
-    for r in df.collect():
-        out.setdefault(r["query_id"], set()).add(r["vec_id"])
-    return out
+def recalls(spark, sf: str) -> dict[str, float]:
+    """Recall@k of the baseline (1.0) and of every variant that shares
+    a query with it: the overlap of its top-k ``vec_id`` set with the
+    exact top-k, averaged over the shared queries."""
+    from pyspark_pipelining_spark import runner
+
+    queries = runner.resolve([BASELINE, *VARIANTS])
+
+    def topk_sets(name):
+        out: dict = {}
+        for r in queries[name](spark, sf).collect():
+            out.setdefault(r["query_id"], set()).add(r["vec_id"])
+        runner.release(spark)
+        return out
+
+    exact = topk_sets(BASELINE)
+    rec = {}
+    for name in [BASELINE, *VARIANTS]:
+        got = exact if name == BASELINE else topk_sets(name)
+        qids = sorted(set(exact) & set(got))
+        if qids:
+            rec[name] = sum(len(exact[q] & got[q]) / len(exact[q]) for q in qids) / len(qids)
+    return rec
 
 
 def main(argv: list[str]) -> int:
@@ -53,27 +69,13 @@ def main(argv: list[str]) -> int:
 
     from pyspark_pipelining_spark import runner
 
-    queries = runner.resolve([BASELINE, *VARIANTS])
-    if queries is None:
-        return 2
-
     spark = runner.session("ann-recall")
-    exact = _topk_sets(queries[BASELINE](spark, args.sf))
-    runner.release(spark)
-    print(f"baseline {BASELINE}: {len(exact)} queries, k per query "
-          f"{sorted({len(v) for v in exact.values()})}")
-    for name in VARIANTS:
-        got = _topk_sets(queries[name](spark, args.sf))
-        runner.release(spark)
-        if got is None:
-            print(f"{name}: no query_id/vec_id columns, incomparable")
-            continue
-        qids = sorted(set(exact) & set(got))
-        if not qids:
-            print(f"{name}: no shared queries with baseline, incomparable")
-            continue
-        rec = sum(len(exact[q] & got[q]) / len(exact[q]) for q in qids) / len(qids)
-        print(f"{name}: recall@k={rec:.3f} over {len(qids)} queries")
+    rec = recalls(spark, args.sf)
+    for name in [BASELINE, *VARIANTS]:
+        if name in rec:
+            print(f"{name}: recall@k={rec[name]:.3f}")
+        else:
+            print(f"{name}: no rows shared with the baseline, incomparable")
     spark.stop()
     return 0
 
