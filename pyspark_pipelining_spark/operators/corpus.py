@@ -22,10 +22,11 @@ from pyspark.sql import functions as F
 from pyspark_pipelining_spark import cache
 from pyspark_pipelining_spark.operators.dedup import (
     MERSENNE,
+    portable_hash60,
     portable_hash_id,
     word_ngrams,
 )
-from pyspark_pipelining_spark.operators.text import with_words
+from pyspark_pipelining_spark.operators.text import with_words, word_grams
 from pyspark_pipelining_spark.sources.registry import spread
 
 #: Redaction patterns applied in order (URL first so an embedded e-mail
@@ -39,17 +40,17 @@ PII_RULES: tuple[tuple[str, str, str], ...] = (
 )
 
 
-def scrub_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
+def scrub_pii(df: DataFrame) -> DataFrame:
     """Redact URLs, e-mail addresses, and phone numbers; count each.
 
     Output: doc_id, n_url, n_email, n_phone, clean (redacted text).
     Pure per-row regex — map-side only, no shuffle at any scale.
     """
     counts = [
-        F.regexp_count(F.col(text_col), F.lit(pat)).alias(f"n_{name}")
+        F.regexp_count(F.col("text"), F.lit(pat)).alias(f"n_{name}")
         for name, pat, _ in PII_RULES
     ]
-    out = df.select("doc_id", *counts, F.col(text_col).alias("clean"))
+    out = df.select("doc_id", *counts, F.col("text").alias("clean"))
     for _, pat, repl in PII_RULES:
         out = out.withColumn("clean", F.regexp_replace("clean", pat, repl))
     return out
@@ -59,7 +60,6 @@ def contamination(
     corpus_df: DataFrame,
     eval_df: DataFrame,
     n: int = 3,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Benchmark-decontamination scan: for every corpus document, the
     share of its distinct word n-grams that also occur anywhere in the
@@ -81,9 +81,9 @@ def contamination(
     """
     c_grams = (
         word_ngrams(corpus_df, n)
-        .select(id_col, F.array_distinct("ngrams").alias("gs"))
-        .select(id_col, F.explode("gs").alias("g"))
-        .select(id_col, portable_hash_id(F.col("g"), MERSENNE).alias("gid"))
+        .select("doc_id", F.array_distinct("ngrams").alias("gs"))
+        .select("doc_id", F.explode("gs").alias("g"))
+        .select("doc_id", portable_hash_id(F.col("g"), MERSENNE).alias("gid"))
     )
     e_ids = (
         word_ngrams(eval_df, n)
@@ -94,21 +94,21 @@ def contamination(
     )
     per_doc = (
         c_grams.join(F.broadcast(e_ids), "gid", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_grams"),
             F.sum(F.coalesce("hit", F.lit(0))).alias("n_contaminated"),
         )
     )
     return per_doc.select(
-        id_col,
+        "doc_id",
         "n_grams",
         "n_contaminated",
         (F.col("n_contaminated") / F.col("n_grams")).alias("contamination"),
     )
 
 
-def vocab_topk(df: DataFrame, k: int = 50, text_col: str = "text") -> DataFrame:
+def vocab_topk(df: DataFrame, k: int = 50) -> DataFrame:
     """Top-k vocabulary by corpus frequency (ties break on token text).
 
     One map-side-combined groupBy; the final top-k is an
@@ -116,61 +116,55 @@ def vocab_topk(df: DataFrame, k: int = 50, text_col: str = "text") -> DataFrame:
     partition heaps + driver merge of k rows), not a global sort — the
     pattern survives any corpus size for k ≪ vocabulary.
     """
-    tokens = with_words(df, text_col).select(F.explode("words").alias("token")).filter(
+    tokens = with_words(df).select(F.explode("words").alias("token")).filter(
         F.length("token") > 0
     )
     counts = tokens.groupBy("token").agg(F.count(F.lit(1)).alias("n"))
     return counts.orderBy(F.desc("n"), F.asc("token")).limit(k)
 
 
-def stratified_topk_sample(
-    df: DataFrame, k: int = 2, strata_col: str = "source", id_col: str = "doc_id"
-) -> DataFrame:
-    """Deterministic exact-k-per-stratum sample: rank rows inside each
-    stratum by ``md5(id)`` (a fixed pseudo-random order both engines
-    reproduce) and keep the first k.
+def stratified_topk_sample(df: DataFrame, k: int = 2) -> DataFrame:
+    """Deterministic exact-k-per-source sample: rank rows inside each
+    ``source`` stratum by ``md5(doc_id)`` (a fixed pseudo-random order
+    both engines reproduce) and keep the first k.
 
     One shuffle on the stratum key.  A stratum far larger than memory
     makes the per-stratum window the bottleneck — for that regime use
     :func:`hash_fraction_sample` (map-side, no shuffle) or pre-filter
     with it before the exact window.
     """
-    order = [F.md5(F.col(id_col).cast("string")), F.col(id_col)]
-    w = Window.partitionBy(strata_col).orderBy(*order)
+    order = [F.md5(F.col("doc_id").cast("string")), F.col("doc_id")]
+    w = Window.partitionBy("source").orderBy(*order)
     return (
-        df.select(id_col, strata_col)
+        df.select("doc_id", "source")
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
-        .select(id_col, strata_col)
+        .select("doc_id", "source")
     )
 
 
-def hash_fraction_sample(
-    df: DataFrame, fraction: float, id_col: str = "doc_id", grid: int = 1_000_000
-) -> DataFrame:
+def hash_fraction_sample(df: DataFrame, fraction: float, grid: int = 1_000_000) -> DataFrame:
     """Deterministic ~``fraction`` sample with zero shuffle: keep rows
-    whose md5-derived id hash lands under ``fraction`` of the hash grid.
+    whose md5-derived ``doc_id`` hash lands under ``fraction`` of the hash grid.
     Reproducible across runs/engines (unlike ``df.sample``, whose seed
     is partition-layout-dependent), composable (a 0.5 sample of a 0.5
     sample is the same rows as a 0.25 sample), and purely map-side.
     """
-    bucket = portable_hash_id(F.col(id_col).cast("string"), grid)
+    bucket = portable_hash_id(F.col("doc_id").cast("string"), grid)
     return df.filter(bucket < int(fraction * grid))
 
 
 def pack_greedy(
     df: DataFrame,
     budget: int = 2000,
-    cost_col: str = "n_chars",
-    group_col: str = "source",
-    id_col: str = "doc_id",
 ) -> DataFrame:
-    """Greedy sequential sequence packing: within each group, walk
-    documents in id order and assign pack ids such that each pack's
-    total cost stays ≤ ``budget`` (a document larger than the budget
-    gets a pack of its own; packs never span groups).
+    """Greedy sequential sequence packing: within each ``source``, walk
+    documents in ``doc_id`` order and assign pack ids such that each
+    pack's total cost (``n_chars``) stays ≤ ``budget`` (a document
+    larger than the budget gets a pack of its own; packs never span
+    sources).
 
-    Output: doc_id, <group_col>, pack_id (0-based per group).
+    Output: doc_id, source, pack_id (0-based per source).
 
     This is the module's one Python-worker operator, on purpose: the
     running-fill state machine is order-dependent within a group, which
@@ -183,10 +177,10 @@ def pack_greedy(
     """
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col).reset_index(drop=True)
+        pdf = pdf.sort_values("doc_id").reset_index(drop=True)
         pack_ids = []
         pid, fill, first = 0, 0, True
-        for cost in pdf[cost_col]:
+        for cost in pdf["n_chars"]:
             if not first and fill + cost > budget:
                 pid += 1
                 fill = 0
@@ -194,15 +188,15 @@ def pack_greedy(
             first = False
             pack_ids.append(pid)
         pdf["pack_id"] = pack_ids
-        return pdf[[id_col, group_col, "pack_id"]]
+        return pdf[["doc_id", "source", "pack_id"]]
 
-    narrow = spread(df).select(id_col, group_col, cost_col)
-    return narrow.groupBy(group_col).applyInPandas(
-        pack, schema=f"{id_col} long, {group_col} string, pack_id long"
+    narrow = spread(df).select("doc_id", "source", "n_chars")
+    return narrow.groupBy("source").applyInPandas(
+        pack, schema="doc_id long, source string, pack_id long"
     )
 
 
-def collapse_repeats(df: DataFrame, text_col: str = "text") -> DataFrame:
+def collapse_repeats(df: DataFrame) -> DataFrame:
     """Collapse runs of consecutively repeated tokens ("table table
     table" → "table") — the cheapest form of intra-document repetition
     trimming (the C4/Gopher cleanup family; full line-dedup needs
@@ -213,7 +207,7 @@ def collapse_repeats(df: DataFrame, text_col: str = "text") -> DataFrame:
     array, so the whole operator rides whole-stage codegen with no
     shuffle at any scale.
     """
-    words = with_words(df, text_col)
+    words = with_words(df)
     idx = F.sequence(F.lit(1), F.size("words"))
     # the i-1 probe is clamped to 1 (not short-circuited away): ANSI mode
     # raises on element_at(.., 0), and boolean OR evaluates both operands;
@@ -240,9 +234,7 @@ def collapse_repeats(df: DataFrame, text_col: str = "text") -> DataFrame:
 LINE_SPLIT_RE = r"[.!?]\s+"
 
 
-def dedup_lines(
-    df: DataFrame, text_col: str = "text", split_re: str = LINE_SPLIT_RE
-) -> DataFrame:
+def dedup_lines(df: DataFrame, split_re: str = LINE_SPLIT_RE) -> DataFrame:
     """Corpus-global exact line dedup with per-document reassembly — the
     C4-style cleanup: every distinct (trimmed) line survives exactly
     once, in its first occurrence ``(doc_id, position)``; later
@@ -266,7 +258,7 @@ def dedup_lines(
     collision odds stay negligible at any realistic line count.
     """
     lines = (
-        df.select("doc_id", F.posexplode(F.split(F.col(text_col), split_re)).alias("pos", "raw"))
+        df.select("doc_id", F.posexplode(F.split(F.col("text"), split_re)).alias("pos", "raw"))
         .withColumn("line", F.trim("raw"))
         .filter(F.length("line") > 0)
         .select("doc_id", "pos", "line", F.md5(F.col("line")).alias("h"))
@@ -296,12 +288,10 @@ def dedup_lines(
     )
 
 
-def training_shuffle(
-    df: DataFrame, num_shards: int, id_col: str = "doc_id", salt: str = "epoch0"
-) -> DataFrame:
+def training_shuffle(df: DataFrame, num_shards: int, salt: str = "epoch0") -> DataFrame:
     """Deterministic global shuffle for training-data export: documents
     land in ``num_shards`` pseudo-random shards, pseudo-randomly ordered
-    within each shard, keyed by ``md5(salt || id)`` — so the epoch's
+    within each shard, keyed by ``md5(salt || doc_id)`` — so the epoch's
     order is reproducible from (salt, ids) alone, independent of input
     partitioning or cluster size, and a different ``salt`` yields an
     independent permutation for the next epoch.
@@ -312,8 +302,9 @@ def training_shuffle(
     result partitioned by ``shard`` gives the downstream trainer its
     usual sharded-and-shuffled file layout.
     """
-    key = F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string")))
-    shard = portable_hash_id(F.concat(F.lit(salt), F.col(id_col).cast("string")), num_shards)
+    salted = F.concat(F.lit(salt), F.col("doc_id").cast("string"))
+    key = F.md5(salted)
+    shard = portable_hash_id(salted, num_shards)
     return (
         df.withColumn("shard", shard)
         .repartition(num_shards, "shard")
@@ -367,14 +358,11 @@ def histogram_quantiles(
 def mixture_sample(
     df: DataFrame,
     targets: dict[str, int],
-    group_col: str = "source",
-    cost_col: str = "n_chars",
-    id_col: str = "doc_id",
     grid: int = 1_000_000,
 ) -> DataFrame:
-    """Corpus mixture sampling: down-sample each group toward a target
-    cost budget (tokens/chars), the data-mixing step every multi-source
-    training corpus runs ("2 parts web, 1 part code, cap wiki at N
+    """Corpus mixture sampling: down-sample each ``source`` toward a
+    target cost budget (``n_chars``), the data-mixing step every
+    multi-source training corpus runs ("2 parts web, 1 part code, cap wiki at N
     tokens").
 
     Per group, the keep fraction is ``min(1, target / Σcost)`` snapped
@@ -383,15 +371,15 @@ def mixture_sample(
     md5-hash rule of :func:`hash_fraction_sample`.  Groups without a
     target are dropped (explicit mixture only).
 
-    Output: the sampled rows (id, group, cost).  Scale shape: ONE
+    Output: the sampled rows (doc_id, source, n_chars).  Scale shape: ONE
     map-side-combined groupBy for the per-group totals (group-count
     rows, broadcast back), then a pure map-side filter — the corpus is
     never shuffled.  Deterministic and composable: re-running with a
     smaller target keeps a subset of the larger sample.
     """
-    totals = df.groupBy(group_col).agg(F.sum(cost_col).alias("_total"))
+    totals = df.groupBy("source").agg(F.sum("n_chars").alias("_total"))
     t_rows = [(g, int(t)) for g, t in sorted(targets.items())]
-    t_df = df.sparkSession.createDataFrame(t_rows, f"{group_col} string, _target long")
+    t_df = df.sparkSession.createDataFrame(t_rows, "source string, _target long")
     # target·grid in decimal(38,0) (HUGEINT in the oracle): int64 would
     # overflow once the target passes ~9e12 units at grid 1e6 — i.e. at
     # exactly the 100 TB-characters scale this operator exists for
@@ -399,22 +387,17 @@ def mixture_sample(
         F.lit(grid).cast("long"),
         F.expr(f"CAST(CAST(_target AS DECIMAL(38,0)) * {grid} div _total AS BIGINT)"),
     )
-    cutoffs = totals.join(t_df, on=group_col).select(
-        group_col, frac.alias("_cut")
-    )
-    keyed = df.select(id_col, group_col, cost_col).join(
-        F.broadcast(cutoffs), on=group_col
-    )
-    bucket = portable_hash_id(F.col(id_col).cast("string"), grid)
-    return keyed.filter(bucket < F.col("_cut")).select(id_col, group_col, cost_col)
+    cutoffs = totals.join(t_df, on="source").select("source", frac.alias("_cut"))
+    cols = ["doc_id", "source", "n_chars"]
+    keyed = df.select(*cols).join(F.broadcast(cutoffs), on="source")
+    bucket = portable_hash_id(F.col("doc_id").cast("string"), grid)
+    return keyed.filter(bucket < F.col("_cut")).select(*cols)
 
 
 def chunk_documents(
     df: DataFrame,
     size: int = 200,
     overlap: int = 50,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Fixed-window character chunking with overlap — the RAG /
     context-window prep step that turns documents into retrievable
@@ -431,18 +414,18 @@ def chunk_documents(
     stride = size - overlap
     if stride <= 0:
         raise ValueError("overlap must be smaller than size")
-    n = F.expr(f"(length({text_col}) + {stride - 1}) div {stride}")
+    n = F.expr(f"(length(text) + {stride - 1}) div {stride}")
     return (
-        df.filter(F.length(text_col) > 0)
+        df.filter(F.length("text") > 0)
         .select(
-            id_col,
+            "doc_id",
             F.posexplode(F.sequence(F.lit(0), n - 1)).alias("chunk_id", "_i"),
-            F.col(text_col),
+            F.col("text"),
         )
         .select(
-            id_col,
+            "doc_id",
             "chunk_id",
-            F.expr(f"substring({text_col}, chunk_id * {stride} + 1, {size})").alias(
+            F.expr(f"substring(text, chunk_id * {stride} + 1, {size})").alias(
                 "chunk_text"
             ),
         )
@@ -453,14 +436,12 @@ def chunk_documents(
 def weighted_sample(
     df: DataFrame,
     k: int = 5,
-    weight_col: str = "n_chars",
-    group_col: str = "source",
-    id_col: str = "doc_id",
 ) -> DataFrame:
-    """Deterministic weighted sampling without replacement, k per group
-    (sequential Poisson sampling, Ohlsson 1998): each row gets priority
-    ``hash(id) / weight`` and the k smallest priorities win, so
-    inclusion probability is ≈ proportional to weight — the standard
+    """Deterministic weighted sampling without replacement, k per
+    ``source`` (sequential Poisson sampling, Ohlsson 1998): each row
+    gets priority ``hash(doc_id) / n_chars`` and the k smallest
+    priorities win, so inclusion probability is ≈ proportional to
+    weight — the standard
     upweight-quality-sources primitive for corpus mixtures when exact
     per-source budgets (see :func:`mixture_sample`) are too coarse.
 
@@ -472,20 +453,18 @@ def weighted_sample(
     filter (map-side) before the exact window, the same escape hatch
     as :func:`stratified_topk_sample`.
     """
-    h = F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 15), 16, 10).cast(
-        "long"
-    )
-    prio = h.cast("double") / F.col(weight_col).cast("double")
-    w = Window.partitionBy(group_col).orderBy(F.col("_prio"), F.col(id_col))
+    h = portable_hash60(F.col("doc_id").cast("string"))
+    prio = h.cast("double") / F.col("n_chars").cast("double")
+    w = Window.partitionBy("source").orderBy(F.col("_prio"), F.col("doc_id"))
     return (
-        df.select(id_col, group_col, weight_col, prio.alias("_prio"))
+        df.select("doc_id", "source", "n_chars", prio.alias("_prio"))
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= k)
-        .select(id_col, group_col, weight_col)
+        .select("doc_id", "source", "n_chars")
     )
 
 
-def merge_pair_counts(df: DataFrame, k: int = 40, text_col: str = "text") -> DataFrame:
+def merge_pair_counts(df: DataFrame, k: int = 40) -> DataFrame:
     """Top-k adjacent word pairs by corpus frequency — the candidate
     scoring step of a BPE/WordPiece merge round (at word granularity:
     which pairs co-occur often enough to fuse).
@@ -499,7 +478,7 @@ def merge_pair_counts(df: DataFrame, k: int = 40, text_col: str = "text") -> Dat
     # guard size >= 2 BEFORE sequence(1, size-1): Spark's sequence is
     # bidirectional, so sequence(1, 0) silently yields [1, 0] and the
     # 0 index would fault under ANSI element_at
-    words = with_words(df, text_col).filter(F.size("words") >= 2)
+    words = with_words(df).filter(F.size("words") >= 2)
     pairs = words.select(
         F.explode(
             F.expr(
@@ -516,7 +495,6 @@ def merge_pair_counts(df: DataFrame, k: int = 40, text_col: str = "text") -> Dat
 def split_assign(
     df: DataFrame,
     fractions: dict[str, float],
-    id_col: str = "doc_id",
     salt: str = "split0",
     grid: int = 1_000_000,
 ) -> DataFrame:
@@ -537,13 +515,11 @@ def split_assign(
     (any remainder is an implicit holdout named ``__rest``).
     Output: input columns + ``split``.
     """
-    from pyspark_pipelining_spark.operators.dedup import portable_hash_id
-
     total = sum(fractions.values())
     if total > 1.0 + 1e-9:
         raise ValueError(f"fractions sum to {total} > 1")
     bucket = portable_hash_id(
-        F.concat(F.lit(salt + ":"), F.col(id_col).cast("string")), grid
+        F.concat(F.lit(salt + ":"), F.col("doc_id").cast("string")), grid
     )
     expr = None
     lo = 0
@@ -559,8 +535,6 @@ def dsir_logweights(
     raw: DataFrame,
     target: DataFrame,
     buckets: int = 4096,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     q: int = 1_000_000,
 ) -> DataFrame:
     """DSIR-style hashed-n-gram importance weights (Xie et al. 2023,
@@ -597,7 +571,7 @@ def dsir_logweights(
     the two histograms are B-bounded aggregates (map-side combine →
     ~B rows each, B = 4096 default); the λ table is ≤ B rows and
     BROADCAST into the per-occurrence join, so the only corpus-sized
-    shuffle is the final per-document sum, keyed by ``id_col`` — at
+    shuffle is the final per-document sum, keyed by ``doc_id`` — at
     100 TB the weight stage costs one bounded shuffle, and the
     histograms cost none that grow with the corpus.  Totals enter via
     a 1-row lazy crossJoin (no ``collect``).
@@ -619,7 +593,7 @@ def dsir_logweights(
     cores — while the histogram → totals → λ triple-recompute stays
     collapsed by the tiny histogram persist.
 
-    Output: one row per RAW document — ``id_col``, ``n_grams``
+    Output: one row per RAW document — ``doc_id``, ``n_grams``
     (bigram occurrences, BIGINT; 0-gram docs kept with weight 0),
     ``logweight_q6`` (BIGINT, quantized at ``q``), ``logweight``
     (boundary double, 6dp).
@@ -628,20 +602,9 @@ def dsir_logweights(
         raise ValueError(f"buckets must be >= 2, got {buckets}")
 
     def occs(df: DataFrame) -> DataFrame:
-        words = with_words(df, text_col).filter(F.size("words") >= 2)
-        grams = words.select(
-            F.col(id_col),
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(words) - 1),"
-                    " i -> concat(element_at(words, i), ' ',"
-                    "             element_at(words, i + 1)))"
-                )
-            ).alias("gram"),
-        )
-        return grams.select(
-            id_col, portable_hash_id(F.col("gram"), buckets).alias("bucket")
-        )
+        words = with_words(df).filter(F.size("words") >= 2)
+        grams = words.select("doc_id", F.explode(word_grams(2)).alias("gram"))
+        return grams.select("doc_id", portable_hash_id(F.col("gram"), buckets).alias("bucket"))
 
     # the merged histogram frame feeds BOTH the totals and the λ
     # projection — persist it once (cache.keep, ≤ B rows; released by
@@ -688,17 +651,17 @@ def dsir_logweights(
     )
     scored = (
         raw_occs.join(F.broadcast(lam), "bucket")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_grams"),
             F.sum("lam_q").alias("logweight_q6"),
         )
     )
     return (
-        raw.select(id_col)
-        .join(scored, id_col, "left")
+        raw.select("doc_id")
+        .join(scored, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_grams", F.lit(0)).cast("long").alias("n_grams"),
             F.coalesce("logweight_q6", F.lit(0)).cast("long").alias("logweight_q6"),
             F.round(F.coalesce("logweight_q6", F.lit(0)) / q, 6).alias("logweight"),
@@ -710,8 +673,6 @@ def dsir_resample(
     weights: DataFrame,
     k: int = 64,
     salt: str = "dsir0",
-    id_col: str = "doc_id",
-    weight_q_col: str = "logweight_q6",
     q: int = 1_000_000,
 ) -> DataFrame:
     """Gumbel top-k importance resampling over :func:`dsir_logweights`
@@ -734,31 +695,22 @@ def dsir_resample(
     global top-k (``orderBy(...).limit(k)`` → TakeOrdered — per-
     partition heaps, never a full sort/shuffle of the corpus).
 
-    Output: ``id_col``, ``logweight_q6``, ``key_q6``, ``rank`` —
+    Output: ``doc_id``, ``logweight_q6``, ``key_q6``, ``rank`` —
     rank 1 = largest key, id tiebreak (integer keys can tie).
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     grid = 1 << 52
-    h = F.pmod(
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("long"),
-        F.lit(grid),
-    )
+    h = portable_hash_id(F.concat(F.lit(salt + ":"), F.col("doc_id").cast("string")), grid)
     u = (h + 1) / F.lit(float(grid + 1))
     gumbel_q = F.round(-F.log(-F.log(u)) * q).cast("long")
     keyed = weights.select(
-        id_col,
-        weight_q_col,
-        (F.col(weight_q_col) + gumbel_q).alias("key_q6"),
+        "doc_id",
+        "logweight_q6",
+        (F.col("logweight_q6") + gumbel_q).alias("key_q6"),
     )
-    top = keyed.orderBy(F.desc("key_q6"), id_col).limit(k)
-    w = Window.orderBy(F.desc("key_q6"), id_col)
+    top = keyed.orderBy(F.desc("key_q6"), "doc_id").limit(k)
+    w = Window.orderBy(F.desc("key_q6"), "doc_id")
     return top.withColumn("rank", F.row_number().over(w).cast("long"))
 
 
@@ -767,8 +719,6 @@ def unimax_allocation(
     max_epochs: int = 1,
     budget: int | None = None,
     budget_frac: tuple[int, int] | None = None,
-    source_col: str = "source",
-    count_col: str = "n_chars",
 ) -> DataFrame:
     """UniMax-style per-source budget allocation (Chung et al. 2023,
     "UniMax: Fairer and More Effective Language Sampling for
@@ -793,7 +743,8 @@ def unimax_allocation(
     sources allocate their cap and the leftover is the caller's signal
     to raise ``max_epochs``.
 
-    ``budget`` is an absolute count; ``budget_frac = (p, q)`` instead
+    ``counts`` holds one ``source, n_chars`` row per source (the
+    available data).  ``budget`` is an absolute count; ``budget_frac = (p, q)`` instead
     derives ``B = (Σ n) · p div q`` INSIDE the plan (1-row lazy
     cross-joined aggregate — scale-relative budgets never collect).
 
@@ -809,8 +760,8 @@ def unimax_allocation(
     if (budget is None) == (budget_frac is None):
         raise ValueError("exactly one of budget / budget_frac required")
     c = counts.select(
-        F.col(source_col).alias("source"),
-        F.col(count_col).cast("long").alias("n_avail"),
+        "source",
+        F.col("n_chars").cast("long").alias("n_avail"),
     ).withColumn("cap", F.col("n_avail") * max_epochs)
     tot = c.agg(
         F.count(F.lit(1)).alias("_m"), F.sum("n_avail").alias("_ntot")
@@ -885,8 +836,6 @@ def ccnet_ppl_buckets(
     docs: DataFrame,
     bin_w: int = 2_000,
     offset: int = 10_000_000,
-    text_col: str = "text",
-    source_col: str = "source",
 ) -> DataFrame:
     """CCNet-style perplexity-bucket filtering (Wenzek et al. 2020,
     "CCNet: Extracting High Quality Monolingual Datasets from Web
@@ -939,10 +888,10 @@ def ccnet_ppl_buckets(
     """
     from pyspark_pipelining_spark.operators.text import lm_bigram_score
 
-    lm = lm_bigram_score(docs, text_col=text_col)
-    scored = lm.join(docs.select("doc_id", source_col), "doc_id").select(
+    lm = lm_bigram_score(docs)
+    scored = lm.join(docs.select("doc_id", "source"), "doc_id").select(
         "doc_id",
-        source_col,
+        "source",
         F.round(F.col("total_q6") / F.col("n_bigrams"))
         .cast("long")
         .alias("score_q6"),
@@ -965,13 +914,13 @@ def ccnet_ppl_buckets(
     binned = scored.withColumn("score_q6", guarded).withColumn(
         "bin", F.expr(f"(score_q6 + {int(offset)}) div {int(bin_w)}")
     )
-    hist = binned.groupBy(source_col, "bin").agg(F.count(F.lit(1)).alias("c"))
-    w = Window.partitionBy(source_col).orderBy("bin")
+    hist = binned.groupBy("source", "bin").agg(F.count(F.lit(1)).alias("c"))
+    w = Window.partitionBy("source").orderBy("bin")
     cum = hist.withColumn("cum", F.sum("c").over(w))
-    tot = hist.groupBy(source_col).agg(F.sum("c").alias("n"))
+    tot = hist.groupBy("source").agg(F.sum("c").alias("n"))
     cuts = (
-        cum.join(tot, source_col)
-        .groupBy(source_col)
+        cum.join(tot, "source")
+        .groupBy("source")
         .agg(
             F.min(F.when(3 * F.col("cum") >= F.col("n"), F.col("bin"))).alias("t1"),
             F.min(
@@ -985,10 +934,10 @@ def ccnet_ppl_buckets(
         .otherwise(F.lit("head"))
     )
     return (
-        binned.join(F.broadcast(cuts), source_col)
+        binned.join(F.broadcast(cuts), "source")
         .select(
             "doc_id",
-            source_col,
+            "source",
             "score_q6",
             "bin",
             bucket.alias("bucket"),

@@ -1,24 +1,35 @@
 """Deduplication operators for training-data pipelines
 (beyond-reference scope — SURVEY §7.2 step 12).
 
-Four families, each a standard large-corpus technique:
+Operators read the documents table's fixed columns ``doc_id, text,
+source, n_chars``.  The families, each a standard large-corpus
+technique:
 
 * **exact**: group by content (or fingerprint) hash, keep the smallest
   id — one shuffle, the 100 TB workhorse.
 * **MinHash + LSH**: shingle → minhash signature → band buckets →
-  candidate pairs.  Signatures/bands are array columns built entirely
-  from JVM higher-order functions; the only shuffles are the band-bucket
-  self-join (on band hash) and the optional portable-id join.
+  candidate pairs (:func:`near_dup_pairs` is the registered cut), then
+  connected components (:func:`dedup_clusters`).  Signatures/bands are
+  array columns built entirely from JVM higher-order functions; the
+  only shuffle is the band-bucket self-join.
 * **SimHash**: per-bit majority vote over token hashes → 32-bit
   signature; near-dups share signatures (or differ in few bits).
-* **n-gram Jaccard**: exact similarity on candidate pairs via bigram-set
-  intersection — the verification stage after LSH at scale.
+* **exact set-similarity joins** (n-gram Jaccard, prefix-filtered
+  Jaccard and containment) share three stages: :func:`_postings`
+  (persisted distinct ``(doc_id, tok)`` shingle postings),
+  :func:`_rare_prefix` (rarest-first prefix per document — the
+  candidate filter of the prefix joins) and :func:`_overlap` (exact
+  ``|A ∩ B|`` over candidate pairs only), joined to per-document set
+  sizes by :func:`_with_sizes`.  :func:`tfidf_cosine_pairs` is the
+  weighted variant.
+* **span and paragraph grain**: :func:`exact_substring_spans` (verbatim
+  repeated passages), :func:`paragraph_dup_stats` (MinHash-LSH over
+  paragraph chunks), and :func:`semantic_dedup` over embeddings.
 
-Portability note: the correctness-gate variants derive token/shingle ids
-from the first 60 bits of ``md5`` (identical in Spark and DuckDB, so the
-oracle reproduces them bit-for-bit) rather than ``xxhash64``
-(Spark-specific, slightly faster JVM-side).  Both are pure map-side
-hashing — no global id assignment, no extra shuffle, scale-indifferent.
+Every hashed id derives from :func:`portable_hash60`, the first 60 bits
+of ``md5``: identical in Spark and DuckDB, so the oracles replay it
+bit-for-bit, and pure map-side work — no global id assignment, no
+extra shuffle, scale-indifferent.
 """
 
 from __future__ import annotations
@@ -29,10 +40,16 @@ from pyspark.sql import functions as F
 from pyspark_pipelining_spark import cache
 from pyspark_pipelining_spark.operators.graph import symmetrize
 from pyspark_pipelining_spark.operators.iterate import iterate
-from pyspark_pipelining_spark.operators.text import with_words
+from pyspark_pipelining_spark.operators.text import with_words, word_grams
+from pyspark_pipelining_spark.sources.registry import spread
 
 
 MERSENNE = (1 << 31) - 1  # 2147483647, prime — minhash universe
+
+#: estimated-Jaccard cut of the registered near-duplicate pair set
+NEAR_DUP_JACCARD = 0.5
+
+SIMHASH_BITS = 32
 
 
 def minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
@@ -52,9 +69,10 @@ def minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
     ]
 
 
-def portable_hash_id(col, mod: int):
-    """Engine-portable string→int hash: the first 15 hex chars of md5
-    (60 bits) read as a bigint, reduced mod ``mod``.
+def portable_hash60(col):
+    """Engine-portable string→bigint hash: the first 15 hex chars of md5
+    (60 bits) read as a bigint — the one spelling of the hash every
+    sketch, sampler and shingle id here derives from.
 
     Spark: ``conv(substring(md5(c),1,15),16,10)``; DuckDB oracle:
     ``('0x' || substr(md5(c),1,15))::BIGINT`` — bit-identical.  Pure
@@ -62,42 +80,37 @@ def portable_hash_id(col, mod: int):
     (unlike a dense_rank over the distinct values, which funnels the
     whole vocabulary through one partition).
     """
-    return F.pmod(F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long"), F.lit(mod))
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def exact_dedup(df: DataFrame, key_cols: list[str], id_col: str = "doc_id") -> DataFrame:
-    """Keep one row (smallest id) per distinct value of ``key_cols``.
+def portable_hash_id(col, mod: int):
+    """:func:`portable_hash60` reduced mod ``mod``."""
+    return F.pmod(portable_hash60(col), F.lit(mod))
+
+
+def exact_dedup(df: DataFrame, key_cols: list[str]) -> DataFrame:
+    """Keep one row (smallest ``doc_id``) per distinct value of ``key_cols``.
 
     Hash-groupBy dedup: one shuffle on the content key; at 100 TB the
     key should be a fingerprint/hash column, not raw text.
     """
     return (
         df.groupBy(*key_cols)
-        .agg(F.min(id_col).alias(id_col))
-        .select(id_col, *key_cols)
+        .agg(F.min("doc_id").alias("doc_id"))
+        .select("doc_id", *key_cols)
     )
 
 
-def word_ngrams(df: DataFrame, n: int = 2, text_col: str = "text") -> DataFrame:
-    """Word n-gram array via higher-order functions (no UDF)."""
-    out = with_words(df, text_col)
-    # guard: Spark's sequence(1, 0) yields a DESCENDING [1, 0] (not an
-    # empty array), which would drive element_at out of bounds for docs
-    # shorter than n words — branch to an explicit empty array instead
-    gram = F.when(F.size("words") < n, F.array().cast("array<string>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), F.size("words") - (n - 1)),
-            lambda i: F.concat_ws(" ", *[F.element_at("words", (i + j).cast("int")) for j in range(n)]),
-        )
-    )
-    return out.withColumn("ngrams", gram)
+def word_ngrams(df: DataFrame, n: int = 2) -> DataFrame:
+    """``words`` plus their word n-gram array ``ngrams``
+    (:func:`text.word_grams`; no UDF)."""
+    return with_words(df).withColumn("ngrams", word_grams(n))
 
 
 def minhash_signatures(
     df: DataFrame,
     num_hashes: int = 16,
     ngram: int = 2,
-    portable_ids: bool = True,
 ) -> DataFrame:
     """Per-document minhash signature as an array<long> column.
 
@@ -125,20 +138,7 @@ def minhash_signatures(
     split.
     """
     grams = word_ngrams(df, ngram).filter(F.size("words") >= ngram)
-    if portable_ids:
-        # portable_hash_id inlined into the per-element transform
-        ids = F.transform(
-            F.array_distinct("ngrams"),
-            lambda s: F.pmod(
-                F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"),
-                F.lit(MERSENNE),
-            ),
-        )
-    else:
-        ids = F.transform(
-            F.array_distinct("ngrams"),
-            lambda s: F.pmod(F.xxhash64(s), F.lit(MERSENNE)),
-        )
+    ids = F.transform(F.array_distinct("ngrams"), lambda s: portable_hash_id(s, MERSENNE))
     coeffs = minhash_coeffs(num_hashes)
     sig = F.array(*[
         F.array_min(F.transform("sids", lambda x: (x * a + b) % MERSENNE))
@@ -154,7 +154,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 16,
     bands: int = 8,
     ngram: int = 2,
-    portable_ids: bool = True,
 ) -> DataFrame:
     """Candidate near-duplicate pairs: documents agreeing on at least one
     LSH band (``bands`` bands of ``num_hashes/bands`` rows), with their
@@ -168,7 +167,7 @@ def minhash_lsh_pairs(
     # persist the signature stage: the LSH self-join references it on both
     # sides, and without the cache the whole shingle→signature pipeline
     # (including the portable-id assignment) would execute once per branch
-    sigs = cache.keep(minhash_signatures(df, num_hashes, ngram, portable_ids))
+    sigs = cache.keep(minhash_signatures(df, num_hashes, ngram))
     band_arr = F.transform(
         F.sequence(F.lit(0), F.lit(bands - 1)),
         lambda b: F.struct(
@@ -227,6 +226,15 @@ def minhash_lsh_pairs(
     # hash-compare) is order-insensitive — a global sort here is a pure
     # range-shuffle tax
     return cand
+
+
+def near_dup_pairs(docs: DataFrame) -> DataFrame:
+    """The registered near-duplicate pair set: default-parameter
+    :func:`minhash_lsh_pairs` cut at ``est_jaccard >= NEAR_DUP_JACCARD``
+    (the cut is pushed below the pair dedup, see there).  The graph
+    family's edge list and every dedup query read this one cut; the
+    oracles render the same constant."""
+    return minhash_lsh_pairs(docs).filter(F.col("est_jaccard") >= NEAR_DUP_JACCARD)
 
 
 def cluster_assignments(pairs: DataFrame, max_iter: int = 12) -> DataFrame:
@@ -300,7 +308,7 @@ def cluster_assignments(pairs: DataFrame, max_iter: int = 12) -> DataFrame:
     return iterate(labels, one_round, max_iter, until=F.sum("cluster_id"), block=4)
 
 
-def dedup_clusters(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def dedup_clusters(df: DataFrame, pairs: DataFrame) -> DataFrame:
     """Per-document cluster ids over the full corpus: paired docs get
     their component's min id, unpaired docs are their own cluster.
 
@@ -310,145 +318,169 @@ def dedup_clusters(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> D
     """
     comp = cluster_assignments(pairs)
     return (
-        df.select(F.col(id_col).alias("doc_id"))
+        df.select("doc_id")
         .join(comp, on="doc_id", how="left")
         .select("doc_id", F.coalesce("cluster_id", F.col("doc_id")).alias("cluster_id"))
     )
 
 
-def drop_duplicate_docs(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def drop_duplicate_docs(df: DataFrame, pairs: DataFrame) -> DataFrame:
     """Keep one representative (the min-id doc) per near-duplicate
     cluster — the end-to-end dedup pipeline: LSH pairs → components →
     filter."""
-    clusters = dedup_clusters(df, pairs, id_col)
+    clusters = dedup_clusters(df, pairs)
     keep_ids = clusters.filter(F.col("cluster_id") == F.col("doc_id")).select("doc_id")
-    return df.join(keep_ids.withColumnRenamed("doc_id", id_col), on=id_col, how="left_semi")
+    return df.join(keep_ids, on="doc_id", how="left_semi")
 
 
-def simhash(df: DataFrame, bits: int = 32, portable_ids: bool = True) -> DataFrame:
+def simhash(df: DataFrame) -> DataFrame:
     """Per-document SimHash: bit b is 1 iff the majority of the
     document's (distinct) tokens have bit b set in their token hash.
 
     Output: doc_id, simhash (long).  One explode + one groupBy with
-    ``bits`` conditional sums — all codegen'd.
+    ``SIMHASH_BITS`` conditional sums — all codegen'd.
     """
     # per-doc distinct tokens map-side (array_distinct) — no dedup shuffle
-    words = with_words(df).select(
-        "doc_id", F.array_distinct("words").alias("toks")
-    ).select("doc_id", F.explode("toks").alias("token"))
-    if portable_ids:
-        toks = words.withColumn("h", portable_hash_id(F.col("token"), 1 << 32))
-    else:
-        toks = words.withColumn("h", F.pmod(F.xxhash64("token"), F.lit(1 << 32)))
+    toks = (
+        with_words(df)
+        .select("doc_id", F.explode(F.array_distinct("words")).alias("token"))
+        .withColumn("h", portable_hash_id(F.col("token"), 1 << SIMHASH_BITS))
+    )
     bit_sums = [
         F.sum(
             F.when(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
         ).alias(f"b{b}")
-        for b in range(bits)
+        for b in range(SIMHASH_BITS)
     ]
     agg = toks.groupBy("doc_id").agg(*bit_sums)
     sim = None
-    for b in range(bits):
+    for b in range(SIMHASH_BITS):
         term = F.when(F.col(f"b{b}") > 0, F.lit(1 << b).cast("long")).otherwise(F.lit(0).cast("long"))
         sim = term if sim is None else sim + term
     return agg.select("doc_id", sim.alias("simhash"))
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame, n: int = 2, group_col: str = "source", threshold: float = 0.0
-) -> DataFrame:
-    """Exact n-gram Jaccard similarity for all document pairs within a
-    ``group_col`` partition (the blocking key — at 100 TB this is the
-    LSH bucket; here ``source`` keeps the pair count bounded).
+def _postings(df: DataFrame, n: int, *keep: str) -> DataFrame:
+    """Persisted distinct ``(doc_id, *keep, tok)`` word ``n``-gram
+    postings, the input of every exact set-similarity join here.
+    ``array_distinct`` dedups each document's shingles map-side, so no
+    dropDuplicates shuffle; the persist runs the tokenize+explode once
+    for the join sides, the prefix stage and the size aggregate."""
+    return cache.keep(
+        word_ngrams(df, n)
+        .select("doc_id", *keep, F.array_distinct("ngrams").alias("gs"))
+        .select("doc_id", *keep, F.explode("gs").alias("tok"))
+    )
+
+
+def _rare_prefix(toks: DataFrame, t: float) -> DataFrame:
+    """Each document's rarest-first prefix ``doc_id, tok, sz``: the first
+    ``sz - ⌈t·sz⌉ + 1`` of its ``sz`` postings under the global order
+    (document frequency asc, token), the candidate filter of the
+    AllPairs/PPJoin family.  Prefix tokens are the LOW-frequency ones,
+    so candidate buckets stay small even on skewed vocabularies.
+
+    Document frequency is a map-side-combined groupBy (vocab-sized
+    output) joined back to the postings — NOT a count window over the
+    tok partition.  The window form is ~10% faster at sf0.1 (r09 A/B:
+    2.41 s vs 2.66 s median) but keys each token's FULL posting list
+    to one non-splittable window task — a single boilerplate shingle
+    in a web-scale corpus becomes a straggler/spill task no runtime
+    can rescue (round-8 verdict watch-list).  The join-back is
+    skew-PROOF instead: the aggregate combines map-side, AQE
+    broadcasts the vocab table while it is small (zero extra shuffle
+    of toks), and if a pathological vocabulary outgrows the threshold
+    the fallback is a shuffle join AQE's skew-join splitting CAN carve
+    up — no single-task hot key anywhere.  No broadcast hint, per the
+    tfidf_cosine_pairs convention.  The doc-keyed count and rank
+    windows stay: their partitions are bounded by document length."""
+    wd = Window.partitionBy("doc_id")
+    dfc = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df_freq"))
+    return (
+        toks.join(dfc, "tok")
+        .withColumn("sz", F.count(F.lit(1)).over(wd))
+        .withColumn("pos", F.row_number().over(wd.orderBy("df_freq", "tok")))
+        .filter(F.col("pos") <= F.col("sz") - F.ceil(F.lit(t) * F.col("sz")) + 1)
+        .select("doc_id", "tok", "sz")
+    )
+
+
+def _overlap(cand: DataFrame, toks: DataFrame, a: str, b: str) -> DataFrame:
+    """Exact ``inter = |A ∩ B|`` for the candidate pairs ``(a, b)``
+    only: both ends' postings join onto the pair and the shared tokens
+    count — the verify stage never touches a non-candidate pair."""
+    ta = toks.select(F.col("doc_id").alias(a), "tok")
+    tb = toks.select(F.col("doc_id").alias(b), "tok")
+    return (
+        cand.join(ta, a)
+        .join(tb, [b, "tok"])
+        .groupBy(a, b)
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
+
+
+def _with_sizes(pairs: DataFrame, toks: DataFrame, *ends: str) -> DataFrame:
+    """``pairs`` plus each end's set size ``|A|`` as ``n_<end>``."""
+    sizes = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    for end in ends:
+        pairs = pairs.join(
+            sizes.select(F.col("doc_id").alias(end), F.col("n").alias(f"n_{end}")), end
+        )
+    return pairs
+
+
+def _jaccard(inter: DataFrame, toks: DataFrame) -> DataFrame:
+    """``doc_1, doc_2, jaccard`` (unrounded) from the pair overlaps."""
+    j = F.col("inter") / (F.col("n_doc_1") + F.col("n_doc_2") - F.col("inter"))
+    return _with_sizes(inter, toks, "doc_1", "doc_2").select(
+        "doc_1", "doc_2", j.alias("jaccard")
+    )
+
+
+def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.0) -> DataFrame:
+    """Exact word-bigram Jaccard similarity for all document pairs
+    within a ``source`` (the blocking key — at 100 TB this is the LSH
+    bucket; here ``source`` keeps the pair count bounded).
 
     Output: doc_1, doc_2, jaccard.
     """
-    # persisted: referenced three times (both join sides + the size agg);
-    # array_distinct dedups per-doc map-side, so no dropDuplicates shuffle
-    grams = word_ngrams(df, n).select(
-        "doc_id", F.col(group_col).alias("grp"), F.array_distinct("ngrams").alias("gs")
-    ).select("doc_id", "grp", F.explode("gs").alias("g"))
-    grams = cache.keep(grams)
-    sizes = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
-    a = grams.alias("a")
-    b = grams.select("doc_id", "grp", "g").alias("b")
+    toks = _postings(df, 2, "source")
+    a = toks.alias("a")
+    b = toks.select("doc_id", "source", "tok").alias("b")
+    on = [F.col(f"a.{c}") == F.col(f"b.{c}") for c in ("source", "tok")]
     inter = (
-        a.join(b, on=[F.col("a.grp") == F.col("b.grp"), F.col("a.g") == F.col("b.g"), F.col("a.doc_id") < F.col("b.doc_id")])
+        a.join(b, on=on + [F.col("a.doc_id") < F.col("b.doc_id")])
         .groupBy(F.col("a.doc_id").alias("doc_1"), F.col("b.doc_id").alias("doc_2"))
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    s1 = sizes.select(F.col("doc_id").alias("doc_1"), F.col("n_grams").alias("n1"))
-    s2 = sizes.select(F.col("doc_id").alias("doc_2"), F.col("n_grams").alias("n2"))
-    out = (
-        inter.join(s1, "doc_1")
-        .join(s2, "doc_2")
-        .select(
-            "doc_1",
-            "doc_2",
-            (F.col("inter") / (F.col("n1") + F.col("n2") - F.col("inter"))).alias("jaccard"),
-        )
-    )
+    out = _jaccard(inter, toks)
     if threshold > 0:
         out = out.filter(F.col("jaccard") >= threshold)
     return out  # fact-sized pair output — no global sort (see lsh_pairs)
 
 
 def prefix_jaccard_join(
-    df: DataFrame,
-    threshold: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 1,
+    df: DataFrame, threshold: float = NEAR_DUP_JACCARD, n: int = 1
 ) -> DataFrame:
     """EXACT all-pairs word-set Jaccard ≥ ``threshold`` across the whole
     corpus — no blocking key, no LSH randomness — via prefix filtering
     (the AllPairs/PPJoin family): under any global token order, two sets
     with J ≥ t must share a token within each side's first
-    ``|s| - ⌈t·|s|⌉ + 1`` tokens, so the candidate join runs only on
-    those prefixes and misses nothing.
+    ``|s| - ⌈t·|s|⌉ + 1`` tokens (:func:`_rare_prefix`), so the
+    candidate join runs only on those prefixes and misses nothing.
 
-    Scale shape: tokens order rarest-first (document frequency asc), so
-    prefix tokens are the LOW-frequency ones — candidate buckets stay
-    small even on skewed vocabularies; the only corpus-sized shuffles
-    are the DF join-back (skew-safe, see the inline note), the per-doc
-    rank window (keyed on doc, bounded by doc length), and the prefix
-    equi-join; exact verification touches candidate pairs only.
-    Complements :func:`minhash_lsh_pairs`: same join, but deterministic
-    and recall-lossless, at the cost of an exact verify stage.
+    Scale shape: the only corpus-sized shuffles are the DF join-back,
+    the per-doc rank window (keyed on doc, bounded by doc length), and
+    the prefix equi-join; exact verification (:func:`_overlap`) touches
+    candidate pairs only.  Complements :func:`minhash_lsh_pairs`: same
+    join, but deterministic and recall-lossless, at the cost of an
+    exact verify stage.
 
     Output: ``doc_1, doc_2, jaccard`` (unrounded filter, rounded 6).
     """
     t = float(threshold)
-    toks = (
-        word_ngrams(df, n, text_col)
-        .select(F.col(id_col).alias("doc_id"), F.array_distinct("ngrams").alias("gs"))
-        .select("doc_id", F.explode("gs").alias("tok"))
-    )
-    toks = cache.keep(toks)
-    # Document frequency: map-side-combined groupBy (vocab-sized
-    # output) joined back to the postings — NOT a count window over the
-    # tok partition.  The window form is ~10% faster at sf0.1 (r09 A/B:
-    # 2.41 s vs 2.66 s median) but keys each token's FULL posting list
-    # to one non-splittable window task — a single boilerplate shingle
-    # in a web-scale corpus becomes a straggler/spill task no runtime
-    # can rescue (round-8 verdict watch-list).  The join-back is
-    # skew-PROOF instead: the aggregate combines map-side, AQE
-    # broadcasts the vocab table while it is small (zero extra shuffle
-    # of toks), and if a pathological vocabulary outgrows the
-    # threshold the fallback is a shuffle join AQE's skew-join
-    # splitting CAN carve up — no single-task hot key anywhere.  No
-    # broadcast hint, per the tfidf_cosine_pairs convention.
-    wd = Window.partitionBy("doc_id")
-    wo = Window.partitionBy("doc_id").orderBy("df_freq", "tok")
-    dfc = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df_freq"))
-    tok_df = toks.join(dfc, "tok")
-    prefix = (
-        tok_df.withColumn("sz", F.count(F.lit(1)).over(wd))
-        .withColumn("pos", F.row_number().over(wo))
-        .filter(F.col("pos") <= F.col("sz") - F.ceil(F.lit(t) * F.col("sz")) + 1)
-        .select("doc_id", "tok", "sz")
-    )
-    sizes = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
+    toks = _postings(df, n)
+    prefix = _rare_prefix(toks, t)
     # length filter (lossless): J(A,B) >= t forces t·|A| <= |B| <= |A|/t,
     # so cross-length candidates drop before the verify stage — with the
     # prefix filter this is the PPJoin candidate bound
@@ -466,32 +498,14 @@ def prefix_jaccard_join(
         .select(F.col("a.doc_id").alias("doc_1"), F.col("b.doc_id").alias("doc_2"))
         .distinct()
     )
-    ta = toks.select(F.col("doc_id").alias("doc_1"), "tok")
-    tb = toks.select(F.col("doc_id").alias("doc_2"), "tok")
-    inter = (
-        cand.join(ta, "doc_1")
-        .join(tb, ["doc_2", "tok"])
-        .groupBy("doc_1", "doc_2")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    s1 = sizes.select(F.col("doc_id").alias("doc_1"), F.col("sz").alias("n1"))
-    s2 = sizes.select(F.col("doc_id").alias("doc_2"), F.col("sz").alias("n2"))
     return (
-        inter.join(s1, "doc_1")
-        .join(s2, "doc_2")
-        .withColumn("jaccard", F.col("inter") / (F.col("n1") + F.col("n2") - F.col("inter")))
+        _jaccard(_overlap(cand, toks, "doc_1", "doc_2"), toks)
         .filter(F.col("jaccard") >= t)
         .select("doc_1", "doc_2", F.round("jaccard", 6).alias("jaccard"))
     )
 
 
-def prefix_containment_join(
-    df: DataFrame,
-    threshold: float = 0.8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 4,
-) -> DataFrame:
+def prefix_containment_join(df: DataFrame, threshold: float = 0.8, n: int = 4) -> DataFrame:
     """EXACT all-ORDERED-pairs shingle-set CONTAINMENT
     ``C(A→B) = |A ∩ B| / |A| ≥ threshold`` — the asymmetric complement
     of :func:`prefix_jaccard_join`: Jaccard misses a short document
@@ -500,43 +514,25 @@ def prefix_containment_join(
     pipeline must catch (boilerplate inclusion, quote expansion,
     wrapper pages).
 
-    Prefix rule (asymmetric): under a global rarest-first token order,
+    Prefix rule (asymmetric): under the global rarest-first token order,
     C(A→B) ≥ t forces A and B to share a token within A's first
     ``|A| - ⌈t·|A|⌉ + 1`` tokens — only the CONTAINED side prunes to a
-    prefix; the candidate join runs A-prefix ⋈ B-full-postings.  That
-    stays selective for the same reason PPJoin does: prefix tokens are
-    the rare ones, so the full posting lists they meet are short.  The
-    lossless length filter is one-sided (``|B| ≥ ⌈t·|A|⌉``; containment
-    has no upper bound on |B|).  Exact verification touches candidate
-    pairs only.  Document frequency comes from the skew-proof
-    join-back, same reasoning and A/B as :func:`prefix_jaccard_join`.
+    prefix (:func:`_rare_prefix`); the candidate join runs A-prefix ⋈
+    B-full-postings.  That stays selective for the same reason PPJoin
+    does: prefix tokens are the rare ones, so the full posting lists
+    they meet are short.  The lossless length filter is one-sided
+    (``|B| ≥ ⌈t·|A|⌉``; containment has no upper bound on |B|).  Exact
+    verification (:func:`_overlap`) touches candidate pairs only.
 
     Output: ``doc_inner, doc_outer, containment`` — ordered pairs
     (inner's shingle set is ≥ t-contained in outer's), rounded 6.
     """
     t = float(threshold)
-    toks = (
-        word_ngrams(df, n, text_col)
-        .select(F.col(id_col).alias("doc_id"), F.array_distinct("ngrams").alias("gs"))
-        .select("doc_id", F.explode("gs").alias("tok"))
+    toks = _postings(df, n)
+    prefix = _rare_prefix(toks, t).select(
+        F.col("doc_id").alias("doc_inner"), "tok", F.col("sz").alias("sz_a")
     )
-    toks = cache.keep(toks)
-    # Document frequency via the skew-proof groupBy+join-back (see the
-    # prefix_jaccard_join inline note: AQE-broadcast while the vocab is
-    # small, AQE-skew-splittable shuffle join if not — never a
-    # single-task window partition per token).  The doc-keyed count
-    # windows stay: their partitions are bounded by document length.
-    wd = Window.partitionBy("doc_id")
-    wo = Window.partitionBy("doc_id").orderBy("df_freq", "tok")
-    dfc = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df_freq"))
-    tok_df = toks.join(dfc, "tok")
-    prefix = (
-        tok_df.withColumn("sz", F.count(F.lit(1)).over(wd))
-        .withColumn("pos", F.row_number().over(wo))
-        .filter(F.col("pos") <= F.col("sz") - F.ceil(F.lit(t) * F.col("sz")) + 1)
-        .select(F.col("doc_id").alias("doc_inner"), "tok", F.col("sz").alias("sz_a"))
-    )
-    post_b = toks.withColumn("sz_b", F.count(F.lit(1)).over(wd)).select(
+    post_b = toks.withColumn("sz_b", F.count(F.lit(1)).over(Window.partitionBy("doc_id"))).select(
         F.col("doc_id").alias("doc_outer"), "tok", "sz_b"
     )
     cand = (
@@ -548,19 +544,10 @@ def prefix_containment_join(
         .select("doc_inner", "doc_outer")
         .distinct()
     )
-    sizes = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    ta = toks.select(F.col("doc_id").alias("doc_inner"), "tok")
-    tb = toks.select(F.col("doc_id").alias("doc_outer"), "tok")
-    inter = (
-        cand.join(ta, "doc_inner")
-        .join(tb, ["doc_outer", "tok"])
-        .groupBy("doc_inner", "doc_outer")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_inner"), F.col("sz").alias("n_a"))
+    inter = _overlap(cand, toks, "doc_inner", "doc_outer")
     return (
-        inter.join(sa, "doc_inner")
-        .withColumn("containment", F.col("inter") / F.col("n_a"))
+        _with_sizes(inter, toks, "doc_inner")
+        .withColumn("containment", F.col("inter") / F.col("n_doc_inner"))
         .filter(F.col("containment") >= t)
         .select("doc_inner", "doc_outer", F.round("containment", 6).alias("containment"))
     )
@@ -571,8 +558,6 @@ def tfidf_cosine_pairs(
     threshold: float = 0.5,
     n: int = 4,
     df_cap: int = 200,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """All doc pairs with TF-IDF cosine ≥ ``threshold`` over word
     ``n``-gram shingles with doc_freq ≤ ``df_cap`` — the WEIGHTED
@@ -613,8 +598,8 @@ def tfidf_cosine_pairs(
     Output: ``doc_a, doc_b, cosine`` (unrounded filter, rounded 6).
     """
     tf = (
-        word_ngrams(df, n=n, text_col=text_col)
-        .select(F.col(id_col).alias("doc_id"), F.explode("ngrams").alias("gram"))
+        word_ngrams(df, n)
+        .select("doc_id", F.explode("ngrams").alias("gram"))
         .groupBy("doc_id", "gram")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
@@ -685,9 +670,6 @@ def exact_substring_spans(
     gram_len: int = 16,
     min_span: int = 32,
     max_gram_occurrences: int = 1024,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    spread: int | None = None,
     winnow: int | None = None,
     scope: str = "cross",
     xor_docs: DataFrame | None = None,
@@ -737,7 +719,7 @@ def exact_substring_spans(
     Scale shape (what shuffles, and why it survives 100 TB):
 
     * grams never travel as strings — each position reduces map-side
-      to the 60-bit md5 hash (`portable_hash_id` discipline; both
+      to the 60-bit md5 hash (:func:`portable_hash60`; both
       engines bit-identical, collision odds ~2^-60 per pair are
       documented and accepted exactly as in the LSH families), so the
       positional stream is a fixed-width ``(doc, pos, h)`` row per
@@ -773,8 +755,7 @@ def exact_substring_spans(
 
     ``xor_docs`` (the decontamination pushdown — the 100 TB
     refinement the staged query's docstring documented, implemented
-    once the query registered): a 1-column frame of doc ids (named
-    ``id_col``) marking one side of a bipartition (e.g. the EVAL
+    once the query registered): a 1-column frame of ``doc_id`` marking one side of a bipartition (e.g. the EVAL
     benchmark set).  When given (cross scope, full mode), only pairs
     with EXACTLY ONE endpoint in the set are produced — and the
     restriction is pushed INTO the pair join: the positional stream
@@ -791,13 +772,11 @@ def exact_substring_spans(
     equality.  The corpus-wide occurrence cap is unchanged (counted
     over ALL grams, both sides, exactly as the oracle counts it).
 
-    ``spread`` (the WAV-family ``REPARTITION_BY_NUM`` convention):
-    pass the session's parallelism when the corpus arrives as a few
-    small files — one parquet file otherwise means ONE scan partition,
-    serializing the explode+md5 onto a single core (measured 5.5 s →
-    1.3 s for the sf0.1 gram stage).  Leave ``None`` on a real lake:
-    the scan is already thousands of partitions, and the repartition
-    would pointlessly shuffle every text byte.
+    The corpus is :func:`sources.registry.spread` first: one small
+    parquet file means ONE scan partition, which would serialize the
+    explode+md5 onto a single core (measured 5.5 s → 1.3 s for the
+    sf0.1 gram stage).  On a real lake the scan is already thousands of
+    partitions and the spread is a no-op, so no text byte shuffles.
 
     ``winnow=w`` is that published lever, implemented so it costs NO
     exactness: candidate pairs come from winnowed minimizer grams only
@@ -841,29 +820,18 @@ def exact_substring_spans(
         # winnow=1 is a no-op elsewhere but is rejected here too so the
         # guard matches its message exactly (r15 ADVICE)
         raise ValueError("xor_docs requires scope='cross' and winnow=None")
-    if spread:
-        df = df.repartition(spread)
     grams = (
-        df.filter(F.length(text_col) >= gram_len)
+        spread(df)
+        .filter(F.length("text") >= gram_len)
         .select(
-            F.col(id_col).alias("doc"),
-            F.col(text_col).alias("t"),
-            F.explode(
-                F.sequence(F.lit(1), F.length(text_col) - gram_len + 1)
-            ).alias("p"),
+            F.col("doc_id").alias("doc"),
+            F.col("text").alias("t"),
+            F.explode(F.sequence(F.lit(1), F.length("text") - gram_len + 1)).alias("p"),
         )
         .select(
             "doc",
             F.col("p").cast("long").alias("pos"),
-            F.conv(
-                F.substring(
-                    F.md5(F.expr(f"substring(t, p, {gram_len})")), 1, 15
-                ),
-                16,
-                10,
-            )
-            .cast("long")
-            .alias("h"),
+            portable_hash60(F.expr(f"substring(t, p, {gram_len})")).alias("h"),
         )
         .localCheckpoint(eager=True)
     )
@@ -958,7 +926,7 @@ def exact_substring_spans(
         # no .distinct(): semi/anti joins are membership tests, so
         # right-side duplicates cannot change results — and the
         # dedup would cost a shuffle + two hash aggregates
-        marked = F.broadcast(xor_docs.select(F.col(id_col).alias("doc")))
+        marked = F.broadcast(xor_docs.select(F.col("doc_id").alias("doc")))
         a = (
             kept.join(marked, "doc", "left_semi")
             .select(F.col("doc").alias("doc_a"), F.col("pos").alias("pa"), "h")
@@ -1025,9 +993,6 @@ def semantic_dedup(
     k: int = 64,
     iters: int = 2,
     tau: tuple[int, int] = (3, 10),
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    grid: int | None = None,
     max_candidates: int | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
@@ -1059,9 +1024,9 @@ def semantic_dedup(
        later-ranked twin sees the earlier at cosine 1.
 
     Exactness: the cosine threshold never touches a float.  With
-    lattice coordinates ``s`` (|s| <= grid), ``dot = Σ s_a·s_b`` and
-    the norms ``n2 = Σ s²`` are exact int64 (64 · grid² = 6.4e13 at
-    the default grid), and ``cos >= p/q  ⟺  dot > 0 AND
+    lattice coordinates ``s`` (|s| <= grid = ``cluster.GRID``),
+    ``dot = Σ s_a·s_b`` and the norms ``n2 = Σ s²`` are exact int64
+    (64 · grid² = 6.4e13), and ``cos >= p/q  ⟺  dot > 0 AND
     q²·dot² >= p²·n2_a·n2_b`` evaluates in decimal(38,0) (Spark) /
     HUGEINT (DuckDB) — both exact at ~1.6e30 max, the r09
     widen-don't-wrap discipline.
@@ -1073,7 +1038,7 @@ def semantic_dedup(
     approach 1e38, where Spark's non-ANSI decimal NULLs the overflow
     silently while DuckDB's HUGEINT keeps exact — a silent
     engine-vs-oracle divergence, not an error.  An out-of-range corpus
-    must be rescaled (or given a smaller ``grid``) before this operator.
+    must be rescaled before this operator.
 
     Scale shape: the corpus shuffles once into the rank window and
     once into the per-cluster self-join, both keyed by ``cell`` —
@@ -1084,7 +1049,7 @@ def semantic_dedup(
     (cell, pos) triples, never vectors; the ranked frame is
     localCheckpointed once and feeds both join sides plus the output
     (CLAUDE.md multi-branch rule); the keeper frame is k rows,
-    broadcast.  Output: ``id, cell, rank, keeper_id, dropped`` — all
+    broadcast.  Output: ``vec_id, cell, rank, keeper_id, dropped`` — all
     BIGINT, fully deterministic.
 
     ``max_candidates`` is the hot-cluster skew lever (the
@@ -1101,9 +1066,8 @@ def semantic_dedup(
     twins still collapse whenever the earlier twin ranks within the
     cap.  Default ``None`` = exact, the staged-query contract.
     """
-    from pyspark_pipelining_spark.operators.cluster import GRID, kmeans_int
+    from pyspark_pipelining_spark.operators.cluster import kmeans_int
 
-    g = GRID if grid is None else grid
     p, q = tau
     if p <= 0 or q <= 0:
         raise ValueError(f"tau must be a positive fraction, got {tau}")
@@ -1112,14 +1076,11 @@ def semantic_dedup(
     # back on id (interleaved A/B at sf0.1: 4.81 -> 4.43 s median-of-5,
     # results identical; one less corpus scan + one less shuffle join
     # is the structural win at scale)
-    assign = kmeans_int(
-        emb_df, k=k, iters=iters, id_col=id_col, vec_col=vec_col, grid=g,
-        keep_vec=True,
-    )
-    w = Window.partitionBy("cell").orderBy("d", id_col)
+    assign = kmeans_int(emb_df, k=k, iters=iters, keep_vec=True)
+    w = Window.partitionBy("cell").orderBy("d", "vec_id")
     ranked = (
         assign.select(
-            id_col,
+            "vec_id",
             "cell",
             "d",
             "s",
@@ -1131,7 +1092,7 @@ def semantic_dedup(
         .localCheckpoint(eager=True)
     )
     a = ranked.select(
-        F.col(id_col).alias("_va"),
+        F.col("vec_id").alias("_va"),
         "cell",
         F.col("rank").alias("_ra"),
         F.col("s").alias("sa"),
@@ -1146,7 +1107,7 @@ def semantic_dedup(
         # so the hot-cluster pair blowup never reaches the shuffle
         b_src = ranked.filter(F.col("rank") <= max_candidates)
     b = b_src.select(
-        F.col(id_col).alias("_vb"),
+        F.col("vec_id").alias("_vb"),
         "cell",
         F.col("rank").alias("_rb"),
         F.col("s").alias("sb"),
@@ -1168,13 +1129,13 @@ def semantic_dedup(
         .agg(F.max("_hit").cast("long").alias("dropped"))
     )
     keepers = ranked.filter(F.col("rank") == 1).select(
-        "cell", F.col(id_col).alias("keeper_id")
+        "cell", F.col("vec_id").alias("keeper_id")
     )
     return (
-        ranked.join(drops, F.col(id_col) == F.col("_va"), "left")
+        ranked.join(drops, F.col("vec_id") == F.col("_va"), "left")
         .join(F.broadcast(keepers), "cell")
         .select(
-            id_col,
+            "vec_id",
             "cell",
             "rank",
             "keeper_id",
@@ -1198,8 +1159,6 @@ PARA_KEY = 1_000_000
 def paragraph_chunks(
     df: DataFrame,
     words_per_para: int = 12,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Fixed-width word windows as pseudo-paragraphs: this corpus is
     single-line (no newline delimiters), so the paragraph grain is
@@ -1212,11 +1171,7 @@ def paragraph_chunks(
     ``doc_id``, ``para_idx``, ``text`` (the chunk's words re-joined
     with single spaces, so re-tokenizing the chunk reproduces the word
     slice exactly).  All map-side: split, sequence-explode, slice."""
-    from pyspark_pipelining_spark.operators.text import with_words
-
-    w = with_words(df, text_col).select(
-        F.col(id_col).alias("doc_id"), "words"
-    )
+    w = with_words(df).select("doc_id", "words")
     n_paras = F.ceil(F.size("words") / words_per_para).cast("long")
     guarded_idx = F.when(F.col("pi") < PARA_KEY, F.col("pi")).otherwise(
         F.raise_error(
@@ -1256,8 +1211,6 @@ def paragraph_dup_stats(
     bands: int = 8,
     flag_num: int = 3,
     flag_den: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Per-document paragraph-level near-duplication pressure — the
     RefinedWeb/Dolma recipe one grain below :func:`minhash_lsh_pairs`:
@@ -1279,7 +1232,7 @@ def paragraph_dup_stats(
     each unit's shingle set, so bucket sizes stay bounded; the rollup
     is one pid→doc projection plus a doc-keyed aggregate, and the
     final join back to the full document list is by the id key."""
-    chunks = paragraph_chunks(df, words_per_para, text_col, id_col)
+    chunks = paragraph_chunks(df, words_per_para)
     pairs = minhash_lsh_pairs(
         chunks.select(F.col("pid").alias("doc_id"), "text"),
         num_hashes=num_hashes,
@@ -1308,7 +1261,7 @@ def paragraph_dup_stats(
     )
     totals = chunks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_paras"))
     return (
-        df.select(F.col(id_col).alias("doc_id"))
+        df.select("doc_id")
         .join(totals, "doc_id", "left")
         .join(dup_paras, "doc_id", "left")
         .select(

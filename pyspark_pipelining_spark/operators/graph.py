@@ -269,6 +269,12 @@ def kcore_peel(
     upstream candidate-pair pipeline and no round costs a job of its
     own.
 
+    Input contract: ``pairs`` lists each undirected pair once, as the
+    registered callers' deduplicated LSH pairs do.  A pair listed
+    twice (repeated, or in both orientations) counts as parallel
+    edges: ``[(1, 2)] * 3`` keeps both nodes at degree 3, exactly as
+    the oracle's ``UNION ALL`` edge list does.
+
     Output: ``node, degree`` for nodes surviving all rounds, with their
     post-peel degree.
     """
@@ -294,6 +300,9 @@ def kcore_fixpoint(
     "edge count unchanged" is exactly "no node fell below k".  Larger
     probe blocks lose here: at sf0.1 the last edge falls in round 8, so
     one round per probe runs 9 rounds where blocks of 4 run 12.
+
+    Input contract as in :func:`kcore_peel`: each undirected pair once;
+    a repeated pair counts as parallel edges.
     """
     edges = symmetrize(pairs, a, b).localCheckpoint(eager=False)
     core = iterate(edges, _peel(k), max_rounds, until=F.count(F.lit(1)))

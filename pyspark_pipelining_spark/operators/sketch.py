@@ -34,9 +34,9 @@ distinct hashes is among the k smallest of whichever task/partition saw
 it, so it survives any partial step — the final k-min set is
 layout-independent (property-tested under repartitioning).
 
-Hashes are md5-derived (``conv(substring(md5(v),1,15),16,10)`` — the
-same portable trick as operators/dedup.portable_hash_id), so the DuckDB
-oracle reproduces the estimate bit-for-bit.
+Hashes are md5-derived (``operators/dedup.portable_hash60``, the first
+60 bits of md5), so the DuckDB oracle reproduces the estimate
+bit-for-bit.
 """
 
 from __future__ import annotations
@@ -47,6 +47,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pyspark_pipelining_spark.operators.dedup import portable_hash60, portable_hash_id
 
 TWO_60 = 1 << 60
 
@@ -105,7 +107,7 @@ def kmv_distinct(
     """
     if strategy not in ("jvm", "python"):
         raise ValueError(f"strategy must be 'jvm' or 'python', got {strategy!r}")
-    h = F.conv(F.substring(F.md5(F.col(value_col)), 1, 15), 16, 10).cast("long")
+    h = portable_hash60(F.col(value_col))
     hashed = df.select(F.col(group_col), h.alias("h"))
     cand = (
         _kmv_mins_jvm(hashed, group_col, k)
@@ -150,8 +152,6 @@ def cms_sketch(
     |groups| × depth × width rows total — a broadcastable dim by
     construction, mergeable across partitions/days by simple addition.
     """
-    from pyspark_pipelining_spark.operators.dedup import portable_hash_id
-
     w = F.lit(1).alias("c") if weight_col is None else F.col(weight_col).alias("c")
     exploded = df.select(
         *[F.col(g) for g in group_cols],
@@ -180,8 +180,6 @@ def cms_estimate(
     Output: ``<key_col>, est`` (long).  The sketch is depth × width rows
     — broadcast — so estimation never shuffles the candidate side.
     """
-    from pyspark_pipelining_spark.operators.dedup import portable_hash_id
-
     probes = keys.select(
         F.col(key_col), F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("d")
     ).withColumn(
@@ -211,8 +209,6 @@ def bloom_build(
     pack 32 bits (not 64): bit 63 would need ``1 << 63``, which
     overflow-checking engines (DuckDB, ANSI Spark) reject.
     """
-    from pyspark_pipelining_spark.operators.dedup import portable_hash_id
-
     pos = keys.select(
         F.explode(
             F.array(
@@ -252,8 +248,6 @@ def bloom_probe(
     exact keys are too large to broadcast, then exact-verify the
     (small) surviving fraction.
     """
-    from pyspark_pipelining_spark.operators.dedup import portable_hash_id
-
     out = df
     for i in range(k_hashes):
         pos = portable_hash_id(F.concat(F.lit(f"{i}:"), F.col(key_col)), m_bits)
@@ -310,7 +304,7 @@ def hll_registers(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     ``m × tasks`` rows no matter how many raw values flow in (the
     classic reason HLL beats exact distinct at 100 TB).
     """
-    h = F.conv(F.substring(F.md5(F.col(value_col)), 1, 15), 16, 10).cast("long")
+    h = portable_hash60(F.col(value_col))
     hashed = df.select(F.col(group_col), h.alias("h")).select(
         group_col,
         F.pmod(F.col("h"), F.lit(HLL_M)).alias("bucket"),
@@ -417,7 +411,7 @@ def kmv_overlap(
     Output (one row): ``est_left, est_right, est_union, jaccard,
     est_intersection`` (doubles, 6dp).
     """
-    h = F.conv(F.substring(F.md5(F.col(value_col)), 1, 15), 16, 10).cast("long")
+    h = portable_hash60(F.col(value_col))
 
     def mins(df: DataFrame, tag: str) -> DataFrame:
         hashed = df.select(F.lit(tag).alias("g"), h.alias("h"))

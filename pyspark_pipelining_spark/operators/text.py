@@ -34,22 +34,23 @@ STOPWORDS: dict[str, tuple[str, ...]] = {
 FNV_MOD = 1_000_000_007
 
 
-def with_words(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Lowercased whitespace tokenization as an array column.
+def with_words(df: DataFrame) -> DataFrame:
+    """Lowercased whitespace tokenization of ``text`` as the array column
+    ``words``.
 
     Spreads single-split local scans first so the downstream per-word
     array work parallelizes (no-op on multi-split cluster scans)."""
-    return spread(df).withColumn("words", F.split(F.lower(F.col(text_col)), " +"))
+    return spread(df).withColumn("words", F.split(F.lower(F.col("text")), " +"))
 
 
-def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
+def language_id(df: DataFrame) -> DataFrame:
     """Stopword-ratio language ID: per language, the fraction of the
     document's words that hit that language's stopword list; prediction
     is the argmax (ties break by language code order).
 
     Output: doc_id, per-language ``score_<lang>`` columns, ``pred_lang``.
     """
-    out = with_words(df, text_col)
+    out = with_words(df)
     langs = sorted(STOPWORDS)
     for lang in langs:
         sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
@@ -62,16 +63,16 @@ def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     return out.select("doc_id", *[f"score_{lang}" for lang in langs], pred.alias("pred_lang"))
 
 
-def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_score(df: DataFrame) -> DataFrame:
     """Heuristic document-quality features + composite score:
     word count, mean word length, stopword ratio (English list),
     alphabetic-character ratio.  Output: doc_id + feature columns +
     ``quality`` in [0,1]."""
-    words = with_words(df, text_col)
+    words = with_words(df)
     sw = F.array(*[F.lit(w) for w in STOPWORDS["en"]])
     n_words = F.size("words")
-    n_chars = F.length(F.col(text_col))
-    alpha_chars = F.length(F.regexp_replace(F.col(text_col), "[^a-zA-Z]", ""))
+    n_chars = F.length(F.col("text"))
+    alpha_chars = F.length(F.regexp_replace(F.col("text"), "[^a-zA-Z]", ""))
     stop_hits = F.size(F.filter("words", lambda w: F.array_contains(sw, w)))
     feats = words.select(
         "doc_id",
@@ -89,25 +90,25 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     return feats.withColumn("quality", quality)
 
 
-def token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
+def token_count(df: DataFrame) -> DataFrame:
     """Whitespace token count plus a BPE-ish subword proxy: number of
     matches of ``[a-z]+|[0-9]+|[^a-z0-9\\s]`` over the lowercased text
     (letters runs + digit runs + standalone symbols)."""
     return df.select(
         "doc_id",
-        F.size(F.split(F.lower(F.col(text_col)), " +")).alias("ws_tokens"),
+        F.size(F.split(F.lower(F.col("text")), " +")).alias("ws_tokens"),
         F.size(
-            F.expr(f"regexp_extract_all(lower({text_col}), '[a-z]+|[0-9]+|[^a-z0-9 ]', 0)")
+            F.expr("regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 ]', 0)")
         ).alias("subword_tokens"),
     )
 
 
-def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
+def fingerprint(df: DataFrame) -> DataFrame:
     """Order-sensitive polynomial rolling hash over the word sequence
     (per-word code = 31·len + first-char codepoint, folded left with
     ``h = (h*31 + code) mod 1e9+7``) — a cheap, portable document
     fingerprint for exact-duplicate detection at scale."""
-    words = with_words(df, text_col)
+    words = with_words(df)
     codes = F.transform(
         "words", lambda w: (F.length(w) * 31 + F.ascii(F.substring(w, 1, 1))).cast("long")
     )
@@ -117,12 +118,14 @@ def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     return words.select("doc_id", fp.alias("fingerprint"))
 
 
-def _word_grams(n: int):
+def word_grams(n: int):
     """Array of word n-grams (space-joined) from the ``words`` column.
 
     Guarded on ``size >= n``: Spark's ``sequence(1, 0)`` is DESCENDING
     ``[1, 0]``, so an unguarded sequence would fabricate grams for
-    too-short documents."""
+    too-short documents.  Null ``words`` give ``[]``.  The one word
+    n-gram builder: :func:`dedup.word_ngrams` and every gram feature
+    here call it."""
     sz = F.size("words")
 
     def gram(i):
@@ -174,7 +177,7 @@ def _run_stats(arr):
     return F.aggregate(srt, init, step, fin)
 
 
-def repetition_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
+def repetition_signals(df: DataFrame) -> DataFrame:
     """Gopher/C4-style repetition quality signals, one row per document:
 
     - ``top2_chars`` / ``top2_frac``: characters covered by the single
@@ -191,10 +194,10 @@ def repetition_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
     explode, embarrassingly parallel over a 100 TB corpus.  Cost is
     O(words x log words) per document, memory bounded by the document
     itself."""
-    words = with_words(df, text_col)
-    n_chars = F.length(F.col(text_col)).cast("long")
-    b = _run_stats(_word_grams(2))
-    t = _run_stats(_word_grams(3))
+    words = with_words(df)
+    n_chars = F.length(F.col("text")).cast("long")
+    b = _run_stats(word_grams(2))
+    t = _run_stats(word_grams(3))
     out = words.select(
         "doc_id",
         n_chars.alias("n_chars"),
@@ -211,7 +214,6 @@ def repetition_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 def inverted_index(
     df: DataFrame,
-    text_col: str = "text",
     min_df: int = 2,
     max_postings: int = 10,
     salts: int = 8,
@@ -234,7 +236,7 @@ def inverted_index(
     bounded by salts·max_postings regardless of token frequency.  The
     full-postings variant of this operator would instead bucket-write
     by token and never collect."""
-    words = with_words(df, text_col)
+    words = with_words(df)
     toks = words.select("doc_id", F.explode(F.array_distinct("words")).alias("token"))
     salted = toks.withColumn(
         "salt", F.pmod(F.xxhash64("doc_id"), F.lit(salts)).cast("int")
@@ -268,11 +270,7 @@ def inverted_index(
     )
 
 
-def tfidf_top_terms(
-    df: DataFrame,
-    text_col: str = "text",
-    k: int = 5,
-) -> DataFrame:
+def tfidf_top_terms(df: DataFrame, k: int = 5) -> DataFrame:
     """Per-document top-``k`` TF-IDF terms — the classic keyword /
     relevance-feature extractor (score = tf · ln(N / df), the plain
     unsmoothed variant so the oracle shares the exact expression).
@@ -287,7 +285,7 @@ def tfidf_top_terms(
     shuffles only vocabulary-sized keys; the final top-k is a bounded
     row_number window per doc_id.  Three shuffles total, none over raw
     token streams."""
-    words = with_words(df, text_col)
+    words = with_words(df)
     toks = words.select("doc_id", F.explode("words").alias("token"))
     tf = toks.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("doc_freq"))
@@ -311,7 +309,6 @@ def tfidf_top_terms(
 
 def cooccur_pmi(
     df: DataFrame,
-    text_col: str = "text",
     max_skip: int = 2,
     min_count: int = 3,
 ) -> DataFrame:
@@ -341,7 +338,7 @@ def cooccur_pmi(
     corpus-sized.  The grand total is a broadcast single-row agg.  At
     100 TB the pair groupBy is the one unavoidable shuffle, and AQE
     handles the heavy head (stopword pairs) via skew split."""
-    words = with_words(df, text_col)
+    words = with_words(df)
     sz = F.size("words")
 
     def mk(d: int):
@@ -383,7 +380,6 @@ def bm25_scores(
     terms: tuple[str, ...],
     k1: float = 1.2,
     b: float = 0.75,
-    text_col: str = "text",
 ) -> DataFrame:
     """BM25 relevance of every document to a fixed term set — the
     standard retrieval/quality-filter scorer (rank documents against a
@@ -399,7 +395,7 @@ def bm25_scores(
     trade for a fixed probe set (a dynamic query side would be a
     broadcast join against an inverted index instead).
     """
-    words = with_words(df, text_col)
+    words = with_words(df)
     wl = words.select("doc_id", "words", F.size("words").alias("dl"))
 
     def eq_term(t: str):
@@ -431,9 +427,7 @@ def bm25_scores(
     return joined.select("doc_id", F.round(score, 6).alias("score"))
 
 
-def lm_bigram_score(
-    df: DataFrame, text_col: str = "text", scale: int = 10**6
-) -> DataFrame:
+def lm_bigram_score(df: DataFrame, scale: int = 10**6) -> DataFrame:
     """Character-bigram language-model quality score — the KenLM-style
     perplexity filter of training-data pipelines (CCNet/Gopher use a
     5-gram LM; the char-bigram variant keeps the model a tiny broadcast
@@ -461,7 +455,7 @@ def lm_bigram_score(
     Output: ``doc_id, n_bigrams, total_q6, avg_logp``.
     """
     base = spread(df).select(
-        "doc_id", F.lower(F.col(text_col)).alias("t")
+        "doc_id", F.lower(F.col("text")).alias("t")
     )
     # guard: sequence(1, 0) in Spark is a DESCENDING [1, 0], not empty
     grams = F.when(
@@ -500,11 +494,7 @@ def lm_bigram_score(
     )
 
 
-def ngram_novelty(
-    df: DataFrame,
-    text_col: str = "text",
-    n: int = 3,
-) -> DataFrame:
+def ngram_novelty(df: DataFrame, n: int = 3) -> DataFrame:
     """Per-document n-gram novelty: the fraction of a document's
     distinct word n-grams that appear in NO other document — the
     memorization/boilerplate signal (low novelty = the document is
@@ -525,10 +515,10 @@ def ngram_novelty(
 
     Output: ``doc_id, n_ngrams, n_unique, novelty`` (6dp).
     """
-    words = with_words(df, text_col)
-    # _word_grams guards size < n (sequence(1, 0) is DESCENDING [1, 0]
+    words = with_words(df)
+    # word_grams guards size < n (sequence(1, 0) is DESCENDING [1, 0]
     # in Spark and would fabricate grams for too-short docs)
-    grams = words.select("doc_id", F.array_distinct(_word_grams(n)).alias("grams"))
+    grams = words.select("doc_id", F.array_distinct(word_grams(n)).alias("grams"))
     toks = grams.select("doc_id", F.explode("grams").alias("gram"))
     uniq = (
         toks.groupBy("gram")
@@ -555,62 +545,57 @@ def ngram_novelty(
     )
 
 
-def hapax_stats(df: DataFrame, group_col: str = "source", text_col: str = "text") -> DataFrame:
-    """Per-group vocabulary-growth signals: token count, vocabulary
-    size, hapax legomena (tokens occurring exactly once in the group),
+def hapax_stats(df: DataFrame) -> DataFrame:
+    """Per-source vocabulary-growth signals: token count, vocabulary
+    size, hapax legomena (tokens occurring exactly once in the source),
     hapax ratio and type-token ratio — the classic Zipf-tail health
     check an ingest pipeline runs to spot boilerplate-heavy or
     truncated sources (low hapax ratio → repetitive text).
 
-    Shape: one (group, token) count with map-side partials, then one
-    per-group fold — two key-bounded shuffles, no windows, no Python.
+    Shape: one (source, token) count with map-side partials, then one
+    per-source fold — two key-bounded shuffles, no windows, no Python.
 
-    Output: ``<group_col>, n_tokens, vocab_size, hapax, hapax_ratio,
+    Output: ``source, n_tokens, vocab_size, hapax, hapax_ratio,
     ttr`` (ratios rounded 6).
     """
-    toks = with_words(df, text_col).select(
-        F.col(group_col).alias("grp"), F.explode("words").alias("token")
+    toks = with_words(df).select(
+        "source", F.explode("words").alias("token")
     ).filter(F.length("token") > 0)
-    per_tok = toks.groupBy("grp", "token").agg(F.count(F.lit(1)).alias("cnt"))
+    per_tok = toks.groupBy("source", "token").agg(F.count(F.lit(1)).alias("cnt"))
     return (
-        per_tok.groupBy("grp")
+        per_tok.groupBy("source")
         .agg(
             F.sum("cnt").cast("long").alias("n_tokens"),
             F.count(F.lit(1)).alias("vocab_size"),
             F.sum((F.col("cnt") == 1).cast("long")).alias("hapax"),
         )
         .select(
-            F.col("grp").alias(group_col),
+            "source",
             "n_tokens",
             "vocab_size",
             "hapax",
             F.round(F.col("hapax") / F.col("vocab_size"), 6).alias("hapax_ratio"),
             F.round(F.col("vocab_size") / F.col("n_tokens"), 6).alias("ttr"),
         )
-        .orderBy(group_col)
+        .orderBy("source")
     )
 
 
-def oov_rate(
-    df: DataFrame,
-    vocab_k: int = 100,
-    group_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
-    """Per-group out-of-vocabulary rate against the corpus-wide top-k
+def oov_rate(df: DataFrame, vocab_k: int = 100) -> DataFrame:
+    """Per-source out-of-vocabulary rate against the corpus-wide top-k
     vocabulary (frequency desc, token asc ties): the coverage check
     run before committing to a tokenizer vocab size.
 
     Shape: global token counts fold map-side; the top-k is
     ``orderBy().limit()`` (TakeOrdered — per-partition heaps, never a
     single-partition window); membership joins back as a BROADCAST
-    left-semi-style null check, so the per-group pass never shuffles
+    left-semi-style null check, so the per-source pass never shuffles
     the vocabulary.
 
-    Output: ``<group_col>, n_tokens, oov_tokens, oov_rate``.
+    Output: ``source, n_tokens, oov_tokens, oov_rate``.
     """
-    toks = with_words(df, text_col).select(
-        F.col(group_col).alias("grp"), F.explode("words").alias("token")
+    toks = with_words(df).select(
+        "source", F.explode("words").alias("token")
     ).filter(F.length("token") > 0)
     toks = cache.keep(toks)
     vocab = (
@@ -622,18 +607,18 @@ def oov_rate(
     )
     return (
         toks.join(F.broadcast(vocab), "token", "left")
-        .groupBy("grp")
+        .groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),
             F.sum(F.col("_in_vocab").isNull().cast("long")).alias("oov_tokens"),
         )
         .select(
-            F.col("grp").alias(group_col),
+            "source",
             "n_tokens",
             "oov_tokens",
             F.round(F.col("oov_tokens") / F.col("n_tokens"), 6).alias("oov_rate"),
         )
-        .orderBy(group_col)
+        .orderBy("source")
     )
 
 
@@ -675,7 +660,7 @@ def _gopher_pack(c, cov, key: int = _GOPHER_KEY):
     )
 
 
-def gopher_repetition(df: DataFrame, text_col: str = "text") -> DataFrame:
+def gopher_repetition(df: DataFrame) -> DataFrame:
     """Gopher-style repetition quality signals (Rae et al. 2021,
     "Scaling Language Models: ... Gopher", Table A1) — the published
     repetition filters a pretraining pipeline runs beside perplexity
@@ -728,9 +713,9 @@ def gopher_repetition(df: DataFrame, text_col: str = "text") -> DataFrame:
     kept (``top2_cov, top3_cov, dup3_cov_words``) so downstream joins
     can re-derive any ratio losslessly.
     """
-    words = with_words(df, text_col).select(
+    words = with_words(df).select(
         "doc_id",
-        F.length(text_col).alias("n_chars"),
+        F.length("text").alias("n_chars"),
         F.size("words").alias("n_words"),
         "words",
     )
@@ -847,7 +832,7 @@ BATTERY_STOPWORDS = ("a", "the")
 BATTERY_MIN_STOPWORDS = 2
 
 
-def quality_battery(df: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_battery(df: DataFrame) -> DataFrame:
     """FineWeb-style composed heuristic battery (Penedo et al. 2024,
     "The FineWeb Datasets" — whose pipeline composes the C4 and Gopher
     rule sets into per-rule flags plus one keep decision; the three
@@ -883,7 +868,7 @@ def quality_battery(df: DataFrame, text_col: str = "text") -> DataFrame:
     flag_word_count, flag_word_len, flag_stopword, flag_repetition,
     kept`` — all BIGINT.
     """
-    words = with_words(df, text_col)
+    words = with_words(df)
     stop_arr = ", ".join(f"'{s}'" for s in BATTERY_STOPWORDS)
     base = words.select(
         "doc_id",
@@ -898,7 +883,7 @@ def quality_battery(df: DataFrame, text_col: str = "text") -> DataFrame:
         .cast("long")
         .alias("n_stopwords"),
     )
-    rep = gopher_repetition(df, text_col=text_col).select(
+    rep = gopher_repetition(df).select(
         "doc_id", "flagged_repetition"
     )
     lo, hi = BATTERY_WORDLEN
@@ -951,8 +936,6 @@ def linear_quality_score(
     df: DataFrame,
     weights: DataFrame,
     buckets: int = FASTTEXT_BUCKETS,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Score every document with a frozen linear hashed-bigram
     classifier: ``score = (Σ_grams w[h(gram)])/n + bias`` with int64
@@ -972,15 +955,15 @@ def linear_quality_score(
 
     Output: ``doc_id, n_grams, sum_q6, score_q6, kept`` (docs too
     short for a bigram appear with zeros and ``kept = 0``)."""
-    from pyspark_pipelining_spark.operators.dedup import portable_hash_id, word_ngrams
+    from pyspark_pipelining_spark.operators.dedup import portable_hash_id
 
     bias = weights.filter(F.col("bucket") == -1).select(
         F.col("w_q6").alias("bias_q6")
     )
     w_tab = weights.filter(F.col("bucket") >= 0)
     grams = (
-        word_ngrams(df.select(F.col(id_col).alias("doc_id"), text_col), 2)
-        .select("doc_id", F.explode("ngrams").alias("gram"))
+        with_words(df.select("doc_id", "text"))
+        .select("doc_id", F.explode(word_grams(2)).alias("gram"))
         .select("doc_id", portable_hash_id(F.col("gram"), buckets).alias("bucket"))
     )
     per_doc = (
@@ -992,7 +975,7 @@ def linear_quality_score(
         )
     )
     return (
-        df.select(F.col(id_col).alias("doc_id"))
+        df.select("doc_id")
         .join(per_doc, "doc_id", "left")
         .crossJoin(F.broadcast(bias))
         .select(

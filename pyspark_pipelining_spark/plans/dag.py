@@ -300,7 +300,7 @@ def build_corpus_pipeline(spark: SparkSession, config: PipelineConfig) -> Pipeli
     @p.stage("deduped", requires=("signals",))
     def deduped(spark, cfg, up):
         d = up["signals"]
-        pairs = dedup.minhash_lsh_pairs(d).filter(F.col("est_jaccard") >= 0.5)
+        pairs = dedup.near_dup_pairs(d)
         return dedup.drop_duplicate_docs(d, pairs)
 
     @p.stage("gated", requires=("deduped",))

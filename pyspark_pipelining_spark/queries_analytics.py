@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from pyspark_pipelining_spark.operators import analytics, dedup, graph
 from pyspark_pipelining_spark.operators import text as text_ops
+from pyspark_pipelining_spark.operators.dedup import NEAR_DUP_JACCARD
 from pyspark_pipelining_spark.queries_llm import SQL_WORDS, _minhash_fragments
 from pyspark_pipelining_spark.sources.registry import load_table
 
@@ -679,18 +680,18 @@ def q_node_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Neighbor-set Jaccard for every LSH near-dup candidate pair
     (operators/graph.node_jaccard over the dedup_clusters edge set)."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_pairs(docs).filter(F.col("est_jaccard") >= 0.5)
+    pairs = dedup.near_dup_pairs(docs)
     return graph.node_jaccard(pairs)
 
 
-def _sql_node_jaccard(threshold: float = 0.5, num_hashes: int = 16, bands: int = 8) -> str:
+def _sql_node_jaccard(num_hashes: int = 16, bands: int = 8) -> str:
     ctes, band_match, agree = _minhash_fragments(num_hashes, bands)
     return f"""
 WITH {ctes},
 p AS (
     SELECT a.doc_id AS doc_1, b.doc_id AS doc_2
     FROM sig a JOIN sig b ON a.doc_id < b.doc_id AND ({band_match})
-    WHERE ({agree}) / {num_hashes}.0 >= {threshold}
+    WHERE ({agree}) / {num_hashes}.0 >= {NEAR_DUP_JACCARD}
 ),
 edges AS (
     SELECT doc_1, doc_2 FROM p

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark_pipelining_spark.operators import corpus, similarity
-from pyspark_pipelining_spark.operators.dedup import MERSENNE
+from pyspark_pipelining_spark.operators.dedup import MERSENNE, NEAR_DUP_JACCARD, portable_hash60
 from pyspark_pipelining_spark.queries_llm import SQL_WORDS
 from pyspark_pipelining_spark.sources.registry import load_table
 
@@ -498,7 +498,7 @@ def q_dedup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark_pipelining_spark.operators import dedup as _dedup
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = _dedup.minhash_lsh_pairs(docs).filter(F.col("est_jaccard") >= 0.5)
+    pairs = _dedup.near_dup_pairs(docs)
     s1 = docs.select(F.col("doc_id").alias("doc_1"), F.col("source").alias("s1"))
     s2 = docs.select(F.col("doc_id").alias("doc_2"), F.col("source").alias("s2"))
     return (
@@ -512,7 +512,7 @@ def q_dedup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_dedup_matrix(threshold: float = 0.5, num_hashes: int = 16) -> str:
+def _sql_dedup_matrix(num_hashes: int = 16) -> str:
     from pyspark_pipelining_spark.queries_llm import _minhash_fragments
 
     ctes, band_match, agree = _minhash_fragments()
@@ -521,7 +521,7 @@ WITH {ctes},
 pairs AS (
     SELECT a.doc_id AS doc_1, b.doc_id AS doc_2
     FROM sig a JOIN sig b ON a.doc_id < b.doc_id AND ({band_match})
-    WHERE ({agree}) / {num_hashes}.0 >= {threshold}
+    WHERE ({agree}) / {num_hashes}.0 >= {NEAR_DUP_JACCARD}
 )
 SELECT least(d1.source, d2.source) AS source_a,
        greatest(d1.source, d2.source) AS source_b,
@@ -964,22 +964,10 @@ def q_kmv_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     thousands of values, so the kth-min ESTIMATION path is actually
     exercised rather than the exact small-set fallback."""
     from pyspark_pipelining_spark.operators.sketch import kmv_overlap
-    from pyspark_pipelining_spark.operators.text import with_words
+    from pyspark_pipelining_spark.operators.text import with_words, word_grams
 
     docs = load_table(spark, sf_dir, "documents")
-    grams = with_words(docs).select(
-        "lang",
-        F.explode(
-            # guard: sequence(1, 0) is a DESCENDING Spark array, not empty
-            F.expr(
-                "CASE WHEN size(words) >= 2 THEN"
-                " transform(sequence(1, size(words) - 1),"
-                "  i -> concat(element_at(words, CAST(i AS INT)), ' ',"
-                "              element_at(words, CAST(i + 1 AS INT))))"
-                " ELSE array() END"
-            )
-        ).alias("token"),
-    )
+    grams = with_words(docs).select("lang", F.explode(word_grams(2)).alias("token"))
     return kmv_overlap(
         grams.filter(F.col("lang") == "en"),
         grams.filter(F.col("lang") != "en"),
@@ -1500,7 +1488,7 @@ def _kmv_source_hashes(docs: DataFrame) -> DataFrame:
         .select("source", F.explode("words").alias("token"))
         .filter(F.length("token") > 0)
     )
-    h = F.conv(F.substring(F.md5(F.col("token")), 1, 15), 16, 10).cast("long")
+    h = portable_hash60(F.col("token"))
     return toks.select("source", h.alias("h")).distinct()
 
 
@@ -1725,7 +1713,6 @@ def _decontamination_spans_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         gram_len=DECON_GRAM_LEN,
         min_span=DECON_MIN,
         max_gram_occurrences=SPAN_MAX_OCC,
-        spread=spark.sparkContext.defaultParallelism,
         xor_docs=docs.filter(F.col("source") == EVAL_SOURCE).select("doc_id"),
     )
     meta = docs.select("doc_id", "source")

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pyspark_pipelining_spark.operators.dedup import NEAR_DUP_JACCARD
 from pyspark_pipelining_spark.sources.registry import load_table
 
 D2 = "decimal(18,2)"
@@ -1004,11 +1005,11 @@ def q_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark_pipelining_spark.operators import dedup, graph
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_pairs(docs).filter(F.col("est_jaccard") >= 0.5)
+    pairs = dedup.near_dup_pairs(docs)
     return graph.kcore_peel(pairs, k=2, rounds=3)
 
 
-def _sql_kcore_peel(threshold: float = 0.5, num_hashes: int = 16, bands: int = 8) -> str:
+def _sql_kcore_peel(num_hashes: int = 16, bands: int = 8) -> str:
     from pyspark_pipelining_spark.queries_llm import _minhash_fragments
 
     ctes, band_match, agree = _minhash_fragments(num_hashes, bands)
@@ -1031,7 +1032,7 @@ WITH {ctes},
 p AS (
     SELECT a.doc_id AS doc_1, b.doc_id AS doc_2
     FROM sig a JOIN sig b ON a.doc_id < b.doc_id AND ({band_match})
-    WHERE ({agree}) / {num_hashes}.0 >= {threshold}
+    WHERE ({agree}) / {num_hashes}.0 >= {NEAR_DUP_JACCARD}
 ),
 e0 AS (
     SELECT doc_1 AS s, doc_2 AS d FROM p

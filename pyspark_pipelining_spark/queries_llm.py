@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark_pipelining_spark.operators import dedup, multimodal, similarity, text
+from pyspark_pipelining_spark.operators.dedup import NEAR_DUP_JACCARD
 from pyspark_pipelining_spark.sources.registry import load_table
 
 MERSENNE = dedup.MERSENNE
@@ -200,11 +201,11 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     production DAG materializes the cluster labels ONCE (plans/dag.py
     idempotent task materialization) and both reports read the table."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_pairs(docs).filter(F.col("est_jaccard") >= 0.5)
+    pairs = dedup.near_dup_pairs(docs)
     return dedup.dedup_clusters(docs, pairs)
 
 
-def _sql_dedup_clusters(threshold: float = 0.5, num_hashes: int = 16, bands: int = 8) -> str:
+def _sql_dedup_clusters(num_hashes: int = 16, bands: int = 8) -> str:
     # The oracle computes component min-ids with a recursive reachability
     # CTE (UNION dedups, so it terminates); fine at oracle scale, while
     # the engine side uses bounded label propagation.
@@ -214,7 +215,7 @@ WITH RECURSIVE {ctes},
 pairs AS (
     SELECT a.doc_id AS doc_1, b.doc_id AS doc_2
     FROM sig a JOIN sig b ON a.doc_id < b.doc_id AND ({band_match})
-    WHERE ({agree}) / {num_hashes}.0 >= {threshold}
+    WHERE ({agree}) / {num_hashes}.0 >= {NEAR_DUP_JACCARD}
 ),
 edges AS (
     SELECT doc_1 AS src, doc_2 AS dst FROM pairs
@@ -249,7 +250,7 @@ def q_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     qual = text.quality_score(docs).select("doc_id", "quality")
     lang = text.language_id(docs).select("doc_id", "pred_lang")
-    pairs = dedup.minhash_lsh_pairs(docs).filter(F.col("est_jaccard") >= 0.5)
+    pairs = dedup.near_dup_pairs(docs)
     clusters = dedup.dedup_clusters(docs, pairs)
     return (
         docs.select("doc_id", "source")
@@ -265,7 +266,7 @@ def q_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_corpus_prep(threshold: float = 0.5) -> str:
+def _sql_corpus_prep() -> str:
     ctes, band_match, agree = _minhash_fragments()
     score_cols, pred = _lang_fragments()
     return f"""
@@ -273,7 +274,7 @@ WITH RECURSIVE {ctes},
 pairs AS (
     SELECT a.doc_id AS doc_1, b.doc_id AS doc_2
     FROM sig a JOIN sig b ON a.doc_id < b.doc_id AND ({band_match})
-    WHERE ({agree}) / 16.0 >= {threshold}
+    WHERE ({agree}) / 16.0 >= {NEAR_DUP_JACCARD}
 ),
 edges AS (
     SELECT doc_1 AS src, doc_2 AS dst FROM pairs
@@ -347,9 +348,7 @@ SQL_DEDUP_SIMHASH = _sql_simhash()
 
 
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.ngram_jaccard_pairs(
-        load_table(spark, sf_dir, "documents"), n=2, group_col="source", threshold=0.2
-    )
+    return dedup.ngram_jaccard_pairs(load_table(spark, sf_dir, "documents"), threshold=0.2)
 
 
 SQL_DEDUP_NGRAM_JACCARD = f"""
@@ -1070,14 +1069,13 @@ def q_pagerank_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark_pipelining_spark.operators.graph import pagerank_int, symmetrize
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_pairs(docs).filter(F.col("est_jaccard") >= 0.5)
+    pairs = dedup.near_dup_pairs(docs)
     edges = symmetrize(pairs, "doc_1", "doc_2", "src", "dst")
     out = pagerank_int(edges, iters=3)
     return out.select(F.col("id").alias("doc_id"), "r")
 
 
 def _sql_pagerank(
-    threshold: float = 0.5,
     num_hashes: int = 16,
     bands: int = 8,
     iters: int = 3,
@@ -1112,7 +1110,7 @@ WITH {ctes},
 pairs AS (
     SELECT a.doc_id AS doc_1, b.doc_id AS doc_2
     FROM sig a JOIN sig b ON a.doc_id < b.doc_id AND ({band_match})
-    WHERE ({agree}) / {num_hashes}.0 >= {threshold}
+    WHERE ({agree}) / {num_hashes}.0 >= {NEAR_DUP_JACCARD}
 ),
 edges AS (
     SELECT doc_1 AS src, doc_2 AS dst FROM pairs
@@ -1144,14 +1142,14 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark_pipelining_spark.operators.graph import symmetrize, triangle_count
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_pairs(docs).filter(F.col("est_jaccard") >= 0.5)
+    pairs = dedup.near_dup_pairs(docs)
     edges = symmetrize(pairs, "doc_1", "doc_2", "src", "dst")
     out = triangle_count(edges)
     return out.select(F.col("id").alias("doc_id"), "triangles")
 
 
 def _sql_triangles(
-    threshold: float = 0.5, num_hashes: int = 16, bands: int = 8
+    num_hashes: int = 16, bands: int = 8
 ) -> str:
     """Oracle via the id-ordered (a<b<c) formulation — enumerates the
     same triangle set the degree-ordered engine finds."""
@@ -1161,7 +1159,7 @@ WITH {ctes},
 pairs AS (
     SELECT a.doc_id AS doc_1, b.doc_id AS doc_2
     FROM sig a JOIN sig b ON a.doc_id < b.doc_id AND ({band_match})
-    WHERE ({agree}) / {num_hashes}.0 >= {threshold}
+    WHERE ({agree}) / {num_hashes}.0 >= {NEAR_DUP_JACCARD}
 ),
 tri AS (
     SELECT e1.doc_1 AS a, e1.doc_2 AS b, e2.doc_2 AS c
@@ -1462,7 +1460,7 @@ def q_dedup_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     materializes the labels once via plans/dag.py and this report
     reads that table (see ``q_dedup_clusters``)."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_pairs(docs).filter(F.col("est_jaccard") >= 0.5)
+    pairs = dedup.near_dup_pairs(docs)
     clusters = dedup.dedup_clusters(docs, pairs)
     labeled = docs.select("doc_id", "source", "n_chars").join(clusters, "doc_id")
     removed = (F.col("doc_id") != F.col("cluster_id")).cast("long")
@@ -1480,14 +1478,14 @@ def q_dedup_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("source")
 
 
-def _sql_dedup_impact(threshold: float = 0.5, num_hashes: int = 16, bands: int = 8) -> str:
+def _sql_dedup_impact(num_hashes: int = 16, bands: int = 8) -> str:
     ctes, band_match, agree = _minhash_fragments(num_hashes, bands)
     return f"""
 WITH RECURSIVE {ctes},
 pairs AS (
     SELECT a.doc_id AS doc_1, b.doc_id AS doc_2
     FROM sig a JOIN sig b ON a.doc_id < b.doc_id AND ({band_match})
-    WHERE ({agree}) / {num_hashes}.0 >= {threshold}
+    WHERE ({agree}) / {num_hashes}.0 >= {NEAR_DUP_JACCARD}
 ),
 edges AS (
     SELECT doc_1 AS src, doc_2 AS dst FROM pairs
@@ -1645,10 +1643,6 @@ def q_exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         gram_len=SPAN_GRAM_LEN,
         min_span=SPAN_MIN,
         max_gram_occurrences=SPAN_MAX_OCC,
-        # one small parquet file = one scan partition; spread the gram
-        # stage across the session (operator docstring: leave None on
-        # a real multi-file lake)
-        spread=spark.sparkContext.defaultParallelism,
     ).orderBy("doc_a", "doc_b", "start_a", "start_b")
 
 
@@ -1722,7 +1716,6 @@ def q_self_repeat_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             gram_len=SELF_GRAM_LEN,
             min_span=SELF_MIN,
             max_gram_occurrences=SPAN_MAX_OCC,
-            spread=spark.sparkContext.defaultParallelism,
             scope="self",
         )
         .select(

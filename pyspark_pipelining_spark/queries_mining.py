@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pyspark_pipelining_spark.operators.dedup import NEAR_DUP_JACCARD
 from pyspark_pipelining_spark.sources.registry import load_table
 
 # ---------------------------------------------------------------------------
@@ -30,11 +31,11 @@ def q_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark_pipelining_spark.operators import dedup, graph
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_pairs(docs).filter(F.col("est_jaccard") >= 0.5)
+    pairs = dedup.near_dup_pairs(docs)
     return graph.lpa_communities(pairs, rounds=LPA_ROUNDS)
 
 
-def _sql_lpa(rounds: int = LPA_ROUNDS, threshold: float = 0.5) -> str:
+def _sql_lpa(rounds: int = LPA_ROUNDS) -> str:
     from pyspark_pipelining_spark.queries_llm import _minhash_fragments
 
     ctes, band_match, agree = _minhash_fragments(16, 8)
@@ -58,7 +59,7 @@ WITH {ctes},
 cand AS (
     SELECT a.doc_id AS doc_1, b.doc_id AS doc_2
     FROM sig a JOIN sig b ON a.doc_id < b.doc_id AND ({band_match})
-    WHERE ({agree}) / 16.0 >= {threshold}
+    WHERE ({agree}) / 16.0 >= {NEAR_DUP_JACCARD}
 ),
 edges AS (
     SELECT doc_1 AS s, doc_2 AS d FROM cand
@@ -534,11 +535,11 @@ def q_harmonic_2hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark_pipelining_spark.operators import dedup
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_pairs(docs).filter(F.col("est_jaccard") >= 0.5)
+    pairs = dedup.near_dup_pairs(docs)
     return harmonic_2hop_from_edges(pairs)
 
 
-def _sql_harmonic(threshold: float = 0.5) -> str:
+def _sql_harmonic() -> str:
     from pyspark_pipelining_spark.queries_llm import _minhash_fragments
 
     ctes, band_match, agree = _minhash_fragments(16, 8)
@@ -547,7 +548,7 @@ WITH {ctes},
 cand AS (
     SELECT a.doc_id AS doc_1, b.doc_id AS doc_2
     FROM sig a JOIN sig b ON a.doc_id < b.doc_id AND ({band_match})
-    WHERE ({agree}) / 16.0 >= {threshold}
+    WHERE ({agree}) / 16.0 >= {NEAR_DUP_JACCARD}
 ),
 edges AS (
     SELECT doc_1 AS s, doc_2 AS d FROM cand

@@ -3,14 +3,20 @@ an operator (``collect``, ``count``, ...) is either loop control or a
 data-path collect, and loop control has one home:
 ``operators/iterate.py``.  This parses every operator module and fails
 on any other action call, so a new one has to go through the loop
-driver or be argued into the allowlist below."""
+driver or be argued into the allowlist below.
+
+The same source-scan discipline pins the portable value hash: the
+Spark-side ``md5 → substring → conv`` expression has one home,
+``dedup.portable_hash60``, which the DuckDB oracles replay bit for bit."""
 
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
-OPERATORS = Path(__file__).resolve().parents[1] / "pyspark_pipelining_spark" / "operators"
+PACKAGE = Path(__file__).resolve().parents[1] / "pyspark_pipelining_spark"
+OPERATORS = PACKAGE / "operators"
 
 ACTIONS = {"collect", "count", "first", "take", "head", "toPandas", "toLocalIterator"}
 
@@ -70,3 +76,64 @@ def test_driver_actions_only_in_the_loop_driver():
     # parser sees an action when there is one)
     assert set(ALLOWED) <= set(found)
 
+
+
+def _named_call(node: ast.AST, name: str) -> bool:
+    if not (isinstance(node, ast.Call) and node.args):
+        return False
+    f = node.func
+    return (f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)) == name
+
+
+def _is_hash60(node: ast.AST) -> bool:
+    """``conv(substring(md5(...), ...), ...)`` as a Column expression."""
+    for name in ("conv", "substring"):
+        if not _named_call(node, name):
+            return False
+        node = node.args[0]
+    return _named_call(node, "md5")
+
+
+# the same chain inside a SQL expression string passed to a call
+# (``F.expr(...)``); oracle SQL spells the hash with '0x' || substr
+_HASH60_SQL = re.compile(r"conv\s*\(\s*substring\s*\(\s*md5\s*\(", re.IGNORECASE)
+
+
+def _sql_text(node: ast.AST) -> str:
+    """The literal text of a (possibly formatted) string argument."""
+    if isinstance(node, ast.Constant) and isinstance(node.value, str):
+        return node.value
+    if isinstance(node, ast.JoinedStr):
+        return "".join(_sql_text(v) if isinstance(v, ast.Constant) else "x" for v in node.values)
+    return ""
+
+
+def _hash60_sites(path: Path):
+    """``(enclosing top-level function, line)`` of every md5 60-bit
+    hash expression in a module."""
+    tree = ast.parse(path.read_text(), filename=str(path))
+
+    def visit(node: ast.AST, fn: str):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)) and fn == "<module>":
+                yield from visit(child, child.name)
+                continue
+            if _is_hash60(child) or (
+                isinstance(child, ast.Call)
+                and any(_HASH60_SQL.search(_sql_text(a)) for a in child.args)
+            ):
+                yield fn, child.lineno
+            yield from visit(child, fn)
+
+    yield from visit(tree, "<module>")
+
+
+def test_portable_hash_spelled_once():
+    found = [
+        (str(path.relative_to(PACKAGE)), fn, line)
+        for path in sorted(PACKAGE.rglob("*.py"))
+        for fn, line in _hash60_sites(path)
+    ]
+    assert [site[:2] for site in found] == [("operators/dedup.py", "portable_hash60")], (
+        f"md5 60-bit hash spelled outside dedup.portable_hash60: {found}"
+    )

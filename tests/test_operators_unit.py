@@ -199,37 +199,71 @@ def test_cluster_assignments_known_components(spark):
 
 
 # every loop that runs through operators/iterate.py, with its result on
-# a single pair and on the path 1-2-3-4 (k=2 peels the path to nothing:
-# the fixpoint probe then sees no rows for the last two rounds)
+# a single pair, on the path 1-2-3-4 (k=2 peels the path to nothing:
+# the fixpoint probe then sees no rows for the last two rounds), on one
+# pair listed three times and on one pair in both orientations.  The
+# registered callers pass deduplicated LSH pairs; on the last two the
+# loops keep the single-pair result, except that k-core counts a
+# repeated pair as parallel edges, as its oracle's UNION ALL edge list
+# does.
+_PAIR_SETS = {
+    "single": [(1, 2)],
+    "path": [(1, 2), (2, 3), (3, 4)],
+    "repeated": [(1, 2)] * 3,
+    "both_orientations": [(1, 2), (2, 1)],
+}
 _LOOPS = {
     "cluster_assignments": (
         cluster_assignments,
-        {(1, 1), (2, 1)},
-        {(1, 1), (2, 1), (3, 1), (4, 1)},
+        {
+            "single": {(1, 1), (2, 1)},
+            "path": {(1, 1), (2, 1), (3, 1), (4, 1)},
+            "repeated": {(1, 1), (2, 1)},
+            "both_orientations": {(1, 1), (2, 1)},
+        },
     ),
-    "kcore_peel": (lambda p: kcore_peel(p, k=2, rounds=3), set(), set()),
-    "kcore_fixpoint": (lambda p: kcore_fixpoint(p, k=2), set(), set()),
+    "kcore_peel": (
+        lambda p: kcore_peel(p, k=2, rounds=3),
+        {
+            "single": set(),
+            "path": set(),
+            "repeated": {(1, 3), (2, 3)},
+            "both_orientations": {(1, 2), (2, 2)},
+        },
+    ),
+    "kcore_fixpoint": (
+        lambda p: kcore_fixpoint(p, k=2),
+        {
+            "single": set(),
+            "path": set(),
+            "repeated": {(1, 3), (2, 3)},
+            "both_orientations": {(1, 2), (2, 2)},
+        },
+    ),
     # synchronous LPA: a lone pair swaps labels each round; on the path
     # ties break to the smaller label
     "lpa_communities": (
         lambda p: lpa_communities(p, rounds=2),
-        {(1, 1), (2, 2)},
-        {(1, 1), (2, 2), (3, 1), (4, 2)},
+        {
+            "single": {(1, 1), (2, 2)},
+            "path": {(1, 1), (2, 2), (3, 1), (4, 2)},
+            "repeated": {(1, 1), (2, 2)},
+            "both_orientations": {(1, 1), (2, 2)},
+        },
     ),
 }
 
 
 @pytest.mark.parametrize("loop", sorted(_LOOPS))
 def test_iterative_loops_on_degenerate_pair_sets(spark, loop):
-    run, want_single, want_path = _LOOPS[loop]
+    run, want = _LOOPS[loop]
     schema = "doc_1 bigint, doc_2 bigint"
     empty = run(spark.createDataFrame([], schema))
-    single = run(spark.createDataFrame([(1, 2)], schema))
-    path = run(spark.createDataFrame([(1, 2), (2, 3), (3, 4)], schema))
     assert empty.collect() == []
-    assert empty.schema == single.schema == path.schema
-    assert {tuple(r) for r in single.collect()} == want_single
-    assert {tuple(r) for r in path.collect()} == want_path
+    for name, pairs in _PAIR_SETS.items():
+        out = run(spark.createDataFrame(pairs, schema))
+        assert out.schema == empty.schema, name
+        assert {tuple(r) for r in out.collect()} == want[name], name
 
 
 def test_pagerank_int_empty_edge_list(spark):

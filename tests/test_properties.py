@@ -784,16 +784,12 @@ def test_kcore_registered_rounds_reach_fixpoint_sf001(spark):
     the oracle fixture (sf0.01 near-dup graph) 3 rounds IS the fixpoint,
     so the bounded oracle-expressible query returns true coreness
     membership (VERDICT r05 watch-list item)."""
-    from pyspark.sql import functions as F
-
     from pyspark_pipelining_spark.operators import dedup, graph
     from pyspark_pipelining_spark.sources.registry import load_table
     from tests.conftest import SF_ORACLE
 
     docs = load_table(spark, SF_ORACLE, "documents")
-    pairs = dedup.minhash_lsh_pairs(docs).filter(
-        F.col("est_jaccard") >= 0.5
-    ).localCheckpoint(eager=True)
+    pairs = dedup.near_dup_pairs(docs).localCheckpoint(eager=True)
     bounded = {
         (r["node"], r["degree"])
         for r in graph.kcore_peel(pairs, k=2, rounds=3).collect()

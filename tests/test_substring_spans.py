@@ -203,13 +203,12 @@ def test_winnow_mode_bit_identical_to_full(spark):
     from pyspark_pipelining_spark.sources.registry import load_table
     from tests.conftest import SF_ORACLE
 
-    P = spark.sparkContext.defaultParallelism
     for sf_dir in (SF_SMOKE, SF_ORACLE):
         docs = load_table(spark, sf_dir, "documents")
 
         def run(**kw):
             rows = exact_substring_spans(
-                docs, gram_len=16, min_span=32, spread=P, **kw
+                docs, gram_len=16, min_span=32, **kw
             ).collect()
             return sorted(tuple(r[c] for c in COLS) for r in rows)
 

@@ -113,7 +113,6 @@ def _q_exact_substring_spans_w8(spark, sf_dir):
         gram_len=SPAN_GRAM_LEN,
         min_span=SPAN_MIN,
         max_gram_occurrences=SPAN_MAX_OCC,
-        spread=spark.sparkContext.defaultParallelism,
         winnow=8,
     ).orderBy("doc_a", "doc_b", "start_a", "start_b")
 
