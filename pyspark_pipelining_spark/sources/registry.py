@@ -9,13 +9,21 @@ make_media.py:32-34``) and a custom ``DataException`` for missing
 first-class ``StructType`` per table and keeps the same fail-fast
 semantics through :func:`require_columns` / :class:`SchemaError`.
 
-Scale note: all loads are plain ``spark.read.parquet`` — the vectorized
-parquet reader + Catalyst column pruning / predicate pushdown apply
-untouched.  At 100 TB the same call reads a date-partitioned directory
-tree and partition pruning is automatic for ``date``-filtered queries.
+Scale note: every load is a ``spark.read.parquet`` scan — the
+vectorized parquet reader + Catalyst column pruning / predicate pushdown
+apply untouched.  The first load of a file in a session infers its
+schema (one Spark job); later loads of the unchanged file pass that
+verified schema to the reader and run no inference job (see
+:func:`load_table`).  At 100 TB the same call reads a date-partitioned
+directory tree and partition pruning is automatic for ``date``-filtered
+queries.
 """
 
 from __future__ import annotations
+
+import os
+import weakref
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -139,13 +147,65 @@ def require_columns(df: DataFrame, cols: list[str], table: str = "<df>") -> Data
     return df
 
 
+#: Confs that decide how many splits a file scan plans into.
+_SPLIT_CONFS: tuple[str, ...] = (
+    "spark.sql.files.maxPartitionBytes",
+    "spark.sql.files.openCostInBytes",
+    "spark.sql.files.minPartitionNum",
+    "spark.sql.files.maxPartitionNum",
+    "spark.sql.leafNodeDefaultParallelism",
+)
+
+
+@dataclass(slots=True)
+class _Scan:
+    """What one session has learned about one lake file: the schema
+    inferred from it, and (once :func:`spread` asked) its scan split
+    count with the :data:`_SPLIT_CONFS` values it was planned under."""
+
+    identity: tuple[int, int, int]
+    schema: T.StructType
+    splits: tuple[tuple[str | None, ...], int] | None = None
+
+
+#: session → absolute path → :class:`_Scan`.  Only file metadata lives
+#: here: no data, results or plans.  A new session starts empty.
+_SCANS: weakref.WeakKeyDictionary[SparkSession, dict[str, _Scan]] = weakref.WeakKeyDictionary()
+
+
+def _read_parquet(spark: SparkSession, path: str) -> tuple[DataFrame, _Scan | None]:
+    """Read ``path``, inferring its schema only on the session's first
+    reference to the file as it is now.
+
+    The file's identity is its ``(st_ino, st_mtime_ns, st_size)``; a
+    rewritten file gets a new identity and is inferred again, so schema
+    drift still surfaces.  A path ``os.stat`` cannot see (a remote URI)
+    has no identity and is inferred on every read."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path), None
+    identity = (st.st_ino, st.st_mtime_ns, st.st_size)
+    scans = _SCANS.setdefault(spark, {})
+    key = os.path.abspath(path)
+    scan = scans.get(key)
+    if scan is not None and scan.identity == identity:
+        return spark.read.schema(scan.schema).parquet(path), scan
+    df = spark.read.parquet(path)
+    scan = scans[key] = _Scan(identity, df.schema)
+    return df, scan
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata table, validating declared columns are present.
 
-    We deliberately do NOT force the declared schema onto the reader —
-    parquet already carries types, and a forced schema would silence
-    drift.  Instead we verify the declared columns all exist (fail-fast)
-    and let any extra columns pass through.
+    The declared schema is never forced onto the reader — parquet
+    already carries types, and a forced schema would silence drift.
+    The reader gets the schema inferred from the file itself: the
+    session's first load of the file infers it (one Spark job), and
+    later loads of the unchanged file pass that schema and run no
+    inference job.  Every load then verifies the declared columns all
+    exist (fail-fast) and lets any extra columns pass through.
 
     Nanosecond-precision parquet timestamps (which Spark's vectorized
     reader rejects) are read as long via the legacy conf and converted to
@@ -158,14 +218,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     pinned to UTC, casting NTZ→TIMESTAMP reproduces the exact epoch
     micros stored in the file, so every consumer (and the DuckDB oracle,
     which computes on naive timestamps) sees identical values.
+
+    The returned frame carries its file's memo entry, so :func:`spread`
+    can reuse the scan's split count instead of planning it again.
     """
     if name not in SCHEMAS:
         raise SchemaError(f"unknown table {name!r}; registry has {sorted(SCHEMAS)}")
-    try:  # runtime-settable; makes TIMESTAMP(NANOS) readable as long
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    # runtime-settable; makes TIMESTAMP(NANOS) readable as long
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df, scan = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     df = require_columns(df, [f.name for f in SCHEMAS[name].fields], name)
     for field in SCHEMAS[name].fields:
         actual = df.schema[field.name].dataType
@@ -192,6 +253,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                     "could not be pinned to UTC"
                 )
             df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
+    df._lake_scan = scan  # projections above keep the scan's partitioning
     return df
 
 
@@ -334,8 +396,8 @@ def check_timestamp_column(spark: SparkSession, table: str, col: str = "ts") -> 
         )
 
 
-def spread(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:
-    """Ensure at least ``min_parallelism`` partitions before a
+def spread(df: DataFrame) -> DataFrame:
+    """Ensure at least ``defaultParallelism`` partitions before a
     compute-heavy stage (shingling, signature folds, per-doc features).
 
     Small local scans arrive as a single parquet split, which would pin
@@ -350,11 +412,23 @@ def spread(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:
     """
     if df.isStreaming:
         return df
-    sc = df.sparkSession.sparkContext
-    target = min_parallelism or sc.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if _num_partitions(df) < target:
         return df.repartition(target)
     return df
+
+
+def _num_partitions(df: DataFrame) -> int:
+    """``df``'s partition count.  ``df.rdd`` runs a physical planning
+    pass on every call, so a frame :func:`load_table` returned uses its
+    file's memoized split count while the split confs are unchanged."""
+    scan = vars(df).get("_lake_scan")
+    if scan is None:
+        return df.rdd.getNumPartitions()
+    confs = tuple(df.sparkSession.conf.get(k, None) for k in _SPLIT_CONFS)
+    if scan.splits is None or scan.splits[0] != confs:
+        scan.splits = (confs, df.rdd.getNumPartitions())
+    return scan.splits[1]
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:
@@ -481,8 +555,9 @@ def read_parquet_merged(spark: SparkSession, path: str) -> DataFrame:
     under ``path`` (``mergeSchema``) so files written before a column
     existed surface it as NULL.  Merging costs a footer read per file
     at planning time — that is why it is NOT the default read path
-    (``load_table`` declares its schema); use this for lakes that
-    evolved in place, then compact to the current schema."""
+    (``load_table`` infers one file's schema once per session and
+    reuses it); use this for lakes that evolved in place, then compact
+    to the current schema."""
     return spark.read.option("mergeSchema", "true").parquet(path)
 
 

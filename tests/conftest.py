@@ -4,6 +4,7 @@ import glob
 import hashlib
 import os
 import re
+import uuid
 
 import pytest
 
@@ -68,3 +69,17 @@ def spark():
     s = get_spark("tests", master="local[8]", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+def count_jobs(spark, fn):
+    """Call ``fn()`` under a fresh Spark job group; return its result and
+    the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    group = f"count_jobs:{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

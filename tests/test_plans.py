@@ -847,6 +847,23 @@ def test_plan_shapes_match_committed_lock(spark, all_plan_texts):
     )
 
 
+@pytest.mark.quick
+def test_rebuilt_query_runs_no_jobs(spark):
+    """A query's build re-reads lake files the session has already read:
+    ``load_table`` infers each file's schema once per session, so the
+    second build of ``reach_overall`` runs no Spark job at all.  A
+    schema-inference read (or any other driver action) added to its
+    build fails here."""
+    from tests.conftest import count_jobs
+
+    def build():
+        return QUERIES["reach_overall"](spark, SF_SMOKE)
+
+    count_jobs(spark, build)
+    _, jobs = count_jobs(spark, build)
+    assert jobs == 0
+
+
 def test_tfidf_cosine_postings_are_cached_for_reuse(spark):
     """The postings table feeds the norm fold plus BOTH sides of the
     pair join — it must come from the persisted handle

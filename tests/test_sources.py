@@ -350,3 +350,117 @@ def test_json_error_channel_quarantines_bad_rows(spark, tmp_path):
     assert not (parent.storageLevel.useMemory or parent.storageLevel.useDisk)
     # no-op on frames that did not come from the loader
     unpersist_json_with_errors(good.select("id"))
+
+
+# ---------------------------------------------------------------------------
+# load_table's per-session schema memo (files written under tmp_path)
+# ---------------------------------------------------------------------------
+
+
+def _write_nation(path, with_regionkey: bool = True) -> None:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    cols = {
+        "n_nationkey": pa.array([0, 1, 2], pa.int64()),
+        "n_name": pa.array(["ALGERIA", "BRAZIL", "CHINA"]),
+    }
+    if with_regionkey:
+        cols["n_regionkey"] = pa.array([0, 1, 2], pa.int64())
+    pq.write_table(pa.table(cols), str(path))
+
+
+def test_load_table_infers_a_file_schema_once_per_session(spark, tmp_path):
+    """The session's second load of an unchanged file reuses the schema
+    inferred by the first and runs no Spark job; schema and rows match."""
+    from pyspark_pipelining_spark.sources.registry import load_table
+    from tests.conftest import count_jobs
+
+    _write_nation(tmp_path / "nation.parquet")
+    first, first_jobs = count_jobs(spark, lambda: load_table(spark, str(tmp_path), "nation"))
+    again, jobs = count_jobs(spark, lambda: load_table(spark, str(tmp_path), "nation"))
+    assert first_jobs >= 1  # the schema-inference job the memo saves
+    assert jobs == 0
+    assert again.schema == first.schema
+    rows = sorted(map(tuple, first.collect()))
+    assert rows == [(0, "ALGERIA", 0), (1, "BRAZIL", 1), (2, "CHINA", 2)]
+    assert sorted(map(tuple, again.collect())) == rows
+
+
+def test_load_table_reinfers_a_rewritten_file(spark, tmp_path):
+    """A file rewritten at the same path has a new identity, so its
+    schema is inferred again and a dropped declared column still fails
+    fast."""
+    from pyspark_pipelining_spark.sources.registry import load_table
+
+    path = tmp_path / "nation.parquet"
+    _write_nation(path)
+    load_table(spark, str(tmp_path), "nation")
+    _write_nation(path, with_regionkey=False)
+    with pytest.raises(SchemaError, match="n_regionkey"):
+        load_table(spark, str(tmp_path), "nation")
+
+
+def test_memoized_read_converts_nanos_and_ntz_timestamps(spark, tmp_path):
+    """TIMESTAMP(NANOS) columns (read as long, then converted) and NTZ
+    columns (cast under the UTC pin) come out as ``TimestampType`` with
+    the same epoch micros from the first and the memoized read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from pyspark_pipelining_spark.sources.registry import load_table
+
+    micros = [1_704_164_645_123_456, 86_400_000_000]  # 2024-01-02 03:04:05.123456, 1970-01-02
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1, 2], pa.int64()),
+                "ts": pa.array([m * 1000 + 789 for m in micros], pa.timestamp("ns")),
+                "user_id": pa.array([7, 8], pa.int64()),
+                "event_type": pa.array(["view", "click"]),
+                "value": pa.array([1.0, 2.0]),
+                "props": pa.array(["{}", "{}"]),
+            }
+        ),
+        str(tmp_path / "events.parquet"),
+        coerce_timestamps=None,
+    )
+    pq.write_table(
+        pa.table(
+            {
+                "o_orderkey": pa.array([1, 2], pa.int64()),
+                "o_custkey": pa.array([7, 8], pa.int64()),
+                "o_orderstatus": pa.array(["O", "F"]),
+                "o_totalprice": pa.array([1.5, 2.5]),
+                "o_orderdate": pa.array(micros, pa.timestamp("us")),
+                "o_orderpriority": pa.array(["1-URGENT", "2-HIGH"]),
+            }
+        ),
+        str(tmp_path / "orders.parquet"),
+    )
+    for table, col, key in (("events", "ts", "event_id"), ("orders", "o_orderdate", "o_orderkey")):
+        for _ in range(2):  # the first read infers, the second is memoized
+            df = load_table(spark, str(tmp_path), table)
+            assert isinstance(df.schema[col].dataType, T.TimestampType)
+            got = [r[0] for r in df.orderBy(key).select(F.unix_micros(col)).collect()]
+            assert got == micros, (table, got)
+
+
+def test_spread_replans_a_loaded_file_when_split_confs_change(spark, tmp_path):
+    """``spread`` reuses a loaded file's memoized split count only while
+    the split confs it was planned under still hold."""
+    from pyspark_pipelining_spark.sources.registry import load_table, spread
+
+    _write_nation(tmp_path / "nation.parquet")
+    target = spark.sparkContext.defaultParallelism
+    one_split = load_table(spark, str(tmp_path), "nation")
+    assert spread(one_split).rdd.getNumPartitions() == target
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "64")
+    try:
+        many_splits = load_table(spark, str(tmp_path), "nation")
+        assert many_splits.rdd.getNumPartitions() > target
+        assert spread(many_splits) is many_splits
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
