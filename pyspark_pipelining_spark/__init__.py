@@ -7,12 +7,11 @@ Structured Streaming APIs and designed for 100 TB-scale clusters.
 
 Subpackages
 -----------
-sources    : schema registry, parquet/view sources, sinks
+sources    : schema registry, parquet/JDBC/media sources, sinks
 operators  : the operator library (reach, frequency, pairwise, before/
              after, quality checks, dedup, similarity, text analysis)
-functions  : reusable column-level helpers (hashing, vectors)
 plans      : pipeline DAG composition + idempotent materialization
-streaming  : event-time windowed equivalents (Structured Streaming)
+streaming  : event-time sessionization
 """
 
 from pyspark_pipelining_spark.session import get_spark

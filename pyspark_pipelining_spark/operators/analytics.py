@@ -73,7 +73,7 @@ def rfm_segments(orders: DataFrame) -> DataFrame:
     bucket bounds, and a 3-value pivot folds the tiles back to one
     row per customer — never a single-task global ``ntile`` window,
     and one rank pass instead of three (A/B at sf0.1: 2.16 → 1.59 s
-    median; README scale notes' melt lesson).  The customer aggregate
+    median; the melt lesson in README "Scale design").  The customer aggregate
     is ``localCheckpoint``-ed once (two downstream branches).
 
     Output: ``segment, n_customers, monetary_cents``.

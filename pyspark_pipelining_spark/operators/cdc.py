@@ -45,8 +45,8 @@ def merge_upsert(
     NULL key never equi-matches — a NULL-keyed target row silently
     becomes ``'keep'`` and a NULL-keyed source row ``'insert'`` with a
     NULL key.  Callers feeding raw change streams must pre-aggregate
-    per key first (as ``streaming/cdc.make_apply_batch`` does with its
-    per-batch SUM); the uniqueness is deliberately NOT asserted here —
+    per key first (e.g. a per-batch SUM of deltas); the uniqueness is
+    deliberately NOT asserted here —
     a count-based check would force an extra aggregation of both full
     inputs on every merge, the wrong default at scale.
     """

@@ -589,7 +589,7 @@ def tfidf_cosine_pairs(
     a shuffle join rather than a driver OOM if a pathological corpus
     makes it big), so every window partition holds at most ``df_cap``
     rows by construction — the hot-gram single-task hazard the plain
-    count-window rewrite carries (README scale notes) cannot occur
+    count-window rewrite carries (README "Scale design") cannot occur
     (A/B'd at parity, 2.52 s vs 2.61 s).  Postings persist once (``cache.keep``) and
     feed the norm fold plus both join sides; the pair aggregation
     shuffles on (doc_a, doc_b) with map-side partials; the global doc

@@ -260,8 +260,8 @@ def kcore_peel(
     """Bounded k-core peeling: ``rounds`` synchronous rounds of
     removing nodes whose current degree is below ``k`` (and their
     edges).  A fixed round count keeps the plan finite and the oracle
-    expressible (the SQL unrolls the same rounds); :func:`kcore_fixpoint`
-    iterates the same round to convergence.
+    expressible (the SQL unrolls the same rounds); once no round
+    removes an edge the result is the true k-core.
 
     The rounds run through :func:`iterate.iterate`'s fixed mode: the
     edge table and every round's survivors are lazily
@@ -280,33 +280,6 @@ def kcore_peel(
     """
     edges = symmetrize(pairs, a, b).localCheckpoint(eager=False)
     return _degrees(iterate(edges, _peel(k), rounds)).orderBy("node")
-
-
-def kcore_fixpoint(
-    pairs: DataFrame,
-    k: int = 2,
-    max_rounds: int = 50,
-    a: str = "doc_1",
-    b: str = "doc_2",
-) -> DataFrame:
-    """k-core to FIXPOINT: peel until no directed edge is removed
-    (every surviving node has degree ≥ k — the true k-core), with
-    ``max_rounds`` as a safety bound only.
-
-    The per-round dataflow is :func:`kcore_peel`'s; convergence is
-    :func:`iterate.iterate`'s fixpoint mode probing the edge count one
-    round per driver action — a scalar loop-control action over
-    checkpointed state, not data movement.  Peeling is monotone, so
-    "edge count unchanged" is exactly "no node fell below k".  Larger
-    probe blocks lose here: at sf0.1 the last edge falls in round 8, so
-    one round per probe runs 9 rounds where blocks of 4 run 12.
-
-    Input contract as in :func:`kcore_peel`: each undirected pair once;
-    a repeated pair counts as parallel edges.
-    """
-    edges = symmetrize(pairs, a, b).localCheckpoint(eager=False)
-    core = iterate(edges, _peel(k), max_rounds, until=F.count(F.lit(1)))
-    return _degrees(core).orderBy("node")
 
 
 def lpa_communities(

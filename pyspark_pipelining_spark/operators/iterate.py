@@ -1,8 +1,8 @@
 """One loop driver for the iterative DataFrame operators
 (``dedup.cluster_assignments``, ``graph.kcore_peel`` /
-``kcore_fixpoint`` / ``lpa_communities``): the single home of their
-checkpointing and convergence control, and the only operator module
-allowed a driver action (``tests/test_operator_actions.py``).
+``lpa_communities``): the single home of their checkpointing and
+convergence control, and the only operator module allowed a driver
+action (``tests/test_operator_actions.py``).
 
 One rule: every round's output is ``localCheckpoint(eager=False)``-ed.
 The lazy checkpoint puts a LogicalRDD in place of the round's plan at
@@ -15,15 +15,15 @@ reads it.  On a cluster with lost-executor concerns, swap in reliable
 ``checkpoint()``; semantics are identical.
 
 Fixpoint mode probes a MONOTONE aggregate ``until`` (``F.sum`` of
-non-increasing labels, ``F.count`` of peeled edges): along a monotone
-chain the value is unchanged iff the round changed nothing, which is
-a fixpoint of the step.  Rounds run in blocks of ``block`` per driver
-action: the block's checkpointed frames, tagged by round, feed one tiny
-``groupBy(tag).agg(until).collect()``, so a single job returns every
-round's value (the first block also tags the entry state) and the
-first adjacent equal pair stops the loop mid-block.  Larger blocks save
-actions on long chains but run up to ``block - 1`` rounds past the
-fixpoint.  An empty round yields no probe row; a missing tag reads as
+non-increasing labels; ``F.count`` of a peeled edge set would do too):
+along a monotone chain the value is unchanged iff the round changed
+nothing, which is a fixpoint of the step.  Rounds run in blocks of
+``block`` per driver action: the block's checkpointed frames, tagged
+by round, feed one tiny ``groupBy(tag).agg(until).collect()``, so a
+single job returns every round's value (the first block also tags the
+entry state) and the first adjacent equal pair stops the loop
+mid-block.  Larger blocks save actions on long chains but run up to
+``block - 1`` rounds past the fixpoint.  An empty round yields no probe row; a missing tag reads as
 "empty", equal to any other empty round, so an empty input converges
 after one round and a graph peeled to nothing stops one round later.
 """

@@ -15,9 +15,11 @@ ZORDER BY, done here with plain DataFrame ops:
 2. each value is range-scaled to ``[0, 2^bits)`` with exact integer
    arithmetic (``(v - min) * 2^bits div (max - min + 1)``);
 3. the scaled coordinates are bit-interleaved into ``zkey`` — pure
-   shift/mask codegen, no Python;
-4. the writer range-partitions + sorts by ``zkey`` so file boundaries
-   tile the curve.
+   shift/mask codegen, no Python.
+
+A writer that range-partitions and sorts by ``zkey`` makes file
+boundaries tile the curve; the registered ``zorder_stats`` report
+measures the per-tile footer ranges such a write would expose.
 
 Overflow bound: ``(v - min) * 2^bits`` must fit int64, i.e. the value
 range must stay below ``2^(63 - bits)`` (~1.4e14 at the default
@@ -85,25 +87,4 @@ def with_zorder_key(
     zkey: Column = F.expr(morton_spark(f"({sa})", f"({sb})", bits))
     return j.withColumn(key_col, zkey).drop(
         "__min_a", "__max_a", "__min_b", "__max_b"
-    )
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: tuple[str, str],
-    bits: int = 16,
-    num_files: int = 16,
-) -> None:
-    """Write ``df`` as parquet laid out along the z-order curve of two
-    columns: range-partition by ``zkey`` (file boundaries tile the
-    curve) and sort within each file (row-group footers stay tight), so
-    min/max skipping prunes predicates on EITHER column."""
-    keyed = with_zorder_key(df, cols, bits)
-    (
-        keyed.repartitionByRange(num_files, "zkey")
-        .sortWithinPartitions("zkey")
-        .drop("zkey")
-        .write.mode("overwrite")
-        .parquet(path)
     )

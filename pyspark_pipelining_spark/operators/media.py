@@ -19,9 +19,6 @@ Rebuild differences (Spark-first):
   broadcasts while it fits and falls back to a shuffled join (AQE can
   still convert at runtime).  Only the *etype ratio* dim — a handful of
   rows — keeps an explicit broadcast hint.
-* for the repeated-join case, :func:`bucketed_media` pre-buckets both
-  sides on ``household_id`` via ``sources.sinks.write_bucketed`` so
-  every later assembly joins shuffle-free.
 * the star-schema mapping onto the driver testdata (FIXTURES.md §B):
   ``events`` is the exposure fact (``user_id``→household_id,
   ``to_date(ts)``→date, ``date_trunc('week', ts)``→week,
@@ -29,8 +26,7 @@ Rebuild differences (Spark-first):
   projection factors, ``orders`` is the purchase fact.
 
 Scale: the fact table never collapses to the driver; at 100 TB the
-union+join is one hash-partitioned equi-join on household_id (or a
-shuffle-free per-bucket merge when both sides are bucketed).
+union+join is one hash-partitioned equi-join on household_id.
 """
 
 from __future__ import annotations
@@ -76,20 +72,6 @@ def projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cust.select(
         F.col("c_custkey").alias("household_id"),
         F.expr(PROJFACT_SQL).alias("projfact"),
-    )
-
-
-def etype_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Optional per-etype projection rescale dim (``make_media.py:42-44``).
-
-    Derived deterministically from the etype string so the DuckDB oracle
-    can reproduce it: ratio = 1 + (length(etype) % 3) * 0.25.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.select(F.col("event_type").alias("etype"))
-        .distinct()
-        .withColumn("ratio", F.lit(1.0) + (F.length("etype") % 3) * F.lit(0.25))
     )
 
 
@@ -146,47 +128,3 @@ def make_media(
             .drop("proj", "ratio")
         )
     return joined
-
-
-def bucketed_media(
-    spark: SparkSession,
-    expo_df: DataFrame,
-    proj_df: DataFrame,
-    num_buckets: int = 32,
-    expo_table: str = "media_expo_bkt",
-    proj_table: str = "media_proj_bkt",
-) -> DataFrame:
-    """Pre-bucketed media assembly for the repeated-join case.
-
-    Writes the exposure fact and the projection factors as managed
-    tables bucketed on ``household_id`` (one shuffle each, paid once),
-    then returns the joined frame read back from the bucketed tables —
-    every subsequent reach/frequency/pairwise pass over this frame joins
-    with NO exchange on either side (asserted in
-    ``tests/test_plans.py::test_bucketed_media_join_has_no_shuffle``).
-
-    This is the 100 TB answer to "the projection dim is too big to
-    broadcast but is joined by every report": co-locate both sides on
-    the join key at write time instead of re-shuffling per query.
-    """
-    from pyspark_pipelining_spark.sources.sinks import write_bucketed
-
-    write_bucketed(expo_df, expo_table, ["household_id"], num_buckets, sort_cols=["household_id"])
-    write_bucketed(
-        proj_df.dropDuplicates(["household_id"]),
-        proj_table,
-        ["household_id"],
-        num_buckets,
-        sort_cols=["household_id"],
-    )
-    return spark.table(expo_table).join(spark.table(proj_table), on="household_id", how="inner")
-
-
-def media_maker(proj_df: DataFrame, proj_df2: DataFrame | None = None):
-    """Closure factory mirroring the reference's ``make_df_dec`` —
-    the repo's namesake "pipelining" combinator (SURVEY §2 X4)."""
-
-    def _make(df_list, dim: str) -> DataFrame:
-        return make_media(df_list, dim, proj_df, proj_df2)
-
-    return _make

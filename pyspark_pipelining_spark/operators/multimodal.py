@@ -6,10 +6,9 @@ metadata struct alongside (modality, mime, width/height/duration…).
 All heavy per-item work (decode, resize, feature extraction, frame
 sampling) runs as Arrow-batched Pandas functions via ``mapInPandas`` —
 the Spark-side plumbing (schema, partitioning, batch shape) is real and
-tested here, while the codec step itself is stubbed: the decode
-libraries (Pillow/ffmpeg/librosa) are not in this container, so
-``decode_stub`` computes deterministic fake features from the bytes and
-a clearly-marked ``NotImplementedError`` guards the real path.
+tested here, while the codec step itself is stubbed: no decode library
+(Pillow/ffmpeg/librosa) is a dependency, so ``decode_stub`` computes
+deterministic fake features from the bytes.
 
 Scale: ``mapInPandas`` streams Arrow batches through one Python worker
 per core with no shuffle; repartition upstream by size so batches stay
@@ -92,43 +91,6 @@ def decode_stub(payload: bytes) -> dict[str, Any]:
             float(checksum % 256),
         ],
     }
-
-
-def has_image_codec() -> bool:
-    """True when Pillow is importable — the dispatch gate for
-    :func:`decode_real` (this container ships no codec, so tests cover
-    the False branch; environments WITH Pillow take the real path)."""
-    import importlib.util
-
-    return importlib.util.find_spec("PIL") is not None
-
-
-def decode_real(payload: bytes, mime: str):
-    """The real decode path: Pillow when available, else a clear error
-    pointing at the deterministic stub.  Returns the same dict shape
-    as :func:`decode_stub` with the decoded width/height in ``feature``
-    so the two paths are schema-interchangeable under
-    :func:`extract_features`."""
-    if not has_image_codec():
-        raise NotImplementedError(
-            "media codecs (Pillow/ffmpeg) are not available in this environment; "
-            "decode_stub provides the deterministic test double"
-        )
-    import io
-
-    from PIL import Image  # pragma: no cover - container lacks Pillow
-
-    with Image.open(io.BytesIO(payload)) as im:  # pragma: no cover
-        return {
-            "byte_len": len(payload),
-            "checksum": sum(payload) % 1_000_000_007,
-            "feature": [
-                float(len(payload)),
-                float(im.width),
-                float(im.height),
-                float(len(im.getbands())),
-            ],
-        }
 
 
 def extract_features(media_df: DataFrame, batch_hint: int = 1024) -> DataFrame:
@@ -336,43 +298,6 @@ def resize_plan(media_df: DataFrame, target: int = 224) -> DataFrame:
     )
 
 
-def resize_stub(media_df: DataFrame, target: int = 224) -> DataFrame:
-    """The Arrow-batched resize itself, with the pixel work stubbed
-    (no codec in this container — a real deployment swaps the inner
-    function for Pillow's ``Image.resize``): payload becomes a
-    deterministic ``out_width × out_height``-sized fake whose length
-    and checksum the tests pin.  The mapInPandas plumbing — schema,
-    batch shape, metadata join — is the real production path.
-    """
-    import pandas as pd
-
-    plan = resize_plan(media_df, target)
-    joined = media_df.select("media_id", "payload").join(plan, "media_id")
-
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            outs = []
-            for p, ow, oh in zip(pdf["payload"], pdf["out_width"], pdf["out_height"]):
-                if pd.isna(ow) or pd.isna(oh):
-                    outs.append(None)
-                else:
-                    n = int(ow) * int(oh) // 64 + 1
-                    outs.append(bytes(p)[:n].ljust(n, b"\x00"))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].values,
-                    "out_width": pdf["out_width"].values,
-                    "out_height": pdf["out_height"].values,
-                    "payload": outs,
-                }
-            )
-
-    return joined.mapInPandas(
-        run,
-        schema="media_id long, out_width long, out_height long, payload binary",
-    )
-
-
 #: Largest data chunk the decode can address: every binary-slice
 #: position is ≤ data_bytes + 44 and Spark's substring takes an INT —
 #: beyond this the ANSI CAST_OVERFLOW would ABORT the whole scan on
@@ -413,7 +338,7 @@ def _wav_window_chunks(
     Input: ``binaryFile`` rows (``path``, ``content``).  Non-PCM16-mono
     or non-canonical-header files are FILTERED (magic + fmt guards),
     not errored — the lake-scan convention (a 100 TB media lake always
-    contains strays); real codecs stay behind ``decode_real``.
+    contains strays); other encodings need a real codec.
 
     Decode discipline (cross-engine exact): the header hexes ONLY its
     44 canonical bytes; window chunks are cut in one pass over the

@@ -17,18 +17,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-
-def universe_ratio(df: DataFrame, proj_df: DataFrame, univ_df: DataFrame) -> DataFrame:
-    """Single-group ratio as a lazy 1-row frame: ``ratio``."""
-    num = (
-        df.select("household_id")
-        .join(proj_df.dropDuplicates(["household_id"]), "household_id")
-        .agg(F.sum("projfact").alias("proj_sum"))
-    )
-    den = univ_df.agg(F.sum("exposures").alias("univ_sum"))
-    return den.crossJoin(num).select((F.col("univ_sum") / F.col("proj_sum")).alias("ratio"))
-
-
 def universe_ratios_by_etype(expo_df: DataFrame, proj_df: DataFrame, univ_df: DataFrame) -> DataFrame:
     """Per-etype + overall ratios in ONE job.
 

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pyspark_pipelining_spark.sources.registry import SchemaError, require_columns
+from pyspark_pipelining_spark.sources.registry import require_columns
 
 
 def shift_hours(df: DataFrame, hours: int, ts_col: str = "ts") -> DataFrame:
@@ -124,31 +124,3 @@ def distinct_meta(df: DataFrame, dims: list[str], meta_cols: list[str]) -> DataF
         for c in meta_cols
     ]
     return df.groupBy(*dims).agg(*aggs).orderBy(*dims)
-
-
-def daily_qa(
-    log_df: DataFrame,
-    ad_df: DataFrame | None,
-    dims: list[str],
-    hourshift: int = 0,
-    period: int = 7,
-) -> DataFrame:
-    """End-to-end daily QA (reference ``DailyQA.create_groupings``):
-    hour-shifted log, trailing-window restriction, per-dimension counts
-    vs adserver, labeled by dimension."""
-    log = shift_hours(log_df, hourshift)
-    windowed = trailing_window(log, period)
-    frames = []
-    for d in dims:
-        if d not in log.columns:
-            raise SchemaError(f"dimension {d!r} not in log table columns {log.columns}")
-        if ad_df is not None:
-            g = log_vs_adserver(windowed, ad_df, [d])
-        else:
-            g = grouped_counts(windowed, [d])
-        frames.append(g.withColumn("dimension", F.lit(d)).withColumnRenamed(d, "value").select(
-            "dimension", F.col("value").cast("string").alias("value"), *[c for c in g.columns if c != d]
-        ))
-    from pyspark_pipelining_spark.operators.media import union_frames
-
-    return union_frames(frames)

@@ -4,36 +4,19 @@ The classic quantile-cut shape (``ntile`` / ``percent_rank`` /
 ``cume_dist`` over a tiebroken total order) is exact but, expressed as
 an unpartitioned ``Window.orderBy``, Spark executes it through ONE
 task — a genuine scale-killer at 10⁹⁺ rows (r15 verdict item 2).
-This module computes the SAME per-row global rank bit-exactly with a
-two-phase distributed plan:
+:func:`histogram_ranks` computes the SAME per-row global rank
+bit-exactly with a distributed plan: partial value histograms, merged
+per-bucket offsets, and a broadcast join of the offsets back onto the
+rows (the phases are in its docstring).  The caller must supply a
+TOTAL order (the metric plus a distinct tiebreak key); with ties
+unbroken the assignment of equal rows to ranks would be
+layout-dependent.
 
-1. **Range phase** — ``repartitionByRange`` on the (group +) order
-   expressions.  Spark's range partitioner samples split points, so
-   every partition holds a contiguous slice of the total order and the
-   partition-id sequence IS the sort order.  The frame is
-   ``localCheckpoint``-ed once: two downstream branches (the count
-   side and the rank side) must observe the SAME physical partitioning
-   — the repo's multi-branch-input rule (CLAUDE.md scale rules).
-2. **Offset phase** — per-(partition, group) row counts (a map-side
-   combined groupBy producing ≤ partitions × groups rows), a
-   prefix-sum over the partition id inside each group (a window over a
-   BOUNDED frame — partition count, never data-sized), broadcast back.
-3. **Rank phase** — intra-partition ``row_number`` (each partition
-   sorts only its own slice) plus the broadcast offset = the exact
-   global (within-group) row number.
-
-The result is independent of the sampled split points: offsets absorb
-whatever the partitioner chose, so ``rn`` equals the rank the
-single-task window would produce, row for row — the hostile-layout
-sweep pins this.  The caller must supply a TOTAL order (a tiebreak
-key making every row's sort tuple distinct); with ties unbroken the
-assignment of equal rows to ranks would be partitioner-dependent.
-
-``ntile_expr`` then reproduces ``ntile(k)``'s bucket arithmetic from
+``ntile_expr`` reproduces ``ntile(k)``'s bucket arithmetic from
 (rn, n, k) in exact integers: the first ``n % k`` tiles carry
 ``n div k + 1`` rows, the rest ``n div k`` (the semantics both Spark
-and DuckDB implement), so a histogram is not even needed — the rank
-itself is exact.
+and DuckDB implement), so the tiles need no second pass over the
+data — the rank itself is exact.
 
 Reference lineage: the reference engine has no distributed ranking
 (its quantile cuts ride pandas on the driver, e.g.
@@ -49,76 +32,14 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 __all__ = [
-    "exact_global_ranks",
     "histogram_ranks",
     "ntile_expr",
     "percent_rank_expr",
 ]
 
 #: internal column names (dropped before returning)
-_PID = "_rk_pid"
 _OFF = "_rk_off"
 _N = "_rk_n"
-
-
-def exact_global_ranks(
-    df: DataFrame,
-    order: Sequence[Column],
-    group_cols: Sequence[str] = (),
-    num_partitions: int | None = None,
-    rn_col: str = "rn",
-    n_col: str = "n",
-) -> DataFrame:
-    """Attach the exact 1-based global row number ``rn_col`` (within
-    ``group_cols`` if given) under the total order ``order`` (a list of
-    sort Columns, e.g. ``[F.desc("v"), F.asc("k")]``), plus the
-    (group) row count ``n_col`` — without ever shipping the data
-    through a single partition.
-
-    ``order`` MUST be a total order (include a tiebreak key).  The
-    output is deterministic and layout-invariant; only the physical
-    split points vary with the partitioner's sample.
-    """
-    sort_exprs = [*[F.col(g) for g in group_cols], *order]
-    if num_partitions is None:
-        ranged = df.repartitionByRange(*sort_exprs)
-    else:
-        ranged = df.repartitionByRange(num_partitions, *sort_exprs)
-    # one materialization serving both branches below: the count side
-    # and the rank side must agree on which row sits in which pid
-    ranged = ranged.withColumn(_PID, F.spark_partition_id()).localCheckpoint(
-        eager=True
-    )
-
-    gcols = list(group_cols)
-    counts = ranged.groupBy(_PID, *gcols).agg(F.count(F.lit(1)).alias("_c"))
-    w_off = (
-        Window.partitionBy(*gcols).orderBy(_PID)
-        if gcols
-        else Window.partitionBy(F.lit(1)).orderBy(_PID)
-    )
-    offsets = counts.select(
-        _PID,
-        *gcols,
-        F.coalesce(
-            F.sum("_c").over(w_off.rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0),
-        ).alias(_OFF),
-        F.sum("_c").over(
-            w_off.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-        ).alias(_N),
-    )
-
-    w_rank = Window.partitionBy(_PID, *gcols).orderBy(*order)
-    ranked = (
-        ranged.join(F.broadcast(offsets), on=[_PID, *gcols])
-        .withColumn(
-            rn_col, (F.col(_OFF) + F.row_number().over(w_rank)).cast("long")
-        )
-        .withColumn(n_col, F.col(_N).cast("long"))
-        .drop(_PID, _OFF, _N)
-    )
-    return ranked
 
 
 def histogram_ranks(
@@ -131,17 +52,18 @@ def histogram_ranks(
     rn_col: str = "rn",
     n_col: str = "n",
 ) -> DataFrame:
-    """The histogram variant of :func:`exact_global_ranks` for a
-    single integer metric with a key tiebreak — the r15 verdict's
-    prescribed shape (partial histograms → merged offsets → broadcast
-    cut join) and the default the quantile-cut queries ride.
+    """Attach the exact 1-based global row number ``rn_col`` (within
+    ``group_cols`` if given) and the (group) row count ``n_col`` under
+    the total order (``value_col``, then ``key_col``) — the r15
+    verdict's prescribed shape (partial histograms → merged offsets →
+    broadcast cut join), which the quantile-cut queries ride.
 
     The bucket id is a PURE FUNCTION of the row (fixed-width integer
     bucket over the [min, max] value range — per group when grouped,
     since groups may carry disjoint ranges; a 1-row lazy crossJoin /
-    group-keyed broadcast, never a collect), so unlike the
-    range-partitioner path no sampling pass and no checkpoint are
-    needed, and the plan is layout-invariant by construction:
+    group-keyed broadcast, never a collect), so no sampling pass and no
+    checkpoint are needed, and the plan is layout-invariant by
+    construction:
 
     1. one map-side-combined groupBy builds the (group, bucket)
        histogram — bounded at groups × ``buckets`` rows;
@@ -158,10 +80,7 @@ def histogram_ranks(
     the bucket width degrades to its tie-group size (ordering inside
     a one-value bucket depends only on ``key_col``, so the known
     extension is a second histogram level over the key inside such
-    buckets); for adversarially tied metrics use
-    :func:`exact_global_ranks`, whose range partitioner spreads ties
-    by the composite order at the cost of a sampling pass and a
-    checkpoint.
+    buckets).
     """
     s = F.col(value_col).cast("long")
     if not ascending:

@@ -323,52 +323,6 @@ def ivf_topk(
     return _cosine_topk(corpus.join(F.broadcast(probes), on="cell").filter(_NOT_SELF), k)
 
 
-def _mean_centroids(assigned: DataFrame) -> DataFrame:
-    """(cell, centroid array<double>): the float mean of each cell's
-    ``embedding`` vectors."""
-    return (
-        assigned.select("cell", F.posexplode("embedding").alias("pos", "x"))
-        .groupBy("cell", "pos")
-        .agg(F.avg(F.col("x").cast("double")).alias("m"))
-        .groupBy("cell")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-        .select("cell", F.transform("pm", lambda s: s["m"]).alias("centroid"))
-    )
-
-
-def learned_centroids(emb_df: DataFrame, cells: int = 8, iters: int = 2) -> DataFrame:
-    """K-means-style coarse quantizer training (the scale upgrade over
-    the fixed-formula centroids in :func:`ivf_assign`).
-
-    Deterministic seeding (``vec_id % cells``) + ``iters`` Lloyd steps;
-    each step is one posexplode→groupBy mean (shuffle on (cell, pos))
-    and one broadcast-reassignment (centroids are k×dim — always tiny).
-    Returns (cell, centroid array<double>).  No oracle entry: iterative
-    refinement is not expressible as one SQL statement.  Its output,
-    snapped to a lattice, is the committed ``fixtures/ann/centroids.parquet``
-    (``tools/gen_ann_fixtures.py``) that :func:`ivf_topk_learned_q`
-    searches; probing every cell of it reproduces brute force
-    (``tests/test_ivf_learned.py``).
-    """
-    assigned = emb_df.select(
-        "vec_id", "embedding", F.pmod(F.col("vec_id"), F.lit(cells)).alias("cell")
-    )
-    dist = F.aggregate(
-        F.zip_with("embedding", "centroid", lambda x, c: (x.cast("double") - c) ** 2),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    for _ in range(iters):
-        assigned = (
-            emb_df.crossJoin(F.broadcast(_mean_centroids(assigned)))
-            .withColumn("d", dist)
-            .groupBy("vec_id", "embedding")
-            .agg(F.min(F.struct("d", "cell")).alias("best"))
-            .select("vec_id", "embedding", F.col("best.cell").alias("cell"))
-        )
-    return _mean_centroids(assigned)
-
-
 def embedding_near_dup_pairs(
     emb_df: DataFrame,
     threshold: float = 0.95,
@@ -960,8 +914,8 @@ def ivf_topk_learned_q(
     nprobe: int = 2,
 ) -> DataFrame:
     """IVF search against FROZEN integer-quantized centroids (the
-    iterative :func:`learned_centroids` trainer is not
-    single-SQL-expressible, so it runs once, offline): given a
+    iterative float k-means trainer in ``tools/gen_ann_fixtures.py`` is
+    not single-SQL-expressible, so it runs once, offline): given a
     committed ``(cell, centroid_q array<bigint>)`` table (the trained
     coarse quantizer snapped to a ``grid`` lattice), assignment and
     probe selection are EXACT int64 L2² arithmetic — both engines

@@ -1,18 +1,14 @@
 """Skew-mitigation primitives for hot keys at cluster scale.
 
 AQE's skew-join splitting (enabled in ``session.get_spark``) handles
-sort-merge join skew at runtime, but two shapes still need explicit
-salting at 100 TB:
+sort-merge join skew at runtime, but a skewed aggregation still needs
+explicit salting at 100 TB: one key owning a large share of all rows
+makes a single reducer the straggler regardless of partition count.
 
-* **skewed aggregation** — one key owning a large share of all rows
-  makes a single reducer the straggler regardless of partition count;
-* **skewed broadcast-infeasible join** — a hot key on the fact side of
-  a shuffle join when the dim side is too large to broadcast.
-
-Both use the standard two-phase salt: spread the hot rows over
-``salt_buckets`` synthetic sub-keys, do the heavy work per sub-key, and
-merge.  All aggregates used here are algebraic (sum/count/min/max), so
-the two-phase result is exactly the single-phase result.
+The fix is the standard two-phase salt: spread the hot rows over
+``salt_buckets`` synthetic sub-keys, aggregate per sub-key, and merge.
+All aggregates used here are algebraic (sum/count/min/max), so the
+two-phase result is exactly the single-phase result.
 """
 
 from __future__ import annotations
@@ -73,45 +69,11 @@ def salted_agg(
     )
 
 
-def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: list[str],
-    salt_buckets: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Shuffle-join a skewed fact against a non-broadcastable dim.
-
-    The fact side gets a row-spreading salt in [0, salt_buckets); the
-    dim side is replicated once per bucket (explode of a literal
-    range), so join keys become (on..., salt) and a hot key's rows are
-    spread over ``salt_buckets`` reducers instead of one.  Dim-side
-    cost: ``salt_buckets×`` replication — choose the bucket count from
-    the observed skew ratio, not a constant.
-
-    Only fact-preserving join types are valid: with the dim replicated
-    per bucket, ``right``/``full`` would emit each unmatched dim row
-    ``salt_buckets`` times.  ``how`` is validated accordingly.
-    """
-    allowed = {"inner", "left", "left_outer", "leftouter", "left_semi", "leftsemi", "left_anti", "leftanti"}
-    if how.lower() not in allowed:
-        raise ValueError(
-            f"salted_join supports fact-preserving joins only ({sorted(allowed)}); "
-            f"got {how!r} — a replicated dim would duplicate unmatched dim rows"
-        )
-    salted_fact = with_salt(fact, salt_buckets)
-    replicated_dim = dim.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
-    )
-    out = salted_fact.join(replicated_dim, on=[*on, "_salt"], how=how)
-    return out.drop("_salt")
-
-
 def skew_report(df: DataFrame, keys: list[str], top_k: int = 10) -> DataFrame:
     """Heavy-hitter diagnostic: the ``top_k`` heaviest key groups with
     their row counts and exact share of all rows in parts-per-million —
     the report you run BEFORE choosing ``salt_buckets`` for
-    :func:`salted_agg`/:func:`salted_join`.
+    :func:`salted_agg`.
 
     Scale shape: one map-side-combined ``groupBy`` on the keys, then
     ``orderBy.limit`` (Spark plans TakeOrdered — per-partition top-k +

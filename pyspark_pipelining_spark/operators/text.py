@@ -326,8 +326,8 @@ def cooccur_pmi(
     Scale shape: explode -> ONE map-side-combined groupBy on the pair
     (the token stream never shuffles raw — only (pair, count) partials);
     the marginals are SUM windows over the w1/w2 partitions of the
-    pair-count table — the count-window-over-key pattern (README scale
-    notes): two shuffles of the pair table total, vs the
+    pair-count table — the count-window-over-key pattern (README
+    "Scale design"): two shuffles of the pair table total, vs the
     marginal-table formulation's four (two to build them over the FULL
     multiset, two to join them back; A/B at sf0.1: 1.51 s → 0.74 s
     median, identical output).  Marginals compute BEFORE the min_count

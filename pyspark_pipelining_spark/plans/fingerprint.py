@@ -2,7 +2,7 @@
 on every query's plan SHAPE.
 
 Why this exists: the round-12 dynamic-partition-pruning fix
-(`queries_coverage.dpp_top_year_revenue`, README scale notes) showed
+(`queries_coverage.dpp_top_year_revenue`) showed
 that a plan can silently degrade — the staged test asserted the
 pruning filter's TEXT in the initial plan while the executed plan had
 quietly fallen back to scanning every partition.  Text assertions pin

@@ -743,8 +743,8 @@ FROM events GROUP BY event_type
 
 
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (batch twin of the stateful streaming
-    operator in streaming/stateful.py — SURVEY §2.10 beyond-reference)."""
+    """Gap-based sessionization (streaming/stateful.py — SURVEY §2.10
+    beyond-reference)."""
     from pyspark_pipelining_spark.streaming.stateful import sessionize_batch
 
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id", "value")

@@ -898,8 +898,7 @@ RESIZE_TARGET = 224
 def q_media_resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aspect-preserving resize plan (operators/multimodal.resize_plan):
     fit-within-224 target dims from metadata only — pure integer
-    arithmetic, the sizing pre-pass for the Arrow-batched pixel resize
-    (resize_stub carries the stubbed mapInPandas path)."""
+    arithmetic, the sizing pre-pass for an Arrow-batched pixel resize."""
     docs = load_table(spark, sf_dir, "documents")
     media = multimodal.documents_as_media(docs)
     return multimodal.resize_plan(media, target=RESIZE_TARGET).orderBy("media_id")
@@ -1187,7 +1186,7 @@ def q_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/cluster.kmeans_int): 2 unrolled Lloyd steps, exact int64
     arithmetic end-to-end, so the DuckDB oracle replays the identical
     iteration — the oracle-checkable counterpart of the float
-    learned_centroids quantizer trainer."""
+    quantizer trainer in tools/gen_ann_fixtures.py."""
     from pyspark_pipelining_spark.operators.cluster import kmeans_int
 
     emb = load_table(spark, sf_dir, "embeddings")

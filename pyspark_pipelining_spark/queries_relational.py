@@ -948,8 +948,8 @@ WHERE abs(length(a.p_name) - length(b.p_name)) <= {FUZZY_MAX_DIST}
 """
 
 
-# --- §2.10: native session windows (the JVM no-custom-logic twin of the
-# lag-chain sessionize / applyInPandasWithState sessionize_stream) ---------
+# --- §2.10: native session windows (the JVM twin of the lag-chain
+# sessionize) ---------------------------------------------------------------
 
 
 def q_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -2,8 +2,6 @@ from pyspark_pipelining_spark.sources.registry import (
     SCHEMAS,
     SchemaError,
     load_table,
-    load_tables,
-    register_views,
     require_columns,
 )
 
@@ -11,7 +9,5 @@ __all__ = [
     "SCHEMAS",
     "SchemaError",
     "load_table",
-    "load_tables",
-    "register_views",
     "require_columns",
 ]

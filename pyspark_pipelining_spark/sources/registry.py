@@ -135,15 +135,14 @@ SCHEMAS: dict[str, T.StructType] = {
     ),
 }
 
-TABLES: tuple[str, ...] = tuple(SCHEMAS)
-
 
 def require_columns(df: DataFrame, cols: list[str], table: str = "<df>") -> DataFrame:
     """Fail fast if ``cols`` are not all present (reference semantics:
     ``make_media.py:32-34``, ``dailyQA.py:131-147``)."""
-    missing = [c for c in cols if c not in df.columns]
+    have = df.columns
+    missing = [c for c in cols if c not in have]
     if missing:
-        raise SchemaError(f"table {table!r} is missing required columns {missing}; has {df.columns}")
+        raise SchemaError(f"table {table!r} is missing required columns {missing}; has {have}")
     return df
 
 
@@ -431,59 +430,9 @@ def _num_partitions(df: DataFrame) -> int:
     return scan.splits[1]
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}
-
-
-def register_views(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> None:
-    """Register every table as a temp view so ``spark.sql`` works over the
-    same names the DuckDB oracle uses."""
-    for name, df in load_tables(spark, sf_dir, names).items():
-        df.createOrReplaceTempView(name)
-
-
 # ---------------------------------------------------------------------------
-# File sources beyond parquet (CSV / JSON lines)
+# Fixtures, media files and evolved lakes
 # ---------------------------------------------------------------------------
-
-
-def load_csv(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    header: bool = True,
-    **options: str,
-) -> DataFrame:
-    """Schema-enforced CSV source.
-
-    CSV carries no types, so the declared ``StructType`` is mandatory
-    (never ``inferSchema`` — an inference pass is a second full read of
-    the data and can silently flip a column's type between runs).
-    ``FAILFAST`` makes malformed rows abort the job instead of turning
-    into nulls mid-pipeline — the same fail-fast stance as
-    :func:`require_columns`.
-    """
-    reader = (
-        spark.read.schema(schema)
-        .option("header", str(header).lower())
-        .option("mode", "FAILFAST")
-    )
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    df = reader.csv(path)
-    return require_columns(df, [f.name for f in schema.fields], path)
-
-
-def load_json(
-    spark: SparkSession, path: str, schema: T.StructType, **options: str
-) -> DataFrame:
-    """Schema-enforced JSON-lines source (same stance as :func:`load_csv`:
-    explicit schema, FAILFAST on malformed records)."""
-    reader = spark.read.schema(schema).option("mode", "FAILFAST")
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    df = reader.json(path)
-    return require_columns(df, [f.name for f in schema.fields], path)
 
 
 def fixtures_dir(name: str) -> str:
@@ -526,9 +475,8 @@ def load_binary_files(
     open), and a ``length <=`` predicate pushes into the format (the
     reader skips oversized payloads without reading them) — both are
     the difference between touching metadata and touching bytes on a
-    100 TB media lake.  One file = one row = one task unit; tiny-file
-    lakes should be compacted upstream (``sinks.compact_parquet``
-    reasoning applies to media files doubly).
+    100 TB media lake.  One file = one row = one task unit, so
+    tiny-file lakes should be compacted upstream.
     """
     reader = spark.read.format("binaryFile")
     if glob:
@@ -537,17 +485,6 @@ def load_binary_files(
     if max_bytes is not None:
         df = df.filter(F.col("length") <= max_bytes)
     return df
-
-
-def load_text_lines(
-    spark: SparkSession, path: str, wholetext: bool = False
-) -> DataFrame:
-    """Line-oriented text source (``spark.read.text``): one row per
-    line (``value`` string), or one row per FILE with
-    ``wholetext=True`` — the raw-corpus on-ramp for the text/dedup
-    operators (pair with ``F.input_file_name()`` upstream when the
-    file is the document id).  No schema ambiguity: text is text."""
-    return spark.read.text(path, wholetext=wholetext)
 
 
 def read_parquet_merged(spark: SparkSession, path: str) -> DataFrame:
@@ -559,51 +496,3 @@ def read_parquet_merged(spark: SparkSession, path: str) -> DataFrame:
     reuses it); use this for lakes that evolved in place, then compact
     to the current schema."""
     return spark.read.option("mergeSchema", "true").parquet(path)
-
-
-def load_json_with_errors(
-    spark: SparkSession, path: str, schema: T.StructType
-) -> tuple[DataFrame, DataFrame]:
-    """JSON-lines ingestion with an ERROR CHANNEL instead of FAILFAST:
-    returns ``(good, bad)`` where malformed records land in ``bad``
-    with their raw text (PERMISSIVE mode + ``_corrupt_record``) — the
-    quarantine pattern for feeds too dirty for :func:`load_json` but
-    too valuable to drop.  ``bad`` pairs with
-    ``sinks.write_csv_report`` for the reference's error-report flow.
-
-    Spark caveat handled here: a ``_corrupt_record`` column cannot be
-    filtered from the same lazy scan that defines it (the parser only
-    fills it for rows it actually fails on during THAT action), so the
-    parsed frame is cached before splitting — documented Spark
-    behavior, not a workaround of ours.
-
-    The cache pins the parsed feed in executor storage for the
-    session; once both splits are materialized, release it with
-    ``unpersist_json_with_errors(good)`` (the cached parent is
-    reachable from either child).  Callers that sink ``good``/``bad``
-    once and move on should do so to keep long sessions bounded.
-    """
-    full = T.StructType(list(schema.fields) + [T.StructField("_corrupt_record", T.StringType())])
-    parsed = (
-        spark.read.schema(full)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(path)
-        .cache()
-    )
-    good = parsed.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
-    bad = parsed.filter(F.col("_corrupt_record").isNotNull()).select(
-        F.col("_corrupt_record").alias("raw")
-    )
-    good._json_errors_parent = parsed  # handle for unpersist_json_with_errors
-    bad._json_errors_parent = parsed
-    return good, bad
-
-
-def unpersist_json_with_errors(df: DataFrame) -> None:
-    """Release the cached parse behind a :func:`load_json_with_errors`
-    split (pass either the ``good`` or ``bad`` child).  No-op on
-    frames that did not come from that loader."""
-    parent = getattr(df, "_json_errors_parent", None)
-    if parent is not None:
-        parent.unpersist()

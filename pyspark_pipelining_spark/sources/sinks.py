@@ -41,57 +41,6 @@ def write_table(
     writer.save(path)
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    num_buckets: int = 32,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed managed-table sink for co-located joins.
-
-    Two tables bucketed on the same key with the same bucket count join
-    WITHOUT a shuffle (bucket pruning + per-bucket sort-merge) — the
-    standard pre-partitioning for repeatedly-joined 100 TB facts, where
-    paying one write-side shuffle amortizes every later join.  Asserted
-    shuffle-free in ``tests/test_plans.py``.
-    """
-    writer = df.write.mode(mode).format("parquet").bucketBy(num_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table)
-
-
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    dynamic: bool = True,
-) -> None:
-    """Hive-style partitioned parquet sink with DYNAMIC partition
-    overwrite: an overwrite replaces only the partitions present in
-    ``df``, leaving every other partition untouched — the idempotent
-    daily-backfill primitive (re-run yesterday's batch without nuking
-    the rest of the table).  ``dynamic=False`` restores Spark's default
-    static overwrite (whole-path truncate) for full rebuilds.
-
-    At warehouse scale the partition column is the pruning axis
-    (date/region): readers filter on it and Catalyst prunes directories
-    before listing files (asserted in ``tests/test_plans.py``).
-    """
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    spark.conf.set(
-        "spark.sql.sources.partitionOverwriteMode",
-        "DYNAMIC" if dynamic else "STATIC",
-    )
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-
 def write_csv_report(df: DataFrame, path: str) -> None:
     """Single-file CSV with header (small report frames only)."""
     tmp = path + "_tmp"
@@ -156,52 +105,3 @@ def write_excel_sheets(frames: dict[str, DataFrame], path: str, append: bool = T
         for sheet, df in frames.items():
             df.toPandas().to_excel(xl, sheet_name=sheet[:31], index=False)
     return True
-
-
-def compact_parquet(
-    spark: SparkSession, path: str, target_mb: int = 256
-) -> int:
-    """Small-files compaction: rewrite a parquet directory into
-    ``ceil(total_bytes / target_mb)`` files and swap it in by a
-    rename-aside dance (live → ``__old``, tmp → live, delete
-    ``__old``).  Returns the new file count.
-
-    This is the maintenance op every micro-batch ingest needs — the
-    per-batch directories of :func:`~pyspark_pipelining_spark.streaming.
-    windows.write_stream_idempotent` (and any streaming sink) accumulate
-    small files whose per-file open/footer cost eventually dominates
-    scans; compaction restores ``maxPartitionBytes``-sized splits.  At
-    warehouse scale the same rewrite runs per partition directory so
-    compaction parallelizes.
-
-    Crash-safety: the rewrite lands fully in ``<path>__compacting``
-    before the live directory is touched, and the live data is renamed
-    aside (never deleted) until the compacted copy holds the live name —
-    a crash at any step leaves a complete copy of the data on disk under
-    ``path``, ``path__old``, or ``path__compacting``, recoverable by a
-    single rename.  The unavailable window for concurrent readers is
-    two directory renames (not a full recursive delete), but it is NOT
-    zero: posix rename of two directories cannot be made one atomic op,
-    and on object stores "rename" is copy+delete — a true
-    zero-downtime swap needs a manifest/view indirection (e.g. a table
-    format), which is out of scope here.
-    """
-    import math
-    import shutil
-    from pathlib import Path
-
-    total = sum(f.stat().st_size for f in Path(path).rglob("*.parquet"))
-    n = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
-    tmp = f"{path}__compacting"
-    old = f"{path}__old"
-    spark.read.parquet(path).repartition(n).write.mode("overwrite").parquet(tmp)
-    if Path(old).exists():  # leftover from a previous crashed run
-        shutil.rmtree(old)
-    Path(path).rename(old)
-    try:
-        Path(tmp).rename(path)
-    except OSError:
-        Path(old).rename(path)  # roll back: restore the live name
-        raise
-    shutil.rmtree(old)
-    return len(list(Path(path).rglob("*.parquet")))

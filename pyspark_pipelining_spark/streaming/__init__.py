@@ -1,31 +1,2 @@
-from pyspark_pipelining_spark.streaming.stateful import (
-    asof_stream,
-    funnel_stream,
-    sessionize_batch,
-    sessionize_stream,
-)
-from pyspark_pipelining_spark.streaming.windows import (
-    daily_counts_batch,
-    daily_counts_stream,
-    dedup_stream,
-    normalize_event_time,
-    run_stream_to_memory,
-    sliding_counts_batch,
-    view_click_join_batch,
-    view_click_join_stream,
-)
-
-__all__ = [
-    "asof_stream",
-    "daily_counts_batch",
-    "daily_counts_stream",
-    "dedup_stream",
-    "normalize_event_time",
-    "funnel_stream",
-    "run_stream_to_memory",
-    "sessionize_batch",
-    "sessionize_stream",
-    "sliding_counts_batch",
-    "view_click_join_batch",
-    "view_click_join_stream",
-]
+"""Event-time sessionization (:mod:`.stateful`), run by the registered
+``sessionize`` query."""

@@ -1,67 +1,21 @@
-"""Custom stateful streaming operator: event-time sessionization.
+"""Event-time sessionization (beyond-reference; the reference has no
+sessions or streaming, SURVEY §2.10).
 
-The reference has no streaming at all (SURVEY §2.10); this is the
-beyond-reference "custom stateful operator" slice, built the way Spark
-wants it:
-
-* :func:`sessionize_batch` — the batch twin: gap-based sessions via
-  ``lag``/running-sum window functions (one shuffle on user_id; both
-  window specs share the same partitioning so Catalyst plans a single
-  exchange).  Fully SQL-expressible → DuckDB oracle.
-* :func:`sessionize_stream` — the streaming version with
-  ``applyInPandasWithState``: per-user state holds the OPEN session
-  (start, last ts, count, value sum); each micro-batch merges new
-  events in event-time order, emits every session that CLOSES (a gap >
-  ``gap_min`` appears), and keeps the still-open tail in state.  State
-  per key is O(1) — the operator never buffers raw events.
-
-Agreement contract (tested): an ``availableNow`` replay of the stream
-emits exactly the batch twin's sessions minus each user's final
-(still-open) session.
-
-Scale: state lives in the state store partitioned by user_id; skewed
-users cost O(their events per batch) at merge time only.  The pandas
-path transfers Arrow batches — one python worker round-trip per user
-group per batch, the documented price of custom state logic (built-in
-``F.session_window`` covers the no-custom-logic case JVM-side).
+:func:`sessionize_batch` builds gap-based sessions with ``lag`` and
+running-sum window functions: one shuffle on user_id, since both
+window specs share the same partitioning and Catalyst plans a single
+exchange.  It is fully SQL-expressible, so the registered
+``sessionize`` query has a DuckDB oracle.  Built-in
+``F.session_window`` covers the same shape JVM-side
+(``session_windows`` / ``session_window_stats``).
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 D = "decimal(18,2)"
-
-SESSION_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("session_no", T.LongType()),
-        T.StructField("start_us", T.LongType()),
-        T.StructField("end_us", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("total_value", T.DoubleType()),
-    ]
-)
-
-# open-session carryover: (session_no, start_us, last_us, n, value cents)
-# val_cents is int64, not float: integer-cent accumulation is associative
-# and exact, so long sessions agree bit-for-bit with the batch twin's
-# decimal(18,2) sum (a float += per event can drift in the last ulp).
-STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("session_no", T.LongType()),
-        T.StructField("start_us", T.LongType()),
-        T.StructField("last_us", T.LongType()),
-        T.StructField("n", T.LongType()),
-        T.StructField("val_cents", T.LongType()),
-    ]
-)
 
 
 def sessionize_batch(df: DataFrame, gap_min: int = 30) -> DataFrame:
@@ -98,219 +52,4 @@ def sessionize_batch(df: DataFrame, gap_min: int = 30) -> DataFrame:
         # no final orderBy: output is one row per session (fact-sized at
         # scale) and consumers/compare are order-insensitive — a global
         # sort here would add a full range-shuffle for nothing
-    )
-
-
-def _merge_sessions(gap_us: int):
-    """Build the applyInPandasWithState merge function (closure over the
-    gap).  Emits closed sessions; keeps the open tail in state."""
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        events = pd.concat(list(pdfs), ignore_index=True)
-        events = events.sort_values(["ts", "event_id"])
-        # normalize to epoch micros regardless of pandas datetime unit
-        ts_us = (
-            pd.to_datetime(events["ts"]).astype("datetime64[us]").astype("int64").to_list()
-        )
-        # accumulate integer cents so the sum is exact and associative —
-        # bit-identical to the batch twin's decimal(18,2) arithmetic
-        # even for arbitrarily long sessions spanning many micro-batches
-        cents = [int(round(v * 100)) for v in events["value"].to_list()]
-        if state.exists:
-            session_no, start_us, last_us, n, val = state.get
-        else:
-            session_no, start_us, last_us, n, val = 0, None, None, 0, 0
-        out: list[tuple[Any, ...]] = []
-        for t_us, c in zip(ts_us, cents):
-            if start_us is None:  # very first event for this user
-                session_no, start_us, last_us, n, val = session_no + 1, t_us, t_us, 1, c
-            elif t_us - last_us > gap_us:  # gap → close the open session
-                out.append((user_id, session_no, start_us, last_us, n, val / 100.0))
-                session_no, start_us, last_us, n, val = session_no + 1, t_us, t_us, 1, c
-            else:
-                last_us, n, val = t_us, n + 1, val + c
-        state.update((session_no, start_us, last_us, n, val))
-        cols = ["user_id", "session_no", "start_us", "end_us", "n_events", "total_value"]
-        yield pd.DataFrame(out, columns=cols).astype(
-            {c: "int64" for c in cols[:-1]} | {"total_value": "float64"}
-        )
-
-    return fn
-
-
-def sessionize_stream(stream_df: DataFrame, gap_min: int = 30) -> DataFrame:
-    """Streaming sessionization over a stream with (user_id, ts,
-    event_id, value).  Emits one row per CLOSED session (append mode);
-    the open session per user persists in the state store across
-    micro-batches."""
-    gap_us = gap_min * 60 * 1_000_000
-    return stream_df.groupBy("user_id").applyInPandasWithState(
-        _merge_sessions(gap_us),
-        outputStructType=SESSION_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def asof_stream(
-    probe: DataFrame,
-    reference: DataFrame,
-    key: str,
-    ts: str,
-    ref_cols: list[str],
-    strict: bool = True,
-    prefix: str = "asof_",
-) -> DataFrame:
-    """Streaming sibling of :func:`pyspark_pipelining_spark.operators.
-    asof.asof_join`: per key, every probe event is matched to the most
-    recent reference event at-or-before (``strict=False``) or
-    strictly-before (``strict=True``) its timestamp — where "most
-    recent" spans ALL previous micro-batches, not just the current one.
-
-    State per key is O(1): the single last-seen reference row
-    (timestamp + requested columns).  Within a batch, rows are applied
-    in event-time order with the same tie rule as the batch operator
-    (probe before same-instant reference when strict, after when
-    inclusive).  Agreement contract (tested): when the source delivers
-    batches in event-time order per key, an ``availableNow`` replay
-    emits exactly the batch twin's rows.
-
-    Timestamps are emitted as epoch micros (``<ts>_us``,
-    ``<prefix><ts>_us``) — the engine-portable convention used across
-    this repo's streaming outputs (no pandas/Arrow timestamp-unit
-    drift).  Late (out-of-order across batches) reference rows are a
-    documented limitation shared with every last-value-state design:
-    a reference older than the stored one is ignored, it never
-    retro-matches already-emitted probes.
-    """
-    ref_types = {f.name: f.dataType for f in reference.schema.fields}
-    out_fields: list[T.StructField] = []
-    for f in probe.schema.fields:
-        if f.name == ts:
-            out_fields.append(T.StructField(f"{ts}_us", T.LongType()))
-        else:
-            out_fields.append(T.StructField(f.name, f.dataType))
-    out_fields.append(T.StructField(f"{prefix}{ts}_us", T.LongType()))
-    for c in ref_cols:
-        out_fields.append(T.StructField(f"{prefix}{c}", ref_types[c]))
-    out_schema = T.StructType(out_fields)
-    state_schema = T.StructType(
-        [T.StructField("ref_ts_us", T.LongType())]
-        + [T.StructField(c, ref_types[c]) for c in ref_cols]
-    )
-    probe_payload = [c for c in probe.columns if c != ts]
-
-    p = probe.withColumn("_is_probe", F.lit(1))
-    r = reference.select(
-        F.col(key), F.col(ts), *[F.col(c).alias(f"{prefix}{c}") for c in ref_cols]
-    ).withColumn("_is_probe", F.lit(0))
-    u = p.unionByName(r, allowMissingColumns=True)
-
-    def fn(
-        key_tuple: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        rows["_ts_us"] = (
-            pd.to_datetime(rows[ts]).astype("datetime64[us]").astype("int64")
-        )
-        # strict: probe first at equal ts (cannot see same-instant ref)
-        rows = rows.sort_values(
-            ["_ts_us", "_is_probe"], ascending=[True, not strict], kind="mergesort"
-        )
-        if state.exists:
-            last = list(state.get)
-        else:
-            last = [None] + [None] * len(ref_cols)
-        out: list[tuple[Any, ...]] = []
-        for d in rows.to_dict("records"):
-            if d["_is_probe"] == 0:
-                last = [d["_ts_us"]] + [d[f"{prefix}{c}"] for c in ref_cols]
-            else:
-                out.append(
-                    tuple(d[c] for c in probe_payload)
-                    + (d["_ts_us"],)
-                    + tuple(last)
-                )
-        if last[0] is not None:
-            state.update(tuple(last))
-        cols = probe_payload + [f"{ts}_us", f"{prefix}{ts}_us"] + [
-            f"{prefix}{c}" for c in ref_cols
-        ]
-        yield pd.DataFrame(out, columns=cols)
-
-    return u.groupBy(key).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def funnel_stream(
-    stream_df: DataFrame,
-    steps: list[str],
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-) -> DataFrame:
-    """Streaming sibling of :func:`pyspark_pipelining_spark.operators.
-    funnel.funnel_stages`: per-user greedy funnel matching where the
-    scan position survives across micro-batches.  The fold is
-    prefix-incremental — stage after events e1..en is a pure function
-    of (stage after e1..ek, events ek+1..en) — so O(1) state (the
-    current stage) makes the replay exactly the batch fold.
-
-    Emits one row per stage ADVANCE as it happens: ``user_id, stage,
-    at_us`` (epoch micros of the completing event) — the shape a live
-    conversion dashboard consumes.  Agreement contract (tested): with
-    batches delivered in event-time order per key, max(stage) per user
-    over an ``availableNow`` replay equals the batch twin's stage for
-    every user who reached stage ≥ 1.
-
-    Within a batch, events apply in (ts, id) order — the batch twin's
-    tie rule.  Late events are the shared last-value-state limitation
-    (see :func:`asof_stream`): an event older than one already folded
-    cannot rewind the match position.
-    """
-    out_schema = T.StructType(
-        [
-            T.StructField(user_col, T.LongType()),
-            T.StructField("stage", T.IntegerType()),
-            T.StructField("at_us", T.LongType()),
-        ]
-    )
-    state_schema = T.StructType([T.StructField("stage", T.IntegerType())])
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        events = pd.concat(list(pdfs), ignore_index=True)
-        events["_ts_us"] = (
-            pd.to_datetime(events[ts_col]).astype("datetime64[us]").astype("int64")
-        )
-        events = events.sort_values(["_ts_us", id_col], kind="mergesort")
-        stage = state.get[0] if state.exists else 0
-        out: list[tuple[Any, ...]] = []
-        for t_us, etype in zip(events["_ts_us"], events[type_col]):
-            if stage < len(steps) and etype == steps[stage]:
-                stage += 1
-                out.append((user_id, stage, int(t_us)))
-        state.update((stage,))
-        yield pd.DataFrame(out, columns=[user_col, "stage", "at_us"]).astype(
-            {user_col: "int64", "stage": "int32", "at_us": "int64"}
-        )
-
-    return stream_df.groupBy(user_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )

@@ -3,12 +3,10 @@ style (tiny inline frames, one semantic edge per row — SURVEY §5)."""
 
 from __future__ import annotations
 
-import importlib.machinery
-import types
-
 import pytest
 from pyspark.sql import functions as F
 
+from pyspark_pipelining_spark.operators import graph
 from pyspark_pipelining_spark.operators.dedup import (
     cluster_assignments,
     dedup_clusters,
@@ -18,11 +16,8 @@ from pyspark_pipelining_spark.operators.dedup import (
     word_ngrams,
 )
 from pyspark_pipelining_spark.operators.frequency import frequency_histogram
-from pyspark_pipelining_spark.operators.graph import (
-    kcore_fixpoint,
-    kcore_peel,
-    lpa_communities,
-)
+from pyspark_pipelining_spark.operators.graph import kcore_peel, lpa_communities
+from pyspark_pipelining_spark.operators.iterate import iterate
 from pyspark_pipelining_spark.operators.media import make_media, union_frames
 from pyspark_pipelining_spark.operators.reach import reach_count
 from pyspark_pipelining_spark.operators.reach_week import incremental_weekly_reach
@@ -174,18 +169,6 @@ def test_salted_agg_matches_plain_groupby(spark):
     assert got == want
 
 
-def test_salted_join_matches_plain_join(spark):
-    from pyspark_pipelining_spark.operators.skew import salted_join
-
-    fact = spark.createDataFrame(
-        [(1, i) for i in range(40)] + [(2, 99)], "k long, payload long"
-    )
-    dim = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "k long, name string")
-    got = sorted(tuple(r) for r in salted_join(fact, dim, ["k"], salt_buckets=4).collect())
-    want = sorted(tuple(r) for r in fact.join(dim, "k").collect())
-    assert got == want and len(got) == 41
-
-
 def test_cluster_assignments_known_components(spark):
     # components: {1,2,3} (via 1-2, 2-3), {10,11}; 20 appears in no pair
     pairs = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], ["doc_1", "doc_2"])
@@ -231,8 +214,11 @@ _LOOPS = {
             "both_orientations": {(1, 2), (2, 2)},
         },
     ),
+    # iterate's fixpoint mode with a count probe: the k-core to fixpoint
     "kcore_fixpoint": (
-        lambda p: kcore_fixpoint(p, k=2),
+        lambda p: graph._degrees(
+            iterate(graph.symmetrize(p), graph._peel(2), 50, until=F.count(F.lit(1)))
+        ).orderBy("node"),
         {
             "single": set(),
             "path": set(),
@@ -713,32 +699,6 @@ def test_zorder_key_interleaves_bits(spark):
     assert out == {(a, b): morton(a, b) for a in range(4) for b in range(4)}
 
 
-def test_write_zordered_files_are_tight_in_both_dims(spark, tmp_path):
-    from pyspark_pipelining_spark.operators.layout import write_zordered
-
-    # 64x64 grid -> 16 files should tile the curve: per-file min/max
-    # spans in BOTH dims must be far tighter than the global 0..63 span
-    rows = [(a, b) for a in range(64) for b in range(64)]
-    df = spark.createDataFrame(rows, "a long, b long")
-    path = str(tmp_path / "zorded")
-    write_zordered(df, path, ("a", "b"), bits=6, num_files=16)
-
-    import glob
-    import pyarrow.parquet as pq
-
-    spans_a, spans_b = [], []
-    for f in glob.glob(path + "/part-*.parquet"):
-        t = pq.read_table(f)
-        if t.num_rows == 0:
-            continue
-        ca, cb = t.column("a").to_pylist(), t.column("b").to_pylist()
-        spans_a.append(max(ca) - min(ca))
-        spans_b.append(max(cb) - min(cb))
-    assert len(spans_a) >= 8  # range partitioner actually split the curve
-    assert sum(spans_a) / len(spans_a) < 32
-    assert sum(spans_b) / len(spans_b) < 32
-
-
 def test_cooccur_pmi_hand_computed(spark):
     import math
 
@@ -1208,40 +1168,6 @@ def test_kcore_peel_zero_rounds_is_degree_table(spark):
     assert out == {1: 1, 2: 2, 3: 1}
 
 
-def test_decode_real_dispatch_both_ways(monkeypatch):
-    """decode_real is gated on Pillow availability: without it the
-    documented NotImplementedError fires (this container's real
-    state); with a codec present (faked here) the real path returns
-    the stub-compatible schema."""
-    import sys
-
-    from pyspark_pipelining_spark.operators import multimodal
-
-    assert not multimodal.has_image_codec()  # container truth
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_real(b"\x89PNG", "image/png")
-
-    class _FakeIm:
-        width, height = 12, 8
-
-        def getbands(self):
-            return ("L",)
-
-        def __enter__(self):
-            return self
-
-        def __exit__(self, *a):
-            return False
-
-    fake_pil = types.ModuleType("PIL")
-    fake_pil.Image = types.SimpleNamespace(open=lambda buf: _FakeIm())
-    fake_pil.__spec__ = importlib.machinery.ModuleSpec("PIL", loader=None)
-    monkeypatch.setitem(sys.modules, "PIL", fake_pil)
-    assert multimodal.has_image_codec()
-    out = multimodal.decode_real(b"abc", "image/png")
-    assert out["byte_len"] == 3 and out["feature"][1:3] == [12.0, 8.0]
-
-
 def test_media_header_sniff_round_trip_and_rejects_non_png(spark):
     """synthesize_png_payload writes a REAL PNG signature + big-endian
     dims; sniff_headers must parse them back exactly, JVM-side, and
@@ -1527,37 +1453,6 @@ def test_bitmap_words_merge_across_splits_exactly(spark):
         r["grp"]: r["n_distinct"] for r in bitmap_distinct(df, "grp", "val").collect()
     }
     assert got == exact
-
-
-def test_resize_stub_payload_sizes_follow_plan(spark):
-    """The Arrow-batched resize plumbing: every resized payload's fake
-    byte length is the deterministic function of the plan's target dims
-    (out_w*out_h//64+1), degenerate dims yield NULL payloads, and the
-    plan columns ride through the mapInPandas schema unchanged."""
-    from pyspark_pipelining_spark.operators.multimodal import (
-        documents_as_media,
-        resize_plan,
-        resize_stub,
-    )
-    from pyspark_pipelining_spark.sources.registry import load_table
-    from tests.conftest import SF_SMOKE
-
-    docs = load_table(spark, SF_SMOKE, "documents").limit(80)
-    media = documents_as_media(docs)
-    plan = {r["media_id"]: r for r in resize_plan(media).collect()}
-    out = resize_stub(media).collect()
-    assert len(out) == len(plan) > 0
-    for r in out:
-        p = plan[r["media_id"]]
-        assert (r["out_width"], r["out_height"]) == (p["out_width"], p["out_height"])
-        if p["out_width"] is None:
-            assert r["payload"] is None
-        else:
-            assert len(r["payload"]) == p["out_width"] * p["out_height"] // 64 + 1
-            # no-upscale convention: long side never exceeds the target
-            assert max(p["out_width"], p["out_height"]) <= max(224, p["width"], p["height"])
-            if p["needs_resize"]:
-                assert max(p["out_width"], p["out_height"]) <= 224
 
 
 def test_cms_inner_product_bounds_join_size(spark):

@@ -86,33 +86,6 @@ def test_media_projection_join_degrades_without_broadcast(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
-def test_bucketed_media_join_has_no_shuffle(spark):
-    """bucketed_media pre-buckets fact and projection on household_id;
-    the assembly join must then run with no Exchange on either side."""
-    from pyspark.sql import functions as F
-
-    from pyspark_pipelining_spark.operators import media
-
-    expo = media.exposures(spark, SF_SMOKE).select("household_id", "etype", "date")
-    proj = media.projection(spark, SF_SMOKE)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = media.bucketed_media(spark, expo, proj, num_buckets=8)
-        agg = joined.groupBy("etype").agg(F.sum("projfact").alias("p"))
-        plan = agg._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        )
-        tree = plan.split("\n\n")[0].splitlines()
-        join_at = next(i for i, l in enumerate(tree) if "SortMergeJoin" in l)
-        assert not any("Exchange" in l for l in tree[join_at + 1 :]), tree
-        assert agg.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS media_expo_bkt")
-        spark.sql("DROP TABLE IF EXISTS media_proj_bkt")
-
-
 def test_sim_bruteforce_broadcasts_query_side(spark):
     plan = plan_of(spark, "sim_bruteforce_topk")
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
@@ -133,51 +106,6 @@ def test_qa_scans_prune_to_needed_columns(spark, name):
     assert reads, "expected a parquet scan"
     for line in reads:
         assert "props" not in line  # the wide JSON column must be pruned
-
-
-def test_bucketed_join_has_no_shuffle(spark, tmp_path):
-    """Two tables bucketed on the join key must sort-merge join with NO
-    Exchange on either side — the co-located-join contract
-    write_bucketed promises for repeatedly-joined facts."""
-    from pyspark.sql import functions as F
-
-    from pyspark_pipelining_spark.sources.registry import load_table
-    from pyspark_pipelining_spark.sources.sinks import write_bucketed
-
-    orders = load_table(spark, SF_SMOKE, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
-    lineitem = load_table(spark, SF_SMOKE, "lineitem").select("l_orderkey", "l_quantity")
-    write_bucketed(orders, "bkt_orders", ["o_orderkey"], 8, sort_cols=["o_orderkey"])
-    write_bucketed(
-        lineitem.withColumnRenamed("l_orderkey", "o_orderkey"),
-        "bkt_lineitem",
-        ["o_orderkey"],
-        8,
-        sort_cols=["o_orderkey"],
-    )
-    prev_threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # force the shuffle-join path: at real scale neither fact side is
-        # broadcastable, which is exactly when bucketing pays off
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("bkt_orders").join(spark.table("bkt_lineitem"), "o_orderkey").agg(
-            F.sum("l_quantity").alias("q")
-        )
-        plan = joined._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        )
-        # examine only the plan TREE (formatted mode appends per-node
-        # details after a blank line, which would false-positive)
-        tree = plan.split("\n\n")[0].splitlines()
-        join_at = next(i for i, l in enumerate(tree) if "SortMergeJoin" in l)
-        # no shuffle feeding the join: every tree node below the
-        # SortMergeJoin must be exchange-free (bucketed scans satisfy
-        # the distribution requirement directly)
-        assert not any("Exchange" in l for l in tree[join_at + 1 :]), tree
-        assert joined.collect()[0]["q"] is not None
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_threshold)
-        spark.sql("DROP TABLE IF EXISTS bkt_orders")
-        spark.sql("DROP TABLE IF EXISTS bkt_lineitem")
 
 
 def test_scrub_pii_is_map_side_only(spark):
@@ -699,8 +627,9 @@ def test_session_paths_topk_is_take_ordered(spark):
 def test_convergence_probes_are_bounded_actions_on_checkpointed_state(
     spark, monkeypatch
 ):
-    """r06 watch-list: the per-round driver scalars in
-    cluster_assignments / kcore_fixpoint are loop control over
+    """r06 watch-list: the per-round driver scalars of
+    ``iterate``'s fixpoint mode (cluster_assignments' label sum, a
+    k-core peel's edge count) are loop control over
     checkpointed, already-materialized frames.  Pin (1) the action
     count stays bounded by rounds+1 (convergence detection fires) and
     (2) every probed plan is a scan/agg of materialized state
@@ -718,7 +647,10 @@ def test_convergence_probes_are_bounded_actions_on_checkpointed_state(
     except ImportError:  # older pyspark: one concrete class
         from pyspark.sql import DataFrame
 
+    from pyspark.sql import functions as F
+
     from pyspark_pipelining_spark.operators import dedup, graph
+    from pyspark_pipelining_spark.operators.iterate import iterate
 
     probed: list[str] = []
     recording = False
@@ -759,7 +691,9 @@ def test_convergence_probes_are_bounded_actions_on_checkpointed_state(
     # one tagged-sum probe per executed block (the first also sums the
     # init labels); converges inside the first block here
     assert 1 <= len(cc_probes) <= (12 + 3) // 4
-    kc_probes = probes_of(lambda: graph.kcore_fixpoint(pairs, k=2))
+    kc_probes = probes_of(
+        lambda: iterate(graph.symmetrize(pairs), graph._peel(2), 50, until=F.count(F.lit(1)))
+    )
     # initial count + peel round + fixpoint-confirm round — NOT max_rounds
     assert 2 <= len(kc_probes) <= 4
     for plan in cc_probes + kc_probes:

@@ -117,22 +117,6 @@ def test_salt_spreads_identical_duplicate_rows(spark):
     assert [(r["k"], r["n"], r["total"]) for r in out] == [(7, 4000, 4000)]
 
 
-def test_salted_join_rejects_dim_preserving_how(spark):
-    import pytest
-
-    from pyspark_pipelining_spark.operators.skew import salted_join
-
-    fact = spark.range(10).select(F.col("id").alias("k"), F.lit(1).alias("v"))
-    dim = spark.range(5).select(F.col("id").alias("k"), F.lit("d").alias("name"))
-    for bad in ("right", "full", "full_outer", "cross"):
-        with pytest.raises(ValueError):
-            salted_join(fact, dim, ["k"], 4, how=bad)
-    # fact-preserving joins still work and match the unsalted result
-    got = sorted(tuple(r) for r in salted_join(fact, dim, ["k"], 4, how="left").drop("name").collect())
-    want = sorted(tuple(r) for r in fact.join(dim, ["k"], "left").drop("name").collect())
-    assert got == want
-
-
 # ---------------------------------------------------------------------------
 # Greedy sequence packing (corpus.pack_greedy)
 # ---------------------------------------------------------------------------
@@ -769,10 +753,13 @@ def _python_kcore_fixpoint(edges, k):
 )
 @settings(max_examples=8, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_kcore_fixpoint_matches_python_model(spark, edges):
-    from pyspark_pipelining_spark.operators.graph import kcore_fixpoint
+    """Every round that changes the graph peels at least one node, so
+    as many rounds as there are nodes reach the true k-core."""
+    from pyspark_pipelining_spark.operators.graph import kcore_peel
 
     pairs = spark.createDataFrame(edges, ["doc_1", "doc_2"])
-    got = {r["node"]: r["degree"] for r in kcore_fixpoint(pairs, k=2).collect()}
+    rounds = len({n for e in edges for n in e})
+    got = {r["node"]: r["degree"] for r in kcore_peel(pairs, k=2, rounds=rounds).collect()}
     want = _python_kcore_fixpoint(edges, 2)
     assert got == want
     # fixpoint invariant: every survivor has degree >= k
@@ -794,10 +781,8 @@ def test_kcore_registered_rounds_reach_fixpoint_sf001(spark):
         (r["node"], r["degree"])
         for r in graph.kcore_peel(pairs, k=2, rounds=3).collect()
     }
-    fix = {
-        (r["node"], r["degree"])
-        for r in graph.kcore_fixpoint(pairs, k=2).collect()
-    }
+    edges = [(r["doc_1"], r["doc_2"]) for r in pairs.collect()]
+    fix = set(_python_kcore_fixpoint(edges, 2).items())
     assert bounded == fix
     assert all(d >= 2 for _n, d in fix)
 

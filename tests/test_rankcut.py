@@ -3,11 +3,11 @@ that replaced the four single-task quantile-cut windows (r15 verdict
 item 2).
 
 The contract: for ANY total order (metric + distinct tiebreak key),
-``histogram_ranks`` / ``exact_global_ranks`` reproduce the single-task
-``row_number`` bit-exactly, and ``ntile_expr`` / ``percent_rank_expr``
-reproduce ``ntile(k)`` / ``percent_rank`` from that row number — so
-the registered queries' unchanged window-function oracles stay green
-while the plan never ships the data through one partition.
+``histogram_ranks`` reproduces the single-task ``row_number``
+bit-exactly, and ``ntile_expr`` / ``percent_rank_expr`` reproduce
+``ntile(k)`` / ``percent_rank`` from that row number — so the
+registered queries' unchanged window-function oracles stay green while
+the plan never ships the data through one partition.
 """
 
 from __future__ import annotations
@@ -108,15 +108,6 @@ def test_histogram_ranks_single_row_and_negatives(spark):
     )
     got = rankcut.histogram_ranks(neg, "v", "k", ascending=True)
     assert [r.rn for r in got.orderBy("v").collect()] == [1, 2, 3, 4, 5]
-
-
-def test_exact_global_ranks_range_variant_matches(spark, skewed):
-    got = rankcut.exact_global_ranks(skewed, [F.desc("v"), F.asc("k")])
-    assert _mismatches(spark, got, skewed, [F.desc("v"), F.asc("k")]) == 0
-    gotg = rankcut.exact_global_ranks(
-        skewed, [F.asc("v"), F.asc("k")], group_cols=["g"]
-    )
-    assert _mismatches(spark, gotg, skewed, [F.asc("v"), F.asc("k")], ["g"]) == 0
 
 
 def test_ntile_expr_exhaustive_small():

@@ -11,11 +11,18 @@ from pyspark_pipelining_spark.sources.registry import (
     jdbc_options,
     list_columns,
     list_tables,
+    load_table,
     probe_schema,
-    register_views,
     table_exists,
 )
 from tests.conftest import SF_SMOKE
+
+
+def _register_views(spark, names):
+    """Every named smoke table as a temp view, under the names the
+    DuckDB oracle uses."""
+    for name in names:
+        load_table(spark, SF_SMOKE, name).createOrReplaceTempView(name)
 
 
 def test_jdbc_options_table_read():
@@ -65,7 +72,7 @@ def test_jdbc_options_validation():
 
 
 def test_catalog_discovery_over_registered_views(spark):
-    register_views(spark, SF_SMOKE, ["events", "nation"])
+    _register_views(spark, ["events", "nation"])
     tables = list_tables(spark)
     assert "events" in tables and "nation" in tables
     assert table_exists(spark, "events")
@@ -76,141 +83,18 @@ def test_catalog_discovery_over_registered_views(spark):
 
 
 def test_probe_schema_reads_no_rows(spark):
-    register_views(spark, SF_SMOKE, ["nation"])
+    _register_views(spark, ["nation"])
     schema = probe_schema(spark, "nation")
     assert [f.name for f in schema.fields][:2] == ["n_nationkey", "n_name"]
 
 
 def test_check_timestamp_column(spark):
-    register_views(spark, SF_SMOKE, ["events", "nation"])
+    _register_views(spark, ["events", "nation"])
     check_timestamp_column(spark, "events", "ts")  # passes
     with pytest.raises(SchemaError, match="must be a timestamp"):
         check_timestamp_column(spark, "events", "event_type")
     with pytest.raises(SchemaError, match="no column"):
         check_timestamp_column(spark, "nation", "ts")
-
-
-def test_load_csv_enforces_schema_and_failfast(spark, tmp_path):
-    from pyspark.sql import types as T
-
-    from pyspark_pipelining_spark.sources.registry import SchemaError, load_csv
-
-    p = tmp_path / "in.csv"
-    p.write_text("id,name,qty\n1,widget,5\n2,gadget,7\n")
-    schema = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("name", T.StringType()),
-            T.StructField("qty", T.IntegerType()),
-        ]
-    )
-    rows = sorted(map(tuple, load_csv(spark, str(p), schema).collect()))
-    assert rows == [(1, "widget", 5), (2, "gadget", 7)]
-    # malformed row -> FAILFAST abort, not silent nulls
-    bad = tmp_path / "bad.csv"
-    bad.write_text("id,name,qty\n1,widget,notanumber\n")
-    import pytest as _pytest
-
-    with _pytest.raises(Exception):
-        load_csv(spark, str(bad), schema).collect()
-
-
-def test_load_json_enforces_schema(spark, tmp_path):
-    from pyspark.sql import types as T
-
-    from pyspark_pipelining_spark.sources.registry import load_json
-
-    p = tmp_path / "in.jsonl"
-    p.write_text('{"id": 1, "name": "a"}\n{"id": 2, "name": "b"}\n')
-    schema = T.StructType(
-        [T.StructField("id", T.LongType()), T.StructField("name", T.StringType())]
-    )
-    rows = sorted(map(tuple, load_json(spark, str(p), schema).collect()))
-    assert rows == [(1, "a"), (2, "b")]
-
-
-def test_compact_parquet_merges_small_files_losslessly(spark, tmp_path):
-    from pyspark_pipelining_spark.sources.sinks import compact_parquet
-
-    df = spark.range(0, 1000).withColumnRenamed("id", "v")
-    path = str(tmp_path / "many")
-    df.repartition(40).write.parquet(path)  # 40 tiny files
-    import pathlib
-
-    assert len(list(pathlib.Path(path).rglob("*.parquet"))) == 40
-    n = compact_parquet(spark, path, target_mb=256)
-    assert n == 1
-    back = spark.read.parquet(path)
-    assert sorted(r["v"] for r in back.collect()) == list(range(1000))
-
-
-def test_compact_parquet_crash_rollback_restores_live_dir(spark, tmp_path, monkeypatch):
-    """If the tmp→live rename fails, the live name is rolled back so no
-    reader ever finds the dataset missing after the call returns."""
-    import pathlib
-
-    from pyspark_pipelining_spark.sources.sinks import compact_parquet
-
-    path = str(tmp_path / "data")
-    spark.range(0, 100).withColumnRenamed("id", "v").repartition(5).write.parquet(path)
-
-    real_rename = pathlib.Path.rename
-
-    def failing_rename(self, target):
-        if str(self).endswith("__compacting"):
-            raise OSError("simulated crash between renames")
-        return real_rename(self, target)
-
-    monkeypatch.setattr(pathlib.Path, "rename", failing_rename)
-    import pytest as _pytest
-
-    with _pytest.raises(OSError, match="simulated crash"):
-        compact_parquet(spark, path, target_mb=256)
-    monkeypatch.undo()
-    # live dir restored with the original data; no __old stranded copy
-    back = spark.read.parquet(path)
-    assert sorted(r["v"] for r in back.collect()) == list(range(100))
-    assert not pathlib.Path(f"{path}__old").exists()
-
-
-def test_compact_parquet_recovers_from_stale_old_dir(spark, tmp_path):
-    """A leftover <path>__old from a previous crashed run is cleaned up,
-    not an error."""
-    import pathlib
-
-    from pyspark_pipelining_spark.sources.sinks import compact_parquet
-
-    path = str(tmp_path / "data")
-    spark.range(0, 50).withColumnRenamed("id", "v").repartition(4).write.parquet(path)
-    stale = pathlib.Path(f"{path}__old")
-    stale.mkdir()
-    (stale / "junk").write_text("stale")
-    n = compact_parquet(spark, path, target_mb=256)
-    assert n == 1
-    assert not stale.exists()
-    back = spark.read.parquet(path)
-    assert sorted(r["v"] for r in back.collect()) == list(range(50))
-
-
-def test_write_partitioned_dynamic_overwrite_touches_only_present_partitions(spark, tmp_path):
-    """Re-running one day's batch must replace that day only — other
-    partitions survive byte-for-byte (the idempotent backfill contract)."""
-    from pyspark_pipelining_spark.sources.sinks import write_partitioned
-
-    path = str(tmp_path / "t")
-    full = spark.createDataFrame(
-        [(1, "d1"), (2, "d1"), (3, "d2"), (4, "d3")], "v long, day string"
-    )
-    write_partitioned(full, path, ["day"])
-    # backfill d2 with corrected rows
-    fix = spark.createDataFrame([(30, "d2"), (31, "d2")], "v long, day string")
-    write_partitioned(fix, path, ["day"])
-    got = sorted((r["day"], r["v"]) for r in spark.read.parquet(path).collect())
-    assert got == [("d1", 1), ("d1", 2), ("d2", 30), ("d2", 31), ("d3", 4)]
-    # static mode really does truncate everything (the full-rebuild path)
-    write_partitioned(fix, path, ["day"], dynamic=False)
-    got2 = sorted((r["day"], r["v"]) for r in spark.read.parquet(path).collect())
-    assert got2 == [("d2", 30), ("d2", 31)]
 
 
 def test_write_table_orc_round_trip(spark, tmp_path):
@@ -278,25 +162,6 @@ def test_binary_file_source_feeds_sniffer(spark, tmp_path):
     assert sniffed == {(320, 200), (64, 48)}
 
 
-def test_text_lines_source_feeds_line_dedup(spark, tmp_path):
-    """text source: one row per line; wholetext=True gives one row per
-    file — both shapes verified against the files on disk."""
-    from pyspark_pipelining_spark.sources.registry import load_text_lines
-
-    d = tmp_path / "corpus"
-    d.mkdir()
-    (d / "a.txt").write_text("alpha\nbeta\nalpha\n")
-    (d / "b.txt").write_text("beta\ngamma\n")
-
-    lines = load_text_lines(spark, str(d))
-    vals = sorted(r["value"] for r in lines.collect())
-    assert vals == ["alpha", "alpha", "beta", "beta", "gamma"]
-
-    whole = load_text_lines(spark, str(d), wholetext=True)
-    assert whole.count() == 2
-    assert {r["value"].count("\n") for r in whole.collect()} == {2, 3}
-
-
 def test_parquet_merge_schema_reads_evolved_lake(spark, tmp_path):
     """mergeSchema surfaces columns added after older files were
     written (NULL for pre-evolution rows) — and the declared-schema
@@ -314,42 +179,6 @@ def test_parquet_merge_schema_reads_evolved_lake(spark, tmp_path):
     assert set(df.columns) == {"id", "name", "score"}
     rows = {r["id"]: r["score"] for r in df.collect()}
     assert rows == {1: None, 2: 9.5}
-
-
-def test_json_error_channel_quarantines_bad_rows(spark, tmp_path):
-    """PERMISSIVE ingestion splits clean rows from malformed ones; the
-    malformed raw text is preserved for the error report, and
-    good + bad partitions the input exactly."""
-    from pyspark.sql import types as T
-
-    from pyspark_pipelining_spark.sources.registry import load_json_with_errors
-
-    p = tmp_path / "feed.json"
-    p.write_text(
-        '{"id": 1, "v": "x"}\n'
-        "not json at all\n"
-        '{"id": 2, "v": "y"}\n'
-        '{"id": "NaN-ish", "v": 3}\n'
-    )
-    schema = T.StructType(
-        [T.StructField("id", T.LongType()), T.StructField("v", T.StringType())]
-    )
-    good, bad = load_json_with_errors(spark, str(p), schema)
-    assert sorted((r["id"], r["v"]) for r in good.collect()) == [(1, "x"), (2, "y")]
-    raws = [r["raw"] for r in bad.collect()]
-    assert len(raws) == 2 and "not json at all" in raws
-    # the documented release path drops the cached parse behind both
-    # children (ADVICE r06: the cache must not pin the feed forever)
-    from pyspark_pipelining_spark.sources.registry import (
-        unpersist_json_with_errors,
-    )
-
-    parent = good._json_errors_parent
-    assert parent.storageLevel.useMemory or parent.storageLevel.useDisk
-    unpersist_json_with_errors(good)
-    assert not (parent.storageLevel.useMemory or parent.storageLevel.useDisk)
-    # no-op on frames that did not come from the loader
-    unpersist_json_with_errors(good.select("id"))
 
 
 # ---------------------------------------------------------------------------

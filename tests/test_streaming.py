@@ -1,6 +1,7 @@
-"""Streaming slice: the availableNow replay of the daily window agg
-must agree exactly with its batch twin (and with DuckDB, via the
-qa_hourshift oracle family)."""
+"""Streaming slice: live operators and registered query plans run
+unchanged under the Structured Streaming runtime (availableNow
+triggers into a memory sink or through foreachBatch), and the streamed
+result equals the batch result exactly."""
 
 from __future__ import annotations
 
@@ -9,105 +10,31 @@ import os
 from pyspark.sql import functions as F
 
 from pyspark_pipelining_spark.sources.registry import load_table
-from pyspark_pipelining_spark.streaming import (
-    daily_counts_batch,
-    daily_counts_stream,
-    run_stream_to_memory,
-    sliding_counts_batch,
-)
 from tests.conftest import SF_SMOKE
 
 
-def test_stream_matches_batch(spark):
-    ev = load_table(spark, SF_SMOKE, "events")
-    batch = daily_counts_batch(ev, hourshift=5, keys=["event_type"])
-    stream = daily_counts_stream(
-        spark, f"{SF_SMOKE}/events.parquet", hourshift=5, keys=["event_type"]
-    )
-    result = run_stream_to_memory(stream, "daily_counts_test")
-    b = sorted(tuple(r) for r in batch.collect())
-    s = sorted(tuple(r) for r in result.collect())
-    assert b == s and len(b) > 0
-
-
-def test_sliding_window_covers_period(spark):
-    ev = load_table(spark, SF_SMOKE, "events")
-    out = sliding_counts_batch(ev, "7 days", "1 day").collect()
-    assert len(out) > 0
-    # every 7-day window's count is >= any single day within it
-    daily = {r["window_start"]: r["n_events"] for r in daily_counts_batch(ev).collect()}
-    for r in out:
-        total_days = sum(
-            v for d, v in daily.items() if r["window_start"] <= d < r["window_end"]
-        )
-        assert r["n_events"] == total_days
-
-
-def test_sessionize_stream_matches_batch(spark):
-    """The availableNow replay of the stateful sessionizer must emit
-    exactly the batch twin's sessions minus each user's final
-    (still-open) session."""
-    import os
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from pyspark_pipelining_spark.streaming import sessionize_batch, sessionize_stream
-
-    ev = load_table(spark, SF_SMOKE, "events").select("user_id", "ts", "event_id", "value")
-    batch = sessionize_batch(ev, gap_min=30).collect()
-    last = {}
-    for r in batch:
-        last[r.user_id] = max(last.get(r.user_id, 0), r.session_no)
-    expected = sorted(
-        (r.user_id, r.session_no, r.start_us, r.end_us, r.n_events, round(r.total_value, 2))
-        for r in batch
-        if r.session_no != last[r.user_id]
-    )
-
-    d = tempfile.mkdtemp(prefix="stream_sess_")
-    os.symlink(f"{SF_SMOKE}/events.parquet", os.path.join(d, "events.parquet"))
-    from pyspark_pipelining_spark.streaming import normalize_event_time
-
-    static = spark.read.parquet(d)
-    stream = spark.readStream.schema(static.schema).parquet(d)
-    stream = normalize_event_time(stream, static, "ts")
-    out = sessionize_stream(stream.select("user_id", "ts", "event_id", "value"), gap_min=30)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sess_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+def _run(writer) -> None:
+    """Start ``writer`` with an availableNow trigger and wait for it to
+    drain its source."""
+    q = writer.trigger(availableNow=True).start()
     try:
         q.awaitTermination(120)
     finally:
         if q.isActive:
             q.stop()
-    got = sorted(
-        (r.user_id, r.session_no, r.start_us, r.end_us, r.n_events, round(r.total_value, 2))
-        for r in spark.table("sess_test").collect()
-    )
-    assert len(got) > 0
-    assert got == expected
 
 
-def test_dedup_stream_drops_duplicate_events(spark, tmp_path):
-    """Streaming dedup (watermark-bounded state) must keep exactly one
-    row per event_id when the source replays duplicates."""
-    import pandas as pd
+def _drain(stream_df, name: str, output_mode: str):
+    """Run ``stream_df`` into the memory sink ``name``; return that
+    table."""
+    _run(stream_df.writeStream.format("memory").queryName(name).outputMode(output_mode))
+    return stream_df.sparkSession.table(name)
 
-    from pyspark_pipelining_spark.streaming import dedup_stream
 
-    ev = load_table(spark, SF_SMOKE, "events").limit(200).toPandas()
-    dup = pd.concat([ev, ev.head(50)], ignore_index=True)  # 50 replayed ids
-    src = str(tmp_path / "dup_events.parquet")
-    dup.to_parquet(src)
-    out = dedup_stream(spark, src, key_cols=["event_id"], watermark="1 day")
-    res = run_stream_to_memory(out, "dedup_stream_test", output_mode="append")
-    ids = [r["event_id"] for r in res.select("event_id").collect()]
-    assert len(ids) == len(set(ids)) == ev["event_id"].nunique()
+def _for_each_batch(stream_df, sink, checkpoint: str) -> None:
+    """Run ``stream_df``, handing every micro-batch to
+    ``sink(batch_df, batch_id)``."""
+    _run(stream_df.writeStream.foreachBatch(sink).option("checkpointLocation", checkpoint))
 
 
 def test_corpus_prep_stages_run_on_streams(spark, tmp_path):
@@ -118,8 +45,6 @@ def test_corpus_prep_stages_run_on_streams(spark, tmp_path):
     stream) must equal the batch run bit-for-bit."""
     from pyspark_pipelining_spark.operators import corpus as corpus_ops
     from pyspark_pipelining_spark.operators import text as text_ops
-    from pyspark_pipelining_spark.sources.registry import load_table
-    from tests.conftest import SF_SMOKE
 
     docs = load_table(spark, SF_SMOKE, "documents")
     src = str(tmp_path / "docs_in")
@@ -132,219 +57,29 @@ def test_corpus_prep_stages_run_on_streams(spark, tmp_path):
         return qual.join(lang, "doc_id").join(clean, "doc_id")
 
     stream = spark.readStream.schema(docs.schema).parquet(src)
-    q = (
-        prep(stream)
-        .writeStream.format("memory")
-        .queryName("corpus_ingest")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    _drain(prep(stream), "corpus_ingest", "append")
     got = sorted(map(tuple, spark.sql("select * from corpus_ingest").collect()))
     want = sorted(map(tuple, prep(docs).collect()))
     assert got == want and len(got) > 0
 
 
-def test_idempotent_stream_sink_no_duplicates_on_rerun(spark, tmp_path):
-    """Re-running a checkpointed availableNow query must not re-deliver
-    committed batches, and the batch_id=N overwrite layout must yield
-    exactly the source rows once."""
-    from pyspark_pipelining_spark.sources.registry import load_table
-    from pyspark_pipelining_spark.streaming.windows import write_stream_idempotent
-    from tests.conftest import SF_SMOKE
-
-    docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "source")
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    docs.write.mode("overwrite").parquet(src)
-
-    stream = spark.readStream.schema(docs.schema).parquet(src)
-    write_stream_idempotent(stream, out, ckpt)
-    first = sorted(map(tuple, spark.read.parquet(out).select("doc_id", "source").collect()))
-    assert sorted(map(tuple, docs.collect())) == first and len(first) > 0
-
-    # second run against the same checkpoint: no new batches, no dupes
-    stream2 = spark.readStream.schema(docs.schema).parquet(src)
-    write_stream_idempotent(stream2, out, ckpt)
-    again = sorted(map(tuple, spark.read.parquet(out).select("doc_id", "source").collect()))
-    assert again == first
-
-
-def test_idempotent_stream_sink_reraises_batch_failure(spark, tmp_path):
-    """A query whose batch function throws must surface the error to the
-    caller, not return as if the write succeeded."""
-    import pytest
-
-    from pyspark_pipelining_spark.sources.registry import load_table
-    from pyspark_pipelining_spark.streaming.windows import write_stream_idempotent
-    from tests.conftest import SF_SMOKE
-
-    docs = load_table(spark, SF_SMOKE, "documents").select("doc_id")
-    src = str(tmp_path / "src")
-    docs.write.mode("overwrite").parquet(src)
-
-    # a stream whose plan fails at execution time: ANSI division by zero
-    # inside the batch write (raise_error survives the stream planner)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .parquet(src)
-        .select(F.raise_error(F.lit("boom in batch")).alias("x"))
-    )
-    with pytest.raises(Exception, match="boom in batch"):
-        write_stream_idempotent(
-            stream, str(tmp_path / "out"), str(tmp_path / "ckpt")
-        )
-
-
-def test_asof_stream_matches_batch(spark, tmp_path):
-    """availableNow replay of the stateful as-of must emit exactly the
-    batch asof_join's rows (source delivered in one in-order batch)."""
-    from pyspark_pipelining_spark.operators.asof import asof_join
-    from tests.conftest import SF_SMOKE
-
-    ev = load_table(spark, SF_SMOKE, "events")
-    # unique reference rows per (user_id, ts): tie winners are
-    # engine/layout-dependent otherwise (documented in asof_join)
-    ref = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id", "ts")
-        .agg(F.max("value").alias("value"))
-    )
-    probe = ev.filter(F.col("event_type") != "purchase").select(
-        "user_id", "ts", "event_id"
-    )
-    batch = asof_join(probe, ref, "user_id", "ts", ["value"], strict=True)
-    expected = sorted(
-        (
-            r["user_id"],
-            r["event_id"],
-            r["ts_us"],
-            r["asof_us"],
-            None if r["asof_value"] is None else round(r["asof_value"], 6),
-        )
-        for r in batch.select(
-            "user_id",
-            "event_id",
-            F.unix_micros("ts").alias("ts_us"),
-            F.unix_micros("asof_ts").alias("asof_us"),
-            "asof_value",
-        ).collect()
-    )
-
-    src = str(tmp_path / "src")
-    ev.write.parquet(src)
-    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-    s_probe = stream.filter(F.col("event_type") != "purchase").select(
-        "user_id", "ts", "event_id"
-    )
-    s_ref = (
-        stream.filter(F.col("event_type") == "purchase")
-        .select("user_id", "ts", "value")
-        .dropDuplicates(["user_id", "ts"])
-    )
-    # dropDuplicates on a stream keeps ONE arbitrary row; instead dedup
-    # exactly like batch via the same max — but a streaming groupBy agg
-    # can't feed applyInPandasWithState (two stateful ops). The smoke
-    # events have unique (user,ts) purchase rows in practice; assert so.
-    n_all = ev.filter(F.col("event_type") == "purchase").count()
-    assert n_all == ref.count(), "fixture assumption: purchase rows unique per (user, ts)"
-    from pyspark_pipelining_spark.streaming import asof_stream
-
-    out = asof_stream(s_probe, s_ref, "user_id", "ts", ["value"], strict=True)
-    res = run_stream_to_memory(out, "asof_stream_test", output_mode="append")
-    got = sorted(
-        (
-            r["user_id"],
-            r["event_id"],
-            r["ts_us"],
-            r["asof_ts_us"],
-            None if r["asof_value"] is None else round(r["asof_value"], 6),
-        )
-        for r in res.collect()
-    )
-    assert len(got) == len(expected) and got == expected
-
-
-def test_asof_stream_state_spans_micro_batches(spark, tmp_path):
-    """A reference seen in batch 1 must match probes arriving in batch 2
-    (the whole point of keeping last-ref state)."""
-    import time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from pyspark_pipelining_spark.streaming import asof_stream
-
-    src = tmp_path / "src"
-    src.mkdir()
-    sch = pa.schema(
-        [
-            ("user_id", pa.int64()),
-            ("ts", pa.timestamp("us")),
-            ("event_id", pa.int64()),
-            ("value", pa.float64()),
-            ("event_type", pa.string()),
-        ]
-    )
-
-    def write(name, rows):
-        cols = list(zip(*rows))
-        pq.write_table(
-            pa.table(
-                {
-                    "user_id": pa.array(cols[0], pa.int64()),
-                    "ts": pa.array(cols[1], pa.timestamp("us")),
-                    "event_id": pa.array(cols[2], pa.int64()),
-                    "value": pa.array(cols[3], pa.float64()),
-                    "event_type": pa.array(cols[4], pa.string()),
-                },
-                schema=sch,
-            ),
-            src / name,
-        )
-
-    # batch 1: the reference (purchase at t=1000); batch 2: a probe later
-    write("a.parquet", [(7, 1000, 100, 5.0, "purchase")])
-    time.sleep(1.1)  # file source orders pending files by mtime
-    write("b.parquet", [(7, 2000, 200, None, "click")])
-
-    stream = spark.readStream.schema(
-        spark.read.parquet(str(src)).schema
-    ).option("maxFilesPerTrigger", 1).parquet(str(src))
-    probe = stream.filter(F.col("event_type") != "purchase").select(
-        "user_id", "ts", "event_id"
-    )
-    ref = stream.filter(F.col("event_type") == "purchase").select(
-        "user_id", "ts", "value"
-    )
-    out = asof_stream(probe, ref, "user_id", "ts", ["value"], strict=True)
-    res = run_stream_to_memory(out, "asof_stream_multibatch", output_mode="append")
-    rows = res.collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r["user_id"], r["event_id"], r["ts_us"], r["asof_ts_us"], r["asof_value"]) == (
-        7, 200, 2000, 1000, 5.0
-    )
-
-
 def test_streaming_cms_partials_merge_to_batch_sketch(spark, tmp_path):
-    """Per-micro-batch CMS partials written by the idempotent sink must
-    merge (cell-wise sum) to EXACTLY the batch sketch of the whole
-    corpus — the sketch's mergeability, exercised operationally."""
+    """Per-micro-batch CMS partials must merge (cell-wise sum) to
+    EXACTLY the batch sketch of the whole corpus — the sketch's
+    mergeability, exercised operationally."""
     from pyspark_pipelining_spark.operators.sketch import cms_merge, cms_sketch
-    from pyspark_pipelining_spark.sources.registry import load_table
-    from pyspark_pipelining_spark.streaming.windows import write_stream_idempotent
-    from tests.conftest import SF_SMOKE
 
     docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "source")
     src = str(tmp_path / "src")
     docs.repartition(3).write.parquet(src)  # several files -> several batches
 
-    batch_sketch = sorted(
-        map(tuple, cms_sketch(docs.select("source"), "source", width=64).collect())
-    )
+    batch = cms_sketch(docs.select("source"), "source", width=64).select("d", "bucket", "c")
+    partials: list = []
+    n_batches = [0]
+
+    def sink(batch_df, _batch_id):
+        n_batches[0] += 1
+        partials.extend(cms_sketch(batch_df, "source", width=64).select("d", "bucket", "c").collect())
 
     stream = (
         spark.readStream.schema(docs.schema)
@@ -352,278 +87,21 @@ def test_streaming_cms_partials_merge_to_batch_sketch(spark, tmp_path):
         .parquet(src)
         .select("source")
     )
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    write_stream_idempotent(
-        stream, out, ckpt,
-        transform=lambda df: cms_sketch(df, "source", width=64),
-    )
-    merged = sorted(
-        map(tuple, cms_merge(spark.read.parquet(out).select("d", "bucket", "c")).collect())
-    )
-    assert merged == batch_sketch and len(merged) > 0
-
-
-def test_funnel_stream_matches_batch(spark, tmp_path):
-    """availableNow replay of the stateful funnel: max emitted stage per
-    user == the batch fold's stage for every user who reached >= 1, and
-    users absent from the stream output are exactly the batch stage-0
-    users."""
-    from pyspark_pipelining_spark.operators.funnel import funnel_stages
-    from pyspark_pipelining_spark.streaming import funnel_stream
-    from tests.conftest import SF_SMOKE
-
-    steps = ["view", "click", "purchase"]
-    ev = load_table(spark, SF_SMOKE, "events").select(
-        "user_id", "ts", "event_id", "event_type"
-    )
-    batch = {
-        r["user_id"]: r["stage"] for r in funnel_stages(ev, steps).collect()
-    }
-
-    src = str(tmp_path / "src")
-    ev.write.parquet(src)
-    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-    out = funnel_stream(stream, steps)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("funnel_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(120)
-    finally:
-        if q.isActive:
-            q.stop()
-    rows = spark.sql("SELECT * FROM funnel_test").collect()
-    streamed = {}
-    for r in rows:
-        streamed[r["user_id"]] = max(streamed.get(r["user_id"], 0), r["stage"])
-    assert streamed == {u: s for u, s in batch.items() if s > 0}
-    # every stage advance 1..max was emitted exactly once per user
-    per_user = {}
-    for r in rows:
-        per_user.setdefault(r["user_id"], []).append(r["stage"])
-    for u, stages in per_user.items():
-        assert sorted(stages) == list(range(1, streamed[u] + 1))
-
-
-def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
-    """Watermarked stream-stream interval join: availableNow replay of
-    the two file streams must emit exactly the batch twin's pairs."""
-    from pyspark_pipelining_spark.streaming.windows import (
-        view_click_join_batch,
-        view_click_join_stream,
-    )
-
-    ev = load_table(spark, SF_SMOKE, "events")
-    views = ev.filter(F.col("event_type") == "view")
-    clicks = ev.filter(F.col("event_type") == "click")
-    expected = sorted(
-        map(tuple, view_click_join_batch(views, clicks).collect())
-    )
-
-    vdir, cdir = str(tmp_path / "views"), str(tmp_path / "clicks")
-    views.write.parquet(vdir)
-    clicks.write.parquet(cdir)
-    sv = spark.readStream.schema(spark.read.parquet(vdir).schema).parquet(vdir)
-    sc_ = spark.readStream.schema(spark.read.parquet(cdir).schema).parquet(cdir)
-    out = view_click_join_stream(sv, sc_)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("vc_join_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(120)
-    finally:
-        if q.isActive:
-            q.stop()
-    got = sorted(map(tuple, spark.table("vc_join_test").collect()))
-    assert got == expected and len(got) > 0
-
-
-def test_cdc_apply_stream_matches_batch_merge(spark, tmp_path):
-    """apply_changes_stream folded over micro-batches must equal one
-    batch merge of all the deltas: the versioned-snapshot MERGE is
-    associative over batch boundaries."""
-    import pandas as pd
-
-    from pyspark_pipelining_spark.streaming.cdc import (
-        apply_changes_stream,
-        read_current,
-    )
-
-    src = str(tmp_path / "deltas")
-    os.makedirs(src)
-    # two files -> two micro-batches with maxFilesPerTrigger=1
-    pd.DataFrame({"k": [1, 1, 2], "v": [10, 5, 7]}).to_parquet(f"{src}/a.parquet")
-    pd.DataFrame({"k": [2, 3], "v": [1, 9]}).to_parquet(f"{src}/b.parquet")
-
-    stream = (
-        spark.readStream.schema("k BIGINT, v BIGINT")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    table = str(tmp_path / "state")
-    apply_changes_stream(
-        stream, table, str(tmp_path / "ckpt"), key="k", value_col="v"
-    )
-    got = {r["k"]: r["v"] for r in read_current(spark, table).collect()}
-    assert got == {1: 15, 2: 8, 3: 9}
-
-
-def test_cdc_apply_stream_rerun_is_noop(spark, tmp_path):
-    """Re-running the finished CDC stream must not change the state
-    table (checkpoint skips committed batches)."""
-    import pandas as pd
-
-    from pyspark_pipelining_spark.streaming.cdc import (
-        apply_changes_stream,
-        read_current,
-    )
-
-    src = str(tmp_path / "deltas")
-    os.makedirs(src)
-    pd.DataFrame({"k": [1], "v": [4]}).to_parquet(f"{src}/a.parquet")
-
-    def run():
-        stream = spark.readStream.schema("k BIGINT, v BIGINT").parquet(src)
-        apply_changes_stream(
-            stream, str(tmp_path / "state"), str(tmp_path / "ckpt"), "k", "v"
-        )
-
-    run()
-    run()
-    got = read_current(spark, str(tmp_path / "state")).collect()
-    assert [(r["k"], r["v"]) for r in got] == [(1, 4)]
-
-
-def test_cdc_apply_stream_random_batches_match_dict_fold(spark, tmp_path):
-    """Randomized multi-batch CDC fold: whatever the batch boundaries,
-    the final state table equals one dict fold over all deltas."""
-    import random
-
-    import pandas as pd
-
-    from pyspark_pipelining_spark.streaming.cdc import (
-        apply_changes_stream,
-        read_current,
-    )
-
-    rng = random.Random(7)
-    deltas = [(rng.randint(1, 8), rng.randint(-50, 50)) for _ in range(60)]
-    src = str(tmp_path / "deltas")
-    os.makedirs(src)
-    # split into 4 files -> up to 4 micro-batches with maxFilesPerTrigger=1
-    for i in range(4):
-        chunk = deltas[i * 15 : (i + 1) * 15]
-        pd.DataFrame(chunk, columns=["k", "v"]).to_parquet(f"{src}/f{i}.parquet")
-
-    stream = (
-        spark.readStream.schema("k BIGINT, v BIGINT")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    apply_changes_stream(
-        stream, str(tmp_path / "state"), str(tmp_path / "ckpt"), "k", "v"
-    )
-    got = {
-        r["k"]: r["v"] for r in read_current(spark, str(tmp_path / "state")).collect()
-    }
-    want: dict[int, int] = {}
-    for k, v in deltas:
-        want[k] = want.get(k, 0) + v
-    assert got == want
-
-
-def test_cdc_retention_bounds_versions_and_compacts(spark, tmp_path):
-    """Retention keeps only the newest N snapshot versions (bounding a
-    long-running stream's disk growth) and compaction rewrites the
-    live snapshot to target-sized files — final state unchanged."""
-    import pandas as pd
-
-    from pyspark_pipelining_spark.streaming.cdc import (
-        apply_changes_stream,
-        read_current,
-    )
-
-    src = str(tmp_path / "deltas")
-    os.makedirs(src)
-    for i in range(5):  # five files -> five micro-batches
-        pd.DataFrame({"k": [1, i + 1], "v": [1, 10]}).to_parquet(f"{src}/f{i}.parquet")
-
-    stream = (
-        spark.readStream.schema("k BIGINT, v BIGINT")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    table = str(tmp_path / "state")
-    apply_changes_stream(
-        stream,
-        table,
-        str(tmp_path / "ckpt"),
-        "k",
-        "v",
-        retain_versions=2,
-        compact_target_mb=64,
-    )
-    versions = sorted(d for d in os.listdir(table) if d.startswith("v="))
-    assert len(versions) == 2, versions
-    live = os.path.join(table, versions[-1])
-    assert len([f for f in os.listdir(live) if f.endswith(".parquet")]) == 1
-    got = {r["k"]: r["v"] for r in read_current(spark, table).collect()}
-    assert got == {1: 15, 2: 10, 3: 10, 4: 10, 5: 10}
-
-
-def test_cdc_retention_survives_replay_of_last_batch(spark, tmp_path):
-    """Crash-safety with retention=2: a replay of the last batch
-    (failure between snapshot write and checkpoint commit) still finds
-    its predecessor — retention never deletes it — and overwriting its
-    own version reproduces the identical snapshot."""
-    from pyspark_pipelining_spark.streaming.cdc import make_apply_batch, read_current
-
-    table = str(tmp_path / "state")
-    apply = make_apply_batch(table, "k", "v", retain_versions=2)
-
-    def delta(rows):
-        return spark.createDataFrame(rows, "k BIGINT, v BIGINT")
-
-    apply(delta([(1, 1)]), 0)
-    apply(delta([(1, 2)]), 1)
-    apply(delta([(1, 3)]), 2)
-    versions = sorted(d for d in os.listdir(table) if d.startswith("v="))
-    assert versions == ["v=1", "v=2"]  # retention pruned v=0, kept predecessor
-    before = {r["k"]: r["v"] for r in read_current(spark, table).collect()}
-    # the crash: checkpoint commit for batch 2 was lost -> batch 2
-    # replays with the same deltas; predecessor v=1 must still exist
-    apply(delta([(1, 3)]), 2)
-    after = {r["k"]: r["v"] for r in read_current(spark, table).collect()}
-    assert after == before == {1: 6}
+    _for_each_batch(stream, sink, str(tmp_path / "ckpt"))
+    assert n_batches[0] > 1  # a single batch would not exercise the merge
+    merged = sorted(map(tuple, cms_merge(spark.createDataFrame(partials, batch.schema)).collect()))
+    want = sorted(map(tuple, batch.collect()))
+    assert merged == want and len(merged) > 0
 
 
 def test_streaming_hll_register_maintenance_matches_batch(spark, tmp_path):
     """The 100 TB shape for streaming distinct counts: each micro-batch
-    folds its events into (day|bucket) → max-rho register deltas, and
-    the CDC apply merges them into the register state with
-    combine=greatest (idempotent, so replays and overlaps are safe).
-    The folded state must be IDENTICAL to the batch register table
-    over all events — hence every downstream estimate (windowed or
-    not) agrees with batch exactly."""
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-
+    carries (day|bucket) → max-rho register deltas, and the sink merges
+    them into the register state with max (idempotent, so replays and
+    overlaps are safe).  The folded state must be IDENTICAL to the
+    batch register table over all events — hence every downstream
+    estimate (windowed or not) agrees with batch exactly."""
     from pyspark_pipelining_spark.operators.sketch import hll_registers
-    from pyspark_pipelining_spark.sources.registry import load_table
-    from pyspark_pipelining_spark.streaming.cdc import (
-        apply_changes_stream,
-        read_current,
-    )
-    from tests.conftest import SF_SMOKE
 
     ev = load_table(spark, SF_SMOKE, "events").select(
         F.to_date("ts").alias("day"), F.col("user_id").cast("string").alias("uid")
@@ -640,24 +118,18 @@ def test_streaming_hll_register_maintenance_matches_batch(spark, tmp_path):
         )
         regs.toPandas().to_parquet(f"{src}/chunk{i}.parquet")
 
+    streamed: dict[str, int] = {}
+
+    def sink(batch_df, _batch_id):
+        for r in batch_df.groupBy("k").agg(F.max("r").alias("r")).collect():
+            streamed[r["k"]] = max(streamed.get(r["k"], 0), r["r"])
+
     stream = (
         spark.readStream.schema("k string, r int")
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    table = str(tmp_path / "registers")
-    apply_changes_stream(
-        stream,
-        table,
-        str(tmp_path / "ckpt"),
-        key="k",
-        value_col="r",
-        combine=F.greatest,
-        pre_agg="max",
-    )
-    streamed = {
-        (r["k"]): r["r"] for r in read_current(spark, table).collect()
-    }
+    _for_each_batch(stream, sink, str(tmp_path / "ckpt"))
     batch = {
         f"{r['day']}|{r['bucket']}": r["r"]
         for r in hll_registers(ev, "day", "uid").collect()
@@ -675,7 +147,6 @@ def test_price_histogram_bins_stream_matches_batch(spark, tmp_path):
     import pyspark.sql.types as T
 
     from pyspark_pipelining_spark.queries_mining import QSKETCH_BIN_CENTS
-    from pyspark_pipelining_spark.streaming import run_stream_to_memory
 
     bin_expr = F.expr(
         "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
@@ -703,7 +174,7 @@ def test_price_histogram_bins_stream_matches_batch(spark, tmp_path):
         .groupBy("l_returnflag", bin_expr.alias("bin"))
         .agg(F.count(F.lit(1)).alias("ni"))
     )
-    result = run_stream_to_memory(stream, "price_bins_stream")
+    result = _drain(stream, "price_bins_stream", "complete")
     b = sorted(tuple(r) for r in batch.collect())
     s = sorted(tuple(r) for r in result.collect())
     assert b == s and len(b) > 0
@@ -724,8 +195,6 @@ def test_session_window_stream_matches_batch(spark, tmp_path):
 
     import pandas as pd
     import pyspark.sql.types as T
-
-    from pyspark_pipelining_spark.streaming.windows import run_stream_to_memory
 
     base = dt.datetime(2024, 1, 1)
     real = []
@@ -774,7 +243,7 @@ def test_session_window_stream_matches_batch(spark, tmp_path):
         .withWatermark("ts", "0 seconds")
     )
     streamed = sorted(
-        map(tuple, run_stream_to_memory(sessions(stream), "sw_sessions", output_mode="append").collect())
+        map(tuple, _drain(sessions(stream), "sw_sessions", "append").collect())
     )
     cut = int(dt.datetime(2099, 1, 1).timestamp() * 1e6)
     batch = sorted(
@@ -799,8 +268,6 @@ def test_registered_session_window_callable_streams_foreachbatch(spark, tmp_path
     pinned separately by test_session_window_stream_matches_batch)."""
     from pyspark_pipelining_spark.queries import QUERIES
     from pyspark_pipelining_spark.queries_analytics import session_windows_plan
-    from pyspark_pipelining_spark.sources.registry import load_table
-    from tests.conftest import SF_SMOKE
 
     src = str(tmp_path / "events_us")
     load_table(spark, SF_SMOKE, "events").select(
@@ -814,17 +281,7 @@ def test_registered_session_window_callable_streams_foreachbatch(spark, tmp_path
         got.extend(map(tuple, session_windows_plan(batch_df).collect()))
 
     stream = spark.readStream.schema(schema).parquet(src)
-    sq = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        sq.awaitTermination(120)
-    finally:
-        if sq.isActive:
-            sq.stop()
+    _for_each_batch(stream, sink, str(tmp_path / "ck"))
 
     want = sorted(
         map(tuple, QUERIES["session_window_stats"](spark, SF_SMOKE).collect())
@@ -849,8 +306,6 @@ def test_registered_hll_register_merge_streams_foreachbatch(spark, tmp_path):
     from pyspark_pipelining_spark.operators.sketch import hll_estimate, hll_registers
     from pyspark_pipelining_spark.queries import QUERIES
     from pyspark_pipelining_spark.queries_corpus import _hll_tokens_plan
-    from pyspark_pipelining_spark.sources.registry import load_table
-    from tests.conftest import SF_SMOKE
 
     src = str(tmp_path / "docs_stream")
     load_table(spark, SF_SMOKE, "documents").repartition(4).write.parquet(src)
@@ -870,17 +325,7 @@ def test_registered_hll_register_merge_streams_foreachbatch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    sq = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        sq.awaitTermination(120)
-    finally:
-        if sq.isActive:
-            sq.stop()
+    _for_each_batch(stream, sink, str(tmp_path / "ck"))
 
     assert n_batches[0] > 1  # a single batch would not exercise the merge
     regs_df = spark.createDataFrame(
@@ -931,17 +376,7 @@ def test_wav_window_features_streams_foreachbatch(spark, tmp_path):
         .option("pathGlobFilter", "*.wav")
         .load(src)
     )
-    sq = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        sq.awaitTermination(120)
-    finally:
-        if sq.isActive:
-            sq.stop()
+    _for_each_batch(stream, sink, str(tmp_path / "ck"))
 
     assert n_batches[0] > 1  # one batch would not exercise incremental arrival
     want = [
@@ -974,8 +409,6 @@ def test_staged_cms_merge_parity_streams_foreachbatch(spark, tmp_path):
         _cms_token_counts,
         q_cms_merge_parity,
     )
-    from pyspark_pipelining_spark.sources.registry import load_table
-    from tests.conftest import SF_SMOKE
 
     src = str(tmp_path / "docs_stream")
     load_table(spark, SF_SMOKE, "documents").repartition(4).write.parquet(src)
@@ -1003,17 +436,7 @@ def test_staged_cms_merge_parity_streams_foreachbatch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    sq = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        sq.awaitTermination(120)
-    finally:
-        if sq.isActive:
-            sq.stop()
+    _for_each_batch(stream, sink, str(tmp_path / "ck"))
 
     assert n_batches[0] > 1  # a single batch would not exercise the merge
     want = q_cms_merge_parity(spark, SF_SMOKE).collect()
@@ -1053,8 +476,6 @@ def test_staged_kmv_merge_parity_streams_foreachbatch(spark, tmp_path):
         _kmv_source_hashes,
         q_kmv_merge_parity,
     )
-    from pyspark_pipelining_spark.sources.registry import load_table
-    from tests.conftest import SF_SMOKE
 
     src = str(tmp_path / "docs_stream")
     load_table(spark, SF_SMOKE, "documents").repartition(4).write.parquet(src)
@@ -1081,17 +502,7 @@ def test_staged_kmv_merge_parity_streams_foreachbatch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    sq = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        sq.awaitTermination(120)
-    finally:
-        if sq.isActive:
-            sq.stop()
+    _for_each_batch(stream, sink, str(tmp_path / "ck"))
 
     assert n_batches[0] > 1  # a single batch would not exercise the merge
     # idempotence: re-delivering the final micro-batch changes nothing
@@ -1117,8 +528,6 @@ def test_registered_doclen_sketch_merge_streams_foreachbatch(spark, tmp_path):
         _doclen_bin_counts,
         _doclen_estimates,
     )
-    from pyspark_pipelining_spark.sources.registry import load_table
-    from tests.conftest import SF_SMOKE
 
     src = str(tmp_path / "docs_stream")
     load_table(spark, SF_SMOKE, "documents").repartition(4).write.parquet(src)
@@ -1137,17 +546,7 @@ def test_registered_doclen_sketch_merge_streams_foreachbatch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    sq = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        sq.awaitTermination(120)
-    finally:
-        if sq.isActive:
-            sq.stop()
+    _for_each_batch(stream, sink, str(tmp_path / "ck"))
 
     assert n_batches[0] > 1  # a single batch would not exercise the merge
     bins_df = spark.createDataFrame(

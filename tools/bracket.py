@@ -1,5 +1,5 @@
 """Dedicated per-query timing bracket — the same-code median-of-N
-harness behind the README's bench adjudications (sim_ivfpq_*,
+harness behind the bench adjudications of earlier rounds (sim_ivfpq_*,
 node_jaccard, sim_lsh_multitable, corpus_prep), so a driver-run
 outlier can be settled with one command instead of an ad-hoc script:
 

@@ -3,8 +3,8 @@
 queued ``sim_ivf_learned_topk`` query (and its DuckDB oracle) assign
 against.
 
-The k-means trainer (``operators/similarity.learned_centroids``) is
-iterative and NOT single-SQL-expressible, so it runs ONCE here —
+The k-means trainer (:func:`learned_centroids` below) is iterative
+and NOT single-SQL-expressible, so it runs ONCE here —
 deterministic seeding (``vec_id % cells``) + Lloyd steps on the
 sf0.001 embeddings — and the result is snapped to an integer lattice
 (``round(c * CENT_GRID)`` per coordinate) before committing.  The
@@ -29,6 +29,9 @@ from __future__ import annotations
 import os
 import sys
 
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
 
@@ -45,11 +48,54 @@ ITERS = 2
 CENT_GRID = 1 << 20
 
 
+def _mean_centroids(assigned: DataFrame) -> DataFrame:
+    """(cell, centroid array<double>): the float mean of each cell's
+    ``embedding`` vectors."""
+    return (
+        assigned.select("cell", F.posexplode("embedding").alias("pos", "x"))
+        .groupBy("cell", "pos")
+        .agg(F.avg(F.col("x").cast("double")).alias("m"))
+        .groupBy("cell")
+        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
+        .select("cell", F.transform("pm", lambda s: s["m"]).alias("centroid"))
+    )
+
+
+def learned_centroids(emb_df: DataFrame, cells: int, iters: int) -> DataFrame:
+    """K-means-style coarse quantizer training (the scale upgrade over
+    the fixed-formula centroids of ``operators/similarity.ivf_assign``).
+
+    Deterministic seeding (``vec_id % cells``) + ``iters`` float Lloyd
+    steps; each step is one posexplode→groupBy mean (shuffle on (cell,
+    pos)) and one broadcast-reassignment (centroids are k×dim — always
+    tiny).  Returns (cell, centroid array<double>).  The engine's own
+    Lloyd step is the integer one, ``operators/cluster.lloyd_int``;
+    this float trainer only feeds the committed fixture, which
+    ``similarity.ivf_topk_learned_q`` searches.
+    """
+    assigned = emb_df.select(
+        "vec_id", "embedding", F.pmod(F.col("vec_id"), F.lit(cells)).alias("cell")
+    )
+    dist = F.aggregate(
+        F.zip_with("embedding", "centroid", lambda x, c: (x.cast("double") - c) ** 2),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    for _ in range(iters):
+        assigned = (
+            emb_df.crossJoin(F.broadcast(_mean_centroids(assigned)))
+            .withColumn("d", dist)
+            .groupBy("vec_id", "embedding")
+            .agg(F.min(F.struct("d", "cell")).alias("best"))
+            .select("vec_id", "embedding", F.col("best.cell").alias("cell"))
+        )
+    return _mean_centroids(assigned)
+
+
 def main() -> int:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from pyspark_pipelining_spark.operators.similarity import learned_centroids
     from pyspark_pipelining_spark.session import get_spark
     from pyspark_pipelining_spark.sources.registry import load_table
 

@@ -47,7 +47,7 @@ DEFAULT_QUERIES = [
     "harmonic_2hop",
 ]
 
-# the next cost tier, measured late round 12 (README scale notes):
+# the next cost tier, measured late round 12:
 # `python tools/scaling.py --tier2` re-measures it in one command
 TIER2_QUERIES = [
     "sim_ivfpq_rerank",

@@ -9,8 +9,7 @@ queries deserve one documented pass at that scale:
     python tools/sf01_oracle_spotcheck.py [--all]
 
 Prints one OK/FAIL line per query and exits non-zero on any mismatch.
-The passing run is recorded in README.md (scale notes).  Not part of
-the default pytest run (costs ~2 min); re-run after touching any of
+Not part of the default pytest run (costs ~2 min); re-run after touching any of
 the listed queries' arithmetic.  ``--all`` runs EVERY registered
 query with an oracle — the full-registry sf0.1 certification
 (~12 min; first recorded pass round 13: 213/213 match).
