@@ -1,0 +1,25 @@
+"""Money on both engines: exact cents, one double at the boundary.
+
+Money columns are doubles in the lake.  A double sum depends on the
+order of addition, which differs between Spark partitions and DuckDB
+threads, so every money sum runs over ``decimal(18,2)`` — exact, hence
+order-free — and turns into a double once, after the sum.  The Spark
+half and the DuckDB half of that sum live here together, so the two
+cannot drift apart."""
+
+from __future__ import annotations
+
+from pyspark.sql import functions as F
+
+#: the money type: exact cents
+D = "decimal(18,2)"
+
+
+def money_sum(col: str):
+    """Spark: the exact-cents sum of ``col`` as a double."""
+    return F.sum(F.col(col).cast(D)).cast("double")
+
+
+def duck_money_sum(sql_expr: str) -> str:
+    """:func:`money_sum` as DuckDB SQL over ``sql_expr``."""
+    return f"CAST(sum(CAST({sql_expr} AS DECIMAL(18,2))) AS DOUBLE)"

@@ -35,9 +35,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pyspark_pipelining_spark.money import D, money_sum
 from pyspark_pipelining_spark.operators.media import union_frames
 
-D = "decimal(18,2)"
 
 
 def construct_hh_first(purch_df: DataFrame, expo_dfs: list[DataFrame], univ_df: DataFrame) -> DataFrame:
@@ -169,7 +169,7 @@ def lift_metrics(df: DataFrame) -> DataFrame:
     exact doubles, so the result is bit-deterministic at any parallelism.
     """
     vol_cols = ["volume_tgt", "volume_cat", "volume_cat_bb", "brand_wgt", "category_wgt", "category_wgt_bb"]
-    aggs = [F.sum(F.col(c).cast(D)).cast("double").alias(c) for c in vol_cols]
+    aggs = [money_sum(c).alias(c) for c in vol_cols]
     aggs += [F.sum(c).cast("long").alias(c) for c in ["bwgt", "cwgt", "cwgt_bb", "wgt"]]
     aggs += [F.count(c).cast("long").alias(f"{c}_cnt") for c in ["bwgt", "cwgt", "cwgt_bb"]]
     g = df.groupBy("hh_exposed", "bef_aft").agg(*aggs)

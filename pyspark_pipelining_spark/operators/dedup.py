@@ -74,13 +74,21 @@ def portable_hash60(col):
     (60 bits) read as a bigint — the one spelling of the hash every
     sketch, sampler and shingle id here derives from.
 
-    Spark: ``conv(substring(md5(c),1,15),16,10)``; DuckDB oracle:
-    ``('0x' || substr(md5(c),1,15))::BIGINT`` — bit-identical.  Pure
+    Spark: ``conv(substring(md5(c),1,15),16,10)``; the DuckDB oracles
+    spell it through :func:`duck_hash60` — bit-identical.  Pure
     map-side work, so id assignment costs no shuffle at any scale
     (unlike a dense_rank over the distinct values, which funnels the
     whole vocabulary through one partition).
     """
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+
+
+def duck_hash60(sql_expr: str) -> str:
+    """:func:`portable_hash60` as DuckDB SQL over the VARCHAR expression
+    ``sql_expr`` — the one oracle spelling of the hash.  A salt is part
+    of ``sql_expr`` (``'salt:' || ...``); a ``% m`` reduction stays at
+    the call site."""
+    return f"('0x' || substr(md5({sql_expr}), 1, 15))::BIGINT"
 
 
 def portable_hash_id(col, mod: int):

@@ -25,25 +25,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-#: Metadata struct carried beside every binary payload.
-MEDIA_META = T.StructType(
-    [
-        T.StructField("modality", T.StringType()),
-        T.StructField("mime", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("duration_ms", T.LongType()),
-    ]
-)
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("meta", MEDIA_META),
-    ]
-)
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),

@@ -69,6 +69,14 @@ def _cosine(a, b):
     return F.round(_dot(a, b) / (_norm(a) * _norm(b)), 6)
 
 
+def duck_cosine(a: str = "e.embedding", b: str = "q.query_vec") -> str:
+    """:func:`_cosine` as DuckDB SQL over two array expressions, by
+    default a corpus row ``e`` and a query row ``q``."""
+    a, b = f"CAST({a} AS DOUBLE[])", f"CAST({b} AS DOUBLE[])"
+    dot, na, nb = (f"list_dot_product({x}, {y})" for x, y in ((a, b), (a, a), (b, b)))
+    return f"round({dot} / (sqrt({na}) * sqrt({nb})), 6)"
+
+
 def _l2sq(a, b):
     """Exact int64 squared L2 distance of two lattice vectors."""
     return F.aggregate(
@@ -82,6 +90,13 @@ def _topk(df: DataFrame, k: int, order: list, rank: str = "rank") -> DataFrame:
     """The ``k`` first rows of each query by ``order``, numbered in ``rank``."""
     w = Window.partitionBy("query_id").orderBy(*order)
     return df.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= k)
+
+
+def duck_rank(order: str = "cosine DESC, vec_id ASC") -> str:
+    """:func:`_topk`'s ``rank`` column as DuckDB SQL: each query's rows
+    numbered by ``order`` (by default the cosine rungs' order, ties on
+    ``vec_id``).  The ``rank <= k`` cut stays at the call site."""
+    return f"CAST(row_number() OVER (PARTITION BY query_id ORDER BY {order}) AS INTEGER) AS rank"
 
 
 def _cosine_topk(pairs: DataFrame, k: int, dedup: bool = False) -> DataFrame:

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pyspark_pipelining_spark.money import D
+
 #: cents-lattice conversion that both engines reproduce bit-for-bit:
 #: double multiply (correctly rounded) then floor (exact) then cast of
 #: an integral double (exact).  Plain CAST(double AS BIGINT) would NOT
@@ -143,10 +145,9 @@ def gapfill_daily(
     to the input events); the fill join shuffles only the daily table
     on (key, day).  No window functions, no global sort until the
     final presentation orderBy."""
-    dec = "decimal(18,2)"
     daily = df.groupBy(
         F.col(key), F.to_date(ts_col).alias("day")
-    ).agg(F.sum(F.col(value_col).cast(dec)).cast(dec).alias("day_value"))
+    ).agg(F.sum(F.col(value_col).cast(D)).cast(D).alias("day_value"))
     span = daily.groupBy(key).agg(
         F.min("day").alias("_d0"), F.max("day").alias("_d1")
     )
@@ -156,7 +157,7 @@ def gapfill_daily(
         .select(
             key,
             "day",
-            F.coalesce(F.col("day_value"), F.lit(0).cast(dec))
+            F.coalesce(F.col("day_value"), F.lit(0).cast(D))
             .cast("double")
             .alias("day_value"),
             F.col("day_value").isNull().cast("long").alias("is_gap"),

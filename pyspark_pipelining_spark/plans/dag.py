@@ -30,6 +30,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from pyspark_pipelining_spark.logutil import get_logger
+from pyspark_pipelining_spark.sources.registry import _read_parquet
 
 
 @dataclass(frozen=True)
@@ -121,7 +122,7 @@ class Pipeline:
         st = self._stages[name]
         if st.materialize and self._is_complete(name):
             self.logger.info("stage %s: target exists, skipping (idempotent)", name)
-            df = self.spark.read.parquet(self._target(name))
+            df = _read_parquet(self.spark, self._target(name))
             self._results[name] = df
             self.manifest.append(
                 {
@@ -144,7 +145,7 @@ class Pipeline:
                 if st.partition_by:
                     writer = writer.partitionBy(*st.partition_by)
                 writer.parquet(self._target(name))
-                df = self.spark.read.parquet(self._target(name))
+                df = _read_parquet(self.spark, self._target(name))
         except Exception as exc:
             self.logger.exception("stage %s: failed", name)
             self.manifest.append(

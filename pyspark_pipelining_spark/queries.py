@@ -21,8 +21,10 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pyspark_pipelining_spark.money import D, duck_money_sum
 from pyspark_pipelining_spark.operators import before_after as ba
 from pyspark_pipelining_spark.operators import media, quality
+from pyspark_pipelining_spark.operators.dedup import duck_hash60
 from pyspark_pipelining_spark.operators.frequency import frequency_histogram
 from pyspark_pipelining_spark.operators.mapping import (
     adserver_meta_dim,
@@ -346,7 +348,7 @@ def q_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
     return make_map(adserver_meta_dim(spark, sf_dir), dimension_master_dim(spark, sf_dir))
 
 
-SQL_MAPPING = """
+SQL_MAPPING = f"""
 WITH ka AS (
     SELECT upper(n_name) AS key,
            'v_' || lower(n_name) AS value,
@@ -367,7 +369,7 @@ norm AS (
 ),
 ka2 AS (
     SELECT n.*,
-           ('0x' || substr(md5(value), 1, 15))::BIGINT % 1099511627776 AS val_id,
+           {duck_hash60('value')} % 1099511627776 AS val_id,
            'dig' AS etype2
     FROM norm n
 )
@@ -533,25 +535,25 @@ SQL_BEFORE_AFTER_LIFT = f"""
 WITH {_SQL_BA_RAW},
 {_sql_ba_weighted("raw", 1, 13, "w")}
 SELECT hh_exposed, bef_aft,
-       CAST(sum(CAST(volume_tgt AS DECIMAL(18,2))) AS DOUBLE) AS volume_tgt,
-       CAST(sum(CAST(volume_cat AS DECIMAL(18,2))) AS DOUBLE) AS volume_cat,
-       CAST(sum(CAST(volume_cat_bb AS DECIMAL(18,2))) AS DOUBLE) AS volume_cat_bb,
-       CAST(sum(CAST(brand_wgt AS DECIMAL(18,2))) AS DOUBLE) * count(bwgt) / CAST(sum(bwgt) AS BIGINT) AS brand_wgt,
-       CAST(sum(CAST(category_wgt AS DECIMAL(18,2))) AS DOUBLE) * count(cwgt) / CAST(sum(cwgt) AS BIGINT) AS category_wgt,
-       CAST(sum(CAST(category_wgt_bb AS DECIMAL(18,2))) AS DOUBLE) * count(cwgt_bb) / CAST(sum(cwgt_bb) AS BIGINT) AS category_wgt_bb,
+       {duck_money_sum('volume_tgt')} AS volume_tgt,
+       {duck_money_sum('volume_cat')} AS volume_cat,
+       {duck_money_sum('volume_cat_bb')} AS volume_cat_bb,
+       {duck_money_sum('brand_wgt')} * count(bwgt) / CAST(sum(bwgt) AS BIGINT) AS brand_wgt,
+       {duck_money_sum('category_wgt')} * count(cwgt) / CAST(sum(cwgt) AS BIGINT) AS category_wgt,
+       {duck_money_sum('category_wgt_bb')} * count(cwgt_bb) / CAST(sum(cwgt_bb) AS BIGINT) AS category_wgt_bb,
        CAST(sum(bwgt) AS BIGINT) AS bwgt,
        CAST(sum(cwgt) AS BIGINT) AS cwgt,
        CAST(sum(cwgt_bb) AS BIGINT) AS cwgt_bb,
        CAST(sum(wgt) AS BIGINT) AS wgt,
        count(bwgt) AS bwgt_cnt, count(cwgt) AS cwgt_cnt, count(cwgt_bb) AS cwgt_bb_cnt,
-       CAST(sum(CAST(volume_tgt AS DECIMAL(18,2))) AS DOUBLE)
-         / CAST(sum(CAST(volume_cat AS DECIMAL(18,2))) AS DOUBLE) AS ratio,
-       CAST(sum(CAST(volume_tgt AS DECIMAL(18,2))) AS DOUBLE)
-         / CAST(sum(CAST(volume_cat_bb AS DECIMAL(18,2))) AS DOUBLE) AS ratio_bb,
-       (CAST(sum(CAST(brand_wgt AS DECIMAL(18,2))) AS DOUBLE) * count(bwgt) / CAST(sum(bwgt) AS BIGINT))
-         / (CAST(sum(CAST(category_wgt AS DECIMAL(18,2))) AS DOUBLE) * count(cwgt) / CAST(sum(cwgt) AS BIGINT)) AS weighted_ratio,
-       (CAST(sum(CAST(brand_wgt AS DECIMAL(18,2))) AS DOUBLE) * count(bwgt) / CAST(sum(bwgt) AS BIGINT))
-         / (CAST(sum(CAST(category_wgt_bb AS DECIMAL(18,2))) AS DOUBLE) * count(cwgt_bb) / CAST(sum(cwgt_bb) AS BIGINT)) AS weighted_ratio_bb,
+       {duck_money_sum('volume_tgt')}
+         / {duck_money_sum('volume_cat')} AS ratio,
+       {duck_money_sum('volume_tgt')}
+         / {duck_money_sum('volume_cat_bb')} AS ratio_bb,
+       ({duck_money_sum('brand_wgt')} * count(bwgt) / CAST(sum(bwgt) AS BIGINT))
+         / ({duck_money_sum('category_wgt')} * count(cwgt) / CAST(sum(cwgt) AS BIGINT)) AS weighted_ratio,
+       ({duck_money_sum('brand_wgt')} * count(bwgt) / CAST(sum(bwgt) AS BIGINT))
+         / ({duck_money_sum('category_wgt_bb')} * count(cwgt_bb) / CAST(sum(cwgt_bb) AS BIGINT)) AS weighted_ratio_bb,
        count(bwgt) / count(cwgt) AS i_ratio,
        count(bwgt) / count(cwgt_bb) AS i_ratio_bb
 FROM w GROUP BY hh_exposed, bef_aft
@@ -719,7 +721,7 @@ def q_salted_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.lit(1).alias("n_events"),
-        F.col("value").cast("decimal(18,2)").alias("total_value"),
+        F.col("value").cast(D).alias("total_value"),
     )
     out = salted_agg(
         ev,
@@ -734,10 +736,10 @@ def q_salted_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type")
 
 
-SQL_SALTED_EVENT_COUNTS = """
+SQL_SALTED_EVENT_COUNTS = f"""
 SELECT event_type,
        count(*) AS n_events,
-       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+       {duck_money_sum('value')} AS total_value
 FROM events GROUP BY event_type
 """
 
@@ -751,7 +753,7 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sessionize_batch(ev, gap_min=30)
 
 
-SQL_SESSIONIZE = """
+SQL_SESSIONIZE = f"""
 WITH lagd AS (
     SELECT user_id, ts, event_id, value,
            lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
@@ -770,7 +772,7 @@ SELECT user_id, session_no,
        epoch_us(min(ts)) AS start_us,
        epoch_us(max(ts)) AS end_us,
        count(*) AS n_events,
-       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+       {duck_money_sum('value')} AS total_value
 FROM sess GROUP BY user_id, session_no
 """
 

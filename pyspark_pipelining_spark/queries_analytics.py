@@ -17,14 +17,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pyspark_pipelining_spark.money import duck_money_sum, money_sum
 from pyspark_pipelining_spark.operators import analytics, dedup, graph
 from pyspark_pipelining_spark.operators import text as text_ops
-from pyspark_pipelining_spark.operators.dedup import NEAR_DUP_JACCARD
-from pyspark_pipelining_spark.queries_llm import SQL_WORDS, _minhash_fragments
+from pyspark_pipelining_spark.queries_llm import SQL_WORDS, _sql_near_dup_pairs
 from pyspark_pipelining_spark.sources.registry import load_table
 
-D2 = "decimal(18,2)"
-D4 = "decimal(18,4)"
 DISC = "CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))"
 
 
@@ -280,7 +278,7 @@ def q_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("l_quantity") < F.col("t"))
     return small.agg(
         F.round(
-            F.sum(F.col("l_extendedprice").cast(D2)).cast("double") / 7.0, 6
+            money_sum("l_extendedprice") / 7.0, 6
         ).alias("avg_yearly"),
         F.count(F.lit(1)).alias("n_rows"),
     )
@@ -296,7 +294,7 @@ thresh AS (
     SELECT l_partkey AS t_pk, 0.2 * avg(l_quantity) AS t
     FROM brand_li GROUP BY l_partkey
 )
-SELECT round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0, 6)
+SELECT round({duck_money_sum('l_extendedprice')} / 7.0, 6)
            AS avg_yearly,
        count(*) AS n_rows
 FROM brand_li JOIN thresh ON l_partkey = t_pk
@@ -364,7 +362,7 @@ def q_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     avg_bal = c.filter(F.col("c_acctbal") > 0.0).agg(
         (
-            F.sum(F.col("c_acctbal").cast(D2)).cast("double")
+            money_sum("c_acctbal")
             / F.count(F.lit(1))
         ).alias("a")
     )
@@ -375,7 +373,7 @@ def q_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_nationkey")
         .agg(
             F.count(F.lit(1)).alias("numcust"),
-            F.sum(F.col("c_acctbal").cast(D2)).cast("double").alias("totacctbal"),
+            money_sum("c_acctbal").alias("totacctbal"),
         )
         .orderBy("c_nationkey")
     )
@@ -383,11 +381,11 @@ def q_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SQL_IDLE_CUSTOMERS = f"""
 WITH avg_bal AS (
-    SELECT CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS a
+    SELECT {duck_money_sum('c_acctbal')} / count(*) AS a
     FROM customer WHERE c_acctbal > 0.0
 )
 SELECT c_nationkey, count(*) AS numcust,
-       CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
+       {duck_money_sum('c_acctbal')} AS totacctbal
 FROM customer, avg_bal
 WHERE c_acctbal > a
   AND NOT EXISTS (SELECT 1 FROM orders
@@ -684,24 +682,18 @@ def q_node_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return graph.node_jaccard(pairs)
 
 
-def _sql_node_jaccard(num_hashes: int = 16, bands: int = 8) -> str:
-    ctes, band_match, agree = _minhash_fragments(num_hashes, bands)
+def _sql_node_jaccard() -> str:
     return f"""
-WITH {ctes},
-p AS (
-    SELECT a.doc_id AS doc_1, b.doc_id AS doc_2
-    FROM sig a JOIN sig b ON a.doc_id < b.doc_id AND ({band_match})
-    WHERE ({agree}) / {num_hashes}.0 >= {NEAR_DUP_JACCARD}
-),
+WITH {_sql_near_dup_pairs()},
 edges AS (
-    SELECT doc_1, doc_2 FROM p
+    SELECT doc_1, doc_2 FROM pairs
     UNION ALL
-    SELECT doc_2, doc_1 FROM p
+    SELECT doc_2, doc_1 FROM pairs
 ),
 deg AS (SELECT doc_1, count(*) AS deg FROM edges GROUP BY doc_1),
 common AS (
     SELECT p.doc_1, p.doc_2, count(*) AS common
-    FROM p
+    FROM pairs p
     JOIN edges ea ON ea.doc_1 = p.doc_1
     JOIN edges eb ON eb.doc_1 = p.doc_2 AND eb.doc_2 = ea.doc_2
     GROUP BY p.doc_1, p.doc_2
@@ -710,7 +702,7 @@ SELECT p.doc_1, p.doc_2, d1.deg AS deg_1, d2.deg AS deg_2,
        CAST(COALESCE(c.common, 0) AS BIGINT) AS common,
        round(CAST(COALESCE(c.common, 0) AS DOUBLE)
              / (d1.deg + d2.deg - COALESCE(c.common, 0)), 6) AS jaccard
-FROM p
+FROM pairs p
 LEFT JOIN common c ON c.doc_1 = p.doc_1 AND c.doc_2 = p.doc_2
 JOIN deg d1 ON d1.doc_1 = p.doc_1
 JOIN deg d2 ON d2.doc_1 = p.doc_2
@@ -1526,7 +1518,7 @@ SELECT user_id,
        epoch_us(min(ts)) AS start_us,
        epoch_us(max(ts)) + {SESSION_GAP_MIN * 60 * 1_000_000} AS end_us,
        CAST(count(*) AS BIGINT) AS n_events,
-       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+       {duck_money_sum('value')} AS total_value
 FROM sess GROUP BY user_id, session_no
 ORDER BY user_id, start_us
 """

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pyspark_pipelining_spark.operators.dedup import duck_hash60
+from pyspark_pipelining_spark.operators.similarity import duck_cosine, duck_rank
 from pyspark_pipelining_spark.queries_llm import DIM, N_QUERIES, TOPK, _query_vecs
 from pyspark_pipelining_spark.sources.registry import load_table
 
@@ -53,8 +55,7 @@ scored AS (
     FROM corpus c, q WHERE c.vec_id != q.query_id
 )
 SELECT query_id, vec_id, hamming,
-       CAST(row_number() OVER (PARTITION BY query_id
-                               ORDER BY hamming ASC, vec_id ASC) AS INTEGER) AS rank
+       {duck_rank('hamming ASC, vec_id ASC')}
 FROM scored
 QUALIFY rank <= {TOPK}
 ORDER BY query_id, rank
@@ -75,10 +76,27 @@ def q_sim_bq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: the compressed rungs' refine stage over a ``short`` (query_id,
+#: vec_id) shortlist: exact cosine and top-k, as
+#: ``similarity._rerank_cosine``
+_SQL_RERANK = f"""q AS (
+    SELECT vec_id AS query_id, embedding AS query_vec
+    FROM embeddings WHERE vec_id < {N_QUERIES}
+),
+rer AS (
+    SELECT s.query_id, s.vec_id, {duck_cosine()} AS cosine
+    FROM short s
+    JOIN embeddings e ON s.vec_id = e.vec_id
+    JOIN q ON s.query_id = q.query_id
+)
+SELECT query_id, vec_id, cosine,
+       {duck_rank()}
+FROM rer
+QUALIFY rank <= {TOPK}
+ORDER BY query_id, rank"""
+
+
 def _sql_bq_rerank() -> str:
-    dot = "list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(q.query_vec AS DOUBLE[]))"
-    ne = "sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])))"
-    nq = "sqrt(list_dot_product(CAST(q.query_vec AS DOUBLE[]), CAST(q.query_vec AS DOUBLE[])))"
     return f"""
 WITH corpus AS (
     SELECT vec_id, {_sql_bq_word('embedding')} AS bq FROM embeddings
@@ -94,26 +112,14 @@ short AS (
         PARTITION BY qb.query_id
         ORDER BY bit_count(xor(c.bq, qb.qbq)) ASC, c.vec_id ASC) <= {BQ_SHORTLIST}
 ),
-q AS (
-    SELECT vec_id AS query_id, embedding AS query_vec
-    FROM embeddings WHERE vec_id < {N_QUERIES}
-),
-rer AS (
-    SELECT s.query_id, s.vec_id, round({dot} / ({ne} * {nq}), 6) AS cosine
-    FROM short s
-    JOIN embeddings e ON s.vec_id = e.vec_id
-    JOIN q ON s.query_id = q.query_id
-)
-SELECT query_id, vec_id, cosine,
-       CAST(row_number() OVER (PARTITION BY query_id
-                               ORDER BY cosine DESC, vec_id ASC) AS INTEGER) AS rank
-FROM rer
-QUALIFY rank <= {TOPK}
-ORDER BY query_id, rank
+{_SQL_RERANK}
 """
 
 
 SQL_SIM_BQ_RERANK = _sql_bq_rerank()
+
+
+HLL_WINDOW_DAYS = 7
 
 
 def q_hll_window_users(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -122,16 +128,16 @@ def q_hll_window_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark_pipelining_spark.operators.sketch import hll_windowed_distinct
 
     ev = load_table(spark, sf_dir, "events")
-    return hll_windowed_distinct(ev, "ts", "user_id", window_days=7)
+    return hll_windowed_distinct(ev, "ts", "user_id", window_days=HLL_WINDOW_DAYS)
 
 
-def _sql_hll_window(window_days: int = 7) -> str:
+def _sql_hll_window() -> str:
     from pyspark_pipelining_spark.operators.sketch import HLL_M, HLL_NUM, HLL_W
 
     return f"""
 WITH hashed AS (
     SELECT CAST(ts AS DATE) AS day,
-           ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT AS h
+           {duck_hash60('CAST(user_id AS VARCHAR)')} AS h
     FROM events
 ),
 regs AS (
@@ -143,7 +149,7 @@ regs AS (
 daily AS (SELECT day, bucket, max(rho) AS r FROM regs GROUP BY day, bucket),
 bounds AS (SELECT min(day) AS d0, max(day) AS d1 FROM daily),
 spans AS (
-    SELECT unnest(generate_series(day - {window_days - 1}, day, INTERVAL 1 DAY))::DATE
+    SELECT unnest(generate_series(day - {HLL_WINDOW_DAYS - 1}, day, INTERVAL 1 DAY))::DATE
                AS window_start,
            bucket, r
     FROM daily
@@ -163,13 +169,13 @@ est AS (
     FROM agg
 )
 SELECT e.window_start,
-       (e.window_start + INTERVAL {window_days - 1} DAY)::DATE AS window_end,
+       (e.window_start + INTERVAL {HLL_WINDOW_DAYS - 1} DAY)::DATE AS window_end,
        round(CASE WHEN raw <= 2.5 * {HLL_M} AND v > 0
                   THEN {float(HLL_M)} * ln({float(HLL_M)} / CAST(v AS DOUBLE))
                   ELSE raw END, 6) AS est_distinct
 FROM est e, bounds b
 WHERE e.window_start >= b.d0
-  AND e.window_start + INTERVAL {window_days - 1} DAY <= b.d1
+  AND e.window_start + INTERVAL {HLL_WINDOW_DAYS - 1} DAY <= b.d1
 ORDER BY e.window_start
 """
 
@@ -265,6 +271,86 @@ WAV_FIXTURE_DIR = _fixtures_dir("audio")
 
 WAV_WINDOW = 256
 
+#: the ``file_name`` column of every ``read_blob`` oracle: the path's
+#: last component, as Spark's binaryFile readers name it
+FILE_NAME = "regexp_extract(filename, '([^/]+)$', 1) AS file_name"
+
+
+def _le_hex(h: str, off: int | str, n: int, typ: str) -> str:
+    """The ``n``-byte little-endian integer at 0-based offset ``off``
+    (an int, or an SQL expression) of the hex text ``h``, cast to
+    ``typ``.  DuckDB parses ``'0x…'`` big-endian, so the byte pairs are
+    read last byte first."""
+    at = [off + 2 * i + 1 if isinstance(off, int) else f"{off} + {2 * i + 1}" for i in range(n)]
+    pairs = f"substring({h}, {at[-1]}, 2)"
+    for pos in reversed(at[:-1]):
+        pairs += f" || substring({h}, {pos}, 2)"
+    return f"CAST('0x' || {pairs} AS {typ})"
+
+
+def _s16(off: str) -> str:
+    """The signed PCM16 sample at hex offset ``off`` of a window's
+    ``chunk``."""
+    u = _le_hex("chunk", off, 2, "BIGINT")
+    return f"{u} - CASE WHEN {u} >= 32768 THEN 65536 ELSE 0 END"
+
+
+def _sql_wav_chunks(fixture_dir: str, ws: int, channels: int = 1) -> str:
+    """The ``wav``, ``hdr``, ``wins`` and ``chunks`` CTEs every WAV
+    oracle starts with, mirroring ``multimodal._wav_window_chunks``:
+    the canonical 44-byte RIFF/WAVE header of each file under
+    ``fixture_dir`` (size-gated like the Spark scan), then one row per
+    ``ws``-frame window of ``channels``-channel PCM16 data, carrying
+    that window's hex ``chunk``."""
+    from pyspark_pipelining_spark.operators.multimodal import (
+        WAV_HEX_SAFE_FILE_BYTES,
+        WAV_INT32_SAFE_DATA_BYTES,
+    )
+
+    # mirror of the operator's pre-hex size gate (tested on the cheap
+    # length metadata column BEFORE hexing, see multimodal.py — only
+    # the resulting ROW SET needs mirroring here; DuckDB's BIGINT
+    # positions and blob handling have no int32/array-ceiling hazard)
+    cap = min(WAV_INT32_SAFE_DATA_BYTES + 44, WAV_HEX_SAFE_FILE_BYTES)
+    fb = 2 * channels  # bytes per frame
+    return f"""wav AS (
+    SELECT {FILE_NAME},
+           octet_length(content) AS n_bytes,
+           hex(content) AS h
+    FROM read_blob('{sql_str_literal(fixture_dir)}/*.wav')
+    WHERE octet_length(content) <= {cap}
+),
+hdr AS (
+    SELECT file_name, n_bytes, h,
+           {_le_hex("h", 40, 2, "INT")} AS audio_fmt,
+           {_le_hex("h", 44, 2, "INT")} AS channels,
+           {_le_hex("h", 48, 4, "INT")} AS sample_rate,
+           {_le_hex("h", 68, 2, "INT")} AS bits,
+           {_le_hex("h", 80, 4, "BIGINT")} AS data_bytes
+    FROM wav
+    WHERE substring(h, 1, 8) = '52494646'
+      AND substring(h, 17, 8) = '57415645'
+      AND substring(h, 25, 8) = '666D7420'
+      AND substring(h, 73, 8) = '64617461'
+),
+wins AS (
+    SELECT file_name, sample_rate, data_bytes // {fb} AS n_total, h,
+           unnest(range(0, (data_bytes // {fb} - 1) // {ws} + 1)) AS win
+    FROM hdr
+    WHERE audio_fmt = 1 AND channels = {channels} AND bits = 16
+      -- degenerate-chunk guards mirroring the Spark side: at least one
+      -- whole frame, and the declared chunk present in the payload
+      AND data_bytes >= {fb} AND data_bytes <= n_bytes - 44
+),
+chunks AS (
+    SELECT file_name, sample_rate, win,
+           least({ws}, n_total - win * {ws}) AS n_samples,
+           substring(h, CAST(89 + win * {2 * fb * ws} AS BIGINT),
+                     CAST({2 * fb} * least({ws}, n_total - win * {ws}) AS BIGINT))
+               AS chunk
+    FROM wins
+)"""
+
 
 def q_wav_pcm_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-256-sample-window RMS and peak over REAL WAV files read as
@@ -290,67 +376,9 @@ def q_wav_pcm_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_wav_pcm_windows(ws: int = WAV_WINDOW) -> str:
-    from pyspark_pipelining_spark.operators.multimodal import (
-        WAV_HEX_SAFE_FILE_BYTES,
-        WAV_INT32_SAFE_DATA_BYTES,
-    )
-
-    # mirror of the operator's pre-hex size gate (tested on the cheap
-    # length metadata column BEFORE hexing, see multimodal.py — only
-    # the resulting ROW SET needs mirroring here; DuckDB's BIGINT
-    # positions and blob handling have no int32/array-ceiling hazard)
-    cap = min(WAV_INT32_SAFE_DATA_BYTES + 44, WAV_HEX_SAFE_FILE_BYTES)
-
-    u = (
-        "CAST('0x' || substring(chunk, 4 * j + 3, 2)"
-        " || substring(chunk, 4 * j + 1, 2) AS BIGINT)"
-    )
+def _sql_wav_pcm_windows() -> str:
     return f"""
-WITH wav AS (
-    SELECT regexp_extract(filename, '([^/]+)$', 1) AS file_name,
-           octet_length(content) AS n_bytes,
-           hex(content) AS h
-    FROM read_blob('{sql_str_literal(WAV_FIXTURE_DIR)}/*.wav')
-    WHERE octet_length(content) <= {cap}
-),
-hdr AS (
-    SELECT file_name, n_bytes, h,
-           CAST('0x' || substring(h, 43, 2) || substring(h, 41, 2) AS INT)
-               AS audio_fmt,
-           CAST('0x' || substring(h, 47, 2) || substring(h, 45, 2) AS INT)
-               AS channels,
-           CAST('0x' || substring(h, 55, 2) || substring(h, 53, 2)
-                || substring(h, 51, 2) || substring(h, 49, 2) AS INT)
-               AS sample_rate,
-           CAST('0x' || substring(h, 71, 2) || substring(h, 69, 2) AS INT)
-               AS bits,
-           CAST('0x' || substring(h, 87, 2) || substring(h, 85, 2)
-                || substring(h, 83, 2) || substring(h, 81, 2) AS BIGINT)
-               AS data_bytes
-    FROM wav
-    WHERE substring(h, 1, 8) = '52494646'
-      AND substring(h, 17, 8) = '57415645'
-      AND substring(h, 25, 8) = '666D7420'
-      AND substring(h, 73, 8) = '64617461'
-),
-wins AS (
-    SELECT file_name, sample_rate, data_bytes // 2 AS n_total, h,
-           unnest(range(0, (data_bytes // 2 - 1) // {ws} + 1)) AS win
-    FROM hdr
-    WHERE audio_fmt = 1 AND channels = 1 AND bits = 16
-      -- degenerate-chunk guards mirroring the Spark side: at least one
-      -- whole sample, and the declared chunk present in the payload
-      AND data_bytes >= 2 AND data_bytes <= n_bytes - 44
-),
-chunks AS (
-    SELECT file_name, sample_rate, win,
-           least({ws}, n_total - win * {ws}) AS n_samples,
-           substring(h, CAST(89 + win * {4 * ws} AS BIGINT),
-                     CAST(4 * least({ws}, n_total - win * {ws}) AS BIGINT))
-               AS chunk
-    FROM wins
-),
+WITH {_sql_wav_chunks(WAV_FIXTURE_DIR, WAV_WINDOW)},
 samp AS (
     SELECT file_name, sample_rate, win, n_samples, chunk,
            unnest(range(0, n_samples)) AS j
@@ -358,7 +386,7 @@ samp AS (
 ),
 vals AS (
     SELECT file_name, sample_rate, win, n_samples,
-           {u} - CASE WHEN {u} >= 32768 THEN 65536 ELSE 0 END AS v
+           {_s16("4 * j")} AS v
     FROM samp
 )
 SELECT file_name, CAST(win AS BIGINT) AS win,
@@ -370,7 +398,6 @@ FROM vals
 GROUP BY file_name, win, sample_rate, n_samples
 ORDER BY file_name, win
 """
-
 
 SQL_WAV_PCM_WINDOWS = _sql_wav_pcm_windows()
 
@@ -419,44 +446,45 @@ def q_png_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_png_chunks(mc: int = PNG_MAX_CHUNKS, fixture_dir: str = PNG_FIXTURE_DIR) -> str:
-    # fixture_dir is parameterized so the stray-lake parity test can run
-    # the SAME oracle over a planted tmp dir; default is the committed set
+def _sql_png_walk(fixture_dir: str, crc: bool = False) -> str:
+    """The ``png``, ``walk`` and ``valid`` CTEs: the recursive chunk walk
+    over each PNG under ``fixture_dir`` (``multimodal.png_chunk_walk``'s
+    fold), one row per chunk (plus a seed row, ``idx`` -1), and the
+    files whose walk ends cleanly at IEND exactly at EOF.  ``crc`` adds
+    each chunk's stored CRC."""
     t = "chr(b0) || chr(b1) || chr(b2) || chr(b3)"
-    return f"""
-WITH RECURSIVE png AS (
-    SELECT regexp_extract(filename, '([^/]+)$', 1) AS file_name,
+    mc = PNG_MAX_CHUNKS
+    seed = step = ""
+    if crc:
+        seed = " CAST(NULL AS BIGINT) AS crc,"
+        step = " CAST('0x' || substring(hx, CAST(2 * (nxt + 8 + len) + 1 AS BIGINT), 8) AS BIGINT),"
+    return f"""png AS (
+    SELECT {FILE_NAME},
            octet_length(content) AS n_bytes,
-           hex(content) AS h
+           hex(content) AS hx
     FROM read_blob('{sql_str_literal(fixture_dir)}/*.png')
     WHERE substring(hex(content), 1, 16) = '89504E470D0A1A0A'
 ),
 walk AS (
-    SELECT file_name, n_bytes, h,
+    SELECT file_name, n_bytes, hx,
            CAST(8 AS BIGINT) AS nxt, CAST(-1 AS BIGINT) AS idx,
            CAST(NULL AS BIGINT) AS coff, CAST(NULL AS BIGINT) AS clen,
-           CAST(NULL AS VARCHAR) AS ctype, CAST(NULL AS BIGINT) AS crc,
-           FALSE AS done
+           CAST(NULL AS VARCHAR) AS ctype,{seed} FALSE AS done
     FROM png
     UNION ALL
-    SELECT file_name, n_bytes, h,
-           nxt + 12 + len, idx + 1,
-           nxt, len,
-           {t},
-           CAST('0x' || substring(h, CAST(2 * (nxt + 8 + len) + 1 AS BIGINT), 8)
-                AS BIGINT),
-           {t} = 'IEND'
+    SELECT file_name, n_bytes, hx,
+           nxt + 12 + len, idx + 1, nxt, len, {t},{step} {t} = 'IEND'
     FROM (
         SELECT *,
-               CAST('0x' || substring(h, CAST(2 * nxt + 1 AS BIGINT), 8)
+               CAST('0x' || substring(hx, CAST(2 * nxt + 1 AS BIGINT), 8)
                     AS BIGINT) AS len,
-               CAST('0x' || substring(h, CAST(2 * nxt + 9 AS BIGINT), 2)
+               CAST('0x' || substring(hx, CAST(2 * nxt + 9 AS BIGINT), 2)
                     AS INT) AS b0,
-               CAST('0x' || substring(h, CAST(2 * nxt + 11 AS BIGINT), 2)
+               CAST('0x' || substring(hx, CAST(2 * nxt + 11 AS BIGINT), 2)
                     AS INT) AS b1,
-               CAST('0x' || substring(h, CAST(2 * nxt + 13 AS BIGINT), 2)
+               CAST('0x' || substring(hx, CAST(2 * nxt + 13 AS BIGINT), 2)
                     AS INT) AS b2,
-               CAST('0x' || substring(h, CAST(2 * nxt + 15 AS BIGINT), 2)
+               CAST('0x' || substring(hx, CAST(2 * nxt + 15 AS BIGINT), 2)
                     AS INT) AS b3
         FROM walk
         -- idx cap mirrors Spark's {mc}-step fold: the {mc}-th chunk
@@ -469,15 +497,19 @@ walk AS (
       AND ((b3 BETWEEN 65 AND 90) OR (b3 BETWEEN 97 AND 122))
       AND nxt + 12 + len <= n_bytes
 ),
-valid AS (
-    SELECT file_name FROM walk WHERE done AND nxt = n_bytes
-)
+valid AS (SELECT file_name FROM walk WHERE done AND nxt = n_bytes)"""
+
+
+def _sql_png_chunks(fixture_dir: str = PNG_FIXTURE_DIR) -> str:
+    # fixture_dir is parameterized so the stray-lake parity test can run
+    # the SAME oracle over a planted tmp dir; default is the committed set
+    return f"""
+WITH RECURSIVE {_sql_png_walk(fixture_dir, crc=True)}
 SELECT w.file_name, w.idx, w.coff AS off, w.ctype, w.clen, w.crc
 FROM walk w JOIN valid v USING (file_name)
 WHERE w.idx >= 0
 ORDER BY file_name, idx
 """
-
 
 SQL_PNG_CHUNKS = _sql_png_chunks()
 
@@ -512,13 +544,17 @@ def q_png_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_png_pixel_stats(
-    mc: int = PNG_MAX_CHUNKS,
-    fixture_dir: str = PNG_FIXTURE_DIR,
+def _sql_png_inflate(
+    fixture_dir: str,
     max_px: int | None = None,
     max_blocks: int | None = None,
     max_rows: int | None = None,
 ) -> str:
+    """The decoders' front half: :func:`_sql_png_walk`, then the IHDR,
+    IDAT and PLTE chunks, the structural gates (``max_px`` pixels,
+    ``max_rows`` rows; ``multimodal``'s caps by default), and the
+    recursive stored-block zlib walk (``max_blocks`` blocks) to
+    ``rawimg``, each file's raw scanline hex ``outh``."""
     from pyspark_pipelining_spark.operators.multimodal import (
         PNG_MAX_ROWS,
         PNG_PIXEL_MAX,
@@ -528,46 +564,7 @@ def _sql_png_pixel_stats(
     mpx = PNG_PIXEL_MAX if max_px is None else int(max_px)
     mb = PNG_ZLIB_MAX_BLOCKS if max_blocks is None else int(max_blocks)
     mrows = PNG_MAX_ROWS if max_rows is None else int(max_rows)
-    t = "chr(b0) || chr(b1) || chr(b2) || chr(b3)"
-    return f"""
-WITH RECURSIVE png AS (
-    SELECT regexp_extract(filename, '([^/]+)$', 1) AS file_name,
-           octet_length(content) AS n_bytes,
-           hex(content) AS hx
-    FROM read_blob('{sql_str_literal(fixture_dir)}/*.png')
-    WHERE substring(hex(content), 1, 16) = '89504E470D0A1A0A'
-),
-walk AS (
-    SELECT file_name, n_bytes, hx,
-           CAST(8 AS BIGINT) AS nxt, CAST(-1 AS BIGINT) AS idx,
-           CAST(NULL AS BIGINT) AS coff, CAST(NULL AS BIGINT) AS clen,
-           CAST(NULL AS VARCHAR) AS ctype, FALSE AS done
-    FROM png
-    UNION ALL
-    SELECT file_name, n_bytes, hx,
-           nxt + 12 + len, idx + 1, nxt, len, {t}, {t} = 'IEND'
-    FROM (
-        SELECT *,
-               CAST('0x' || substring(hx, CAST(2 * nxt + 1 AS BIGINT), 8)
-                    AS BIGINT) AS len,
-               CAST('0x' || substring(hx, CAST(2 * nxt + 9 AS BIGINT), 2)
-                    AS INT) AS b0,
-               CAST('0x' || substring(hx, CAST(2 * nxt + 11 AS BIGINT), 2)
-                    AS INT) AS b1,
-               CAST('0x' || substring(hx, CAST(2 * nxt + 13 AS BIGINT), 2)
-                    AS INT) AS b2,
-               CAST('0x' || substring(hx, CAST(2 * nxt + 15 AS BIGINT), 2)
-                    AS INT) AS b3
-        FROM walk
-        WHERE NOT done AND nxt + 8 <= n_bytes AND idx <= {mc - 2}
-    ) s
-    WHERE ((b0 BETWEEN 65 AND 90) OR (b0 BETWEEN 97 AND 122))
-      AND ((b1 BETWEEN 65 AND 90) OR (b1 BETWEEN 97 AND 122))
-      AND ((b2 BETWEEN 65 AND 90) OR (b2 BETWEEN 97 AND 122))
-      AND ((b3 BETWEEN 65 AND 90) OR (b3 BETWEEN 97 AND 122))
-      AND nxt + 12 + len <= n_bytes
-),
-valid AS (SELECT file_name FROM walk WHERE done AND nxt = n_bytes),
+    return f"""{_sql_png_walk(fixture_dir)},
 chunks AS (
     SELECT w.file_name, w.idx, w.coff, w.clen, w.ctype, w.hx
     FROM walk w JOIN valid v USING (file_name) WHERE w.idx >= 0
@@ -600,7 +597,7 @@ idat AS (
 plte AS (
     SELECT file_name, count(*) AS n_plte, min(clen) AS plen,
            min(substring(hx, CAST(2 * (coff + 8) + 1 AS BIGINT),
-                         CAST(2 * clen AS BIGINT)))  AS phex
+                         CAST(2 * clen AS BIGINT))) AS phex
     FROM chunks WHERE ctype = 'PLTE' GROUP BY file_name
 ),
 meta AS (
@@ -670,7 +667,17 @@ rawimg AS (
     SELECT file_name, w, h, ct, bpp, ch, phex, outh
     FROM zwalk
     WHERE done AND zoff + 4 = lz AND length(outh) = 2 * h * (1 + w * bpp)
-),
+)"""
+
+
+def _sql_png_pixel_stats(
+    fixture_dir: str = PNG_FIXTURE_DIR,
+    max_px: int | None = None,
+    max_blocks: int | None = None,
+    max_rows: int | None = None,
+) -> str:
+    return f"""
+WITH RECURSIVE {_sql_png_inflate(fixture_dir, max_px, max_blocks, max_rows)},
 badfilter AS (
     SELECT DISTINCT file_name FROM (
         SELECT file_name, outh, w, bpp, unnest(range(h)) AS rr FROM rawimg
@@ -778,155 +785,14 @@ def q_png_filter_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_png_filter_pixel_stats(
-    mc: int = PNG_MAX_CHUNKS,
-    fixture_dir: str = PNG_FILTER_FIXTURE_DIR,
-    max_px: int | None = None,
-    max_blocks: int | None = None,
-    max_rows: int | None = None,
-) -> str:
+def _sql_png_filter_pixel_stats(fixture_dir: str = PNG_FILTER_FIXTURE_DIR) -> str:
     """The independent second decoder, filters 0/1/2: the chunk/zlib
-    walk CTEs mirror ``_sql_png_pixel_stats`` (same gates, same caps),
+    walk is ``_sql_png_pixel_stats``' own (:func:`_sql_png_inflate`),
     then the reconstruction runs as window prefix sums over the
     unnested scanline bytes — the same mod-256 telescoping algebra as
     the Spark plan, independently expressed."""
-    from pyspark_pipelining_spark.operators.multimodal import (
-        PNG_MAX_ROWS,
-        PNG_PIXEL_MAX,
-        PNG_ZLIB_MAX_BLOCKS,
-    )
-
-    mpx = PNG_PIXEL_MAX if max_px is None else int(max_px)
-    mb = PNG_ZLIB_MAX_BLOCKS if max_blocks is None else int(max_blocks)
-    mrows = PNG_MAX_ROWS if max_rows is None else int(max_rows)
-    t = "chr(b0) || chr(b1) || chr(b2) || chr(b3)"
     return f"""
-WITH RECURSIVE png AS (
-    SELECT regexp_extract(filename, '([^/]+)$', 1) AS file_name,
-           octet_length(content) AS n_bytes,
-           hex(content) AS hx
-    FROM read_blob('{sql_str_literal(fixture_dir)}/*.png')
-    WHERE substring(hex(content), 1, 16) = '89504E470D0A1A0A'
-),
-walk AS (
-    SELECT file_name, n_bytes, hx,
-           CAST(8 AS BIGINT) AS nxt, CAST(-1 AS BIGINT) AS idx,
-           CAST(NULL AS BIGINT) AS coff, CAST(NULL AS BIGINT) AS clen,
-           CAST(NULL AS VARCHAR) AS ctype, FALSE AS done
-    FROM png
-    UNION ALL
-    SELECT file_name, n_bytes, hx,
-           nxt + 12 + len, idx + 1, nxt, len, {t}, {t} = 'IEND'
-    FROM (
-        SELECT *,
-               CAST('0x' || substring(hx, CAST(2 * nxt + 1 AS BIGINT), 8)
-                    AS BIGINT) AS len,
-               CAST('0x' || substring(hx, CAST(2 * nxt + 9 AS BIGINT), 2)
-                    AS INT) AS b0,
-               CAST('0x' || substring(hx, CAST(2 * nxt + 11 AS BIGINT), 2)
-                    AS INT) AS b1,
-               CAST('0x' || substring(hx, CAST(2 * nxt + 13 AS BIGINT), 2)
-                    AS INT) AS b2,
-               CAST('0x' || substring(hx, CAST(2 * nxt + 15 AS BIGINT), 2)
-                    AS INT) AS b3
-        FROM walk
-        WHERE NOT done AND nxt + 8 <= n_bytes AND idx <= {mc - 2}
-    ) s
-    WHERE ((b0 BETWEEN 65 AND 90) OR (b0 BETWEEN 97 AND 122))
-      AND ((b1 BETWEEN 65 AND 90) OR (b1 BETWEEN 97 AND 122))
-      AND ((b2 BETWEEN 65 AND 90) OR (b2 BETWEEN 97 AND 122))
-      AND ((b3 BETWEEN 65 AND 90) OR (b3 BETWEEN 97 AND 122))
-      AND nxt + 12 + len <= n_bytes
-),
-valid AS (SELECT file_name FROM walk WHERE done AND nxt = n_bytes),
-chunks AS (
-    SELECT w.file_name, w.idx, w.coff, w.clen, w.ctype, w.hx
-    FROM walk w JOIN valid v USING (file_name) WHERE w.idx >= 0
-),
-ihdr AS (
-    SELECT file_name,
-           CAST('0x' || substring(hx, CAST(2 * (coff + 8) + 1 AS BIGINT), 8)
-                AS BIGINT) AS w,
-           CAST('0x' || substring(hx, CAST(2 * (coff + 12) + 1 AS BIGINT), 8)
-                AS BIGINT) AS h,
-           CAST('0x' || substring(hx, CAST(2 * (coff + 16) + 1 AS BIGINT), 2)
-                AS INT) AS bd,
-           CAST('0x' || substring(hx, CAST(2 * (coff + 17) + 1 AS BIGINT), 2)
-                AS INT) AS ct,
-           CAST('0x' || substring(hx, CAST(2 * (coff + 18) + 1 AS BIGINT), 2)
-                AS INT) AS cm,
-           CAST('0x' || substring(hx, CAST(2 * (coff + 19) + 1 AS BIGINT), 2)
-                AS INT) AS fm,
-           CAST('0x' || substring(hx, CAST(2 * (coff + 20) + 1 AS BIGINT), 2)
-                AS INT) AS il
-    FROM chunks WHERE idx = 0 AND ctype = 'IHDR' AND clen = 13
-),
-idat AS (
-    SELECT file_name,
-           string_agg(substring(hx, CAST(2 * (coff + 8) + 1 AS BIGINT),
-                                CAST(2 * clen AS BIGINT)), ''
-                      ORDER BY idx) AS zh
-    FROM chunks WHERE ctype = 'IDAT' GROUP BY file_name
-),
-plte AS (
-    SELECT file_name, count(*) AS n_plte, min(clen) AS plen,
-           min(substring(hx, CAST(2 * (coff + 8) + 1 AS BIGINT),
-                         CAST(2 * clen AS BIGINT))) AS phex
-    FROM chunks WHERE ctype = 'PLTE' GROUP BY file_name
-),
-meta AS (
-    SELECT i.file_name, i.w, i.h, i.ct,
-           CASE WHEN i.ct = 2 THEN 3 ELSE 1 END AS bpp,
-           CASE WHEN i.ct = 0 THEN 1 ELSE 3 END AS ch,
-           COALESCE(p.phex, '') AS phex, d.zh,
-           length(d.zh) // 2 AS lz
-    FROM ihdr i JOIN idat d USING (file_name)
-    LEFT JOIN plte p USING (file_name)
-    WHERE i.bd = 8 AND i.ct IN (0, 2, 3) AND i.cm = 0 AND i.fm = 0
-      AND i.il = 0
-      AND i.w BETWEEN 1 AND {mpx} AND i.h BETWEEN 1 AND {mrows}
-      AND CASE WHEN i.w BETWEEN 1 AND {mpx} AND i.h BETWEEN 1 AND {mrows}
-               THEN i.w * i.h ELSE {mpx} + 1 END <= {mpx}
-      AND (i.ct != 3 OR (p.n_plte = 1 AND p.plen % 3 = 0
-                         AND p.plen BETWEEN 3 AND 768))
-      AND length(d.zh) >= 22
-      AND length(d.zh) <= {2 * (3 * mpx + mrows + 5 * mb + 64)}
-      AND CAST('0x' || substring(d.zh, 1, 2) AS INT) % 16 = 8
-      AND (CAST('0x' || substring(d.zh, 3, 2) AS INT) // 32) % 2 = 0
-),
-zwalk AS (
-    SELECT file_name, w, h, ct, bpp, ch, phex, zh, lz,
-           CAST(2 AS BIGINT) AS zoff, CAST('' AS VARCHAR) AS outh,
-           CAST(0 AS BIGINT) AS zi, FALSE AS done
-    FROM meta
-    UNION ALL
-    SELECT file_name, w, h, ct, bpp, ch, phex, zh, lz,
-           zoff + 5 + blen,
-           outh || substring(zh, CAST(2 * (zoff + 5) + 1 AS BIGINT),
-                             CAST(2 * blen AS BIGINT)),
-           zi + 1, bf = 1
-    FROM (
-        SELECT *,
-               CAST('0x' || substring(zh, CAST(2 * zoff + 1 AS BIGINT), 2)
-                    AS INT) AS bf,
-               CAST('0x' || substring(zh, CAST(2 * zoff + 3 AS BIGINT), 2)
-                    AS BIGINT)
-               + 256 * CAST('0x' || substring(zh, CAST(2 * zoff + 5 AS BIGINT), 2)
-                    AS BIGINT) AS blen,
-               CAST('0x' || substring(zh, CAST(2 * zoff + 7 AS BIGINT), 2)
-                    AS BIGINT)
-               + 256 * CAST('0x' || substring(zh, CAST(2 * zoff + 9 AS BIGINT), 2)
-                    AS BIGINT) AS nlen
-        FROM zwalk
-        WHERE NOT done AND zi < {mb}
-    ) s
-    WHERE bf IN (0, 1) AND nlen = 65535 - blen AND zoff + 5 + blen + 4 <= lz
-),
-rawimg AS (
-    SELECT file_name, w, h, ct, bpp, ch, phex, outh
-    FROM zwalk
-    WHERE done AND zoff + 4 = lz AND length(outh) = 2 * h * (1 + w * bpp)
-),
+WITH RECURSIVE {_sql_png_inflate(fixture_dir)},
 badfilter AS (
     -- only None/Sub/Up are decodable; any other filter type drops
     -- the whole file (Average/Paeth stay behind the codec path)
@@ -1059,65 +925,12 @@ def q_wav_window_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_wav_window_features() -> str:
-    from pyspark_pipelining_spark.operators.multimodal import (
-        WAV_HEX_SAFE_FILE_BYTES,
-        WAV_INT32_SAFE_DATA_BYTES,
-    )
-
-    ws = WAV_WINDOW
-    cap = min(WAV_INT32_SAFE_DATA_BYTES + 44, WAV_HEX_SAFE_FILE_BYTES)
-    u = (
-        "CAST('0x' || substring(chunk, 4 * j + 3, 2)"
-        " || substring(chunk, 4 * j + 1, 2) AS BIGINT)"
-    )
-    # header/window CTEs mirror SQL_WAV_PCM_WINDOWS (same gate, same
-    # guards — one row set); the feature pairs come from lag() OVER the
-    # per-window sample order j, so pairs never span a window boundary,
-    # matching the Spark fold's per-chunk scope.  NULL lag at j=0:
-    # NULL*v<0 falls through the CASE and coalesce keeps ac exact.
+    # the feature pairs come from lag() OVER the per-window sample
+    # order j, so pairs never span a window boundary, matching the
+    # Spark fold's per-chunk scope.  NULL lag at j=0: NULL*v<0 falls
+    # through the CASE and coalesce keeps ac exact.
     return f"""
-WITH wav AS (
-    SELECT regexp_extract(filename, '([^/]+)$', 1) AS file_name,
-           octet_length(content) AS n_bytes,
-           hex(content) AS h
-    FROM read_blob('{sql_str_literal(WAV_FIXTURE_DIR)}/*.wav')
-    WHERE octet_length(content) <= {cap}
-),
-hdr AS (
-    SELECT file_name, n_bytes, h,
-           CAST('0x' || substring(h, 43, 2) || substring(h, 41, 2) AS INT)
-               AS audio_fmt,
-           CAST('0x' || substring(h, 47, 2) || substring(h, 45, 2) AS INT)
-               AS channels,
-           CAST('0x' || substring(h, 55, 2) || substring(h, 53, 2)
-                || substring(h, 51, 2) || substring(h, 49, 2) AS INT)
-               AS sample_rate,
-           CAST('0x' || substring(h, 71, 2) || substring(h, 69, 2) AS INT)
-               AS bits,
-           CAST('0x' || substring(h, 87, 2) || substring(h, 85, 2)
-                || substring(h, 83, 2) || substring(h, 81, 2) AS BIGINT)
-               AS data_bytes
-    FROM wav
-    WHERE substring(h, 1, 8) = '52494646'
-      AND substring(h, 17, 8) = '57415645'
-      AND substring(h, 25, 8) = '666D7420'
-      AND substring(h, 73, 8) = '64617461'
-),
-wins AS (
-    SELECT file_name, sample_rate, data_bytes // 2 AS n_total, h,
-           unnest(range(0, (data_bytes // 2 - 1) // {ws} + 1)) AS win
-    FROM hdr
-    WHERE audio_fmt = 1 AND channels = 1 AND bits = 16
-      AND data_bytes >= 2 AND data_bytes <= n_bytes - 44
-),
-chunks AS (
-    SELECT file_name, sample_rate, win,
-           least({ws}, n_total - win * {ws}) AS n_samples,
-           substring(h, CAST(89 + win * {4 * ws} AS BIGINT),
-                     CAST(4 * least({ws}, n_total - win * {ws}) AS BIGINT))
-               AS chunk
-    FROM wins
-),
+WITH {_sql_wav_chunks(WAV_FIXTURE_DIR, WAV_WINDOW)},
 samp AS (
     SELECT file_name, sample_rate, win, n_samples, chunk,
            unnest(range(0, n_samples)) AS j
@@ -1125,7 +938,7 @@ samp AS (
 ),
 vals AS (
     SELECT file_name, sample_rate, win, n_samples, j,
-           {u} - CASE WHEN {u} >= 32768 THEN 65536 ELSE 0 END AS v
+           {_s16("4 * j")} AS v
     FROM samp
 ),
 pairs AS (
@@ -1192,66 +1005,13 @@ def q_wav_stereo_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_wav_stereo_features() -> str:
-    from pyspark_pipelining_spark.operators.multimodal import (
-        WAV_HEX_SAFE_FILE_BYTES,
-        WAV_INT32_SAFE_DATA_BYTES,
-    )
-
-    ws = WAV_STEREO_WINDOW
-    cap = min(WAV_INT32_SAFE_DATA_BYTES + 44, WAV_HEX_SAFE_FILE_BYTES)
-    u = (
-        "CAST('0x' || substring(chunk, 8 * j + 4 * channel + 3, 2)"
-        " || substring(chunk, 8 * j + 4 * channel + 1, 2) AS BIGINT)"
-    )
-    # header/window CTEs mirror SQL_WAV_WINDOW_FEATURES with the
-    # channels=2 gate and FRAME accounting (data_bytes // 4; a
-    # trailing partial frame truncates); the per-channel fanout is an
-    # unnest over [0, 1] and the feature pairs come from lag() OVER
-    # the per-(window, channel) sample order, so pairs never span a
-    # window NOR a channel — matching the Spark fold's scope.
+    # FRAME accounting (data_bytes // 4; a trailing partial frame
+    # truncates); the per-channel fanout is an unnest over [0, 1] and
+    # the feature pairs come from lag() OVER the per-(window, channel)
+    # sample order, so pairs never span a window NOR a channel —
+    # matching the Spark fold's scope.
     return f"""
-WITH wav AS (
-    SELECT regexp_extract(filename, '([^/]+)$', 1) AS file_name,
-           octet_length(content) AS n_bytes,
-           hex(content) AS h
-    FROM read_blob('{sql_str_literal(WAV_STEREO_FIXTURE_DIR)}/*.wav')
-    WHERE octet_length(content) <= {cap}
-),
-hdr AS (
-    SELECT file_name, n_bytes, h,
-           CAST('0x' || substring(h, 43, 2) || substring(h, 41, 2) AS INT)
-               AS audio_fmt,
-           CAST('0x' || substring(h, 47, 2) || substring(h, 45, 2) AS INT)
-               AS channels,
-           CAST('0x' || substring(h, 55, 2) || substring(h, 53, 2)
-                || substring(h, 51, 2) || substring(h, 49, 2) AS INT)
-               AS sample_rate,
-           CAST('0x' || substring(h, 71, 2) || substring(h, 69, 2) AS INT)
-               AS bits,
-           CAST('0x' || substring(h, 87, 2) || substring(h, 85, 2)
-                || substring(h, 83, 2) || substring(h, 81, 2) AS BIGINT)
-               AS data_bytes
-    FROM wav
-    WHERE substring(h, 1, 8) = '52494646'
-      AND substring(h, 17, 8) = '57415645'
-      AND substring(h, 25, 8) = '666D7420'
-      AND substring(h, 73, 8) = '64617461'
-),
-wins AS (
-    SELECT file_name, sample_rate, data_bytes // 4 AS n_total, h,
-           unnest(range(0, (data_bytes // 4 - 1) // {ws} + 1)) AS win
-    FROM hdr
-    WHERE audio_fmt = 1 AND channels = 2 AND bits = 16
-      AND data_bytes >= 4 AND data_bytes <= n_bytes - 44
-),
-chunks AS (
-    SELECT file_name, sample_rate, win,
-           least({ws}, n_total - win * {ws}) AS n_samples,
-           substring(h, CAST(89 + win * {8 * ws} AS BIGINT),
-                     CAST(8 * least({ws}, n_total - win * {ws}) AS BIGINT))
-               AS chunk
-    FROM wins
-),
+WITH {_sql_wav_chunks(WAV_STEREO_FIXTURE_DIR, WAV_STEREO_WINDOW, channels=2)},
 chans AS (
     SELECT file_name, sample_rate, win, n_samples, chunk,
            unnest([CAST(0 AS BIGINT), CAST(1 AS BIGINT)]) AS channel
@@ -1264,7 +1024,7 @@ samp AS (
 ),
 vals AS (
     SELECT file_name, sample_rate, win, channel, n_samples, j,
-           {u} - CASE WHEN {u} >= 32768 THEN 65536 ELSE 0 END AS v
+           {_s16("8 * j + 4 * channel")} AS v
     FROM samp
 ),
 pairs AS (
@@ -1345,18 +1105,6 @@ def _sql_sim_sq8_rerank() -> str:
             f" ELSE 0 END)"
         )
 
-    dot = (
-        "list_dot_product(CAST(e.embedding AS DOUBLE[]),"
-        " CAST(q.query_vec AS DOUBLE[]))"
-    )
-    ne = (
-        "sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]),"
-        " CAST(e.embedding AS DOUBLE[])))"
-    )
-    nq = (
-        "sqrt(list_dot_product(CAST(q.query_vec AS DOUBLE[]),"
-        " CAST(q.query_vec AS DOUBLE[])))"
-    )
     return f"""
 WITH dims AS (
     SELECT t.i,
@@ -1384,22 +1132,7 @@ short AS (
                           i -> (c.sq[i + 1] - 128) * (qc.qsq[i + 1] - 128))) DESC,
                  c.vec_id ASC) <= {SQ8_SHORTLIST}
 ),
-q AS (
-    SELECT vec_id AS query_id, embedding AS query_vec
-    FROM embeddings WHERE vec_id < {N_QUERIES}
-),
-rer AS (
-    SELECT s.query_id, s.vec_id, round({dot} / ({ne} * {nq}), 6) AS cosine
-    FROM short s
-    JOIN embeddings e ON s.vec_id = e.vec_id
-    JOIN q ON s.query_id = q.query_id
-)
-SELECT query_id, vec_id, cosine,
-       CAST(row_number() OVER (PARTITION BY query_id
-                               ORDER BY cosine DESC, vec_id ASC) AS INTEGER) AS rank
-FROM rer
-QUALIFY rank <= {TOPK}
-ORDER BY query_id, rank
+{_SQL_RERANK}
 """
 
 
@@ -1455,7 +1188,6 @@ def q_sim_ivf_learned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_sim_ivf_learned_topk() -> str:
-    from pyspark_pipelining_spark.queries_llm import _DOT, _NE, _NQ
     from pyspark_pipelining_spark.sources.registry import sql_str_literal
 
     g = CENT_GRID
@@ -1499,11 +1231,11 @@ probes AS (
 ),
 pairs AS (
     SELECT q.query_id, e.vec_id,
-           round({_DOT} / ({_NE} * {_NQ}), 6) AS cosine
+           {duck_cosine()} AS cosine
     FROM corpus e JOIN probes q ON e.cell = q.cell AND e.vec_id != q.query_id
 ),
 ranked AS (
-    SELECT *, CAST(row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id ASC) AS INTEGER) AS rank
+    SELECT *, {duck_rank()}
     FROM pairs
 )
 SELECT query_id, vec_id, cosine, rank FROM ranked WHERE rank <= {TOPK}

@@ -16,8 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark_pipelining_spark.operators import corpus, similarity
-from pyspark_pipelining_spark.operators.dedup import MERSENNE, NEAR_DUP_JACCARD, portable_hash60
-from pyspark_pipelining_spark.queries_llm import SQL_WORDS
+from pyspark_pipelining_spark.operators.dedup import MERSENNE, duck_hash60, portable_hash60
+from pyspark_pipelining_spark.queries_llm import SQL_WORDS, _sql_near_dup_pairs
 from pyspark_pipelining_spark.sources.registry import load_table
 
 EVAL_SOURCE = "src19"  # stand-in benchmark set for the decontamination scan
@@ -63,11 +63,11 @@ tg AS (
 ),
 cg AS (
     SELECT doc_id,
-           ('0x' || substr(md5(g), 1, 15))::BIGINT % {MERSENNE} AS gid
+           {duck_hash60('g')} % {MERSENNE} AS gid
     FROM (SELECT DISTINCT doc_id, unnest(gs) AS g FROM tg WHERE source <> '{EVAL_SOURCE}')
 ),
 eg AS (
-    SELECT DISTINCT ('0x' || substr(md5(g), 1, 15))::BIGINT % {MERSENNE} AS gid
+    SELECT DISTINCT {duck_hash60('g')} % {MERSENNE} AS gid
     FROM (SELECT DISTINCT unnest(gs) AS g FROM tg WHERE source = '{EVAL_SOURCE}')
 ),
 hits AS (
@@ -158,7 +158,7 @@ cut AS (
 )
 SELECT d.doc_id, d.source, d.n_chars
 FROM documents d JOIN cut ON d.source = cut.source
-WHERE ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 15))::BIGINT
+WHERE {duck_hash60('CAST(d.doc_id AS VARCHAR)')}
       % {MIX_GRID} < cutv
 """
 
@@ -201,7 +201,7 @@ tok2 AS (SELECT lang, token FROM tok WHERE length(token) > 0),
 ref AS (SELECT DISTINCT token FROM tok2 WHERE lang = 'en'),
 cand AS (SELECT DISTINCT token FROM tok2 WHERE lang <> 'en'),
 ref_pos AS (
-    SELECT ('0x' || substr(md5(t.i || ':' || token), 1, 15))::BIGINT % {BLOOM_M} AS p
+    SELECT {duck_hash60("t.i || ':' || token")} % {BLOOM_M} AS p
     FROM ref, range({BLOOM_K}) t(i)
 ),
 bloom AS (
@@ -211,7 +211,7 @@ bloom AS (
 ),
 probe AS (
     SELECT cand.token,
-           ('0x' || substr(md5(t.i || ':' || cand.token), 1, 15))::BIGINT % {BLOOM_M} AS p
+           {duck_hash60("t.i || ':' || cand.token")} % {BLOOM_M} AS p
     FROM cand, range({BLOOM_K}) t(i)
 ),
 hits AS (
@@ -321,7 +321,7 @@ tok AS (
 tok2 AS (SELECT token FROM tok WHERE length(token) > 0),
 counters AS (
     SELECT t.d,
-           ('0x' || substr(md5(CAST(t.d AS VARCHAR) || ':' || token), 1, 15))::BIGINT
+           {duck_hash60("CAST(t.d AS VARCHAR) || ':' || token")}
                % {CMS_WIDTH} AS bucket,
            CAST(count(*) AS BIGINT) AS c
     FROM tok2, range({CMS_DEPTH}) t(d)
@@ -335,7 +335,7 @@ cand AS (
 ),
 probes AS (
     SELECT cand.token, cand.n, t.d,
-           ('0x' || substr(md5(CAST(t.d AS VARCHAR) || ':' || cand.token), 1, 15))::BIGINT
+           {duck_hash60("CAST(t.d AS VARCHAR) || ':' || cand.token")}
                % {CMS_WIDTH} AS bucket
     FROM cand, range({CMS_DEPTH}) t(d)
 )
@@ -370,7 +370,7 @@ def q_sample_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SQL_SAMPLE_HASH = f"""
 SELECT doc_id, source FROM documents
-WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 1000000 < 250000
+WHERE {duck_hash60('CAST(doc_id AS VARCHAR)')} % 1000000 < 250000
 """
 
 
@@ -512,17 +512,9 @@ def q_dedup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_dedup_matrix(num_hashes: int = 16) -> str:
-    from pyspark_pipelining_spark.queries_llm import _minhash_fragments
-
-    ctes, band_match, agree = _minhash_fragments()
+def _sql_dedup_matrix() -> str:
     return f"""
-WITH {ctes},
-pairs AS (
-    SELECT a.doc_id AS doc_1, b.doc_id AS doc_2
-    FROM sig a JOIN sig b ON a.doc_id < b.doc_id AND ({band_match})
-    WHERE ({agree}) / {num_hashes}.0 >= {NEAR_DUP_JACCARD}
-)
+WITH {_sql_near_dup_pairs()}
 SELECT least(d1.source, d2.source) AS source_a,
        greatest(d1.source, d2.source) AS source_b,
        CAST(count(*) AS BIGINT) AS n_pairs
@@ -559,7 +551,7 @@ toks AS (
 ),
 hashed AS (
     SELECT DISTINCT source,
-           ('0x' || substr(md5(token), 1, 15))::BIGINT AS h
+           {duck_hash60('token')} AS h
     FROM toks WHERE length(token) > 0
 ),
 ranked AS (
@@ -605,7 +597,7 @@ def _sql_hll() -> str:
 WITH {SQL_WORDS},
 toks AS (SELECT source, unnest(w) AS token FROM words),
 hashed AS (
-    SELECT source, ('0x' || substr(md5(token), 1, 15))::BIGINT AS h
+    SELECT source, {duck_hash60('token')} AS h
     FROM toks WHERE length(token) > 0
 ),
 regs AS (
@@ -702,8 +694,8 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_WEIGHTED_SAMPLE = f"""
 WITH pr AS (
     SELECT doc_id, source, n_chars,
-           CAST(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
-                AS DOUBLE) / CAST(n_chars AS DOUBLE) AS prio
+           CAST({duck_hash60('CAST(doc_id AS VARCHAR)')} AS DOUBLE)
+               / CAST(n_chars AS DOUBLE) AS prio
     FROM documents
 ),
 r AS (
@@ -933,7 +925,7 @@ def _sql_dataset_split() -> str:
     return f"""
 WITH hashed AS (
     SELECT source, n_chars,
-           ('0x' || substr(md5('{SPLIT_SALT}:' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
+           {duck_hash60(f"'{SPLIT_SALT}:' || CAST(doc_id AS VARCHAR)")}
            % {SPLIT_GRID} AS b
     FROM documents
 ),
@@ -976,7 +968,8 @@ def q_kmv_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_kmv_overlap(k: int = KMV_OVERLAP_K) -> str:
+def _sql_kmv_overlap() -> str:
+    k = KMV_OVERLAP_K
     const = f"{k - 1}.0 * {1 << 60}"
 
     def est(m: str) -> str:
@@ -994,9 +987,9 @@ tg AS (
     FROM words
 ),
 tok2 AS (SELECT lang, unnest(gs) AS token FROM tg),
-ha AS (SELECT DISTINCT ('0x' || substr(md5(token), 1, 15))::BIGINT AS hh
+ha AS (SELECT DISTINCT {duck_hash60('token')} AS hh
        FROM tok2 WHERE lang = 'en'),
-hb AS (SELECT DISTINCT ('0x' || substr(md5(token), 1, 15))::BIGINT AS hh
+hb AS (SELECT DISTINCT {duck_hash60('token')} AS hh
        FROM tok2 WHERE lang <> 'en'),
 ma AS (SELECT list(hh ORDER BY hh) AS m
        FROM (SELECT hh FROM ha ORDER BY hh LIMIT {k})),
@@ -1255,7 +1248,7 @@ def _sql_hll_register_merge() -> str:
 WITH {SQL_WORDS},
 toks AS (SELECT source, unnest(w) AS token FROM words),
 hashed AS (
-    SELECT source, ('0x' || substr(md5(token), 1, 15))::BIGINT AS h
+    SELECT source, {duck_hash60('token')} AS h
     FROM toks WHERE length(token) > 0
 ),
 pr AS (
@@ -1408,10 +1401,7 @@ def q_cms_merge_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_cms_merge_parity() -> str:
     def h(key_expr: str) -> str:
-        return (
-            f"('0x' || substr(md5(CAST(t.d AS VARCHAR) || ':' || {key_expr}),"
-            f" 1, 15))::BIGINT % {CMSM_WIDTH}"
-        )
+        return duck_hash60(f"CAST(t.d AS VARCHAR) || ':' || {key_expr}") + f" % {CMSM_WIDTH}"
 
     return f"""
 WITH {SQL_WORDS},
@@ -1611,7 +1601,7 @@ WITH {SQL_WORDS},
 tok AS (SELECT source, unnest(w) AS token FROM words),
 hashed AS (
     SELECT DISTINCT source,
-           ('0x' || substr(md5(token), 1, 15))::BIGINT AS h
+           {duck_hash60('token')} AS h
     FROM tok WHERE length(token) > 0
 ),
 partials AS (
@@ -1857,7 +1847,7 @@ def _sql_dsir_lam() -> str:
 ),
 dsir_occs AS (
     SELECT doc_id, source,
-           ('0x' || substr(md5(w[CAST(i AS INT)] || ' ' || w[CAST(i AS INT) + 1]), 1, 15))::BIGINT
+           {duck_hash60("w[CAST(i AS INT)] || ' ' || w[CAST(i AS INT) + 1]")}
              % {B} AS bucket
     FROM (
         SELECT doc_id, source, w, unnest(range(1, len(w))) AS i
@@ -1942,7 +1932,7 @@ WITH {_sql_dsir_lam()},
 keyed AS (
     SELECT doc_id, source, logweight_q6,
            logweight_q6 + CAST(round(-ln(-ln(
-               ((('0x' || substr(md5('{DSIR_SALT}:' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
+               (({duck_hash60(f"'{DSIR_SALT}:' || CAST(doc_id AS VARCHAR)")}
                  % {g}) + 1) / {float(g + 1)!r}
            )) * {q}) AS BIGINT) AS key_q6
     FROM dsir_weights
@@ -2125,7 +2115,7 @@ eval_docs AS (
            CASE {" ".join(cases)} ELSE '__rest' END AS split
     FROM (
         SELECT doc_id, n_chars,
-               ('0x' || substr(md5('{SPLIT_SALT}:' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
+               {duck_hash60(f"'{SPLIT_SALT}:' || CAST(doc_id AS VARCHAR)")}
                  % {SPLIT_GRID} AS b
         FROM documents WHERE source = '{EVAL_SOURCE}'
     )
@@ -2380,7 +2370,7 @@ wrds AS (
 ),
 grams AS (
     SELECT doc_id,
-           ('0x' || substr(md5(g), 1, 15))::BIGINT % {b} AS bucket
+           {duck_hash60('g')} % {b} AS bucket
     FROM (
         SELECT doc_id, w[CAST(i AS INT)] || ' ' || w[CAST(i AS INT) + 1] AS g
         FROM (SELECT doc_id, w, unnest(range(1, len(w))) AS i

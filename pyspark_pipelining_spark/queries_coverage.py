@@ -23,10 +23,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pyspark_pipelining_spark.operators.dedup import NEAR_DUP_JACCARD
+from pyspark_pipelining_spark.money import D, duck_money_sum
+from pyspark_pipelining_spark.operators.similarity import duck_cosine
+from pyspark_pipelining_spark.queries_ann_media import FILE_NAME
+from pyspark_pipelining_spark.queries_llm import _sql_near_dup_pairs
 from pyspark_pipelining_spark.sources.registry import load_table
 
-D2 = "decimal(18,2)"
 DISC = "CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))"
 
 
@@ -191,7 +193,7 @@ def q_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     val = (
         li.join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"), "leftsemi")
         .groupBy("l_partkey")
-        .agg(F.sum(F.col("l_extendedprice").cast(D2)).alias("_v"))
+        .agg(F.sum(F.col("l_extendedprice").cast(D)).alias("_v"))
     )
     tot = val.agg(F.sum("_v").alias("_t"))
     return (
@@ -952,13 +954,6 @@ def q_mrl_prefix_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_mrl_top1(vec_expr: str, qvec_expr: str) -> str:
-    dot = f"list_dot_product({vec_expr}, {qvec_expr})"
-    ne = f"sqrt(list_dot_product({vec_expr}, {vec_expr}))"
-    nq = f"sqrt(list_dot_product({qvec_expr}, {qvec_expr}))"
-    return f"round({dot} / ({ne} * {nq}), 6)"
-
-
 SQL_MRL_PREFIX_AGREEMENT = f"""
 WITH q AS (
     SELECT vec_id AS query_id, embedding AS query_vec
@@ -966,13 +961,12 @@ WITH q AS (
 ),
 fullp AS (
     SELECT q.query_id, e.vec_id,
-           {_sql_mrl_top1('CAST(e.embedding AS DOUBLE[])', 'CAST(q.query_vec AS DOUBLE[])')} AS cosine
+           {duck_cosine()} AS cosine
     FROM embeddings e, q WHERE e.vec_id != q.query_id
 ),
 prep AS (
     SELECT q.query_id, e.vec_id,
-           {_sql_mrl_top1(f'CAST(e.embedding[1:{MRL_PREFIX_DIM}] AS DOUBLE[])',
-                          f'CAST(q.query_vec[1:{MRL_PREFIX_DIM}] AS DOUBLE[])')} AS cosine
+           {duck_cosine(f'e.embedding[1:{MRL_PREFIX_DIM}]', f'q.query_vec[1:{MRL_PREFIX_DIM}]')} AS cosine
     FROM embeddings e, q WHERE e.vec_id != q.query_id
 ),
 f1 AS (
@@ -1009,10 +1003,7 @@ def q_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return graph.kcore_peel(pairs, k=2, rounds=3)
 
 
-def _sql_kcore_peel(num_hashes: int = 16, bands: int = 8) -> str:
-    from pyspark_pipelining_spark.queries_llm import _minhash_fragments
-
-    ctes, band_match, agree = _minhash_fragments(num_hashes, bands)
+def _sql_kcore_peel() -> str:
     peel = []
     prev = "e0"
     for r in range(1, 4):
@@ -1028,16 +1019,11 @@ e{r} AS (
         prev = f"e{r}"
     peels = ",\n".join(peel)
     return f"""
-WITH {ctes},
-p AS (
-    SELECT a.doc_id AS doc_1, b.doc_id AS doc_2
-    FROM sig a JOIN sig b ON a.doc_id < b.doc_id AND ({band_match})
-    WHERE ({agree}) / {num_hashes}.0 >= {NEAR_DUP_JACCARD}
-),
+WITH {_sql_near_dup_pairs()},
 e0 AS (
-    SELECT doc_1 AS s, doc_2 AS d FROM p
+    SELECT doc_1 AS s, doc_2 AS d FROM pairs
     UNION ALL
-    SELECT doc_2 AS s, doc_1 AS d FROM p
+    SELECT doc_2 AS s, doc_1 AS d FROM pairs
 ),
 {peels}
 SELECT s AS node, count(*) AS degree
@@ -1441,7 +1427,7 @@ def q_blob_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("file_name")
 
 
-SQL_BLOB_STATS = r"""
+SQL_BLOB_STATS = rf"""
 WITH sfmatch AS (
     SELECT regexp_extract(file_name, '^(.*)/customer\.parquet$', 1) AS dir
     FROM parquet_file_metadata('/root/testdata/sf*/customer.parquet')
@@ -1458,7 +1444,7 @@ sfdir AS (
            END AS dir
     FROM sfmatch
 )
-SELECT regexp_extract(filename, '([^/]+)$', 1) AS file_name,
+SELECT {FILE_NAME},
        CAST(size AS BIGINT) AS n_bytes,
        substring(hex(content), 1, 8) AS magic_hex,
        sha256(hex(content)) AS content_sha
@@ -1630,7 +1616,7 @@ def q_partition_pruned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_PARTITION_PRUNED_REVENUE = f"""
 SELECT CAST(month(o_orderdate) AS BIGINT) AS month,
        CAST(count(*) AS BIGINT) AS n_orders,
-       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_revenue
+       {duck_money_sum('o_totalprice')} AS total_revenue
 FROM orders
 WHERE year(o_orderdate) = {PRUNE_YEAR}
 GROUP BY 1
@@ -1732,7 +1718,7 @@ top AS (
 )
 SELECT CAST(o.yr AS BIGINT) AS o_year,
        CAST(count(*) AS BIGINT) AS n_orders,
-       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_revenue
+       {duck_money_sum('o_totalprice')} AS total_revenue
 FROM (SELECT year(o_orderdate) AS yr, o_totalprice FROM orders) o
 JOIN top ON o.yr = top.o_year
 GROUP BY 1

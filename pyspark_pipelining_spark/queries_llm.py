@@ -14,7 +14,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark_pipelining_spark.operators import dedup, multimodal, similarity, text
-from pyspark_pipelining_spark.operators.dedup import NEAR_DUP_JACCARD
+from pyspark_pipelining_spark.operators.cluster import GRID
+from pyspark_pipelining_spark.operators.dedup import NEAR_DUP_JACCARD, duck_hash60
+from pyspark_pipelining_spark.operators.similarity import duck_cosine, duck_rank
 from pyspark_pipelining_spark.sources.registry import load_table
 
 MERSENNE = dedup.MERSENNE
@@ -150,7 +152,7 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _minhash_fragments(num_hashes: int = 16, bands: int = 8) -> tuple[str, str, str]:
     """Shared DuckDB fragments: (signature CTE chain, band-match
-    predicate, agreement-count expression)."""
+    predicate, estimated-Jaccard expression)."""
     rows = num_hashes // bands
     coeffs = dedup.minhash_coeffs(num_hashes)
     mins = ",\n           ".join(
@@ -163,11 +165,12 @@ def _minhash_fragments(num_hashes: int = 16, bands: int = 8) -> tuple[str, str, 
         for bd in range(bands)
     )
     agree = " + ".join(f"CASE WHEN a.h{i} = b.h{i} THEN 1 ELSE 0 END" for i in range(num_hashes))
+    est = f"({agree}) / {num_hashes}.0"
     ctes = f"""{SQL_BIGRAMS},
 shing AS (SELECT DISTINCT doc_id, unnest(ngrams) AS shingle FROM grams),
 ds AS (
     SELECT doc_id,
-           ('0x' || substr(md5(shingle), 1, 15))::BIGINT % {MERSENNE} AS sid
+           {duck_hash60('shingle')} % {MERSENNE} AS sid
     FROM shing
 ),
 sig AS (
@@ -175,15 +178,28 @@ sig AS (
            {mins}
     FROM ds GROUP BY doc_id
 )"""
-    return ctes, band_match, agree
+    return ctes, band_match, est
 
 
-def _sql_minhash(num_hashes: int = 16, bands: int = 8) -> str:
-    ctes, band_match, agree = _minhash_fragments(num_hashes, bands)
+def _sql_near_dup_pairs() -> str:
+    """:func:`dedup.near_dup_pairs` as DuckDB SQL: the signature CTEs,
+    then ``pairs`` (doc_1 < doc_2), the banded candidates whose
+    estimated Jaccard reaches ``NEAR_DUP_JACCARD``."""
+    ctes, band_match, est = _minhash_fragments()
+    return f"""{ctes},
+pairs AS (
+    SELECT a.doc_id AS doc_1, b.doc_id AS doc_2
+    FROM sig a JOIN sig b ON a.doc_id < b.doc_id AND ({band_match})
+    WHERE {est} >= {NEAR_DUP_JACCARD}
+)"""
+
+
+def _sql_minhash() -> str:
+    ctes, band_match, est = _minhash_fragments()
     return f"""
 WITH {ctes}
 SELECT a.doc_id AS doc_1, b.doc_id AS doc_2,
-       ({agree}) / {num_hashes}.0 AS est_jaccard
+       {est} AS est_jaccard
 FROM sig a JOIN sig b ON a.doc_id < b.doc_id AND ({band_match})
 """
 
@@ -205,18 +221,12 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.dedup_clusters(docs, pairs)
 
 
-def _sql_dedup_clusters(num_hashes: int = 16, bands: int = 8) -> str:
+def _sql_dedup_clusters() -> str:
     # The oracle computes component min-ids with a recursive reachability
     # CTE (UNION dedups, so it terminates); fine at oracle scale, while
     # the engine side uses bounded label propagation.
-    ctes, band_match, agree = _minhash_fragments(num_hashes, bands)
     return f"""
-WITH RECURSIVE {ctes},
-pairs AS (
-    SELECT a.doc_id AS doc_1, b.doc_id AS doc_2
-    FROM sig a JOIN sig b ON a.doc_id < b.doc_id AND ({band_match})
-    WHERE ({agree}) / {num_hashes}.0 >= {NEAR_DUP_JACCARD}
-),
+WITH RECURSIVE {_sql_near_dup_pairs()},
 edges AS (
     SELECT doc_1 AS src, doc_2 AS dst FROM pairs
     UNION ALL
@@ -267,15 +277,9 @@ def q_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_corpus_prep() -> str:
-    ctes, band_match, agree = _minhash_fragments()
     score_cols, pred = _lang_fragments()
     return f"""
-WITH RECURSIVE {ctes},
-pairs AS (
-    SELECT a.doc_id AS doc_1, b.doc_id AS doc_2
-    FROM sig a JOIN sig b ON a.doc_id < b.doc_id AND ({band_match})
-    WHERE ({agree}) / 16.0 >= {NEAR_DUP_JACCARD}
-),
+WITH RECURSIVE {_sql_near_dup_pairs()},
 edges AS (
     SELECT doc_1 AS src, doc_2 AS dst FROM pairs
     UNION ALL
@@ -319,7 +323,8 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.simhash(load_table(spark, sf_dir, "documents"))
 
 
-def _sql_simhash(bits: int = 32) -> str:
+def _sql_simhash() -> str:
+    bits = dedup.SIMHASH_BITS
     bit_sums = ",\n           ".join(
         f"sum(CASE WHEN (h // {1 << b}) % 2 = 1 THEN 1 ELSE -1 END) AS b{b}" for b in range(bits)
     )
@@ -332,7 +337,7 @@ WITH {SQL_WORDS},
 toks AS (SELECT DISTINCT doc_id, unnest(w) AS token FROM words),
 h AS (
     SELECT doc_id,
-           ('0x' || substr(md5(token), 1, 15))::BIGINT % 4294967296 AS h
+           {duck_hash60('token')} % 4294967296 AS h
     FROM toks
 ),
 bs AS (
@@ -421,6 +426,10 @@ ORDER BY doc_1, doc_2
 DIM = 64
 N_QUERIES = 3
 TOPK = 5
+#: the IVF rungs' coarse quantizer: cells, and cells probed per query
+IVF_CELLS, IVF_NPROBE = 8, 2
+#: the PQ rungs' codebooks: subspaces, codes per subspace, Lloyd steps
+PQ_M, PQ_K, PQ_ITERS = 4, 8, 2
 
 
 def _query_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -435,20 +444,17 @@ def q_sim_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.cosine_topk(emb, _query_vecs(spark, sf_dir), k=TOPK)
 
 
-_DOT = "list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(q.query_vec AS DOUBLE[]))"
-_NE = "sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])))"
-_NQ = "sqrt(list_dot_product(CAST(q.query_vec AS DOUBLE[]), CAST(q.query_vec AS DOUBLE[])))"
 SQL_SIM_BRUTEFORCE_TOPK = f"""
 WITH q AS (
     SELECT vec_id AS query_id, embedding AS query_vec FROM embeddings WHERE vec_id < {N_QUERIES}
 ),
 pairs AS (
     SELECT q.query_id, e.vec_id,
-           round({_DOT} / ({_NE} * {_NQ}), 6) AS cosine
+           {duck_cosine()} AS cosine
     FROM embeddings e, q WHERE e.vec_id != q.query_id
 ),
 ranked AS (
-    SELECT *, CAST(row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id ASC) AS INTEGER) AS rank
+    SELECT *, {duck_rank()}
     FROM pairs
 )
 SELECT query_id, vec_id, cosine, rank FROM ranked WHERE rank <= {TOPK}
@@ -481,11 +487,11 @@ q AS (
 ),
 pairs AS (
     SELECT q.query_id, e.vec_id,
-           round({_DOT} / ({_NE} * {_NQ}), 6) AS cosine
+           {duck_cosine()} AS cosine
     FROM corpus e JOIN q ON e.bucket = q.bucket AND e.vec_id != q.query_id
 ),
 ranked AS (
-    SELECT *, CAST(row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id ASC) AS INTEGER) AS rank
+    SELECT *, {duck_rank()}
     FROM pairs
 )
 SELECT query_id, vec_id, cosine, rank FROM ranked WHERE rank <= {TOPK}
@@ -536,14 +542,14 @@ cand AS (
 ),
 pairs AS (
     SELECT c.query_id, c.vec_id,
-           round({_DOT} / ({_NE} * {_NQ}), 6) AS cosine
+           {duck_cosine()} AS cosine
     FROM cand c
     JOIN embeddings e ON c.vec_id = e.vec_id
     JOIN (SELECT vec_id AS query_id, embedding AS query_vec FROM embeddings
           WHERE vec_id < {N_QUERIES}) q ON c.query_id = q.query_id
 ),
 ranked AS (
-    SELECT *, CAST(row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id ASC) AS INTEGER) AS rank
+    SELECT *, {duck_rank()}
     FROM pairs
 )
 SELECT query_id, vec_id, cosine, rank FROM ranked WHERE rank <= {TOPK}
@@ -556,7 +562,7 @@ SQL_SIM_LSH_MULTITABLE = _sql_lsh_multitable()
 def q_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return similarity.ivf_topk(
-        emb, _query_vecs(spark, sf_dir), k=TOPK, cells=8, nprobe=2, dim=DIM
+        emb, _query_vecs(spark, sf_dir), k=TOPK, cells=IVF_CELLS, nprobe=IVF_NPROBE, dim=DIM
     )
 
 
@@ -567,15 +573,22 @@ def _sql_ivf_score(vec_expr: str, j: int) -> str:
     )
 
 
-def _sql_ivf(cells: int = 8, nprobe: int = 2) -> str:
-    corp_scores = [_sql_ivf_score("embedding", j) for j in range(cells)]
-    best = "greatest(" + ", ".join(f"s{j}" for j in range(cells)) + ")"
+def _sql_ivf_cells() -> tuple[str, str]:
+    """``similarity.with_ivf_cell`` as DuckDB SQL: the ``IVF_CELLS``
+    plane-score columns ``s0, s1, …`` of ``embedding``, and the argmax
+    cell over them (ties on the smaller cell)."""
+    scores = [_sql_ivf_score("embedding", j) for j in range(IVF_CELLS)]
+    best = "greatest(" + ", ".join(f"s{j}" for j in range(IVF_CELLS)) + ")"
     argmax = "CASE " + " ".join(
-        f"WHEN s{j} = {best} THEN {j}" for j in range(cells)
+        f"WHEN s{j} = {best} THEN {j}" for j in range(IVF_CELLS)
     ) + " END"
-    score_cols = ", ".join(f"{s} AS s{j}" for j, s in enumerate(corp_scores))
+    return ", ".join(f"{sc} AS s{j}" for j, sc in enumerate(scores)), argmax
+
+
+def _sql_ivf() -> str:
+    score_cols, argmax = _sql_ivf_cells()
     probe_rows = " UNION ALL ".join(
-        f"SELECT query_id, query_vec, {j} AS cell, s{j} AS score FROM qs" for j in range(cells)
+        f"SELECT query_id, query_vec, {j} AS cell, s{j} AS score FROM qs" for j in range(IVF_CELLS)
     )
     return f"""
 WITH scored AS (SELECT vec_id, embedding, {score_cols} FROM embeddings),
@@ -590,15 +603,15 @@ probes AS (
         SELECT query_id, query_vec, cell,
                row_number() OVER (PARTITION BY query_id ORDER BY score DESC, cell ASC) AS pr
         FROM probes_all
-    ) WHERE pr <= {nprobe}
+    ) WHERE pr <= {IVF_NPROBE}
 ),
 pairs AS (
     SELECT q.query_id, e.vec_id,
-           round({_DOT} / ({_NE} * {_NQ}), 6) AS cosine
+           {duck_cosine()} AS cosine
     FROM corpus e JOIN probes q ON e.cell = q.cell AND e.vec_id != q.query_id
 ),
 ranked AS (
-    SELECT *, CAST(row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id ASC) AS INTEGER) AS rank
+    SELECT *, {duck_rank()}
     FROM pairs
 )
 SELECT query_id, vec_id, cosine, rank FROM ranked WHERE rank <= {TOPK}
@@ -613,17 +626,14 @@ def q_sim_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.embedding_near_dup_pairs(emb, threshold=0.2, num_planes=6, dim=DIM)
 
 
-_DOT_AB = "list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))"
-_NA = "sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])))"
-_NB = "sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])))"
 SQL_SIM_NEAR_DUP = f"""
 WITH sig AS (
     SELECT *, {_sql_bucket('embedding', 6)} AS bucket FROM embeddings
 )
 SELECT a.vec_id AS id_1, b.vec_id AS id_2,
-       round({_DOT_AB} / ({_NA} * {_NB}), 6) AS cosine
+       {duck_cosine('a.embedding', 'b.embedding')} AS cosine
 FROM sig a JOIN sig b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-WHERE round({_DOT_AB} / ({_NA} * {_NB}), 6) >= 0.2
+WHERE {duck_cosine('a.embedding', 'b.embedding')} >= 0.2
 """
 
 
@@ -698,31 +708,23 @@ def q_sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     index composition of the sim_ivf and sim_pq stages."""
     emb = load_table(spark, sf_dir, "embeddings")
     return similarity.ivfpq_topk(
-        emb, _query_vecs(spark, sf_dir), m=4, k=8, iters=2, dim=DIM,
-        cells=8, nprobe=2, topk=TOPK,
+        emb, _query_vecs(spark, sf_dir), m=PQ_M, k=PQ_K, iters=PQ_ITERS, dim=DIM,
+        cells=IVF_CELLS, nprobe=IVF_NPROBE, topk=TOPK,
     )
 
 
-def _sql_ivfpq(
-    m: int = 4,
-    k: int = 8,
-    iters: int = 2,
-    dim: int = 64,
-    grid: int = 10**6,
-    cells: int = 8,
-    nprobe: int = 2,
-    nq: int = N_QUERIES,
-    topk: int = TOPK,
-    rerank: int = 0,
-) -> str:
-    """PQ Lloyd/encode/table CTEs (as in _sql_pq) + IVF probe pruning;
-    candidates = probed cells minus self-matches.  ``rerank > 0``
-    appends the exact-L2 refine stage over the ADC top-``rerank``
-    shortlist (mirrors ``similarity.ivfpq_topk(rerank=...)``)."""
-    d2 = dim // m
+def _sql_pq_tables() -> str:
+    """The CTEs both PQ rungs share, mirroring ``similarity``'s
+    ``_code_arrays`` and ``_adc_tables`` bit-for-bit (truncating integer
+    division, spos-aligned joins, ties on cell / vec_id): the snapped
+    sub-vectors ``base``, ``PQ_ITERS`` unrolled per-subspace Lloyd steps
+    (``c{i}`` centroids, ``a{i}`` codes), and each query's asymmetric
+    distance table ``dt``."""
+    d2 = DIM // PQ_M
+    it = PQ_ITERS
     steps = []
     prev = "a0"
-    for i in range(1, iters + 1):
+    for i in range(1, it + 1):
         steps.append(f"""
 c{i} AS (
     SELECT p.sub, p.cell, b.spos, sum(b.s) // count(*) AS c
@@ -743,45 +745,48 @@ a{i} AS (
     WHERE rn = 1
 )""")
         prev = f"a{i}"
-    corp_scores = [_sql_ivf_score("embedding", j) for j in range(cells)]
-    best = "greatest(" + ", ".join(f"s{j}" for j in range(cells)) + ")"
-    argmax = "CASE " + " ".join(
-        f"WHEN s{j} = {best} THEN {j}" for j in range(cells)
-    ) + " END"
-    score_cols = ", ".join(f"{s} AS s{j}" for j, s in enumerate(corp_scores))
-    probe_rows = " UNION ALL ".join(
-        f"SELECT qid, {j} AS pcell, s{j} AS score FROM qs2" for j in range(cells)
-    )
-    return f"""
-WITH base AS (
+    return f"""base AS (
     SELECT vec_id, CAST((g.i - 1) // {d2} AS BIGINT) AS sub,
            (g.i - 1) % {d2} AS spos,
-           CAST(round(CAST(embedding[CAST(g.i AS INT)] AS DOUBLE) * {grid})
+           CAST(round(CAST(embedding[CAST(g.i AS INT)] AS DOUBLE) * {GRID})
                 AS BIGINT) AS s
-    FROM embeddings, generate_series(1, {dim}) AS g(i)
+    FROM embeddings, generate_series(1, {DIM}) AS g(i)
 ),
 a0 AS (
-    SELECT vec_id, CAST(t.j AS BIGINT) AS sub, vec_id % {k} AS cell
-    FROM embeddings, range({m}) t(j)
+    SELECT vec_id, CAST(t.j AS BIGINT) AS sub, vec_id % {PQ_K} AS cell
+    FROM embeddings, range({PQ_M}) t(j)
 ),
 {",".join(steps)},
 dt AS (
-    SELECT q.vec_id AS qid, q.sub, c{iters}.cell,
-           CAST(sum((q.s - c{iters}.c) * (q.s - c{iters}.c)) AS BIGINT) AS d
-    FROM base q JOIN c{iters} ON q.sub = c{iters}.sub AND q.spos = c{iters}.spos
-    WHERE q.vec_id < {nq}
-    GROUP BY q.vec_id, q.sub, c{iters}.cell
-),
+    SELECT q.vec_id AS qid, q.sub, c{it}.cell,
+           CAST(sum((q.s - c{it}.c) * (q.s - c{it}.c)) AS BIGINT) AS d
+    FROM base q JOIN c{it} ON q.sub = c{it}.sub AND q.spos = c{it}.spos
+    WHERE q.vec_id < {N_QUERIES}
+    GROUP BY q.vec_id, q.sub, c{it}.cell
+)"""
+
+
+def _sql_ivfpq(rerank: int = 0) -> str:
+    """:func:`_sql_pq_tables` + IVF probe pruning; candidates = probed
+    cells minus self-matches.  ``rerank > 0`` appends the exact-L2
+    refine stage over the ADC top-``rerank`` shortlist (mirrors
+    ``similarity.ivfpq_topk(rerank=...)``)."""
+    score_cols, argmax = _sql_ivf_cells()
+    probe_rows = " UNION ALL ".join(
+        f"SELECT qid, {j} AS pcell, s{j} AS score FROM qs2" for j in range(IVF_CELLS)
+    )
+    return f"""
+WITH {_sql_pq_tables()},
 cellsco AS (SELECT vec_id, {score_cols} FROM embeddings),
 corpcell AS (SELECT vec_id, {argmax} AS pcell FROM cellsco),
-qs2 AS (SELECT vec_id AS qid, {score_cols} FROM embeddings WHERE vec_id < {nq}),
+qs2 AS (SELECT vec_id AS qid, {score_cols} FROM embeddings WHERE vec_id < {N_QUERIES}),
 probes_all AS ({probe_rows}),
 probes AS (
     SELECT qid, pcell FROM (
         SELECT qid, pcell,
                row_number() OVER (PARTITION BY qid ORDER BY score DESC, pcell ASC) AS pr
         FROM probes_all
-    ) WHERE pr <= {nprobe}
+    ) WHERE pr <= {IVF_NPROBE}
 ),
 cand AS (
     SELECT p.qid, c.vec_id
@@ -791,21 +796,24 @@ cand AS (
 scored AS (
     SELECT cand.qid AS query_id, cand.vec_id, CAST(sum(dt.d) AS BIGINT) AS adc_d
     FROM cand
-    JOIN {prev} a ON a.vec_id = cand.vec_id
+    JOIN a{PQ_ITERS} a ON a.vec_id = cand.vec_id
     JOIN dt ON dt.qid = cand.qid AND dt.sub = a.sub AND dt.cell = a.cell
     GROUP BY cand.qid, cand.vec_id
-){_sql_ivfpq_tail(topk, rerank)}
+){_sql_adc_tail(rerank)}
 """
 
 
-def _sql_ivfpq_tail(topk: int, rerank: int) -> str:
+def _sql_adc_tail(rerank: int = 0) -> str:
+    """The PQ rungs' final top-``TOPK`` by ADC distance over ``scored``
+    (``similarity._rank_distance``), or with ``rerank``, by exact L2
+    over the ADC top-``rerank``."""
     if not rerank:
         return f"""
 SELECT query_id, vec_id, adc_d,
        CAST(row_number() OVER (PARTITION BY query_id ORDER BY adc_d, vec_id)
             AS BIGINT) AS rn
 FROM scored
-QUALIFY rn <= {topk}
+QUALIFY rn <= {TOPK}
 ORDER BY query_id, rn"""
     return f""",
 short AS (
@@ -827,7 +835,7 @@ SELECT query_id, vec_id, exact_d,
        CAST(row_number() OVER (PARTITION BY query_id ORDER BY exact_d, vec_id)
             AS BIGINT) AS rn
 FROM ex
-QUALIFY rn <= {topk}
+QUALIFY rn <= {TOPK}
 ORDER BY query_id, rn"""
 
 
@@ -844,8 +852,8 @@ def q_sim_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     distortion swamps small neighbor margins."""
     emb = load_table(spark, sf_dir, "embeddings")
     return similarity.ivfpq_topk(
-        emb, _query_vecs(spark, sf_dir), m=4, k=8, iters=2, dim=DIM,
-        cells=8, nprobe=2, topk=TOPK, rerank=IVFPQ_RERANK,
+        emb, _query_vecs(spark, sf_dir), m=PQ_M, k=PQ_K, iters=PQ_ITERS, dim=DIM,
+        cells=IVF_CELLS, nprobe=IVF_NPROBE, topk=TOPK, rerank=IVFPQ_RERANK,
     )
 
 
@@ -1059,6 +1067,9 @@ ORACLES_LLM = {
 }
 
 
+PAGERANK_ITERS = 3
+
+
 def q_pagerank_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Integer PageRank over the near-duplicate similarity graph
     (operators/graph.pagerank_int): the graph-centrality quality prior,
@@ -1070,26 +1081,21 @@ def q_pagerank_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.near_dup_pairs(docs)
     edges = symmetrize(pairs, "doc_1", "doc_2", "src", "dst")
-    out = pagerank_int(edges, iters=3)
+    out = pagerank_int(edges, iters=PAGERANK_ITERS)
     return out.select(F.col("id").alias("doc_id"), "r")
 
 
-def _sql_pagerank(
-    num_hashes: int = 16,
-    bands: int = 8,
-    iters: int = 3,
-    scale: int = 10**12,
-    damp_num: int = 85,
-    damp_den: int = 100,
-) -> str:
+def _sql_pagerank() -> str:
     """Oracle with the iterations unrolled (fixed count), mirroring the
     engine's integer arithmetic exactly (// == Spark's div on
     non-negative operands)."""
-    ctes, band_match, agree = _minhash_fragments(num_hashes, bands)
+    from pyspark_pipelining_spark.operators.graph import SCALE as scale
+
+    damp_num, damp_den = 85, 100  # graph.pagerank_int's damping
     base = f"(CAST({scale} AS BIGINT) * {damp_den - damp_num} // {damp_den}) // n"
     prev = "r0"
     steps = []
-    for i in range(1, iters + 1):
+    for i in range(1, PAGERANK_ITERS + 1):
         steps.append(f"""
 it{i} AS (
     SELECT nodes.id,
@@ -1105,12 +1111,7 @@ it{i} AS (
 )""")
         prev = f"it{i}"
     return f"""
-WITH {ctes},
-pairs AS (
-    SELECT a.doc_id AS doc_1, b.doc_id AS doc_2
-    FROM sig a JOIN sig b ON a.doc_id < b.doc_id AND ({band_match})
-    WHERE ({agree}) / {num_hashes}.0 >= {NEAR_DUP_JACCARD}
-),
+WITH {_sql_near_dup_pairs()},
 edges AS (
     SELECT doc_1 AS src, doc_2 AS dst FROM pairs
     UNION ALL
@@ -1147,19 +1148,11 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(F.col("id").alias("doc_id"), "triangles")
 
 
-def _sql_triangles(
-    num_hashes: int = 16, bands: int = 8
-) -> str:
+def _sql_triangles() -> str:
     """Oracle via the id-ordered (a<b<c) formulation — enumerates the
     same triangle set the degree-ordered engine finds."""
-    ctes, band_match, agree = _minhash_fragments(num_hashes, bands)
     return f"""
-WITH {ctes},
-pairs AS (
-    SELECT a.doc_id AS doc_1, b.doc_id AS doc_2
-    FROM sig a JOIN sig b ON a.doc_id < b.doc_id AND ({band_match})
-    WHERE ({agree}) / {num_hashes}.0 >= {NEAR_DUP_JACCARD}
-),
+WITH {_sql_near_dup_pairs()},
 tri AS (
     SELECT e1.doc_1 AS a, e1.doc_2 AS b, e2.doc_2 AS c
     FROM pairs e1
@@ -1242,80 +1235,20 @@ def q_sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute-force → LSH → IVF → PQ."""
     emb = load_table(spark, sf_dir, "embeddings")
     return similarity.pq_adc_topk(
-        emb, _query_vecs(spark, sf_dir), m=4, k=8, iters=2, dim=DIM, topk=TOPK
+        emb, _query_vecs(spark, sf_dir), m=PQ_M, k=PQ_K, iters=PQ_ITERS, dim=DIM, topk=TOPK
     )
 
 
-def _sql_pq(
-    m: int = 4,
-    k: int = 8,
-    iters: int = 2,
-    dim: int = 64,
-    grid: int = 10**6,
-    nq: int = N_QUERIES,
-    topk: int = TOPK,
-) -> str:
-    """Unrolled per-subspace Lloyd + ADC, mirroring pq_adc_topk
-    bit-for-bit (truncating integer division, spos-aligned joins, tie
-    rules on cell / vec_id)."""
-    d2 = dim // m
-    steps = []
-    prev = "a0"
-    for i in range(1, iters + 1):
-        steps.append(f"""
-c{i} AS (
-    SELECT p.sub, p.cell, b.spos, sum(b.s) // count(*) AS c
-    FROM base b JOIN {prev} p ON b.vec_id = p.vec_id AND b.sub = p.sub
-    GROUP BY p.sub, p.cell, b.spos
-),
-d{i} AS (
-    SELECT b.vec_id, b.sub, c{i}.cell,
-           CAST(sum((b.s - c{i}.c) * (b.s - c{i}.c)) AS BIGINT) AS d
-    FROM base b JOIN c{i} ON b.sub = c{i}.sub AND b.spos = c{i}.spos
-    GROUP BY b.vec_id, b.sub, c{i}.cell
-),
-a{i} AS (
-    SELECT vec_id, sub, cell FROM (
-        SELECT vec_id, sub, cell,
-               row_number() OVER (PARTITION BY vec_id, sub ORDER BY d, cell) AS rn
-        FROM d{i})
-    WHERE rn = 1
-)""")
-        prev = f"a{i}"
+def _sql_pq() -> str:
     return f"""
-WITH base AS (
-    SELECT vec_id, CAST((g.i - 1) // {d2} AS BIGINT) AS sub,
-           (g.i - 1) % {d2} AS spos,
-           CAST(round(CAST(embedding[CAST(g.i AS INT)] AS DOUBLE) * {grid})
-                AS BIGINT) AS s
-    FROM embeddings, generate_series(1, {dim}) AS g(i)
-),
-a0 AS (
-    SELECT vec_id, CAST(t.j AS BIGINT) AS sub, vec_id % {k} AS cell
-    FROM embeddings, range({m}) t(j)
-),
-{",".join(steps)},
-dt AS (
-    SELECT q.vec_id AS qid, q.sub, c{iters}.cell,
-           CAST(sum((q.s - c{iters}.c) * (q.s - c{iters}.c)) AS BIGINT) AS d
-    FROM base q JOIN c{iters} ON q.sub = c{iters}.sub AND q.spos = c{iters}.spos
-    WHERE q.vec_id < {nq}
-    GROUP BY q.vec_id, q.sub, c{iters}.cell
-),
+WITH {_sql_pq_tables()},
 scored AS (
-    SELECT dt.qid AS query_id, a{iters}.vec_id, CAST(sum(dt.d) AS BIGINT) AS adc_d
-    FROM a{iters} JOIN dt ON a{iters}.sub = dt.sub AND a{iters}.cell = dt.cell
-    WHERE a{iters}.vec_id <> dt.qid
-    GROUP BY dt.qid, a{iters}.vec_id
-)
-SELECT query_id, vec_id, adc_d,
-       CAST(row_number() OVER (PARTITION BY query_id ORDER BY adc_d, vec_id)
-            AS BIGINT) AS rn
-FROM scored
-QUALIFY rn <= {topk}
-ORDER BY query_id, rn
+    SELECT dt.qid AS query_id, a{PQ_ITERS}.vec_id, CAST(sum(dt.d) AS BIGINT) AS adc_d
+    FROM a{PQ_ITERS} JOIN dt ON a{PQ_ITERS}.sub = dt.sub AND a{PQ_ITERS}.cell = dt.cell
+    WHERE a{PQ_ITERS}.vec_id <> dt.qid
+    GROUP BY dt.qid, a{PQ_ITERS}.vec_id
+){_sql_adc_tail()}
 """
-
 
 SQL_SIM_PQ_TOPK = _sql_pq()
 
@@ -1477,15 +1410,9 @@ def q_dedup_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("source")
 
 
-def _sql_dedup_impact(num_hashes: int = 16, bands: int = 8) -> str:
-    ctes, band_match, agree = _minhash_fragments(num_hashes, bands)
+def _sql_dedup_impact() -> str:
     return f"""
-WITH RECURSIVE {ctes},
-pairs AS (
-    SELECT a.doc_id AS doc_1, b.doc_id AS doc_2
-    FROM sig a JOIN sig b ON a.doc_id < b.doc_id AND ({band_match})
-    WHERE ({agree}) / {num_hashes}.0 >= {NEAR_DUP_JACCARD}
-),
+WITH RECURSIVE {_sql_near_dup_pairs()},
 edges AS (
     SELECT doc_1 AS src, doc_2 AS dst FROM pairs
     UNION ALL
@@ -1653,7 +1580,7 @@ def _sql_span_grams(gram_len: int) -> str:
     same portable hash the Spark operator uses."""
     return f"""span_grams AS (
   SELECT doc, CAST(i AS BIGINT) AS pos,
-         ('0x' || substr(md5(substring(text, CAST(i AS INT), {gram_len})), 1, 15))::BIGINT AS h
+         {duck_hash60(f'substring(text, CAST(i AS INT), {gram_len})')} AS h
   FROM (
     SELECT doc_id AS doc, text,
            unnest(range(1, length(text) - {gram_len} + 2)) AS i
@@ -1792,8 +1719,6 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_semantic_dedup() -> str:
-    from pyspark_pipelining_spark.operators.cluster import GRID
-
     p, q = SEMD_TAU
     kmeans = _sql_kmeans(k=SEMD_K, iters=SEMD_ITERS, dim=64, grid=GRID)
     return f"""
@@ -2187,7 +2112,7 @@ pgrams AS (
 shing AS (SELECT DISTINCT pid, unnest(ngrams) AS shingle FROM pgrams),
 ds AS (
     SELECT pid,
-           ('0x' || substr(md5(shingle), 1, 15))::BIGINT % {MERSENNE} AS sid
+           {duck_hash60('shingle')} % {MERSENNE} AS sid
     FROM shing
 ),
 sig AS (

@@ -13,7 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pyspark_pipelining_spark.operators.dedup import NEAR_DUP_JACCARD
+from pyspark_pipelining_spark.operators.dedup import duck_hash60
+from pyspark_pipelining_spark.queries_llm import _sql_near_dup_pairs
 from pyspark_pipelining_spark.sources.registry import load_table
 
 # ---------------------------------------------------------------------------
@@ -35,13 +36,10 @@ def q_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     return graph.lpa_communities(pairs, rounds=LPA_ROUNDS)
 
 
-def _sql_lpa(rounds: int = LPA_ROUNDS) -> str:
-    from pyspark_pipelining_spark.queries_llm import _minhash_fragments
-
-    ctes, band_match, agree = _minhash_fragments(16, 8)
+def _sql_lpa() -> str:
     prev = "l0"
     round_ctes = []
-    for r in range(1, rounds + 1):
+    for r in range(1, LPA_ROUNDS + 1):
         round_ctes.append(
             f"""l{r} AS (
     SELECT node, lbl FROM (
@@ -55,16 +53,11 @@ def _sql_lpa(rounds: int = LPA_ROUNDS) -> str:
         )
         prev = f"l{r}"
     return f"""
-WITH {ctes},
-cand AS (
-    SELECT a.doc_id AS doc_1, b.doc_id AS doc_2
-    FROM sig a JOIN sig b ON a.doc_id < b.doc_id AND ({band_match})
-    WHERE ({agree}) / 16.0 >= {NEAR_DUP_JACCARD}
-),
+WITH {_sql_near_dup_pairs()},
 edges AS (
-    SELECT doc_1 AS s, doc_2 AS d FROM cand
+    SELECT doc_1 AS s, doc_2 AS d FROM pairs
     UNION ALL
-    SELECT doc_2, doc_1 FROM cand
+    SELECT doc_2, doc_1 FROM pairs
 ),
 l0 AS (SELECT DISTINCT s AS node, s AS lbl FROM edges),
 {','.join(round_ctes)}
@@ -540,20 +533,12 @@ def q_harmonic_2hop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_harmonic() -> str:
-    from pyspark_pipelining_spark.queries_llm import _minhash_fragments
-
-    ctes, band_match, agree = _minhash_fragments(16, 8)
     return f"""
-WITH {ctes},
-cand AS (
-    SELECT a.doc_id AS doc_1, b.doc_id AS doc_2
-    FROM sig a JOIN sig b ON a.doc_id < b.doc_id AND ({band_match})
-    WHERE ({agree}) / 16.0 >= {NEAR_DUP_JACCARD}
-),
+WITH {_sql_near_dup_pairs()},
 edges AS (
-    SELECT doc_1 AS s, doc_2 AS d FROM cand
+    SELECT doc_1 AS s, doc_2 AS d FROM pairs
     UNION ALL
-    SELECT doc_2, doc_1 FROM cand
+    SELECT doc_2, doc_1 FROM pairs
 ),
 deg AS (SELECT s, CAST(count(*) AS BIGINT) AS n1 FROM edges GROUP BY s),
 two AS (
@@ -919,7 +904,7 @@ bmp AS (
 ),
 hashed AS (
     SELECT event_type,
-           ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT AS h
+           {duck_hash60('CAST(user_id AS VARCHAR)')} AS h
     FROM events
 ),
 regs AS (
@@ -1198,7 +1183,7 @@ WITH a AS (SELECT CAST(user_id AS VARCHAR) AS k FROM events),
 b AS (SELECT CAST(o_custkey AS VARCHAR) AS k FROM orders),
 ca AS (
     SELECT t.d,
-           ('0x' || substr(md5(CAST(t.d AS VARCHAR) || ':' || k), 1, 15))::BIGINT
+           {duck_hash60("CAST(t.d AS VARCHAR) || ':' || k")}
                % {CMS_JOIN_WIDTH} AS bucket,
            CAST(count(*) AS BIGINT) AS c
     FROM a, range({CMS_JOIN_DEPTH}) t(d)
@@ -1206,7 +1191,7 @@ ca AS (
 ),
 cb AS (
     SELECT t.d,
-           ('0x' || substr(md5(CAST(t.d AS VARCHAR) || ':' || k), 1, 15))::BIGINT
+           {duck_hash60("CAST(t.d AS VARCHAR) || ':' || k")}
                % {CMS_JOIN_WIDTH} AS bucket,
            CAST(count(*) AS BIGINT) AS c
     FROM b, range({CMS_JOIN_DEPTH}) t(d)

@@ -13,14 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pyspark_pipelining_spark.money import D, duck_money_sum, money_sum
 from pyspark_pipelining_spark.sources.registry import load_table
-
-D = "decimal(18,2)"
-
-
-def _dec_sum(c: str, alias: str):
-    return F.sum(F.col(c).cast(D)).cast("double").alias(alias)
-
 
 # --- A-family: the TPC-H Q1-style pricing summary (P7, A2, A3, F8) ------
 
@@ -36,7 +30,7 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             F.sum("l_quantity").alias("sum_qty"),
-            _dec_sum("l_extendedprice", "sum_base_price"),
+            money_sum("l_extendedprice").alias("sum_base_price"),
             F.sum(disc).cast("double").alias("sum_disc_price"),
             (F.sum("l_quantity") / F.count(F.lit(1))).alias("avg_qty"),
             F.count(F.lit(1)).alias("count_order"),
@@ -45,10 +39,10 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_PRICING_SUMMARY = """
+SQL_PRICING_SUMMARY = f"""
 SELECT l_returnflag, l_linestatus,
        sum(l_quantity) AS sum_qty,
-       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
+       {duck_money_sum('l_extendedprice')} AS sum_base_price,
        CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS sum_disc_price,
        sum(l_quantity) / count(*) AS avg_qty,
        count(*) AS count_order
@@ -73,15 +67,15 @@ def q_revenue_by_region(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("r_name")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            _dec_sum("o_totalprice", "revenue"),
+            money_sum("o_totalprice").alias("revenue"),
         )
         .orderBy("r_name")
     )
 
 
-SQL_REVENUE_BY_REGION = """
+SQL_REVENUE_BY_REGION = f"""
 SELECT r_name, count(*) AS n_orders,
-       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+       {duck_money_sum('o_totalprice')} AS revenue
 FROM orders
 JOIN customer ON o_custkey = c_custkey
 JOIN nation ON c_nationkey = n_nationkey
@@ -172,15 +166,15 @@ def q_shipped_after_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_lines"),
-            _dec_sum("l_extendedprice", "value_shipped"),
+            money_sum("l_extendedprice").alias("value_shipped"),
         )
         .orderBy("o_orderpriority")
     )
 
 
-SQL_SHIPPED_AFTER_ORDER = """
+SQL_SHIPPED_AFTER_ORDER = f"""
 SELECT o_orderpriority, count(*) AS n_lines,
-       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS value_shipped
+       {duck_money_sum('l_extendedprice')} AS value_shipped
 FROM lineitem JOIN orders
   ON l_orderkey = o_orderkey AND l_shipdate > o_orderdate
 GROUP BY o_orderpriority
@@ -346,17 +340,17 @@ def q_global_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("l_orderkey").alias("n_orders"),
         F.min(F.to_date("l_shipdate")).alias("first_ship"),
         F.max(F.to_date("l_shipdate")).alias("last_ship"),
-        _dec_sum("l_extendedprice", "total_value"),
+        money_sum("l_extendedprice").alias("total_value"),
     )
 
 
-SQL_GLOBAL_STATS = """
+SQL_GLOBAL_STATS = f"""
 SELECT count(*) AS n_rows,
        count(DISTINCT l_suppkey) AS n_suppliers,
        count(DISTINCT l_orderkey) AS n_orders,
        min(CAST(l_shipdate AS DATE)) AS first_ship,
        max(CAST(l_shipdate AS DATE)) AS last_ship,
-       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+       {duck_money_sum('l_extendedprice')} AS total_value
 FROM lineitem
 """
 
@@ -893,16 +887,16 @@ def q_cube_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cube("o_orderstatus", "o_orderpriority", "o_year")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            _dec_sum("o_totalprice", "revenue"),
+            money_sum("o_totalprice").alias("revenue"),
             F.grouping_id().cast("long").alias("gid"),
         )
     )
 
 
-SQL_CUBE_REVENUE = """
+SQL_CUBE_REVENUE = f"""
 SELECT o_orderstatus, o_orderpriority, CAST(year(CAST(o_orderdate AS DATE)) AS BIGINT) AS o_year,
        count(*) AS n_orders,
-       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
+       {duck_money_sum('o_totalprice')} AS revenue,
        CAST(grouping(o_orderstatus) * 4 + grouping(o_orderpriority) * 2
             + grouping(year(CAST(o_orderdate AS DATE))) AS BIGINT) AS gid
 FROM orders
@@ -970,7 +964,7 @@ def q_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            _dec_sum("value", "total_value"),
+            money_sum("value").alias("total_value"),
         )
         .select(
             "user_id",
@@ -982,7 +976,7 @@ def q_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_SESSION_WINDOWS = """
+SQL_SESSION_WINDOWS = f"""
 WITH lagd AS (
     SELECT user_id, ts, value,
            lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev
@@ -1002,7 +996,7 @@ SELECT user_id,
        epoch_us(min(ts)) AS start_us,
        epoch_us(max(ts) + INTERVAL 30 MINUTES) AS end_us,
        count(*) AS n_events,
-       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+       {duck_money_sum('value')} AS total_value
 FROM sess GROUP BY user_id, session_no
 """
 
@@ -1655,17 +1649,17 @@ def q_hypertable_stitch(spark: SparkSession, sf_dir: str) -> DataFrame:
     grain = ["day", "event_type"]
     aggs = [
         F.count(F.lit(1)).alias("n_events"),
-        _dec_sum("value", "total_value"),
+        money_sum("value").alias("total_value"),
     ]
     rollup = tagged.filter(F.col("day") < F.col("maxd")).groupBy(*grain).agg(*aggs)
     tail = tagged.filter(F.col("day") >= F.col("maxd")).groupBy(*grain).agg(*aggs)
     return rollup.unionByName(tail)
 
 
-SQL_HYPERTABLE_STITCH = """
+SQL_HYPERTABLE_STITCH = f"""
 SELECT CAST(ts AS DATE) AS day, event_type,
        count(*) AS n_events,
-       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+       {duck_money_sum('value')} AS total_value
 FROM events GROUP BY 1, 2
 """
 

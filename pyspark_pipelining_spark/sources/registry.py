@@ -172,27 +172,34 @@ class _Scan:
 _SCANS: weakref.WeakKeyDictionary[SparkSession, dict[str, _Scan]] = weakref.WeakKeyDictionary()
 
 
-def _read_parquet(spark: SparkSession, path: str) -> tuple[DataFrame, _Scan | None]:
-    """Read ``path``, inferring its schema only on the session's first
-    reference to the file as it is now.
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Read ``path`` (a lake file, or a directory a pipeline stage
+    wrote), inferring its schema only on the session's first reference
+    to the path as it is now.
 
-    The file's identity is its ``(st_ino, st_mtime_ns, st_size)``; a
-    rewritten file gets a new identity and is inferred again, so schema
+    The path's identity is its ``(st_ino, st_mtime_ns, st_size)``; a
+    rewritten path gets a new identity and is inferred again, so schema
     drift still surfaces.  A path ``os.stat`` cannot see (a remote URI)
-    has no identity and is inferred on every read."""
+    has no identity and is inferred on every read.  The frame carries
+    the path's memo entry, so :func:`spread` can reuse its split
+    count."""
     try:
         st = os.stat(path)
     except OSError:
-        return spark.read.parquet(path), None
+        df = spark.read.parquet(path)
+        df._lake_scan = None
+        return df
     identity = (st.st_ino, st.st_mtime_ns, st.st_size)
     scans = _SCANS.setdefault(spark, {})
     key = os.path.abspath(path)
     scan = scans.get(key)
     if scan is not None and scan.identity == identity:
-        return spark.read.schema(scan.schema).parquet(path), scan
-    df = spark.read.parquet(path)
-    scan = scans[key] = _Scan(identity, df.schema)
-    return df, scan
+        df = spark.read.schema(scan.schema).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        scan = scans[key] = _Scan(identity, df.schema)
+    df._lake_scan = scan
+    return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -225,7 +232,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise SchemaError(f"unknown table {name!r}; registry has {sorted(SCHEMAS)}")
     # runtime-settable; makes TIMESTAMP(NANOS) readable as long
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df, scan = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
+    scan = df._lake_scan
     df = require_columns(df, [f.name for f in SCHEMAS[name].fields], name)
     for field in SCHEMAS[name].fields:
         actual = df.schema[field.name].dataType

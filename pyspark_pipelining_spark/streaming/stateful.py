@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-D = "decimal(18,2)"
+from pyspark_pipelining_spark.money import money_sum
 
 
 def sessionize_batch(df: DataFrame, gap_min: int = 30) -> DataFrame:
@@ -47,7 +47,7 @@ def sessionize_batch(df: DataFrame, gap_min: int = 30) -> DataFrame:
             F.min(F.unix_micros("ts")).alias("start_us"),
             F.max(F.unix_micros("ts")).alias("end_us"),
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast(D)).cast("double").alias("total_value"),
+            money_sum("value").alias("total_value"),
         )
         # no final orderBy: output is one row per session (fact-sized at
         # scale) and consumers/compare are order-insensitive — a global

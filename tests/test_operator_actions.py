@@ -5,15 +5,19 @@ data-path collect, and loop control has one home:
 on any other action call, so a new one has to go through the loop
 driver or be argued into the allowlist below.
 
-The same source-scan discipline pins the portable value hash: the
-Spark-side ``md5 → substring → conv`` expression has one home,
-``dedup.portable_hash60``, which the DuckDB oracles replay bit for bit."""
+The same source-scan discipline pins each stage the two engines share:
+the Spark-side ``md5 → substring → conv`` hash has one home,
+``dedup.portable_hash60``, and each DuckDB spelling the oracles replay
+bit for bit (the hash, the exact-cents sum, the cosine and its rank, the
+blob file name, the little-endian byte read) has one renderer."""
 
 from __future__ import annotations
 
 import ast
 import re
 from pathlib import Path
+
+import pytest
 
 PACKAGE = Path(__file__).resolve().parents[1] / "pyspark_pipelining_spark"
 OPERATORS = PACKAGE / "operators"
@@ -128,12 +132,89 @@ def _hash60_sites(path: Path):
     yield from visit(tree, "<module>")
 
 
-def test_portable_hash_spelled_once():
-    found = [
-        (str(path.relative_to(PACKAGE)), fn, line)
-        for path in sorted(PACKAGE.rglob("*.py"))
-        for fn, line in _hash60_sites(path)
-    ]
-    assert [site[:2] for site in found] == [("operators/dedup.py", "portable_hash60")], (
-        f"md5 60-bit hash spelled outside dedup.portable_hash60: {found}"
+def _docstrings(tree: ast.Module) -> set[int]:
+    """``id`` of every docstring node: prose may name a spelling."""
+    return {
+        id(node.body[0].value)
+        for node in ast.walk(tree)
+        if isinstance(node, (ast.Module, ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+        and node.body
+        and isinstance(node.body[0], ast.Expr)
+        and isinstance(node.body[0].value, ast.Constant)
+        and isinstance(node.body[0].value.value, str)
+    }
+
+
+def _top_name(node: ast.AST) -> str | None:
+    """The name a top-level statement binds: its def, class or
+    assigned constant."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return node.name
+    targets = node.targets if isinstance(node, ast.Assign) else [getattr(node, "target", None)]
+    names = [t.id for t in targets if isinstance(t, ast.Name)]
+    return names[0] if names else None
+
+
+def _string_matcher(pattern: str):
+    """Match string literals (docstrings excluded) against ``pattern``."""
+    rx = re.compile(pattern, re.IGNORECASE)
+
+    def match(node: ast.AST, docs: set[int]) -> bool:
+        return (
+            isinstance(node, (ast.Constant, ast.JoinedStr))
+            and id(node) not in docs
+            and bool(rx.search(_sql_text(node)))
+        )
+
+    return match
+
+
+def _spark_hash(node: ast.AST, docs: set[int]) -> bool:
+    return _is_hash60(node) or (
+        isinstance(node, ast.Call) and any(_HASH60_SQL.search(_sql_text(a)) for a in node.args)
     )
+
+
+def _sites(match) -> set[tuple[str, str]]:
+    """``(module, top-level name)`` of every node ``match`` accepts."""
+    found = set()
+    for path in sorted(PACKAGE.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        docs = _docstrings(tree)
+        for top in tree.body:
+            if any(match(node, docs) for node in ast.walk(top)):
+                found.add((str(path.relative_to(PACKAGE)), _top_name(top) or "<module>"))
+    return found
+
+
+# twin stage -> (how its spelling is recognised, the one place it may
+# live).  Each DuckDB spelling is a renderer beside its Spark half, so
+# the two engines' halves of a shared stage cannot drift apart.
+TWINS = {
+    "spark_hash": (_spark_hash, ("operators/dedup.py", "portable_hash60")),
+    "duck_hash": (_string_matcher(r"'0x' \|\| substr\(md5\("), ("operators/dedup.py", "duck_hash60")),
+    "duck_money_sum": (
+        _string_matcher(r"sum\(CAST\([^()]* AS DECIMAL\(18,\s*2\)\)\)\s*AS DOUBLE\)"),
+        ("money.py", "duck_money_sum"),
+    ),
+    "money_type": (_string_matcher(r"^\s*decimal\(18,\s*2\)\s*$"), ("money.py", "D")),
+    "duck_cosine": (_string_matcher(r"list_dot_product\("), ("operators/similarity.py", "duck_cosine")),
+    "duck_rank": (
+        _string_matcher(
+            r"row_number\(\) OVER \(PARTITION BY query_id\s+ORDER BY [^)]*\) AS INTEGER\) AS rank"
+        ),
+        ("operators/similarity.py", "duck_rank"),
+    ),
+    "blob_file_name": (_string_matcher(r"regexp_extract\(filename"), ("queries_ann_media.py", "FILE_NAME")),
+    "le_hex": (
+        _string_matcher(r"(?<!'0x' )\|\|\s*substring\([^()]*,\s*2\)"),
+        ("queries_ann_media.py", "_le_hex"),
+    ),
+}
+
+
+@pytest.mark.parametrize("twin", list(TWINS))
+def test_portable_hash_spelled_once(twin):
+    match, home = TWINS[twin]
+    found = _sites(match)
+    assert found == {home}, f"{twin} spelled outside {home}: {sorted(found - {home})}"

@@ -10,7 +10,7 @@ import pytest
 from pyspark_pipelining_spark.plans import Pipeline, PipelineConfig
 from pyspark_pipelining_spark.plans.dag import PipelineError, build_metrics_pipeline
 from pyspark_pipelining_spark.sources.sinks import write_csv_report, write_table
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, count_jobs
 
 
 def test_metrics_pipeline_runs_all(spark, tmp_path):
@@ -43,6 +43,27 @@ def test_materialization_is_idempotent(spark, tmp_path):
     p2.stage("base", materialize=True)(base)
     assert p2.run("base").count() == 5
     assert calls["n"] == 1  # not re-executed — _SUCCESS short-circuit
+
+
+def test_skipped_stage_reread_runs_no_job(spark, tmp_path):
+    """A skipped stage's target is read back through the registry
+    reader, so in the session that wrote it the target's schema is
+    already known: the re-read runs no schema-inference job, and the
+    frame carries its scan for ``spread``."""
+    cfg = PipelineConfig(sf_dir=SF_SMOKE, output_path=str(tmp_path), run_id="t3")
+
+    def build():
+        p = Pipeline(spark, cfg)
+        p.stage("base", materialize=True)(lambda spark_, cfg_, up: spark_.range(5))
+        return p
+
+    build().run("base")
+    p2 = build()
+    df, jobs = count_jobs(spark, lambda: p2.run("base"))
+    assert p2.manifest[-1]["status"] == "skipped"
+    assert jobs == 0
+    assert vars(df).get("_lake_scan") is not None
+    assert df.count() == 5
 
 
 def test_cycle_and_unknown_stage_errors(spark, tmp_path):

@@ -1,15 +1,17 @@
-"""Every top-level def in the engine is reached from something that runs.
+"""Every top-level def and constant in the engine is reached from
+something that runs.
 
 The roots are the code the system executes outside ``tests/``: the
 module-level code of every package module (``QUERIES``, ``ORACLES``,
 ``__main__``), plus everything in ``tools/``, ``perfbench/``,
 ``bench.py`` and ``__spark_entry__.py``.  From there a def is reached
 when reached code names it (as ``name`` or ``module.name``), and then
-its own body is followed in turn.  Resolution is by name only, so a
-collision keeps a def alive rather than dropping it; ``__all__`` lists
-and ``import`` lines are not uses.  A def that only tests reach, or
-nothing at all, fails this gate: delete it, or argue it into the
-allowlist below."""
+its own body is followed in turn; a module-level assignment is reached
+when reached code reads the name it binds.  Resolution is by name only,
+so a collision keeps a def alive rather than dropping it; ``__all__``
+lists, ``import`` lines and assignment targets are not uses.  A def or
+constant that only tests reach, or nothing at all, fails this gate:
+delete it, or argue it into the allowlist below."""
 
 from __future__ import annotations
 
@@ -53,12 +55,12 @@ DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
 def _uses(nodes) -> set[str]:
     """Names that ``nodes`` read: bare names and attribute names.
-    String constants (``__all__`` entries among them) and import lines
-    bind names but do not use them."""
+    String constants (``__all__`` entries among them), import lines and
+    assignment targets bind names but do not use them."""
     names = set()
     for top in nodes:
         for node in ast.walk(top):
-            if isinstance(node, ast.Name):
+            if isinstance(node, ast.Name) and not isinstance(node.ctx, ast.Store):
                 names.add(node.id)
             elif isinstance(node, ast.Attribute):
                 names.add(node.attr)
@@ -90,9 +92,29 @@ def _module_level(tree: ast.Module) -> list[ast.AST]:
     return out
 
 
+def _bound(node: ast.AST) -> list[str]:
+    """The names a top-level statement defines: a def's or class's
+    name, or the plain names a module-level assignment binds (dunders
+    such as ``__all__`` excepted)."""
+    if isinstance(node, DEFS):
+        return [node.name]
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, ast.AnnAssign):
+        targets = [node.target]
+    else:
+        return []
+    return [
+        t.id
+        for target in targets
+        for t in ast.walk(target)
+        if isinstance(t, ast.Name) and not t.id.startswith("__")
+    ]
+
+
 def unreached() -> dict[tuple[str, str], int]:
-    """``(module, def) -> line`` for every top-level def that no root
-    reaches."""
+    """``(module, name) -> line`` for every top-level def or constant
+    that no root reaches."""
     defs: dict[str, list[tuple[str, ast.AST]]] = {}
     used: set[str] = set()
     aliases: dict[str, str] = {}
@@ -101,8 +123,8 @@ def unreached() -> dict[tuple[str, str], int]:
         aliases.update(_aliases(tree))
         used |= _uses(_module_level(tree))
         for node in tree.body:
-            if isinstance(node, DEFS):
-                defs.setdefault(node.name, []).append((str(path.relative_to(PACKAGE)), node))
+            for name in _bound(node):
+                defs.setdefault(name, []).append((str(path.relative_to(PACKAGE)), node))
     for path in ROOT_FILES:
         tree = ast.parse(path.read_text(), filename=str(path))
         aliases.update(_aliases(tree))
@@ -131,6 +153,8 @@ def unreached() -> dict[tuple[str, str], int]:
 def test_every_engine_def_has_a_non_test_caller():
     found = unreached()
     stray = {key: line for key, line in found.items() if key not in ALLOWED}
-    assert not stray, f"defs that no query, oracle, tool, perfbench or bench.py reaches: {stray}"
+    assert not stray, (
+        f"defs and constants that no query, oracle, tool, perfbench or bench.py reaches: {stray}"
+    )
     # the allowlist names only defs that exist and are still unreached
     assert set(ALLOWED) <= set(found), set(ALLOWED) - set(found)
