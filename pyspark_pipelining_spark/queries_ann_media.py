@@ -96,8 +96,7 @@ QUALIFY rank <= {TOPK}
 ORDER BY query_id, rank"""
 
 
-def _sql_bq_rerank() -> str:
-    return f"""
+SQL_SIM_BQ_RERANK = f"""
 WITH corpus AS (
     SELECT vec_id, {_sql_bq_word('embedding')} AS bq FROM embeddings
 ),
@@ -114,9 +113,6 @@ short AS (
 ),
 {_SQL_RERANK}
 """
-
-
-SQL_SIM_BQ_RERANK = _sql_bq_rerank()
 
 
 HLL_WINDOW_DAYS = 7
