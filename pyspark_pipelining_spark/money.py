@@ -23,3 +23,9 @@ def money_sum(col: str):
 def duck_money_sum(sql_expr: str) -> str:
     """:func:`money_sum` as DuckDB SQL over ``sql_expr``."""
     return f"CAST(sum(CAST({sql_expr} AS DECIMAL(18,2))) AS DOUBLE)"
+
+
+def cents(sql_expr: str) -> str:
+    """``sql_expr`` as exact integer cents (BIGINT); the SQL text is the
+    same in Spark ``F.expr`` strings and DuckDB oracles."""
+    return f"CAST(CAST({sql_expr} AS DECIMAL(18,2)) * 100 AS BIGINT)"

@@ -74,7 +74,7 @@ def decode_stub(payload: bytes) -> dict[str, Any]:
     }
 
 
-def extract_features(media_df: DataFrame, batch_hint: int = 1024) -> DataFrame:
+def extract_features(media_df: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads via
     ``mapInPandas`` — the production plumbing with the stub codec."""
     import pandas as pd
@@ -176,7 +176,7 @@ def synthesize_png_payload(media_df: DataFrame) -> DataFrame:
     )
 
 
-def sniff_headers(media_df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def sniff_headers(media_df: DataFrame) -> DataFrame:
     """Container-format sniffing without decoding: match magic bytes
     and parse the dimension fields straight out of the binary column —
     entirely JVM-side (`substring` on binary → `hex` → `conv`), so it
@@ -188,7 +188,7 @@ def sniff_headers(media_df: DataFrame, payload_col: str = "payload") -> DataFram
     on a PNG signature, ``'audio/wav'`` with the little-endian sample
     rate on a RIFF/WAVE signature, ``'application/octet-stream'`` with
     NULLs otherwise."""
-    p = F.col(payload_col)
+    p = F.col("payload")
     is_png = F.hex(F.substring(p, 1, 8)) == _PNG_MAGIC_HEX
     is_wav = (F.hex(F.substring(p, 1, 4)) == "52494646") & (  # 'RIFF'
         F.hex(F.substring(p, 9, 4)) == "57415645"  # 'WAVE'
@@ -212,15 +212,15 @@ def sniff_headers(media_df: DataFrame, payload_col: str = "payload") -> DataFram
     )
 
 
-def synthesize_wav_payload(media_df: DataFrame, sample_rate_expr: str = "8000 + pmod(media_id, 40000)") -> DataFrame:
+def synthesize_wav_payload(media_df: DataFrame) -> DataFrame:
     """RIFF/WAVE counterpart of :func:`synthesize_png_payload`: a real
-    'RIFF....WAVEfmt ' prefix with the per-row sample rate written as a
-    LITTLE-endian u32 at the canonical offset 24 — exercising the
-    byte-order-sensitive half of the sniffer."""
-    rate = F.expr(f"CAST(greatest({sample_rate_expr}, 0) AS BIGINT)")
+    'RIFF....WAVEfmt ' prefix with a per-row sample rate (8000 Hz plus
+    ``media_id`` mod 40000) written as a LITTLE-endian u32 at the
+    canonical offset 24 — exercising the byte-order-sensitive half of
+    the sniffer."""
+    rate = "CAST(greatest(8000 + pmod(media_id, 40000), 0) AS BIGINT)"
     byte_hex = lambda shift: F.expr(  # noqa: E731 — `div`, not `/` (double)
-        f"lpad(hex(CAST(pmod(CAST(greatest({sample_rate_expr}, 0) AS BIGINT)"
-        f" div {1 << shift}, 256) AS INT)), 2, '0')"
+        f"lpad(hex(CAST(pmod({rate} div {1 << shift}, 256) AS INT)), 2, '0')"
     )
     header = F.concat(
         F.encode(F.lit("RIFF"), "utf-8"),
@@ -235,7 +235,7 @@ def synthesize_wav_payload(media_df: DataFrame, sample_rate_expr: str = "8000 + 
         "media_id",
         F.concat(header, F.col("payload")).alias("payload"),
         "meta",
-        rate.alias("expected_sample_rate"),
+        F.expr(rate).alias("expected_sample_rate"),
     )
 
 
@@ -299,95 +299,49 @@ WAV_HEX_SAFE_FILE_BYTES = (2**31 - 16) // 2
 
 
 def _wav_window_chunks(
-    files: DataFrame,
-    window_samples: int,
-    path_col: str,
-    max_data_bytes: int,
-    n_channels: int = 1,
+    files: DataFrame, ws: int, nch: int, max_data_bytes: int
 ) -> DataFrame:
-    """Shared front half of the codec-free WAV ladder — canonical
-    RIFF/WAVE header parse, stray filtering, window chunking, and the
-    cross-core spread — used by both :func:`wav_pcm_windows` (RMS/peak)
-    and :func:`wav_window_features` (adds zero-crossings and first-lag
-    autocorrelation).  Returns one row per (file, window) carrying ONLY
-    that window's ~2·window_samples-byte hex slice:
-    ``file_name, sample_rate, win, n_samples, chunk``.  The decode
-    discipline / scale notes below apply to this shared front half;
-    the refactor leaves :func:`wav_pcm_windows`'s registered plan
-    expression-identical (oracle-gated every pytest run).
+    """Front half of :func:`wav_features`: canonical RIFF/WAVE header
+    parse, stray filtering, window chunking, and the cross-core
+    spread.  Returns one row per (file, window) carrying ONLY that
+    window's hex slice: ``file_name, sample_rate, win, n_samples,
+    chunk``.
 
-    Input: ``binaryFile`` rows (``path``, ``content``).  Non-PCM16-mono
-    or non-canonical-header files are FILTERED (magic + fmt guards),
-    not errored — the lake-scan convention (a 100 TB media lake always
-    contains strays); other encodings need a real codec.
+    Input: ``binaryFile`` rows (``path``, ``length``, ``content``).
+    Files that are not canonical ``nch``-channel PCM16 are FILTERED
+    (magic + fmt guards), not errored — the lake-scan convention (a
+    100 TB media lake always contains strays); other encodings need a
+    real codec.  A FRAME is ``2·nch`` bytes (interleaved samples),
+    ``n_total`` counts frames, a window is ``ws`` frames, and a trailing
+    partial frame is truncated (mirrored in the oracle).
 
     Decode discipline (cross-engine exact): the header hexes ONLY its
     44 canonical bytes; window chunks are cut in one pass over the
-    lambda-bound BINARY payload (byte-addressed, O(slice) — see the
-    inline substring-is-O(position) note: slicing a whole-file HEX
-    string instead measured O(file²/window), 36.4 s for a 1M-sample
-    file) and each output row carries only its own window's hex
-    slice, so the explode fans out window-count rows (not
-    sample-count) and the per-sample loop is an ``aggregate`` HOF over
-    the slice — integer accumulators only (sum of squares ≤ n·2³⁰ per
-    window, easy int64), and the only doubles are the final
-    ``sqrt(ss/n)`` — IEEE exactly-rounded from exact integers in any
-    engine.
+    lambda-bound BINARY payload (byte-addressed, O(slice)).  Slicing a
+    whole-file HEX string instead is O(position) per window —
+    UTF8String substring counts characters from the head — and
+    measured O(file²/window): 36.4 s vs 1.06 s for a 1M-sample file
+    at the default 256-sample window.
 
     Scale: one file = one row = one task from the binaryFile source;
-    window rows are a ×(seconds·rate/window) fanout of file rows with
-    ~2·window_samples bytes each — far smaller than the input.  The
-    window rows are REPARTITIONED on (file, win) before the sample
-    fold: Generate preserves the source partitioning, so without the
-    spread every window of a file decodes serially on one core —
-    measured on a 1M-sample WAV (local[32]): 65.2 s single-task vs
-    1.46 s spread (45×); the shuffled chunk slices are ~2× PCM bytes,
-    trivially worth it.  The fold decodes each sample ONCE via a
-    ``transform`` into an int array and folds plain ints into a
-    (peak, sum-of-squares) struct — evaluating the hex/conv decode
-    inside the metric fold re-ran it per reference, and transform-
-    first measured another 2.3× (0.61 s vs 1.41 s on the spread
-    plan).  THROUGHPUT ENVELOPE (measured, post-r10-slicing-fix):
-    linear and fold-bound at ~58k samples/s per core interpreted
-    (1M samples 1.06 s, 4M samples 2.24 s on local[32]) — clip-sized
-    audio; hour-long masters belong to the Arrow-batched
-    ``audio_window_plan`` path, chunked upstream.  Gate with
-    ``load_binary_files(..., max_bytes=...)``, which skips oversized
-    payloads at the format level.
-
-    ``n_channels``: 1 (default) keeps the historical mono shape —
-    every generated expression string is IDENTICAL to the
-    pre-parameter version (``bpf = 2`` reproduces the same literals),
-    so the registered ``wav_pcm_windows`` / ``wav_window_features``
-    plans are untouched (oracle-gated every pytest run).  2 selects
-    canonical interleaved stereo: a FRAME is ``bpf = 4`` bytes (L
-    sample then R), ``n_total`` counts frames, a window is
-    ``window_samples`` frames, and each chunk carries the window's
-    interleaved bytes once — the per-channel stride-2 decode happens
-    in the caller's fold (``wav_stereo_features``), not by slicing
-    channels apart here (which would double the slice passes).
+    window rows are a ×(seconds·rate/window) fanout of file rows,
+    REPARTITIONED on (file, win) before the sample fold: Generate
+    preserves the source partitioning, so without the spread every
+    window of a file decodes serially on one core — measured on a
+    1M-sample WAV (local[32]): 65.2 s single-task vs 1.46 s spread
+    (45×).  THROUGHPUT ENVELOPE (measured): linear and fold-bound at
+    ~58k samples/s per core interpreted (1M samples 1.06 s, 4M samples
+    2.24 s on local[32]) — clip-sized audio; hour-long masters belong
+    to the Arrow-batched ``audio_window_plan`` path, chunked upstream.
     """
-    ws = int(window_samples)
-    nch = int(n_channels)
-    bpf = 2 * nch  # bytes per frame (2-byte samples × channels)
+    bpf = 2 * nch  # bytes per frame
     # size gate on the cheap length metadata column, pushed to the
-    # binaryFile scan (plan-asserted): filtering length here is the
-    # placement that delivers "filtered, never errored" — length <=
-    # cap implies data_bytes <= n_bytes - 44 <= max_data_bytes, so
-    # every downstream CAST(pos AS INT) is in int32 range under ANSI.
+    # binaryFile scan (plan-asserted): length <= cap implies
+    # data_bytes <= max_data_bytes, so every downstream CAST(pos AS
+    # INT) is in int32 range under ANSI — filtered, never errored
     cap = min(int(max_data_bytes) + 44, WAV_HEX_SAFE_FILE_BYTES)
-    # header fields come from hexing ONLY the 44 canonical bytes —
-    # hexing the whole payload just to read the header was an O(file)
-    # allocation per row, and slicing window chunks out of a whole-file
-    # hex STRING was O(position) PER WINDOW (UTF8String substring
-    # counts characters from the head), i.e. O(file²/window) per file:
-    # measured 36.4 s for a 1M-sample WAV at the default 256-sample
-    # window vs 1.06 s after this rewrite (34×; a 4M-sample file runs
-    # 2.24 s — linear at ~58k samples/s/core, fold-bound again) —
-    # window chunks now slice the lambda-bound BINARY payload
-    # (byte-addressed arraycopy, O(slice)) and hex just the slice.
     hdr = files.filter(F.col("length") <= cap).select(
-        F.element_at(F.split(F.col(path_col), "/"), -1).alias("file_name"),
+        F.element_at(F.split(F.col("path"), "/"), -1).alias("file_name"),
         F.col("length").alias("n_bytes"),
         F.col("content"),
         F.expr("hex(substring(content, 1, 44))").alias("hh"),
@@ -429,8 +383,7 @@ def _wav_window_chunks(
         & (F.col("audio_fmt") == 1)
         & (F.col("channels") == nch)
         & (F.col("bits") == 16)
-        # degenerate-chunk guards (lake-scan contract: filtered, never
-        # errored or silently NULL): at least one whole frame, and the
+        # degenerate-chunk guards: at least one whole frame, and the
         # declared data chunk actually present in the payload — an
         # empty chunk would fabricate a zero-sample window and an
         # overstated data_bytes would decode '' into NULL samples
@@ -438,10 +391,8 @@ def _wav_window_chunks(
         & (F.col("data_bytes") <= F.col("n_bytes") - 44)
     ).withColumn("n_total", F.expr(f"data_bytes div {bpf}"))
     # all window chunks cut in ONE pass over the lambda-bound binary
-    # payload (data section starts at 0-based byte 44 → 1-based 45;
-    # bpf bytes/frame; a trailing partial frame is truncated by the
-    # div, mirrored in the oracle), then exploded — window rows never
-    # carry the payload, only their own ~bpf·window_samples-byte slice
+    # payload (data starts at 1-based byte 45), then exploded — window
+    # rows never carry the payload, only their own slice
     chunk_arr = (
         f"transform(array(content), c -> transform("
         f" sequence(CAST(0 AS BIGINT), (n_total - 1) div {ws}), w ->"
@@ -462,14 +413,11 @@ def _wav_window_chunks(
         ).alias("n_samples"),
         "chunk",
     )
-    # spread the window rows across cores before the per-sample fold:
-    # Generate preserved the one-row-per-file partitioning, which would
-    # decode every window of a file serially on one task (45× measured).
     # The partition COUNT must be explicit: a bare repartition(cols) is
     # REPARTITION_BY_COL, which AQE coalesces back down by BYTE size
     # (observed: 3 tasks for 4 MB of chunk rows) — bytes are the wrong
-    # cost model for a compute-bound fold at ~16k samples/s/core, and
-    # an explicit REPARTITION_BY_NUM is exempt from coalescing.
+    # cost model for a compute-bound fold, and an explicit
+    # REPARTITION_BY_NUM is exempt from coalescing.
     try:
         n_spread = int(
             files.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
@@ -478,236 +426,76 @@ def _wav_window_chunks(
         # some deployments set shuffle.partitions to a non-numeric
         # sentinel (e.g. "auto"); fall back to the cluster's parallelism
         n_spread = int(files.sparkSession.sparkContext.defaultParallelism)
-    # cap at the cluster's core count (r09 ADVICE): the spread exists to
-    # give every CORE a task, and more partitions than cores only adds
-    # scheduling rounds — under the default 200 shuffle partitions a
-    # fixture-sized input paid a 200-task round for ~24 window rows
+    # cap at the core count: more partitions than cores only adds
+    # scheduling rounds (a fixture-sized input paid a 200-task round
+    # for ~24 window rows under the default shuffle partitions)
     n_spread = max(
         1, min(n_spread, int(files.sparkSession.sparkContext.defaultParallelism))
     )
     return wins.repartition(n_spread, F.col("file_name"), F.col("win"))
 
 
-# little-endian signed int16 sample j of the chunk (0-based) — shared
-# by both window folds below
-_WAV_U = (
-    "CAST(conv(concat(substring(chunk, 4 * j + 3, 2),"
-    " substring(chunk, 4 * j + 1, 2)), 16, 10) AS BIGINT)"
-)
-_WAV_V = f"({_WAV_U} - CASE WHEN {_WAV_U} >= 32768 THEN 65536 ELSE 0 END)"
-
-
-def wav_pcm_windows(
+def wav_features(
     files: DataFrame,
     window_samples: int = 256,
-    path_col: str = "path",
+    channels: int = 1,
     max_data_bytes: int = WAV_INT32_SAFE_DATA_BYTES,
 ) -> DataFrame:
-    """Sample-level PCM math on real WAV bytes with ZERO Python in the
-    plan — the codec-free multimodal compute path: parse the canonical
-    44-byte RIFF/WAVE header and fold per-window RMS + peak over the
-    int16 samples, all through JVM ``hex``/``substring``/``conv`` and
-    an ``aggregate`` higher-order function (front half shared with
-    :func:`wav_window_features` via :func:`_wav_window_chunks`, where
-    the decode-discipline and scale notes live).
+    """Per-(window, channel) amplitude and signal features over real
+    canonical PCM16 WAV bytes with ZERO Python in the plan: the 44-byte
+    RIFF/WAVE header is parsed and the samples decoded with JVM
+    ``hex``/``substring``/``conv`` and ONE ``aggregate`` higher-order
+    fold per row (front half, decode discipline and scale notes:
+    :func:`_wav_window_chunks`).  ``channels`` is the interleaving the
+    files must declare — 1 (mono) or 2 (stereo); any other file is
+    FILTERED by the header gate, never errored.
 
-    Output: ``file_name, win, sample_rate, n_samples, peak, rms``.
-    """
-    wins = _wav_window_chunks(files, int(window_samples), path_col, max_data_bytes)
-    v = _WAV_V
-    return wins.select(
-        "file_name",
-        "win",
-        "sample_rate",
-        F.col("n_samples").cast("long").alias("n_samples"),
-        # decode ONCE per sample into an int array (transform), then
-        # fold plain ints: evaluating the hex/conv decode inside the
-        # metric fold re-ran it per reference — transform-first
-        # measured 0.61 s vs 1.41 s decode-in-fold on a 1M-sample WAV
-        # (both on the spread plan), i.e. ~37k samples/s/core
-        F.expr(
-            f"aggregate(transform(sequence(0, CAST(n_samples AS INT) - 1),"
-            f" j -> {v}),"
-            " named_struct('peak', 0L, 'ss', 0L),"
-            " (acc, x) -> named_struct('peak', greatest(acc.peak, abs(x)),"
-            " 'ss', acc.ss + x * x))"
-        ).alias("st"),
-    ).select(
-        "file_name",
-        "win",
-        "sample_rate",
-        "n_samples",
-        F.col("st.peak").alias("peak"),
-        F.round(
-            F.sqrt(F.col("st.ss").cast("double") / F.col("n_samples").cast("double")),
-            6,
-        ).alias("rms"),
-    )
+    Plan shape: one chunk row per (file, window), spread on (file,
+    win), then a ``channels``-row explode AFTER the spread (a window's
+    channel folds run co-located and together cost what one mono fold
+    of ``channels``·ws samples costs).  Each channel row decodes its
+    samples ONCE into an int array (``transform``; decoding inside the
+    metric fold re-ran the hex/conv per reference — transform-first
+    measured 2.3× faster) and folds plain ints, reading sample j at hex
+    position ``4·channels·j + 4·channel + 1``, so channels never mix.
 
-
-def wav_window_features(
-    files: DataFrame,
-    window_samples: int = 256,
-    path_col: str = "path",
-    max_data_bytes: int = WAV_INT32_SAFE_DATA_BYTES,
-) -> DataFrame:
-    """:func:`wav_pcm_windows`' twin carrying the multimodal ladder
-    from amplitude stats to SIGNAL features (r10 verdict item 8):
-    zero-crossing count/rate and first-lag autocorrelation, computed in
-    the SAME single per-window fold as peak and RMS — one decode, no
-    extra scan (the accumulator struct just grows ``zc``/``ac``/``prev``
-    fields; plan-asserted single ``aggregate`` in
-    ``tests/test_plans.py``).
-
-    Feature semantics (integer-exact so a DuckDB oracle can reproduce
+    Feature semantics (integer-exact, so the DuckDB oracle reproduces
     them bit-identically):
 
+    - ``peak``, ``rms`` — max |x| and ``sqrt(Σx²/n)`` (sum of squares
+      ≤ n·2³⁰, exact int64; the only doubles are the final divisions).
     - ``zc`` — count of STRICT sign flips between consecutive samples
-      within the window (``prev * x < 0``; zeros break a flip, pairs
-      never span a window boundary — same per-chunk scope as RMS).
-    - ``zcr`` — ``zc / max(n_samples - 1, 1)`` (pairs, not samples; a
-      1-sample tail window has no pairs → 0.0, never NULL/÷0).
-    - ``ac1`` — first-lag autocorrelation ``Σ x·prev / Σ x²``, both
-      sums exact int64 before ONE double division (CLAUDE.md decimal
-      discipline); an all-zero window (ss = 0) yields 0.0, not NULL.
-      ~+1 for tonal/low-frequency content, ~0 for white noise, ~−1 at
-      Nyquist — with ``zcr`` the classic codec-free voiced/unvoiced
-      and band-position proxies.
+      of the window (``prev * x < 0``; zeros break a flip).
+    - ``zcr`` — ``zc / max(n_samples - 1, 1)`` (a 1-sample tail window
+      has no pairs → 0.0, never NULL/÷0).
+    - ``ac1`` — first-lag autocorrelation ``Σ x·prev / Σ x²``, both sums
+      exact int64 before ONE double division; an all-zero window
+      yields 0.0.
 
-    The chained ``prev`` accumulator is NULL-seeded: ``NULL * x < 0``
-    is NULL → CASE falls through (no phantom first pair), and
-    ``coalesce(prev * x, 0)`` keeps ``ac`` exact.  Integer bounds: each
-    product ≤ 2³⁰, so both sums fit int64 for any window ≤ 2³³ samples
-    — strictly safer than the (already safe) ``ss`` bound.
-
-    Cost of the extra fields: parity within measurement noise — a
-    1M-sample WAV on local[32] timed 0.52 s warm median-of-3 for this
-    fold vs 0.68 s for the base fold (same run order each rep), and a
-    superset fold cannot truly be faster than its subset, so the only
-    supportable claim is that the delta is inside run-to-run spread
-    (ADVICE r11): the fold stays inside :func:`wav_pcm_windows`'
-    measured linear envelope, and the feature columns cost nothing
-    measurable relative to a second decode pass (which would double
-    the bytes touched).
-
-    Output: ``file_name, win, sample_rate, n_samples, peak, rms, zc,
-    zcr, ac1`` — a superset of :func:`wav_pcm_windows`' columns, equal
-    values on the shared ones (pytest-pinned).
-    """
-    wins = _wav_window_chunks(files, int(window_samples), path_col, max_data_bytes)
-    v = _WAV_V
-    return wins.select(
-        "file_name",
-        "win",
-        "sample_rate",
-        F.col("n_samples").cast("long").alias("n_samples"),
-        F.expr(
-            f"aggregate(transform(sequence(0, CAST(n_samples AS INT) - 1),"
-            f" j -> {v}),"
-            " named_struct('peak', 0L, 'ss', 0L, 'zc', 0L, 'ac', 0L,"
-            "              'prev', CAST(NULL AS BIGINT)),"
-            " (acc, x) -> named_struct("
-            "   'peak', greatest(acc.peak, abs(x)),"
-            "   'ss', acc.ss + x * x,"
-            "   'zc', acc.zc + CASE WHEN acc.prev * x < 0 THEN 1L ELSE 0L END,"
-            "   'ac', acc.ac + coalesce(acc.prev * x, 0L),"
-            "   'prev', x))"
-        ).alias("st"),
-    ).select(
-        "file_name",
-        "win",
-        "sample_rate",
-        "n_samples",
-        F.col("st.peak").alias("peak"),
-        F.round(
-            F.sqrt(F.col("st.ss").cast("double") / F.col("n_samples").cast("double")),
-            6,
-        ).alias("rms"),
-        F.col("st.zc").alias("zc"),
-        F.round(
-            F.col("st.zc").cast("double")
-            / F.greatest(F.col("n_samples") - F.lit(1), F.lit(1)).cast("double"),
-            6,
-        ).alias("zcr"),
-        F.round(
-            F.when(
-                F.col("st.ss") > 0,
-                F.col("st.ac").cast("double") / F.col("st.ss").cast("double"),
-            ).otherwise(F.lit(0.0)),
-            6,
-        ).alias("ac1"),
-    )
-
-
-# little-endian signed int16 sample of frame j, channel `channel`
-# (interleaved stereo: frame j holds sample 2j+channel, hex position
-# 8j + 4·channel + 1) — the stride-2 counterpart of _WAV_V
-_WAV_STEREO_U = (
-    "CAST(conv(concat("
-    "substring(chunk, CAST(8 * j + 4 * channel + 3 AS INT), 2),"
-    " substring(chunk, CAST(8 * j + 4 * channel + 1 AS INT), 2)),"
-    " 16, 10) AS BIGINT)"
-)
-_WAV_STEREO_V = (
-    f"({_WAV_STEREO_U} - CASE WHEN {_WAV_STEREO_U} >= 32768"
-    f" THEN 65536 ELSE 0 END)"
-)
-
-
-def wav_stereo_features(
-    files: DataFrame,
-    window_samples: int = 256,
-    path_col: str = "path",
-    max_data_bytes: int = WAV_INT32_SAFE_DATA_BYTES,
-) -> DataFrame:
-    """:func:`wav_window_features` for canonical interleaved STEREO
-    PCM16 (r11 verdict item 8, stretch): real media lakes are mostly
-    stereo, and interleaved LR frames are the same binary-slice shape
-    with stride 2 — ONE decode front half (``_wav_window_chunks`` with
-    ``n_channels=2``: a window's chunk carries its interleaved bytes
-    once), a per-(window, channel) fold, and ``channel`` as an output
-    column.
-
-    Plan shape: the shared front half cuts one chunk row per (file,
-    window) and spreads on (file, win); the channel fanout is a 2-row
-    explode AFTER the spread (both channel folds of a window run
-    co-located — spread granularity is windows, and a window's two
-    folds together cost what one mono fold of 2·ws samples costs), and
-    each channel row evaluates the SAME single ``aggregate`` fold the
-    mono twin uses, just reading samples at hex position
-    ``8j + 4·channel + 1`` instead of ``4j + 1`` — stride-2 slices of
-    the lambda-bound chunk, still zero Python, one ``aggregate``
-    occurrence in the executed plan (plan-asserted).
-
-    Feature semantics are per channel and otherwise IDENTICAL to
-    :func:`wav_window_features` (strict sign flips, NULL-seeded
-    ``prev`` so pairs never span a window boundary — and channels
-    never mix: each fold sees only its own channel's samples); all
-    sums exact int64, ONE double division per feature, 1-frame-tail
-    and all-zero windows pin to 0.0.  A mono (or any non-2-channel)
-    file is FILTERED by the shared header gate, never errored — the
-    committed mono stray in ``fixtures/audio_stereo/`` pins that; a
-    trailing partial frame (``data_bytes % 4 != 0``) truncates, on
-    both engines.
+    The chained ``prev`` accumulator is NULL-seeded: ``NULL * x < 0`` is
+    NULL → CASE falls through (no phantom first pair, so pairs never
+    span a window), and ``coalesce(prev * x, 0)`` keeps ``ac`` exact.
 
     Output: ``file_name, win, channel, sample_rate, n_samples, peak,
     rms, zc, zcr, ac1`` — ``n_samples`` counts FRAMES in the window
-    (per-channel samples), so shared columns line up with the mono
-    twin's semantics.
+    (per-channel samples).
     """
-    wins = _wav_window_chunks(
-        files, int(window_samples), path_col, max_data_bytes, n_channels=2
-    )
-    v = _WAV_STEREO_V
+    nch = int(channels)
+    wins = _wav_window_chunks(files, int(window_samples), nch, max_data_bytes)
     chan = wins.select(
         "file_name",
         "win",
         "sample_rate",
         F.col("n_samples").cast("long").alias("n_samples"),
         "chunk",
-        F.explode(F.array(F.lit(0), F.lit(1))).alias("channel"),
+        F.explode(F.array(*[F.lit(c) for c in range(nch)])).alias("channel"),
     )
-    return chan.select(
+    # little-endian signed int16 sample of frame j, channel `channel`
+    u = (
+        f"CAST(conv(concat(substring(chunk, {4 * nch} * j + 4 * channel + 3, 2),"
+        f" substring(chunk, {4 * nch} * j + 4 * channel + 1, 2)), 16, 10) AS BIGINT)"
+    )
+    st = chan.select(
         "file_name",
         "win",
         F.col("channel").cast("long").alias("channel"),
@@ -715,7 +503,7 @@ def wav_stereo_features(
         "n_samples",
         F.expr(
             f"aggregate(transform(sequence(0, CAST(n_samples AS INT) - 1),"
-            f" j -> {v}),"
+            f" j -> ({u} - CASE WHEN {u} >= 32768 THEN 65536 ELSE 0 END)),"
             " named_struct('peak', 0L, 'ss', 0L, 'zc', 0L, 'ac', 0L,"
             "              'prev', CAST(NULL AS BIGINT)),"
             " (acc, x) -> named_struct("
@@ -725,17 +513,17 @@ def wav_stereo_features(
             "   'ac', acc.ac + coalesce(acc.prev * x, 0L),"
             "   'prev', x))"
         ).alias("st"),
-    ).select(
+    )
+    n = F.col("n_samples").cast("double")
+    ss = F.col("st.ss").cast("double")
+    return st.select(
         "file_name",
         "win",
         "channel",
         "sample_rate",
         "n_samples",
         F.col("st.peak").alias("peak"),
-        F.round(
-            F.sqrt(F.col("st.ss").cast("double") / F.col("n_samples").cast("double")),
-            6,
-        ).alias("rms"),
+        F.round(F.sqrt(ss / n), 6).alias("rms"),
         F.col("st.zc").alias("zc"),
         F.round(
             F.col("st.zc").cast("double")
@@ -743,16 +531,15 @@ def wav_stereo_features(
             6,
         ).alias("zcr"),
         F.round(
-            F.when(
-                F.col("st.ss") > 0,
-                F.col("st.ac").cast("double") / F.col("st.ss").cast("double"),
-            ).otherwise(F.lit(0.0)),
+            F.when(F.col("st.ss") > 0, F.col("st.ac").cast("double") / ss).otherwise(
+                F.lit(0.0)
+            ),
             6,
         ).alias("ac1"),
     )
 
 
-def _png_sig_select(files: DataFrame, path_col: str) -> DataFrame:
+def _png_sig_select(files: DataFrame) -> DataFrame:
     """PNG-signature prefilter + projection shared by the chunk walk
     and the pixel-stats decode: the check hexes ONLY the first 8 bytes
     (hexing the whole payload just to test the magic would double-scan
@@ -760,7 +547,7 @@ def _png_sig_select(files: DataFrame, path_col: str) -> DataFrame:
     return files.filter(
         F.expr("hex(substring(content, 1, 8))") == "89504E470D0A1A0A"
     ).select(
-        F.element_at(F.split(F.col(path_col), "/"), -1).alias("file_name"),
+        F.element_at(F.split(F.col("path"), "/"), -1).alias("file_name"),
         F.col("length").alias("n_bytes"),
         F.col("content"),
     )
@@ -771,8 +558,8 @@ def _png_walk_fold(mc: int) -> str:
     lambda-bound payload variable ``c`` (and the outer ``n_bytes``
     column): a bounded ``aggregate`` fold whose state is ``(offset,
     ok, done, chunks)`` — shared verbatim by :func:`png_chunk_walk`
-    (which explodes the chunk array) and :func:`png_pixel_stats`
-    (which keeps walking into the IDAT payloads).
+    (which explodes the chunk array) and the pixel decode shell
+    :func:`_png_decode` (which keeps walking into the IDAT payloads).
 
     Chunk fields at the CURRENT offset are per-step binary slices of
     ``c`` (byte at 0-based offset o is ``substring(c, o+1, n)``) —
@@ -818,9 +605,7 @@ def _png_walk_fold(mc: int) -> str:
     )
 
 
-def png_chunk_walk(
-    files: DataFrame, max_chunks: int = 64, path_col: str = "path"
-) -> DataFrame:
+def png_chunk_walk(files: DataFrame, max_chunks: int = 64) -> DataFrame:
     """Variable-offset PNG chunk inventory with ZERO Python in the plan
     — the second codec-free multimodal compute path (the WAV fold above
     parses a FIXED-layout header; a PNG's chunk table only exists by
@@ -858,7 +643,7 @@ def png_chunk_walk(
     chunk, ``off`` = 0-based byte offset of the chunk's length field).
     """
     mc = int(max_chunks)
-    sig = _png_sig_select(files, path_col)
+    sig = _png_sig_select(files)
     walked = sig.select(
         "file_name",
         "n_bytes",
@@ -914,17 +699,38 @@ PNG_ZLIB_MAX_BLOCKS = 40
 #: thumbnail at the 65536-px cap).
 PNG_MAX_ROWS = 2048
 
+#: a scanline's raw byte length (filter byte included), over the IHDR
+#: meta struct ``m`` the decode shell binds
+_PNG_STRIDE = "(1 + m.w * m.bpp)"
 
-def _png_image_layers(mc: int, mpx: int, mb: int, mrows: int) -> dict[str, str]:
-    """Expression fragments for the codec-free PNG decode, shared
-    verbatim by :func:`png_pixel_stats` (filter-0 scope, channel folds
-    inside the expression) and :func:`png_filtered_pixel_stats`
-    (filter-0/1/2 scope, reconstruction in DataFrame windows): IHDR
-    meta gate, in-order IDAT concatenation, zlib header gate, and the
-    stored-block inflation fold.  All fragments assume the payload is
-    lambda-bound as ``c``, the walk state as ``st``, the meta struct
-    as ``m``, and the stream hex as ``zh`` (the let-binding chain the
-    callers assemble)."""
+
+def _png_decode(
+    files: DataFrame,
+    mc: int,
+    mpx: int,
+    mb: int,
+    mrows: int,
+    ftypes: tuple[int, ...],
+    body: str,
+) -> DataFrame:
+    """The codec-free PNG decode shell both pixel decoders share:
+    ``file_name`` plus ``img``, the SQL expression ``body`` evaluated
+    once per in-scope file and NULL for every stray.
+
+    The chain is one let-bound JVM expression per file: the payload
+    ``c``, the chunk walk ``st`` (:func:`_png_walk_fold`), the IHDR
+    meta ``m`` (w, h, ct, bpp, ch, plte) behind the dimension gate, the
+    in-order IDAT stream hex ``zh`` behind the zlib header gate, and
+    the stored-block inflate state ``zs`` behind the raw-size and
+    scanline filter-byte gate (``ftypes``: the filter types the caller
+    decodes).  Each intermediate is bound exactly once via a
+    ``transform(array(…), x -> …)`` let-binding, so the whole decode
+    evaluates once per row no matter how many fields ``body`` reads
+    (the round-9 filter-pushdown duplication class), and out-of-range
+    chunk access uses NULL-returning ``get()`` (ANSI-safe on strays).
+
+    ``body`` reads ``m`` and ``zs.outh``, the raw scanline hex (rows of
+    ``_PNG_STRIDE`` bytes)."""
 
     def b1(pos: str) -> str:  # 1-byte big-endian int at 1-based pos of c
         return f"CAST(conv(hex(substring(c, CAST({pos} AS INT), 1)), 16, 10) AS INT)"
@@ -932,7 +738,7 @@ def _png_image_layers(mc: int, mpx: int, mb: int, mrows: int) -> dict[str, str]:
     def b4(pos: str) -> str:  # 4-byte big-endian int at 1-based pos of c
         return f"CAST(conv(hex(substring(c, CAST({pos} AS INT), 4)), 16, 10) AS BIGINT)"
 
-    # --- layer 3: IHDR meta (w, h, layout) from the walked chunks ------
+    # --- IHDR meta (w, h, layout) from the walked chunks ---------------
     ih = "get(st.chunks, 0)"  # NULL (not an error) when the walk failed early
     ct = b1(f"{ih}.off + 18")
     plte = "get(filter(st.chunks, ck -> ck.ctype = 'PLTE'), 0)"
@@ -965,7 +771,7 @@ def _png_image_layers(mc: int, mpx: int, mb: int, mrows: int) -> dict[str, str]:
         f" END"
     )
 
-    # --- layer 4: in-order IDAT payload as ONE hex string --------------
+    # --- in-order IDAT payload as ONE hex string -----------------------
     idat_hex = (
         "aggregate(filter(st.chunks, ck -> ck.ctype = 'IDAT'), '',"
         " (a, ck) -> concat(a, hex(substring(c,"
@@ -986,7 +792,7 @@ def _png_image_layers(mc: int, mpx: int, mb: int, mrows: int) -> dict[str, str]:
         " AND (CAST(conv(substring(zh, 3, 2), 16, 10) AS INT) div 32) % 2 = 0"
     )
 
-    # --- layer 5: stored-deflate block walk over the stream hex --------
+    # --- stored-deflate block walk over the stream hex -----------------
     lz = "(length(zh) div 2)"  # stream length in bytes
     zb = (  # little-endian LEN of the block at acc.off
         "(CAST(conv(substring(zh, CAST(2 * acc.off + 3 AS INT), 2), 16, 10) AS BIGINT)"
@@ -1018,13 +824,57 @@ def _png_image_layers(mc: int, mpx: int, mb: int, mrows: int) -> dict[str, str]:
         f"      OR acc.off + 5 + {zb} + 4 > {lz} THEN {zfail}"
         f" ELSE {zstep} END)"
     )
-    return {
-        "meta": meta,
-        "idat_hex": idat_hex,
-        "zlib_hdr_ok": zlib_hdr_ok,
-        "zfold": zfold,
-        "lz": lz,
-    }
+
+    # --- raw size + scanline filter-byte gate --------------------------
+    stride = _PNG_STRIDE
+    filter_bytes = ", ".join(f"'{t:02X}'" for t in ftypes)
+    raw_ok = (
+        f"zs.ok AND zs.done AND zs.off + 4 = {lz}"
+        f" AND length(zs.outh) = 2 * m.h * {stride}"
+        # every scanline's filter byte must be one the caller decodes;
+        # any other type drops the file (filtered, never errored)
+        f" AND aggregate(sequence(0, CAST(m.h - 1 AS INT)), true, (a, r) ->"
+        f" a AND substring(zs.outh, CAST(2 * r * {stride} + 1 AS INT), 2)"
+        f" IN ({filter_bytes}))"
+    )
+    decode = (
+        f"transform(array(content), c ->"
+        f" transform(array({_png_walk_fold(mc)}), st ->"
+        f"  transform(array({meta}), m ->"
+        # dimensions bound INDIVIDUALLY before the product: a malicious
+        # IHDR can declare w = h = 0xFFFFFFFF, and w*h would overflow
+        # int64 — an ANSI ERROR, not a filter — unless the conjunction
+        # short-circuits on the per-dimension caps first
+        f"   CASE WHEN m IS NOT NULL AND m.w BETWEEN 1 AND {mpx}"
+        f"             AND m.h BETWEEN 1 AND {mrows}"
+        f"             AND m.w * m.h <= {mpx} THEN"
+        f"    transform(array({idat_hex}), zh ->"
+        f"     CASE WHEN {zlib_hdr_ok} THEN"
+        f"      transform(array({zfold}), zs ->"
+        f"       CASE WHEN {raw_ok} THEN {body} END)[0]"
+        f"     END)[0]"
+        f"   END)[0])[0])[0]"
+    )
+    return _png_sig_select(files).select("file_name", F.expr(decode).alias("img"))
+
+
+def _png_channel_stats(df: DataFrame) -> DataFrame:
+    """The per-channel output both pixel decoders end with, from
+    ``file_name, channel, w, h, sum_val, min_val, max_val``."""
+    n_px = F.col("w") * F.col("h")
+    return df.select(
+        "file_name",
+        "channel",
+        "w",
+        "h",
+        n_px.alias("n_px"),
+        "sum_val",
+        "min_val",
+        "max_val",
+        F.round(F.col("sum_val").cast("double") / n_px.cast("double"), 6).alias(
+            "mean_val"
+        ),
+    )
 
 
 def png_pixel_stats(
@@ -1033,53 +883,36 @@ def png_pixel_stats(
     max_px: int = PNG_PIXEL_MAX,
     max_blocks: int = PNG_ZLIB_MAX_BLOCKS,
     max_rows: int = PNG_MAX_ROWS,
-    path_col: str = "path",
 ) -> DataFrame:
     """PIXEL-level statistics (per-channel sum/min/max/mean) over real
     PNG bytes with ZERO Python in the plan — the image counterpart of
-    :func:`wav_pcm_windows`' sample-level audio math: the full decode
-    chain runs as one JVM expression per file — chunk walk (the shared
-    :func:`_png_walk_fold` state machine) → in-order IDAT
-    concatenation → zlib STORED-block inflation (another bounded
-    ``aggregate`` fold over the stream: 5-byte block headers, LEN/NLEN
-    complement check, payload splice) → filter-0 scanline validation →
-    per-channel byte folds.
+    :func:`wav_features`' sample-level audio math: the full decode
+    chain runs as one JVM expression per file (:func:`_png_decode`:
+    chunk walk → in-order IDAT concatenation → zlib STORED-block
+    inflation, a bounded ``aggregate`` fold over 5-byte block headers
+    with the LEN/NLEN complement check → filter-0 scanline validation)
+    and then per-channel byte folds inside the same expression.
 
     Scope is the codec-free corner of the format, gated structurally
     (lake-scan contract — anything else FILTERS, never errors): bit
     depth 8, color type 0/2/3 (gray / RGB / palette-index), no
     interlace, zlib CM=8 without a preset dictionary, only stored
     (BTYPE=0) deflate blocks, every scanline filter byte 0, raw length
-    exactly ``h·(1+w·ch)``, and ``w·h ≤ max_px``.  Real compressed
-    PNGs need a real inflate — they stay behind the gated codec path;
-    the committed fixtures (``tools/gen_png_fixtures.py``) are exactly
-    this stored-deflate subset, byte-reproducible with no compressor.
-    The Adler-32 trailer is bounds-checked but not recomputed (a
-    checksum pass would double the byte work for no semantic gain
-    here; CRC words are already surfaced per chunk by the walk).
+    exactly ``h·(1+w·ch)``, ``w·h ≤ max_px`` and ``h ≤ max_rows``.
+    Real compressed PNGs need a real inflate — they stay behind the
+    gated codec path; the committed fixtures
+    (``tools/gen_png_fixtures.py``) are exactly this stored-deflate
+    subset, byte-reproducible with no compressor.  The Adler-32 trailer
+    is bounds-checked but not recomputed.
 
-    Expression discipline (the measured multimodal lessons): every
-    intermediate — payload, walk state, header meta, concatenated
-    stream hex, inflate state, per-channel fold — is bound exactly
-    once via a ``transform(array(…), x -> …)`` let-binding, so the
-    whole decode evaluates once per row no matter how many downstream
-    fields reference it (the round-9 filter-pushdown duplication
-    class); per-pixel bytes decode ONCE into an int array
-    (``transform``) before the metric fold (the WAV 2.3× lesson); the
-    validity gate folds into the generator (NULL → row vanishes), and
-    out-of-range chunk access uses NULL-returning ``get()`` (ANSI-safe
-    on strays).
-
-    Scale: one file = one row = one task; per-file work is
-    O(pixels) bounded by ``max_px`` — genuinely linear only because
-    pixel bytes are indexed within per-SCANLINE hex slices (see the
-    inline substring-is-O(position) note; the whole-image-hex form
-    measured O(pixels²): 17.45 s at 256², vs 0.68 s ≈ 96k samples/s
-    per core after the fix).  Output is ``ch`` rows per file.  Unlike
-    the WAV windows there is no in-file spread: the decode is a
-    sequential state machine (block N's offset depends on block N-1),
-    so parallelism comes from the file dimension — the right unit for
-    a thumbnail/icon lake.
+    Scale: one file = one row = one task; per-file work is O(pixels)
+    bounded by ``max_px`` — genuinely linear only because pixel bytes
+    are indexed within per-SCANLINE hex slices (substring is
+    O(start-position) on UTF8String; the whole-image-hex form measured
+    O(pixels²): 17.45 s at 256², vs 0.68 s ≈ 96k samples/s per core
+    after the fix).  There is no in-file spread: the decode is a
+    sequential state machine, so parallelism comes from the file
+    dimension — the right unit for a thumbnail/icon lake.
 
     Output: ``file_name, channel, w, h, n_px, sum_val, min_val,
     max_val, mean_val`` — one row per OUTPUT channel: 1 for grayscale,
@@ -1088,47 +921,21 @@ def png_pixel_stats(
     required; an index past the palette end drops the file — a real
     decoder errors there).
     """
-    mc, mpx, mb = int(max_chunks), int(max_px), int(max_blocks)
-    mrows = int(max_rows)
-    sig = _png_sig_select(files, path_col)
-    L = _png_image_layers(mc, mpx, mb, mrows)
-    meta, idat_hex = L["meta"], L["idat_hex"]
-    zlib_hdr_ok, zfold, lz = L["zlib_hdr_ok"], L["zfold"], L["lz"]
-
-    # --- layer 6: scanline + size validation, per-channel stats --------
-    stride = "(1 + m.w * m.bpp)"
-    raw_ok = (
-        f"zs.ok AND zs.done AND zs.off + 4 = {lz}"
-        f" AND length(zs.outh) = 2 * m.h * {stride}"
-        # every scanline's filter byte must be 0 (None): the only
-        # filter the codec-free path decodes
-        f" AND aggregate(sequence(0, CAST(m.h - 1 AS INT)), true, (a, r) ->"
-        f" a AND substring(zs.outh, CAST(2 * r * {stride} + 1 AS INT), 2) = '00')"
-        # palette indices must all resolve inside the PLTE (an
-        # out-of-range index is a stray, filtered — a real decoder
-        # errors there); one extra O(pixels) pass, ct=3 only, with the
-        # same row-sliced indexing discipline as the stats fold
-        f" AND (m.ct != 3 OR aggregate("
-        f" transform(sequence(0, CAST(m.h - 1 AS INT)), r ->"
-        f"  substring(zs.outh, CAST(2 * r * {stride} + 3 AS INT),"
-        f"  CAST(2 * m.w AS INT))),"
+    # per-scanline pixel hex, sliced once and shared by every channel
+    row_hex = (
+        f"substring(zs.outh, CAST(2 * r * {_PNG_STRIDE} + 3 AS INT),"
+        f" CAST(2 * m.w * m.bpp AS INT))"
+    )
+    # palette indices must all resolve inside the PLTE (an out-of-range
+    # index is a stray, filtered); one extra O(pixels) pass, ct=3 only
+    palette_ok = (
+        f"m.ct != 3 OR aggregate("
+        f" transform(sequence(0, CAST(m.h - 1 AS INT)), r -> {row_hex}),"
         f" true, (a, rowh) -> a AND aggregate("
         f"  transform(sequence(0, CAST(m.w - 1 AS INT)), x ->"
         f"   CAST(conv(substring(rowh, CAST(2 * x + 1 AS INT), 2),"
         f"   16, 10) AS INT)),"
-        f"  true, (b, ix) -> b AND 6 * ix < length(m.plte))))"
-    )
-    # SUBSTRING IS O(START-POSITION) on UTF8String (it counts chars from
-    # the string head), so indexing pixel bytes straight into the whole-
-    # image hex is O(pixels²) — measured: 128² decoded at 10.7k px/s but
-    # 256² COLLAPSED to 3.8k px/s.  Slice each SCANLINE's pixel hex once
-    # (O(h·n) total), then index within the short row string: per-pixel
-    # scans are bounded by the row length, restoring O(pixels·row) —
-    # measured 17.45 s → sub-second at 256².  Same lesson family as the
-    # WAV windows carrying only their own hex slice.
-    row_hex = (
-        f"substring(zs.outh, CAST(2 * r * {stride} + 3 AS INT),"
-        f" CAST(2 * m.w * m.bpp AS INT))"
+        f"  true, (b, ix) -> b AND 6 * ix < length(m.plte)))"
     )
     # pixel x, channel ci: gray/RGB read the sample straight from the
     # row hex; palette reads the 1-byte index then resolves channel ci
@@ -1146,10 +953,10 @@ def png_pixel_stats(
     )
     chan_stats = (
         # rows sliced ONCE (shared by every channel), each row's samples
-        # decoded once into an int array before the metric fold
-        # (transform-first, the WAV 2.3x lesson); the fold result is
-        # bound so the field reads don't re-fold
-        f"transform(array(transform(sequence(0, CAST(m.h - 1 AS INT)),"
+        # decoded once into an int array before the metric fold; the
+        # fold result is bound so the field reads don't re-fold
+        f"CASE WHEN {palette_ok} THEN"
+        f" transform(array(transform(sequence(0, CAST(m.h - 1 AS INT)),"
         f" r -> {row_hex})), rows ->"
         f" transform(sequence(0, CAST(m.ch - 1 AS INT)), ci ->"
         f"  transform(array(aggregate(rows,"
@@ -1160,66 +967,35 @@ def png_pixel_stats(
         f"     a, (b, v) -> named_struct('s', b.s + v, 'mn', least(b.mn, v),"
         f"                               'mx', greatest(b.mx, v))))), f ->"
         f"  named_struct('w', m.w, 'h', m.h, 's', f.s, 'mn', f.mn,"
-        f"               'mx', f.mx))[0]))[0]"
+        f"               'mx', f.mx))[0]))[0] END"
     )
-
-    mega = (
-        f"transform(array(content), c ->"
-        f" transform(array({_png_walk_fold(mc)}), st ->"
-        f"  transform(array({meta}), m ->"
-        # dimensions bound INDIVIDUALLY before the product: a malicious
-        # IHDR can declare w = h = 0xFFFFFFFF, and w*h would overflow
-        # int64 — an ANSI ERROR, not a filter — unless the conjunction
-        # short-circuits on the per-dimension caps first
-        f"   CASE WHEN m IS NOT NULL AND m.w BETWEEN 1 AND {mpx}"
-        f"             AND m.h BETWEEN 1 AND {mrows}"
-        f"             AND m.w * m.h <= {mpx} THEN"
-        f"    transform(array({idat_hex}), zh ->"
-        f"     CASE WHEN {zlib_hdr_ok} THEN"
-        f"      transform(array({zfold}), zs ->"
-        f"       CASE WHEN {raw_ok} THEN {chan_stats} END)[0]"
-        f"     END)[0]"
-        f"   END)[0])[0])[0]"
+    decoded = _png_decode(
+        files, int(max_chunks), int(max_px), int(max_blocks), int(max_rows), (0,), chan_stats
     )
-    decoded = sig.select("file_name", F.expr(mega).alias("px"))
-    return decoded.select(
-        "file_name",
-        F.posexplode(F.col("px")).alias("channel", "s"),
-    ).select(
-        "file_name",
-        F.col("channel").cast("long").alias("channel"),
-        F.col("s.w").alias("w"),
-        F.col("s.h").alias("h"),
-        (F.col("s.w") * F.col("s.h")).alias("n_px"),
-        F.col("s.s").alias("sum_val"),
-        F.col("s.mn").alias("min_val"),
-        F.col("s.mx").alias("max_val"),
-        F.round(
-            F.col("s.s").cast("double")
-            / (F.col("s.w") * F.col("s.h")).cast("double"),
-            6,
-        ).alias("mean_val"),
+    return _png_channel_stats(
+        decoded.select(
+            "file_name", F.posexplode(F.col("img")).alias("channel", "s")
+        ).select(
+            "file_name",
+            F.col("channel").cast("long").alias("channel"),
+            F.col("s.w").alias("w"),
+            F.col("s.h").alias("h"),
+            F.col("s.s").alias("sum_val"),
+            F.col("s.mn").alias("min_val"),
+            F.col("s.mx").alias("max_val"),
+        )
     )
 
 
-def png_filtered_pixel_stats(
-    files: DataFrame,
-    max_chunks: int = 64,
-    max_px: int = PNG_PIXEL_MAX,
-    max_blocks: int = PNG_ZLIB_MAX_BLOCKS,
-    max_rows: int = PNG_MAX_ROWS,
-    path_col: str = "path",
-) -> DataFrame:
-    """:func:`png_pixel_stats` widened one rung up the decode ladder
-    (r10 verdict item 5): scanline filter types **1 (Sub) and 2 (Up)**
-    — the most common choices real encoders emit — are RECONSTRUCTED
-    instead of filtered, alongside type 0.  Types 3/4 (Average/Paeth)
-    and every other stray stay on the lake-scan contract: the file
-    drops, never errors.
+def png_filtered_pixel_stats(files: DataFrame, max_chunks: int = 64) -> DataFrame:
+    """:func:`png_pixel_stats` widened one rung up the decode ladder:
+    scanline filter types **1 (Sub) and 2 (Up)** — the most common
+    choices real encoders emit — are RECONSTRUCTED instead of filtered,
+    alongside type 0.  Types 3/4 (Average/Paeth) and every other stray
+    stay on the lake-scan contract: the file drops, never errors.
 
-    Architecture: the byte-level layers (chunk walk → IDAT concat →
-    stored-block inflation, :func:`_png_image_layers`) stay one
-    let-bound JVM expression per file, but the UNFILTER step moves to
+    Architecture: the byte-level layers stay the shared let-bound
+    :func:`_png_decode` expression, but the UNFILTER step moves to
     DataFrame **window functions** over an exploded pixel-byte table —
     deliberately NOT an expression fold, because PNG reconstruction is
     a prefix scan and windows are Spark's native, codegen'd prefix
@@ -1236,16 +1012,13 @@ def png_filtered_pixel_stats(
       the row above, so each column is a sequence of independent
       chains anchored at self rows).
 
-    Scale: the explode is bounded by ``max_px·bpp ≤ 196k`` rows per
-    file before any shuffle; the two window specs induce two bounded
-    byte-row shuffles keyed to co-locate exactly the dependence chains
-    (per-row lanes, then per-column), the only OTHER exchange is the
-    final per-(file, channel) aggregation — the palette-stray check
-    rides that groupBy as a ``max`` indicator rather than adding a
-    third per-file window (ADVICE r11) — and everything from raw bytes
-    to channel stats is JVM built-ins — zero Python, zero UDFs.  At a
-    thumbnail-lake's file counts the shuffle rows are
-    |files|·pixels — the same order as the decode output itself.
+    Scale: the explode is bounded by ``PNG_PIXEL_MAX·bpp ≤ 196k`` rows
+    per file before any shuffle; the two window specs induce two
+    bounded byte-row shuffles keyed to co-locate exactly the dependence
+    chains, the only OTHER exchange is the final per-(file, channel)
+    aggregation — the palette-stray check rides that groupBy as a
+    ``max`` indicator rather than adding a third per-file window — and
+    everything from raw bytes to channel stats is JVM built-ins.
     MEASURED at the pixel cap (a 256×256 all-Sub grayscale, checked
     bit-exact against a NumPy reconstruction): 1.14 s warm median-of-3
     on local[32] (~57k px/s) — linear, ~1.7× the expression-fold
@@ -1260,53 +1033,30 @@ def png_filtered_pixel_stats(
     """
     from pyspark.sql import Window
 
-    mc, mpx, mb = int(max_chunks), int(max_px), int(max_blocks)
-    mrows = int(max_rows)
-    sig = _png_sig_select(files, path_col)
-    L = _png_image_layers(mc, mpx, mb, mrows)
-    stride = "(1 + m.w * m.bpp)"
-    lz = L["lz"]
-    raw_ok = (
-        f"zs.ok AND zs.done AND zs.off + 4 = {lz}"
-        f" AND length(zs.outh) = 2 * m.h * {stride}"
-        # filter bytes 0 (None), 1 (Sub), 2 (Up) are decodable; any
-        # other type drops the file (filtered, never errored)
-        f" AND aggregate(sequence(0, CAST(m.h - 1 AS INT)), true, (a, r) ->"
-        f" a AND substring(zs.outh, CAST(2 * r * {stride} + 1 AS INT), 2)"
-        f" IN ('00', '01', '02'))"
-    )
-    # per-scanline slicing (substring is O(position) — the measured
-    # png_pixel_stats lesson): each row's pixel hex is bound once, its
-    # bytes decoded once into an int array before the explode
+    # per-scanline slicing (substring is O(position)): each row's pixel
+    # hex is bound once, its bytes decoded once before the explode
+    stride = _PNG_STRIDE
     rows_expr = (
-        f"transform(sequence(0, CAST(m.h - 1 AS INT)), r -> named_struct("
+        f"named_struct('w', m.w, 'h', m.h, 'ct', m.ct, 'bpp', m.bpp,"
+        f" 'ch', m.ch, 'plte', m.plte, 'rows',"
+        f" transform(sequence(0, CAST(m.h - 1 AS INT)), r -> named_struct("
         f"'ftype', CAST(conv(substring(zs.outh,"
         f" CAST(2 * r * {stride} + 1 AS INT), 2), 16, 10) AS INT),"
         f" 'vals', transform(array(substring(zs.outh,"
         f" CAST(2 * r * {stride} + 3 AS INT), CAST(2 * m.w * m.bpp AS INT))),"
         f" rowh -> transform(sequence(0, CAST(m.w * m.bpp - 1 AS INT)), x ->"
         f" CAST(conv(substring(rowh, CAST(2 * x + 1 AS INT), 2), 16, 10)"
-        f" AS INT)))[0]))"
+        f" AS INT)))[0])))"
     )
-    mega = (
-        f"transform(array(content), c ->"
-        f" transform(array({_png_walk_fold(mc)}), st ->"
-        f"  transform(array({L['meta']}), m ->"
-        # dimensions bound INDIVIDUALLY before the product (the ANSI
-        # overflow-vs-filter discipline of png_pixel_stats)
-        f"   CASE WHEN m IS NOT NULL AND m.w BETWEEN 1 AND {mpx}"
-        f"             AND m.h BETWEEN 1 AND {mrows}"
-        f"             AND m.w * m.h <= {mpx} THEN"
-        f"    transform(array({L['idat_hex']}), zh ->"
-        f"     CASE WHEN {L['zlib_hdr_ok']} THEN"
-        f"      transform(array({L['zfold']}), zs ->"
-        f"       CASE WHEN {raw_ok} THEN named_struct("
-        f"        'w', m.w, 'h', m.h, 'ct', m.ct, 'bpp', m.bpp,"
-        f"        'ch', m.ch, 'plte', m.plte, 'rows', {rows_expr}) END)[0]"
-        f"     END)[0]"
-        f"   END)[0])[0])[0]"
+    img = _png_decode(
+        files,
+        int(max_chunks),
+        PNG_PIXEL_MAX,
+        PNG_ZLIB_MAX_BLOCKS,
+        PNG_MAX_ROWS,
+        (0, 1, 2),
+        rows_expr,
     )
-    img = sig.select("file_name", F.expr(mega).alias("img"))
     # stray gate folded into the generator (NULL → row vanishes), the
     # png_chunk_walk convention
     rows = img.select(
@@ -1417,33 +1167,13 @@ def png_filtered_pixel_stats(
         .otherwise(F.col("v0").cast("long"))
         .alias("v"),
     )
-    return chan.groupBy("file_name", "channel", "w", "h").agg(
-        F.sum("v").alias("sum_val"),
-        F.min("v").alias("min_val"),
-        F.max("v").alias("max_val"),
-        F.max("stray").alias("stray"),
-    ).filter(F.col("stray") == 0).select(
-        "file_name",
-        "channel",
-        "w",
-        "h",
-        (F.col("w") * F.col("h")).alias("n_px"),
-        "sum_val",
-        "min_val",
-        "max_val",
-        F.round(
-            F.col("sum_val").cast("double")
-            / (F.col("w") * F.col("h")).cast("double"),
-            6,
-        ).alias("mean_val"),
-    ).select(  # column order parity with png_pixel_stats
-        "file_name",
-        "channel",
-        "w",
-        "h",
-        "n_px",
-        "sum_val",
-        "min_val",
-        "max_val",
-        "mean_val",
+    return _png_channel_stats(
+        chan.groupBy("file_name", "channel", "w", "h")
+        .agg(
+            F.sum("v").alias("sum_val"),
+            F.min("v").alias("min_val"),
+            F.max("v").alias("max_val"),
+            F.max("stray").alias("stray"),
+        )
+        .filter(F.col("stray") == 0)
     )

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pyspark_pipelining_spark.money import duck_money_sum, money_sum
+from pyspark_pipelining_spark.money import cents, duck_money_sum, money_sum
 from pyspark_pipelining_spark.operators import analytics, dedup, graph
 from pyspark_pipelining_spark.operators import text as text_ops
 from pyspark_pipelining_spark.queries_llm import SQL_WORDS, _sql_near_dup_pairs
@@ -1377,8 +1377,7 @@ def q_trend_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.sum(
                 F.expr(
-                    "CAST(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100"
-                    " AS BIGINT) AS DECIMAL(38,0))"
+                    f"CAST({cents('o_totalprice')} AS DECIMAL(38,0))"
                 )
             ).alias("rev")
         )
@@ -1409,11 +1408,11 @@ def q_trend_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("c_mktsegment")
 
 
-SQL_TREND_BY_SEGMENT = """
+SQL_TREND_BY_SEGMENT = f"""
 WITH monthly AS (
     SELECT c_mktsegment,
            12 * year(o_orderdate) + month(o_orderdate) AS m,
-           sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS rev
+           sum({cents('o_totalprice')}) AS rev
     FROM orders JOIN customer ON o_custkey = c_custkey
     GROUP BY 1, 2
 ),
@@ -1567,8 +1566,7 @@ def q_theilsen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.sum(
                 F.expr(
-                    "CAST(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100"
-                    " AS BIGINT) AS DECIMAL(38,0))"
+                    f"CAST({cents('o_totalprice')} AS DECIMAL(38,0))"
                 )
             ).alias("rev")
         )
@@ -1614,12 +1612,11 @@ def q_theilsen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_THEILSEN_TREND = """
+SQL_THEILSEN_TREND = f"""
 WITH monthly AS (
     SELECT c_mktsegment AS seg,
            year(o_orderdate) * 12 + month(o_orderdate) AS m,
-           sum(CAST(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
-               AS BIGINT) AS DECIMAL(38,0))) AS rev
+           sum(CAST({cents('o_totalprice')} AS DECIMAL(38,0))) AS rev
     FROM orders JOIN customer ON o_custkey = c_custkey
     GROUP BY 1, 2
 ),

@@ -291,7 +291,7 @@ def _s16(off: str) -> str:
     return f"{u} - CASE WHEN {u} >= 32768 THEN 65536 ELSE 0 END"
 
 
-def _sql_wav_chunks(fixture_dir: str, ws: int, channels: int = 1) -> str:
+def _sql_wav_chunks(fixture_dir: str, ws: int, channels: int) -> str:
     """The ``wav``, ``hdr``, ``wins`` and ``chunks`` CTEs every WAV
     oracle starts with, mirroring ``multimodal._wav_window_chunks``:
     the canonical 44-byte RIFF/WAVE header of each file under
@@ -348,6 +348,62 @@ chunks AS (
 )"""
 
 
+def _sql_wav_features(fixture_dir: str, ws: int, channels: int) -> str:
+    """The CTEs of every WAV oracle, ending in ``feats``: the DuckDB
+    half of ``multimodal.wav_features``, one row per (file, window,
+    channel) with its columns.  The per-channel fanout is an unnest,
+    and the feature pairs come from ``lag() OVER`` the per-(window,
+    channel) sample order, so pairs never span a window nor a channel,
+    matching the Spark fold's NULL-seeded ``prev``: NULL lag at j=0
+    makes ``vp * v < 0`` NULL, and coalesce keeps ``ac`` exact."""
+    return f"""{_sql_wav_chunks(fixture_dir, ws, channels)},
+chans AS (
+    SELECT file_name, sample_rate, win, n_samples, chunk,
+           unnest(range({channels})) AS channel
+    FROM chunks
+),
+samp AS (
+    SELECT file_name, sample_rate, win, channel, n_samples, chunk,
+           unnest(range(0, n_samples)) AS j
+    FROM chans
+),
+vals AS (
+    SELECT file_name, sample_rate, win, channel, n_samples, j,
+           {_s16(f"{4 * channels} * j + 4 * channel")} AS v
+    FROM samp
+),
+pairs AS (
+    SELECT file_name, sample_rate, win, channel, n_samples, v,
+           lag(v) OVER (PARTITION BY file_name, win, channel ORDER BY j) AS vp
+    FROM vals
+),
+feats AS (
+    SELECT file_name, CAST(win AS BIGINT) AS win,
+           CAST(channel AS BIGINT) AS channel,
+           CAST(sample_rate AS INT) AS sample_rate,
+           CAST(n_samples AS BIGINT) AS n_samples,
+           CAST(max(abs(v)) AS BIGINT) AS peak,
+           round(sqrt(CAST(sum(v * v) AS DOUBLE) / n_samples), 6) AS rms,
+           CAST(sum(CASE WHEN vp * v < 0 THEN 1 ELSE 0 END) AS BIGINT) AS zc,
+           round(CAST(sum(CASE WHEN vp * v < 0 THEN 1 ELSE 0 END) AS DOUBLE)
+                 / greatest(n_samples - 1, 1), 6) AS zcr,
+           round(CASE WHEN sum(v * v) > 0
+                      THEN CAST(sum(coalesce(vp, 0) * v) AS DOUBLE)
+                           / CAST(sum(v * v) AS DOUBLE)
+                      ELSE 0.0 END, 6) AS ac1
+    FROM pairs
+    GROUP BY file_name, win, channel, sample_rate, n_samples
+)"""
+
+
+#: the mono WAV queries' columns: ``wav_features`` without ``channel``
+#: (``wav_pcm_windows`` keeps the amplitude half)
+WAV_FEATURES = (
+    "file_name", "win", "sample_rate", "n_samples", "peak", "rms", "zc", "zcr", "ac1"
+)
+WAV_PCM = WAV_FEATURES[:6]
+
+
 def q_wav_pcm_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-256-sample-window RMS and peak over REAL WAV files read as
     raw bytes through ``sources.registry.load_binary_files`` — the
@@ -355,7 +411,7 @@ def q_wav_pcm_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     math, not just container sniffing: the canonical RIFF/WAVE header
     is parsed and the int16 PCM samples decoded entirely with JVM
     ``hex``/``substring``/``conv`` expressions and an ``aggregate``
-    higher-order function (``operators/multimodal.wav_pcm_windows``).
+    higher-order function (``operators/multimodal.wav_features``).
 
     The input is the repo's committed deterministic fixture set (the
     sf tables carry no media bytes; the fixtures are integer-generated
@@ -363,39 +419,20 @@ def q_wav_pcm_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes).  The DuckDB oracle is fully independent: ``read_blob``
     over the same files, hex-pair decoding via ``CAST('0x…')``, and a
     plain unnest+GROUP BY instead of Spark's in-row HOF fold."""
-    from pyspark_pipelining_spark.operators.multimodal import wav_pcm_windows
+    from pyspark_pipelining_spark.operators.multimodal import wav_features
     from pyspark_pipelining_spark.sources.registry import load_binary_files
 
     files = load_binary_files(spark, WAV_FIXTURE_DIR, glob="*.wav")
-    return wav_pcm_windows(files, window_samples=WAV_WINDOW).orderBy(
+    return wav_features(files, window_samples=WAV_WINDOW).select(*WAV_PCM).orderBy(
         "file_name", "win"
     )
 
 
-def _sql_wav_pcm_windows() -> str:
-    return f"""
-WITH {_sql_wav_chunks(WAV_FIXTURE_DIR, WAV_WINDOW)},
-samp AS (
-    SELECT file_name, sample_rate, win, n_samples, chunk,
-           unnest(range(0, n_samples)) AS j
-    FROM chunks
-),
-vals AS (
-    SELECT file_name, sample_rate, win, n_samples,
-           {_s16("4 * j")} AS v
-    FROM samp
-)
-SELECT file_name, CAST(win AS BIGINT) AS win,
-       CAST(sample_rate AS INT) AS sample_rate,
-       CAST(n_samples AS BIGINT) AS n_samples,
-       CAST(max(abs(v)) AS BIGINT) AS peak,
-       round(sqrt(CAST(sum(v * v) AS DOUBLE) / n_samples), 6) AS rms
-FROM vals
-GROUP BY file_name, win, sample_rate, n_samples
+SQL_WAV_PCM_WINDOWS = f"""
+WITH {_sql_wav_features(WAV_FIXTURE_DIR, WAV_WINDOW, 1)}
+SELECT {", ".join(WAV_PCM)} FROM feats
 ORDER BY file_name, win
 """
-
-SQL_WAV_PCM_WINDOWS = _sql_wav_pcm_windows()
 
 QUERIES_ANN_MEDIA["wav_pcm_windows"] = q_wav_pcm_windows
 ORACLES_ANN_MEDIA["wav_pcm_windows"] = SQL_WAV_PCM_WINDOWS
@@ -666,6 +703,21 @@ rawimg AS (
 )"""
 
 
+#: the per-channel output both PNG pixel oracles end with, over ``px``
+#: (one row per pixel and output channel, its value ``v``): the DuckDB
+#: half of ``multimodal._png_channel_stats``
+_SQL_PNG_CHANNEL_STATS = """SELECT file_name, CAST(channel AS BIGINT) AS channel,
+       CAST(w AS BIGINT) AS w, CAST(h AS BIGINT) AS h,
+       CAST(w * h AS BIGINT) AS n_px,
+       CAST(sum(v) AS BIGINT) AS sum_val,
+       CAST(min(v) AS BIGINT) AS min_val,
+       CAST(max(v) AS BIGINT) AS max_val,
+       round(CAST(sum(v) AS DOUBLE) / CAST(w * h AS DOUBLE), 6) AS mean_val
+FROM px GROUP BY file_name, channel, w, h
+ORDER BY file_name, channel
+"""
+
+
 def _sql_png_pixel_stats(
     fixture_dir: str = PNG_FIXTURE_DIR,
     max_px: int | None = None,
@@ -715,16 +767,7 @@ px AS (
     FROM pxraw
     WHERE file_name NOT IN (SELECT file_name FROM badidx)
 )
-SELECT file_name, CAST(channel AS BIGINT) AS channel,
-       CAST(w AS BIGINT) AS w, CAST(h AS BIGINT) AS h,
-       CAST(w * h AS BIGINT) AS n_px,
-       CAST(sum(v) AS BIGINT) AS sum_val,
-       CAST(min(v) AS BIGINT) AS min_val,
-       CAST(max(v) AS BIGINT) AS max_val,
-       round(CAST(sum(v) AS DOUBLE) / CAST(w * h AS DOUBLE), 6) AS mean_val
-FROM px GROUP BY file_name, channel, w, h
-ORDER BY file_name, channel
-"""
+{_SQL_PNG_CHANNEL_STATS}"""
 
 
 SQL_PNG_PIXEL_STATS = _sql_png_pixel_stats()
@@ -871,16 +914,7 @@ px AS (
                 ELSE v0 END AS v
     FROM chx
 )
-SELECT file_name, CAST(channel AS BIGINT) AS channel,
-       CAST(w AS BIGINT) AS w, CAST(h AS BIGINT) AS h,
-       CAST(w * h AS BIGINT) AS n_px,
-       CAST(sum(v) AS BIGINT) AS sum_val,
-       CAST(min(v) AS BIGINT) AS min_val,
-       CAST(max(v) AS BIGINT) AS max_val,
-       round(CAST(sum(v) AS DOUBLE) / CAST(w * h AS DOUBLE), 6) AS mean_val
-FROM px GROUP BY file_name, channel, w, h
-ORDER BY file_name, channel
-"""
+{_SQL_PNG_CHANNEL_STATS}"""
 
 
 SQL_PNG_FILTER_PIXEL_STATS = _sql_png_filter_pixel_stats()
@@ -894,14 +928,11 @@ ORACLES_ANN_MEDIA["png_filter_pixel_stats"] = SQL_PNG_FILTER_PIXEL_STATS
 
 
 def q_wav_window_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`wav_pcm_windows`' signal-feature twin (r10 verdict item 8,
-    stretch): the SAME single per-window ``aggregate`` fold over the
-    int16 PCM samples now also carries zero-crossing count/rate and
-    first-lag autocorrelation — amplitude stats → signal features with
-    one decode and no extra scan
-    (:func:`operators.multimodal.wav_window_features`; the shared
-    front half ``_wav_window_chunks`` leaves the registered
-    ``wav_pcm_windows`` plan expression-identical).
+    """`wav_pcm_windows`' signal features: the SAME single per-window
+    ``aggregate`` fold over the int16 PCM samples also carries
+    zero-crossing count/rate and first-lag autocorrelation — amplitude
+    stats → signal features with one decode and no extra scan
+    (:func:`operators.multimodal.wav_features`).
 
     Cross-engine exactness: ``zc`` and the two correlation sums are
     exact int64 on both engines (strict sign flips ``prev*x < 0``;
@@ -911,56 +942,20 @@ def q_wav_window_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     ÷0.  The DuckDB oracle is fully independent: ``read_blob`` +
     hex-pair decode + ``lag() OVER`` pairs + GROUP BY, vs Spark's
     NULL-seeded chained-``prev`` accumulator."""
-    from pyspark_pipelining_spark.operators.multimodal import wav_window_features
+    from pyspark_pipelining_spark.operators.multimodal import wav_features
     from pyspark_pipelining_spark.sources.registry import load_binary_files
 
     files = load_binary_files(spark, WAV_FIXTURE_DIR, glob="*.wav")
-    return wav_window_features(files, window_samples=WAV_WINDOW).orderBy(
-        "file_name", "win"
-    )
+    return wav_features(files, window_samples=WAV_WINDOW).select(
+        *WAV_FEATURES
+    ).orderBy("file_name", "win")
 
 
-def _sql_wav_window_features() -> str:
-    # the feature pairs come from lag() OVER the per-window sample
-    # order j, so pairs never span a window boundary, matching the
-    # Spark fold's per-chunk scope.  NULL lag at j=0: NULL*v<0 falls
-    # through the CASE and coalesce keeps ac exact.
-    return f"""
-WITH {_sql_wav_chunks(WAV_FIXTURE_DIR, WAV_WINDOW)},
-samp AS (
-    SELECT file_name, sample_rate, win, n_samples, chunk,
-           unnest(range(0, n_samples)) AS j
-    FROM chunks
-),
-vals AS (
-    SELECT file_name, sample_rate, win, n_samples, j,
-           {_s16("4 * j")} AS v
-    FROM samp
-),
-pairs AS (
-    SELECT file_name, sample_rate, win, n_samples, v,
-           lag(v) OVER (PARTITION BY file_name, win ORDER BY j) AS vp
-    FROM vals
-)
-SELECT file_name, CAST(win AS BIGINT) AS win,
-       CAST(sample_rate AS INT) AS sample_rate,
-       CAST(n_samples AS BIGINT) AS n_samples,
-       CAST(max(abs(v)) AS BIGINT) AS peak,
-       round(sqrt(CAST(sum(v * v) AS DOUBLE) / n_samples), 6) AS rms,
-       CAST(sum(CASE WHEN vp * v < 0 THEN 1 ELSE 0 END) AS BIGINT) AS zc,
-       round(CAST(sum(CASE WHEN vp * v < 0 THEN 1 ELSE 0 END) AS DOUBLE)
-             / greatest(n_samples - 1, 1), 6) AS zcr,
-       round(CASE WHEN sum(v * v) > 0
-                  THEN CAST(sum(coalesce(vp, 0) * v) AS DOUBLE)
-                       / CAST(sum(v * v) AS DOUBLE)
-                  ELSE 0.0 END, 6) AS ac1
-FROM pairs
-GROUP BY file_name, win, sample_rate, n_samples
+SQL_WAV_WINDOW_FEATURES = f"""
+WITH {_sql_wav_features(WAV_FIXTURE_DIR, WAV_WINDOW, 1)}
+SELECT {", ".join(WAV_FEATURES)} FROM feats
 ORDER BY file_name, win
 """
-
-
-SQL_WAV_WINDOW_FEATURES = _sql_wav_window_features()
 
 QUERIES_ANN_MEDIA["wav_window_features"] = q_wav_window_features
 ORACLES_ANN_MEDIA["wav_window_features"] = SQL_WAV_WINDOW_FEATURES
@@ -974,80 +969,33 @@ WAV_STEREO_WINDOW = 256
 
 
 def q_wav_stereo_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``wav_window_features`` for interleaved STEREO PCM16 (r11
-    verdict item 8, stretch — real media lakes are mostly stereo):
-    one decode front half (``_wav_window_chunks(n_channels=2)``, a
-    window's chunk carries its interleaved bytes once), a
-    per-(window, channel) fold reading samples at stride 2, and
-    ``channel`` as an output column — over its OWN committed fixture
-    lake (``fixtures/audio_stereo/``: L-triangle/R-noise,
-    ramp/negated-ramp, a mono stray the channels==2 gate must FILTER,
-    and a trailing-partial-frame file both engines truncate
-    identically).
+    """``wav_window_features`` for interleaved STEREO PCM16 (real media
+    lakes are mostly stereo): ``wav_features(channels=2)`` cuts one
+    chunk per window carrying its interleaved bytes once, folds each
+    channel at stride 2, and keeps ``channel`` as an output column —
+    over its OWN committed fixture lake (``fixtures/audio_stereo/``:
+    L-triangle/R-noise, ramp/negated-ramp, a mono stray the
+    channels==2 gate must FILTER, and a trailing-partial-frame file
+    both engines truncate identically).
 
-    All feature semantics and exactness contracts are the mono twin's,
-    per channel (exact int64 sums, ONE double division per feature,
-    NULL-seeded ``prev`` so pairs never span a window — nor a channel:
-    each fold sees only its own channel's samples).  The DuckDB oracle
-    is fully independent: hex-pair stride-2 decode + ``lag() OVER
-    (PARTITION BY file_name, win, channel ORDER BY j)`` + GROUP BY."""
-    from pyspark_pipelining_spark.operators.multimodal import wav_stereo_features
+    All feature semantics and exactness contracts are the mono
+    queries', per channel.  The DuckDB oracle is fully independent:
+    hex-pair stride-2 decode + ``lag() OVER (PARTITION BY file_name,
+    win, channel ORDER BY j)`` + GROUP BY."""
+    from pyspark_pipelining_spark.operators.multimodal import wav_features
     from pyspark_pipelining_spark.sources.registry import load_binary_files
 
     files = load_binary_files(spark, WAV_STEREO_FIXTURE_DIR, glob="*.wav")
-    return wav_stereo_features(files, window_samples=WAV_STEREO_WINDOW).orderBy(
+    return wav_features(files, window_samples=WAV_STEREO_WINDOW, channels=2).orderBy(
         "file_name", "win", "channel"
     )
 
 
-def _sql_wav_stereo_features() -> str:
-    # FRAME accounting (data_bytes // 4; a trailing partial frame
-    # truncates); the per-channel fanout is an unnest over [0, 1] and
-    # the feature pairs come from lag() OVER the per-(window, channel)
-    # sample order, so pairs never span a window NOR a channel —
-    # matching the Spark fold's scope.
-    return f"""
-WITH {_sql_wav_chunks(WAV_STEREO_FIXTURE_DIR, WAV_STEREO_WINDOW, channels=2)},
-chans AS (
-    SELECT file_name, sample_rate, win, n_samples, chunk,
-           unnest([CAST(0 AS BIGINT), CAST(1 AS BIGINT)]) AS channel
-    FROM chunks
-),
-samp AS (
-    SELECT file_name, sample_rate, win, channel, n_samples, chunk,
-           unnest(range(0, n_samples)) AS j
-    FROM chans
-),
-vals AS (
-    SELECT file_name, sample_rate, win, channel, n_samples, j,
-           {_s16("8 * j + 4 * channel")} AS v
-    FROM samp
-),
-pairs AS (
-    SELECT file_name, sample_rate, win, channel, n_samples, v,
-           lag(v) OVER (PARTITION BY file_name, win, channel ORDER BY j) AS vp
-    FROM vals
-)
-SELECT file_name, CAST(win AS BIGINT) AS win,
-       CAST(channel AS BIGINT) AS channel,
-       CAST(sample_rate AS INT) AS sample_rate,
-       CAST(n_samples AS BIGINT) AS n_samples,
-       CAST(max(abs(v)) AS BIGINT) AS peak,
-       round(sqrt(CAST(sum(v * v) AS DOUBLE) / n_samples), 6) AS rms,
-       CAST(sum(CASE WHEN vp * v < 0 THEN 1 ELSE 0 END) AS BIGINT) AS zc,
-       round(CAST(sum(CASE WHEN vp * v < 0 THEN 1 ELSE 0 END) AS DOUBLE)
-             / greatest(n_samples - 1, 1), 6) AS zcr,
-       round(CASE WHEN sum(v * v) > 0
-                  THEN CAST(sum(coalesce(vp, 0) * v) AS DOUBLE)
-                       / CAST(sum(v * v) AS DOUBLE)
-                  ELSE 0.0 END, 6) AS ac1
-FROM pairs
-GROUP BY file_name, win, channel, sample_rate, n_samples
+SQL_WAV_STEREO_FEATURES = f"""
+WITH {_sql_wav_features(WAV_STEREO_FIXTURE_DIR, WAV_STEREO_WINDOW, 2)}
+SELECT * FROM feats
 ORDER BY file_name, win, channel
 """
-
-
-SQL_WAV_STEREO_FEATURES = _sql_wav_stereo_features()
 
 QUERIES_ANN_MEDIA["wav_stereo_features"] = q_wav_stereo_features
 ORACLES_ANN_MEDIA["wav_stereo_features"] = SQL_WAV_STEREO_FEATURES

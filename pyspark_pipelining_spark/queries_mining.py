@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pyspark_pipelining_spark.money import cents
 from pyspark_pipelining_spark.operators.dedup import duck_hash60
 from pyspark_pipelining_spark.queries_llm import _sql_near_dup_pairs
 from pyspark_pipelining_spark.sources.registry import load_table
@@ -135,7 +136,7 @@ def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         (F.year("o_orderdate") * 12 + F.month("o_orderdate")).alias("m"),
-        F.expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)").alias(
+        F.expr(cents("o_totalprice")).alias(
             "cents"
         ),
     )
@@ -174,11 +175,11 @@ def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_COHORT_LTV = """
+SQL_COHORT_LTV = f"""
 WITH o AS (
     SELECT o_custkey,
            year(o_orderdate) * 12 + month(o_orderdate) AS m,
-           CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+           {cents('o_totalprice')} AS cents
     FROM orders
 ),
 cohorts AS (SELECT o_custkey, min(m) AS m0 FROM o GROUP BY o_custkey),
@@ -285,7 +286,7 @@ def q_gini_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     cells = ev.groupBy(
         "event_type",
-        F.expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)").alias("cents"),
+        F.expr(cents("value")).alias("cents"),
     ).agg(F.count(F.lit(1)).alias("ni"))
     w = (
         Window.partitionBy("event_type")
@@ -321,10 +322,10 @@ def q_gini_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type")
 
 
-SQL_GINI_BY_TYPE = """
+SQL_GINI_BY_TYPE = f"""
 WITH cells AS (
     SELECT event_type,
-           CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
+           {cents('value')} AS cents,
            count(*) AS ni
     FROM events GROUP BY 1, 2
 ),
@@ -384,7 +385,7 @@ def q_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "ts",
         "event_id",
-        F.expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)").alias("cents"),
+        F.expr(cents("value")).alias("cents"),
     )
     wt = Window.partitionBy("event_type")
     # cents·n vs sum(cents) widened to DECIMAL(38,0) on BOTH engines:
@@ -434,10 +435,10 @@ def q_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type")
 
 
-SQL_RUNS_TEST = """
+SQL_RUNS_TEST = f"""
 WITH ev AS (
     SELECT event_type, ts, event_id,
-           CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+           {cents('value')} AS cents
     FROM events
 ),
 signed AS (
@@ -577,7 +578,7 @@ def q_exact_median_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     cells = ev.groupBy(
         "event_type",
-        F.expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)").alias("cents"),
+        F.expr(cents("value")).alias("cents"),
     ).agg(F.count(F.lit(1)).alias("ni"))
     w = (
         Window.partitionBy("event_type")
@@ -605,10 +606,10 @@ def q_exact_median_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type")
 
 
-SQL_EXACT_MEDIAN_VALUE = """
+SQL_EXACT_MEDIAN_VALUE = f"""
 WITH cells AS (
     SELECT event_type,
-           CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
+           {cents('value')} AS cents,
            count(*) AS ni
     FROM events GROUP BY 1, 2
 ),
@@ -972,7 +973,7 @@ def q_trimmed_mean_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     cells = ev.groupBy(
         "event_type",
-        F.expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)").alias("cents"),
+        F.expr(cents("value")).alias("cents"),
     ).agg(F.count(F.lit(1)).alias("ni"))
     w = (
         Window.partitionBy("event_type")
@@ -1013,10 +1014,10 @@ def q_trimmed_mean_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type")
 
 
-SQL_TRIMMED_MEAN_VALUE = """
+SQL_TRIMMED_MEAN_VALUE = f"""
 WITH cells AS (
     SELECT event_type,
-           CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
+           {cents('value')} AS cents,
            count(*) AS ni
     FROM events GROUP BY 1, 2
 ),
@@ -1062,7 +1063,7 @@ def q_pareto_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load_table(spark, sf_dir, "part").select(
         "p_partkey",
         "p_size",
-        F.expr("CAST(CAST(p_retailprice AS DECIMAL(18,2)) * 100 AS BIGINT)").alias(
+        F.expr(cents("p_retailprice")).alias(
             "cents"
         ),
         "p_retailprice",
@@ -1085,10 +1086,10 @@ def q_pareto_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_PARETO_PARTS = """
+SQL_PARETO_PARTS = f"""
 WITH pc AS (
     SELECT p_partkey, p_size, p_retailprice,
-           CAST(CAST(p_retailprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+           {cents('p_retailprice')} AS cents
     FROM part
 )
 SELECT p.p_partkey, p.p_size, p.p_retailprice
@@ -1298,9 +1299,7 @@ def q_price_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = cache.keep(
         li.groupBy(
             "l_returnflag",
-            F.expr(
-                "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
-            ).alias("cents"),
+            F.expr(cents("l_extendedprice")).alias("cents"),
         ).agg(F.count(F.lit(1)).alias("ni"))
     )
 
@@ -1348,7 +1347,7 @@ def q_price_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_PRICE_QUANTILE_SKETCH = f"""
 WITH cells AS (
     SELECT l_returnflag,
-           CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
+           {cents('l_extendedprice')} AS cents,
            count(*) AS ni
     FROM lineitem GROUP BY 1, 2
 ),

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pyspark_pipelining_spark.money import D, duck_money_sum, money_sum
+from pyspark_pipelining_spark.money import D, cents, duck_money_sum, money_sum
 from pyspark_pipelining_spark.sources.registry import load_table
 
 # --- A-family: the TPC-H Q1-style pricing summary (P7, A2, A3, F8) ------
@@ -1087,7 +1087,7 @@ def q_corr_price_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag",
-        F.expr("CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)").alias(
+        F.expr(cents("l_extendedprice")).alias(
             "price_cents"
         ),
         F.col("l_quantity").cast("long").alias("qty"),
@@ -1097,10 +1097,10 @@ def q_corr_price_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_CORR_PRICE_QTY = """
+SQL_CORR_PRICE_QTY = f"""
 WITH base AS (
     SELECT l_returnflag,
-           CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS x,
+           {cents('l_extendedprice')} AS x,
            CAST(l_quantity AS BIGINT) AS y
     FROM lineitem
 ),
@@ -1307,7 +1307,7 @@ def q_ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "event_id",
         F.unix_micros("ts").alias("us"),
-        F.expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)").alias("cents"),
+        F.expr(cents("value")).alias("cents"),
     )
     arr = F.array_sort(F.collect_list(F.struct("us", "event_id", "cents")).over(w))
     return (
@@ -1339,7 +1339,7 @@ def q_ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_EWMA_USER_VALUE = f"""
 WITH base AS (
     SELECT user_id, event_id, epoch_us(ts) AS us,
-           CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+           {cents('value')} AS cents
     FROM events
 ),
 framed AS (
@@ -1428,7 +1428,7 @@ def q_rolling_median_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "event_id",
         F.unix_micros("ts").alias("us"),
-        F.expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)").alias("cents"),
+        F.expr(cents("value")).alias("cents"),
     )
     arr = F.array_sort(F.collect_list("cents").over(w))
     mid = (
@@ -1449,7 +1449,7 @@ def q_rolling_median_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_ROLLING_MEDIAN_VALUE = f"""
 WITH base AS (
     SELECT user_id, event_id, epoch_us(ts) AS us,
-           CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+           {cents('value')} AS cents
     FROM events
 ),
 framed AS (
@@ -1489,7 +1489,7 @@ def q_value_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit(2))
         .alias("period"),
         F.expr(
-            f"CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) div {PSI_BUCKET_CENTS}"
+            f"{cents('value')} div {PSI_BUCKET_CENTS}"
         ).alias("bucket"),
     )
     return drift_psi(tagged, "event_type", "period", "bucket").orderBy("event_type")
@@ -1503,7 +1503,7 @@ WITH rng AS (
 tagged AS (
     SELECT event_type,
            CASE WHEN epoch_us(ts) <= mid_us THEN 1 ELSE 2 END AS period,
-           CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) // {PSI_BUCKET_CENTS} AS bucket
+           {cents('value')} // {PSI_BUCKET_CENTS} AS bucket
     FROM events, rng
 ),
 hist AS (
@@ -1591,15 +1591,15 @@ def q_value_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",
-        F.expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)").alias("cents"),
+        F.expr(cents("value")).alias("cents"),
     )
     return group_moments(ev, "cents", "event_type").orderBy("event_type")
 
 
-SQL_VALUE_MOMENTS = """
+SQL_VALUE_MOMENTS = f"""
 WITH base AS (
     SELECT event_type,
-           CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+           {cents('value')} AS cents
     FROM events
 ),
 mu AS (

@@ -8,8 +8,10 @@ driver or be argued into the allowlist below.
 The same source-scan discipline pins each stage the two engines share:
 the Spark-side ``md5 → substring → conv`` hash has one home,
 ``dedup.portable_hash60``, and each DuckDB spelling the oracles replay
-bit for bit (the hash, the exact-cents sum, the cosine and its rank, the
-blob file name, the little-endian byte read) has one renderer."""
+bit for bit (the hash, the exact-cents sum and cast, the cosine and its
+rank, the blob file name, the little-endian byte read, the WAV features
+and the PNG channel stats) has one renderer.  The media family's Spark
+halves are pinned the same way: one WAV fold, one PNG decode shell."""
 
 from __future__ import annotations
 
@@ -18,6 +20,9 @@ import re
 from pathlib import Path
 
 import pytest
+
+# source scans only: no Spark session, a few seconds
+pytestmark = pytest.mark.quick
 
 PACKAGE = Path(__file__).resolve().parents[1] / "pyspark_pipelining_spark"
 OPERATORS = PACKAGE / "operators"
@@ -209,6 +214,19 @@ TWINS = {
     "le_hex": (
         _string_matcher(r"(?<!'0x' )\|\|\s*substring\([^()]*,\s*2\)"),
         ("queries_ann_media.py", "_le_hex"),
+    ),
+    "cents": (
+        _string_matcher(r"CAST\(\s*CAST\([^()]* AS DECIMAL\(18,\s*2\)\)\s*\*\s*100\s+AS BIGINT\)"),
+        ("money.py", "cents"),
+    ),
+    # the media family: one WAV fold, one PNG decode shell, and their
+    # DuckDB halves
+    "wav_fold": (_string_matcher(r"named_struct\('peak'"), ("operators/multimodal.py", "wav_features")),
+    "png_shell": (_string_matcher(r"m\.w BETWEEN 1 AND"), ("operators/multimodal.py", "_png_decode")),
+    "duck_wav_features": (_string_matcher(r"lag\(v\) OVER"), ("queries_ann_media.py", "_sql_wav_features")),
+    "duck_png_stats": (
+        _string_matcher(r"CAST\(w \* h AS DOUBLE\)"),
+        ("queries_ann_media.py", "_SQL_PNG_CHANNEL_STATS"),
     ),
 }
 

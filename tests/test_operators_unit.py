@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from pyspark_pipelining_spark.operators import graph
+from pyspark_pipelining_spark.operators import graph, multimodal
 from pyspark_pipelining_spark.operators.dedup import (
     cluster_assignments,
     dedup_clusters,
@@ -1581,15 +1581,16 @@ def test_wav_pcm_windows_matches_stdlib_decode(spark):
     import struct
     import wave
 
-    from pyspark_pipelining_spark.operators.multimodal import wav_pcm_windows
-    from pyspark_pipelining_spark.queries_ann_media import WAV_FIXTURE_DIR
+    from pyspark_pipelining_spark.operators.multimodal import wav_features
+    from pyspark_pipelining_spark.queries_ann_media import WAV_FIXTURE_DIR, WAV_PCM
     from pyspark_pipelining_spark.sources.registry import load_binary_files
 
     files = load_binary_files(spark, WAV_FIXTURE_DIR, glob="*.wav")
     for ws in (256, 300):  # 2048 % 300 != 0 → short last window
         got = [
             tuple(r)
-            for r in wav_pcm_windows(files, window_samples=ws)
+            for r in wav_features(files, window_samples=ws)
+            .select(*WAV_PCM)
             .orderBy("file_name", "win")
             .collect()
         ]
@@ -1616,10 +1617,10 @@ def test_wav_pcm_windows_matches_stdlib_decode(spark):
 
 
 def test_wav_window_features_matches_stdlib_decode(spark, tmp_path):
-    """`wav_window_features` (r10 verdict item 8): zero-crossing
-    count/rate and first-lag autocorrelation from the SAME fold must
-    equal a stdlib wave+struct model pair-for-pair, its shared columns
-    must equal `wav_pcm_windows` exactly (superset contract), and the
+    """`wav_features` (mono): zero-crossing count/rate and first-lag
+    autocorrelation from the SAME fold must equal a stdlib wave+struct
+    model pair-for-pair, its amplitude columns must equal the
+    `wav_pcm_windows` projection exactly (superset contract), and the
     edge rows are pinned: an all-zero window → ac1 = 0.0 (ss = 0, not
     NULL/÷0) and a 1-sample tail window → zcr = 0.0 (no pairs)."""
     import math
@@ -1627,11 +1628,12 @@ def test_wav_window_features_matches_stdlib_decode(spark, tmp_path):
     import struct
     import wave
 
-    from pyspark_pipelining_spark.operators.multimodal import (
-        wav_pcm_windows,
-        wav_window_features,
+    from pyspark_pipelining_spark.operators.multimodal import wav_features
+    from pyspark_pipelining_spark.queries_ann_media import (
+        WAV_FEATURES,
+        WAV_FIXTURE_DIR,
+        WAV_PCM,
     )
-    from pyspark_pipelining_spark.queries_ann_media import WAV_FIXTURE_DIR
     from pyspark_pipelining_spark.sources.registry import load_binary_files
 
     d = tmp_path / "lake"
@@ -1651,13 +1653,15 @@ def test_wav_window_features_matches_stdlib_decode(spark, tmp_path):
     ws = 300
     got = [
         tuple(r)
-        for r in wav_window_features(files, window_samples=ws)
+        for r in wav_features(files, window_samples=ws)
+        .select(*WAV_FEATURES)
         .orderBy("file_name", "win")
         .collect()
     ]
     base = [
         tuple(r)
-        for r in wav_pcm_windows(files, window_samples=ws)
+        for r in wav_features(files, window_samples=ws)
+        .select(*WAV_PCM)
         .orderBy("file_name", "win")
         .collect()
     ]
@@ -1712,7 +1716,7 @@ def test_wav_pcm_windows_filters_strays_not_errors(spark, tmp_path):
     import shutil
     import struct
 
-    from pyspark_pipelining_spark.operators.multimodal import wav_pcm_windows
+    from pyspark_pipelining_spark.operators.multimodal import wav_features
     from pyspark_pipelining_spark.queries_ann_media import WAV_FIXTURE_DIR
     from pyspark_pipelining_spark.sources.registry import load_binary_files
 
@@ -1739,9 +1743,7 @@ def test_wav_pcm_windows_filters_strays_not_errors(spark, tmp_path):
         mono_hdr + b"data" + struct.pack("<I", 4096) + samples
     )
     shutil.copy(f"{WAV_FIXTURE_DIR}/tone_ramp.wav", d / "tone_ramp.wav")
-    out = wav_pcm_windows(
-        load_binary_files(spark, str(d), glob="*.wav")
-    ).collect()
+    out = wav_features(load_binary_files(spark, str(d), glob="*.wav")).collect()
     assert {r["file_name"] for r in out} == {"tone_ramp.wav"}
     assert len(out) == 8
 
@@ -1771,8 +1773,7 @@ def test_wav_fixture_generator_is_deterministic(tmp_path, monkeypatch):
 
 
 def test_wav_stereo_features_matches_stdlib_decode(spark):
-    """The staged ``wav_stereo_features`` (r11 verdict item 8) over
-    the committed stereo lake must equal a stdlib wave+struct
+    """``wav_features(channels=2)`` over the committed stereo lake must equal a stdlib wave+struct
     per-channel pair model row-for-row, and the lake's designed pins
     must hold: the mono stray is FILTERED by the channels==2 gate
     (never errored), the trailing-partial-frame file truncates to
@@ -1785,7 +1786,7 @@ def test_wav_stereo_features_matches_stdlib_decode(spark):
     import struct
     import wave
 
-    from pyspark_pipelining_spark.operators.multimodal import wav_stereo_features
+    from pyspark_pipelining_spark.operators.multimodal import wav_features
     from pyspark_pipelining_spark.queries_ann_media import (
         WAV_STEREO_FIXTURE_DIR,
         WAV_STEREO_WINDOW,
@@ -1795,7 +1796,7 @@ def test_wav_stereo_features_matches_stdlib_decode(spark):
     files = load_binary_files(spark, WAV_STEREO_FIXTURE_DIR, glob="*.wav")
     got = [
         tuple(r)
-        for r in wav_stereo_features(files, window_samples=WAV_STEREO_WINDOW)
+        for r in wav_features(files, window_samples=WAV_STEREO_WINDOW, channels=2)
         .orderBy("file_name", "win", "channel")
         .collect()
     ]
@@ -2103,7 +2104,7 @@ def test_wav_pcm_windows_filters_oversized_files_not_overflows(spark):
     from pyspark_pipelining_spark.operators.multimodal import (
         WAV_HEX_SAFE_FILE_BYTES,
         WAV_INT32_SAFE_DATA_BYTES,
-        wav_pcm_windows,
+        wav_features,
     )
     from pyspark_pipelining_spark.queries_ann_media import WAV_FIXTURE_DIR
     from pyspark_pipelining_spark.sources.registry import load_binary_files
@@ -2111,10 +2112,10 @@ def test_wav_pcm_windows_filters_oversized_files_not_overflows(spark):
     assert WAV_INT32_SAFE_DATA_BYTES == (2**31 - 1 - 89) // 2
     assert WAV_HEX_SAFE_FILE_BYTES == (2**31 - 16) // 2
     files = load_binary_files(spark, WAV_FIXTURE_DIR, glob="*.wav")
-    assert wav_pcm_windows(files, max_data_bytes=1000).count() == 0
-    assert wav_pcm_windows(files, max_data_bytes=4096).count() == 24
+    assert wav_features(files, max_data_bytes=1000).count() == 0
+    assert wav_features(files, max_data_bytes=4096).count() == 24
     plan = (
-        wav_pcm_windows(files)
+        wav_features(files)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -2510,6 +2511,40 @@ def test_png_pixel_stats_palette_strays_filter_both_engines(spark, tmp_path):
         .fetchall()
     )
     assert got == want
+
+
+# media operator -> (committed fixture lake, file glob, call)
+MEDIA_OPERATORS = {
+    "wav_features_mono": ("audio", "*.wav", multimodal.wav_features),
+    "wav_features_stereo": ("audio_stereo", "*.wav", lambda f: multimodal.wav_features(f, channels=2)),
+    "png_chunk_walk": ("images", "*.png", multimodal.png_chunk_walk),
+    "png_pixel_stats": ("images", "*.png", multimodal.png_pixel_stats),
+    "png_filtered_pixel_stats": ("images_filters", "*.png", multimodal.png_filtered_pixel_stats),
+}
+
+
+@pytest.mark.parametrize("degenerate", ["no_rows", "zero_byte_file"])
+@pytest.mark.parametrize("op", list(MEDIA_OPERATORS))
+def test_media_operators_on_degenerate_inputs(spark, tmp_path, op, degenerate):
+    """Every media operator returns an empty result with the schema of
+    its fixture-fed result, and raises nothing, on (a) the committed
+    fixture frame with no rows left — filtered by ``length < 0``, a
+    predicate Spark cannot fold away, so every stage of the plan runs
+    over zero rows — and (b) a lake of one zero-byte file, a stray
+    every header gate must filter."""
+    from pyspark_pipelining_spark.sources.registry import fixtures_dir, load_binary_files
+
+    lake, glob, run = MEDIA_OPERATORS[op]
+    files = load_binary_files(spark, fixtures_dir(lake), glob=glob)
+    want = run(files).schema
+    if degenerate == "no_rows":
+        files = files.filter(F.col("length") < 0)
+    else:
+        (tmp_path / f"empty{glob[1:]}").write_bytes(b"")
+        files = load_binary_files(spark, str(tmp_path), glob=glob)
+    out = run(files)
+    assert out.collect() == []
+    assert out.schema == want
 
 
 def test_with_ivf_cell_equals_inline_assign(spark):

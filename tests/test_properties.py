@@ -1688,7 +1688,8 @@ def test_wav_pcm_decode_roundtrip_random_samples(spark, samples, ws, tmp_path_fa
     windows, not just the committed fixtures."""
     import math
 
-    from pyspark_pipelining_spark.operators.multimodal import wav_pcm_windows
+    from pyspark_pipelining_spark.operators.multimodal import wav_features
+    from pyspark_pipelining_spark.queries_ann_media import WAV_PCM
     from pyspark_pipelining_spark.sources.registry import load_binary_files
     from tools.gen_wav_fixtures import wav_bytes
 
@@ -1696,9 +1697,10 @@ def test_wav_pcm_decode_roundtrip_random_samples(spark, samples, ws, tmp_path_fa
     (d / "t.wav").write_bytes(wav_bytes(samples))
     got = [
         tuple(r)
-        for r in wav_pcm_windows(
+        for r in wav_features(
             load_binary_files(spark, str(d), glob="*.wav"), window_samples=ws
         )
+        .select(*WAV_PCM)
         .orderBy("win")
         .collect()
     ]
@@ -1736,14 +1738,15 @@ def test_wav_pcm_decode_roundtrip_random_samples(spark, samples, ws, tmp_path_fa
 def test_wav_window_features_roundtrip_random_samples(
     spark, samples, ws, tmp_path_factory
 ):
-    """`wav_window_features`' zc/zcr/ac1 must match a plain-Python
+    """`wav_features`' mono zc/zcr/ac1 must match a plain-Python
     pair model on ARBITRARY int16 PCM — zero-runs (strict-flip and
     silent-window semantics), sign boundaries, and short final windows
     — not just the committed fixtures (mirrors the wav_pcm_windows
     roundtrip above; the staged DuckDB oracle is the third engine)."""
     import math
 
-    from pyspark_pipelining_spark.operators.multimodal import wav_window_features
+    from pyspark_pipelining_spark.operators.multimodal import wav_features
+    from pyspark_pipelining_spark.queries_ann_media import WAV_FEATURES
     from pyspark_pipelining_spark.sources.registry import load_binary_files
     from tools.gen_wav_fixtures import wav_bytes
 
@@ -1751,9 +1754,10 @@ def test_wav_window_features_roundtrip_random_samples(
     (d / "t.wav").write_bytes(wav_bytes(samples))
     got = [
         tuple(r)
-        for r in wav_window_features(
+        for r in wav_features(
             load_binary_files(spark, str(d), glob="*.wav"), window_samples=ws
         )
+        .select(*WAV_FEATURES)
         .orderBy("win")
         .collect()
     ]
@@ -1800,7 +1804,7 @@ def test_wav_window_features_roundtrip_random_samples(
 def test_wav_stereo_features_roundtrip_random_frames(
     spark, frames, ws, tmp_path_factory
 ):
-    """The staged ``wav_stereo_features``' per-channel features must
+    """``wav_features(channels=2)``' per-channel features must
     match a plain-Python pair model on ARBITRARY interleaved int16 LR
     frames — the stride-2 decode must never mix channels (a pair is
     (prev, x) WITHIN a channel), zero-runs exercise the strict-flip
@@ -1809,7 +1813,7 @@ def test_wav_stereo_features_roundtrip_random_frames(
     above; the staged DuckDB oracle is the third engine)."""
     import math
 
-    from pyspark_pipelining_spark.operators.multimodal import wav_stereo_features
+    from pyspark_pipelining_spark.operators.multimodal import wav_features
     from pyspark_pipelining_spark.sources.registry import load_binary_files
     from tools.gen_wav_fixtures import _interleave, wav_bytes
 
@@ -1819,8 +1823,10 @@ def test_wav_stereo_features_roundtrip_random_frames(
     (d / "t.wav").write_bytes(wav_bytes(_interleave(left, right), channels=2))
     got = [
         tuple(r)
-        for r in wav_stereo_features(
-            load_binary_files(spark, str(d), glob="*.wav"), window_samples=ws
+        for r in wav_features(
+            load_binary_files(spark, str(d), glob="*.wav"),
+            window_samples=ws,
+            channels=2,
         )
         .orderBy("win", "channel")
         .collect()

@@ -341,7 +341,7 @@ def test_registered_hll_register_merge_streams_foreachbatch(spark, tmp_path):
 
 
 def test_wav_window_features_streams_foreachbatch(spark, tmp_path):
-    """The staged ``wav_window_features`` fold is per-file and
+    """The ``wav_features`` fold is per-file and
     stateless — exactly the shape a 100 TB media-lake ingest stream
     needs (new files arrive, each decodes independently, no cross-file
     state).  Prove the SAME operator plan runs under the Structured
@@ -354,7 +354,7 @@ def test_wav_window_features_streams_foreachbatch(spark, tmp_path):
     pattern."""
     import shutil
 
-    from pyspark_pipelining_spark.operators.multimodal import wav_window_features
+    from pyspark_pipelining_spark.operators.multimodal import wav_features
     from pyspark_pipelining_spark.queries_ann_media import WAV_FIXTURE_DIR
     from pyspark_pipelining_spark.sources.registry import load_binary_files
 
@@ -367,7 +367,7 @@ def test_wav_window_features_streams_foreachbatch(spark, tmp_path):
 
     def sink(batch_df, _batch_id):
         n_batches[0] += 1
-        got.extend(tuple(r) for r in wav_window_features(batch_df).collect())
+        got.extend(tuple(r) for r in wav_features(batch_df).collect())
 
     stream = (
         spark.readStream.format("binaryFile")
@@ -381,9 +381,7 @@ def test_wav_window_features_streams_foreachbatch(spark, tmp_path):
     assert n_batches[0] > 1  # one batch would not exercise incremental arrival
     want = [
         tuple(r)
-        for r in wav_window_features(
-            load_binary_files(spark, src, glob="*.wav")
-        ).collect()
+        for r in wav_features(load_binary_files(spark, src, glob="*.wav")).collect()
     ]
     assert sorted(got) == sorted(want)
     assert len(want) > 0
