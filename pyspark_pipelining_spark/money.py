@@ -9,20 +9,25 @@ cannot drift apart."""
 
 from __future__ import annotations
 
+from pyspark.sql import WindowSpec
 from pyspark.sql import functions as F
 
 #: the money type: exact cents
 D = "decimal(18,2)"
 
 
-def money_sum(col: str):
-    """Spark: the exact-cents sum of ``col`` as a double."""
-    return F.sum(F.col(col).cast(D)).cast("double")
+def money_sum(col: str, over: WindowSpec | None = None):
+    """Spark: the exact-cents sum of ``col`` as a double; a window sum
+    over ``over`` when given."""
+    total = F.sum(F.col(col).cast(D))
+    return (total if over is None else total.over(over)).cast("double")
 
 
-def duck_money_sum(sql_expr: str) -> str:
-    """:func:`money_sum` as DuckDB SQL over ``sql_expr``."""
-    return f"CAST(sum(CAST({sql_expr} AS DECIMAL(18,2))) AS DOUBLE)"
+def duck_money_sum(sql_expr: str, over: str | None = None) -> str:
+    """:func:`money_sum` as DuckDB SQL over ``sql_expr``; ``over`` names
+    a ``WINDOW`` clause."""
+    window = f" OVER {over}" if over else ""
+    return f"CAST(sum(CAST({sql_expr} AS DECIMAL(18,2))){window} AS DOUBLE)"
 
 
 def cents(sql_expr: str) -> str:

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pyspark_pipelining_spark import cache
-from pyspark_pipelining_spark.operators.graph import symmetrize
+from pyspark_pipelining_spark.operators.graph import duck_edges, symmetrize
 from pyspark_pipelining_spark.operators.iterate import iterate
 from pyspark_pipelining_spark.operators.text import with_words, word_grams
 from pyspark_pipelining_spark.sources.registry import spread
@@ -279,7 +279,7 @@ def cluster_assignments(pairs: DataFrame, max_iter: int = 12) -> DataFrame:
     # one map-side explode (graph.symmetrize) = one reference to the
     # pair pipeline, so it runs exactly once inside the first block job
     # and needs no separate materialization action
-    edges = symmetrize(pairs, "doc_1", "doc_2", "src", "dst").localCheckpoint(eager=False)
+    edges = symmetrize(pairs).localCheckpoint(eager=False)
     # fused round 0: every vertex appears as src in the symmetrized edge
     # list, so one groupBy yields both the vertex set and its first label
     labels = (
@@ -314,6 +314,22 @@ def cluster_assignments(pairs: DataFrame, max_iter: int = 12) -> DataFrame:
         )
 
     return iterate(labels, one_round, max_iter, until=F.sum("cluster_id"), block=4)
+
+
+def duck_components() -> str:
+    """:func:`cluster_assignments` as DuckDB SQL: the ``edges``,
+    ``walk`` and ``comp(doc_id, cluster_id)`` CTEs over a ``pairs(doc_1,
+    doc_2)`` CTE, for a ``WITH RECURSIVE`` list.  The oracle computes
+    component min-ids with a recursive reachability walk (UNION dedups,
+    so it terminates); fine at oracle scale, where the engine side uses
+    bounded label propagation."""
+    return f"""{duck_edges()},
+walk(doc_id, lbl) AS (
+    SELECT src, src FROM edges
+    UNION
+    SELECT e.src, w.lbl FROM edges e JOIN walk w ON e.dst = w.doc_id
+),
+comp AS (SELECT doc_id, min(lbl) AS cluster_id FROM walk GROUP BY doc_id)"""
 
 
 def dedup_clusters(df: DataFrame, pairs: DataFrame) -> DataFrame:

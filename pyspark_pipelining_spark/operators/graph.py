@@ -1,30 +1,36 @@
-"""Integer-arithmetic PageRank — graph-based document quality prior
-(beyond-reference scope; the web-graph centrality signal corpus
-curation pipelines use alongside text-quality scores).
+"""The near-duplicate graph family: integer PageRank, triangle counts,
+neighbor Jaccard, k-core peeling, label propagation and 2-hop harmonic
+centrality over one edge table.
 
-Determinism design: classic PageRank is float arithmetic whose sums are
-shuffle-order-dependent — not oracle-comparable.  Here rank mass is an
-int64 in units of ``1/scale`` and every step is integer: per-edge
+One edge format: :func:`symmetrize` turns an undirected ``doc_1,
+doc_2`` pair list into the directed ``src, dst`` edge table every
+operator here reads, and :func:`duck_edges` renders the same table for
+the DuckDB oracles.  Per-node degree comes from :func:`_degrees`.  No
+module outside this one names the edge columns.
+
+Integer PageRank (beyond-reference scope; the web-graph centrality
+signal corpus curation pipelines use alongside text-quality scores).
+Classic PageRank is float arithmetic whose sums are
+shuffle-order-dependent, so not oracle-comparable.  Here rank mass is
+an int64 in units of ``1/SCALE`` and every step is integer: per-edge
 contribution ``r div deg`` (floor), damping ``(num · s) div den``.
 Integer sums are commutative/associative, so the result is a pure
-function of the graph — bit-identical in any engine, any layout.  The
+function of the graph: bit-identical in any engine, any layout.  The
 floor divisions leak ≤ deg ulps of mass per node per round (documented,
 deliberate): determinism is worth more than the 1e-12-scale mass drift,
 and ranking order is unaffected at any realistic scale.
 
-Scale shape per round: one join of edges to the rank vector on src
-(shuffle on src — at warehouse scale pre-partition both by src so
-rounds reuse the exchange), one (dst) aggregation with map-side
-combine, one left join back to the node set.  A fixed iteration count
-(the common production choice for a quality prior) keeps the plan
-finite.  The (src, dst, deg) edge table is materialized ONCE up front
-(``localCheckpoint``): the iterative plan references it every round,
-and without truncation Spark re-executes the whole upstream edge
-pipeline (an LSH candidate join here) per reference — measured 18–28 s
-→ ~2 s at sf0.1.  The node count becomes a driver scalar (the one
-action an operator issues outside ``operators/iterate.py``) so per-round work
-is exactly one join + one aggregation; a symmetrized graph needs no
-per-round re-join to the node set (every node has in-edges).
+Scale shape per PageRank round: one join of edges to the rank vector on
+src, one (dst) aggregation with map-side combine.  The (src, dst, deg)
+edge table is lazily ``localCheckpoint``-ed once: the iterative plan
+references it every round, and without truncation Spark re-executes
+the whole upstream edge pipeline (an LSH candidate join here) per
+reference (measured 18–28 s → ~2 s at sf0.1).  The rounds run through
+:func:`iterate.iterate`'s fixed mode; the node count enters once, as a
+1-row crossJoin at the entry state, which also carries the damping's
+base term as a column, so no round needs a driver scalar or a
+crossJoin of its own.  A symmetrized graph needs no per-round re-join to the node
+set: every node has in-edges.
 """
 
 from __future__ import annotations
@@ -34,86 +40,90 @@ from pyspark.sql import functions as F
 
 from pyspark_pipelining_spark.operators.iterate import iterate
 
+# PageRank's integer constants; the DuckDB oracle reads them from here
 SCALE = 10**12
+DAMP_NUM, DAMP_DEN = 85, 100
 
 
-def symmetrize(
-    pairs: DataFrame,
-    a: str = "doc_1",
-    b: str = "doc_2",
-    src: str = "s",
-    dst: str = "d",
-) -> DataFrame:
-    """Both directions of an undirected pair list via ONE map-side
-    explode (r17, guide §2.4 / r16 verdict item 8): the former
-    ``select ∪ select-swapped`` referenced the pair frame from two
-    branches, so when the pair frame is an unpersisted expensive
-    pipeline (the LSH candidate join everywhere in this module),
-    Catalyst clones that whole subtree into both union branches and an
-    eager edge checkpoint executes it twice (ReuseExchange dedupes the
-    final dedup exchange when shapes align, but the post-exchange
-    aggregate and projections still run per branch).  One explode =
-    one reference = the upstream pipeline appears exactly once in the
-    materialization job.  Row multiset is identical to the union."""
+def symmetrize(pairs: DataFrame) -> DataFrame:
+    """Both directions of an undirected ``doc_1, doc_2`` pair list as
+    the ``src, dst`` edge table, via ONE map-side explode (r17, guide
+    §2.4 / r16 verdict item 8): the former ``select ∪ select-swapped``
+    referenced the pair frame from two branches, so when the pair frame
+    is an unpersisted expensive pipeline (the LSH candidate join
+    everywhere in this module), Catalyst clones that whole subtree into
+    both union branches and an eager edge checkpoint executes it twice
+    (ReuseExchange dedupes the final dedup exchange when shapes align,
+    but the post-exchange aggregate and projections still run per
+    branch).  One explode = one reference = the upstream pipeline
+    appears exactly once in the materialization job.  Row multiset is
+    identical to the union, and to :func:`duck_edges`."""
     return pairs.select(
         F.explode(
             F.array(
-                F.struct(F.col(a).alias(src), F.col(b).alias(dst)),
-                F.struct(F.col(b).alias(src), F.col(a).alias(dst)),
+                F.struct(F.col("doc_1").alias("src"), F.col("doc_2").alias("dst")),
+                F.struct(F.col("doc_2").alias("src"), F.col("doc_1").alias("dst")),
             )
         ).alias("_e")
-    ).select(f"_e.{src}", f"_e.{dst}")
+    ).select("_e.src", "_e.dst")
 
 
-def pagerank_int(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    iters: int = 3,
-    scale: int = SCALE,
-    damp_num: int = 85,
-    damp_den: int = 100,
-) -> DataFrame:
-    """Fixed-iteration integer PageRank over a directed edge list
-    (symmetrize upstream for an undirected similarity graph — then
-    every node has out-degree ≥ 1 and no dangling-mass handling is
+def duck_edges() -> str:
+    """:func:`symmetrize` as DuckDB SQL: the ``edges(src, dst)`` CTE
+    over a ``pairs(doc_1, doc_2)`` CTE."""
+    return """edges AS (
+    SELECT doc_1 AS src, doc_2 AS dst FROM pairs
+    UNION ALL
+    SELECT doc_2 AS src, doc_1 AS dst FROM pairs
+)"""
+
+
+def _degrees(edges: DataFrame) -> DataFrame:
+    """``node, degree`` of a symmetrized ``src, dst`` edge table."""
+    return edges.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("degree"))
+
+
+def pagerank_int(edges: DataFrame, iters: int = 3) -> DataFrame:
+    """Fixed-iteration integer PageRank over a directed ``src, dst``
+    edge list (symmetrize upstream for an undirected similarity graph;
+    then every node has out-degree ≥ 1 and no dangling-mass handling is
     needed).
 
-    Output: ``id, r`` — rank in integer ``1/scale`` units.
+    The entry state is the node set at ``r = SCALE div n``; every round
+    is the same step, ``r div deg`` over the edges, then
+    ``base + (DAMP_NUM · s) div DAMP_DEN``.
+
+    Output: ``id, r``, rank in integer ``1/SCALE`` units.
     """
-    ed = edges.select(F.col(src).alias("id"), F.col(dst).alias("to"))
-    deg = ed.groupBy("id").agg(F.count(F.lit(1)).alias("deg"))
-    # one materialized (src, dst, deg) edge table feeds every round.
-    # LAZY checkpoint: the node-count action right below materializes
-    # it in the same job (distinct() sits above the opaque RDD scan, so
-    # nothing is pruned), saving a full materialization pass per call.
-    ed2 = ed.join(deg, on="id").localCheckpoint(eager=False)
-    # n as a driver scalar (allowlisted in tests/test_operator_actions.py):
-    # it parameterizes integer constants the oracle mirrors;
-    # an empty edge list has no nodes: any n > 0 yields the same empty
-    # ``id, r`` frame without dividing by zero
-    n = max(ed2.select("id").distinct().count(), 1)
-    r0 = scale // n
-    base_c = (scale * (damp_den - damp_num) // damp_den) // n
-    # symmetrized input ⇒ every node has in-edges ⇒ the (dst) aggregation
-    # already covers the full node set — no per-round re-join to nodes
-    step = f"{base_c} + (({damp_num} * s) div {damp_den})"
-    sums = (
-        ed2.select("to", F.expr(f"CAST({r0} AS BIGINT) div deg").alias("c"))
-        .groupBy("to")
-        .agg(F.sum("c").alias("s"))
+    ed = (
+        edges.select(F.col("src").alias("node"), "dst")
+        .join(_degrees(edges), "node")
+        .localCheckpoint(eager=False)
     )
-    r = sums.select(F.col("to").alias("id"), F.expr(step).alias("r"))
-    for _ in range(iters - 1):
-        contrib = ed2.join(r, on="id").select(
-            "to", F.expr("r div deg").alias("c")
+    nodes = ed.select("node").distinct()
+    # n as the 1-row lazy crossJoin scalar; an empty edge list has no
+    # nodes, and greatest(n, 1) keeps ANSI division from failing on it
+    base = SCALE * (DAMP_DEN - DAMP_NUM) // DAMP_DEN
+    state = nodes.crossJoin(nodes.agg(F.count(F.lit(1)).alias("n"))).select(
+        "node",
+        F.expr(f"CAST({SCALE} AS BIGINT) div greatest(n, 1)").alias("r"),
+        F.expr(f"CAST({base} AS BIGINT) div greatest(n, 1)").alias("base"),
+    )
+
+    def step(rank: DataFrame) -> DataFrame:
+        sums = (
+            ed.join(rank, "node")
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.sum(F.expr("r div degree")).alias("s"), F.max("base").alias("base"))
         )
-        sums = contrib.groupBy("to").agg(F.sum("c").alias("s"))
-        r = sums.select(F.col("to").alias("id"), F.expr(step).alias("r"))
-    return r
+        return sums.select(
+            "node", F.expr(f"base + (({DAMP_NUM} * s) div {DAMP_DEN})").alias("r"), "base"
+        )
+
+    return iterate(state, step, iters).select(F.col("node").alias("id"), "r")
 
 
-def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+def triangle_count(edges: DataFrame) -> DataFrame:
     """Per-node triangle counts over an undirected graph given as a
     symmetrized edge list (both directions present, no self-loops) —
     the local-clustering signal corpus curation uses to separate dense
@@ -138,20 +148,17 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     (an LSH candidate join here) once per reference, measured 26 s →
     ~3 s at sf0.1.
     """
-    ed = edges.select(
-        F.col(src).alias("a"), F.col(dst).alias("b")
-    ).localCheckpoint(eager=True)
-    deg = ed.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
+    ed = edges.select("src", "dst").localCheckpoint(eager=True)
+    deg = _degrees(ed)
     # orient each undirected edge lower-(deg,id) -> higher-(deg,id);
     # keep the head's degree so wedges can canonically order (b, c)
-    both = (
-        ed.join(deg, on="a")
-        .withColumnRenamed("deg", "da")
-        .join(deg.select(F.col("a").alias("b"), F.col("deg").alias("db")), on="b")
-    )
+    both = ed.join(
+        deg.select(F.col("node").alias("src"), F.col("degree").alias("da")), "src"
+    ).join(deg.select(F.col("node").alias("dst"), F.col("degree").alias("db")), "dst")
     oriented = both.filter(
-        (F.col("da") < F.col("db")) | ((F.col("da") == F.col("db")) & (F.col("a") < F.col("b")))
-    ).select("a", "b", "db")
+        (F.col("da") < F.col("db"))
+        | ((F.col("da") == F.col("db")) & (F.col("src") < F.col("dst")))
+    ).select(F.col("src").alias("a"), F.col("dst").alias("b"), "db")
     # wedges from the pivot a: unordered pair {b, c} counted once via
     # the same (deg, id) order — the closing edge is then oriented b->c
     e1, e2 = oriented.alias("e1"), oriented.alias("e2")
@@ -197,10 +204,10 @@ def node_jaccard(pairs: DataFrame) -> DataFrame:
     # measured ~11% at sf0.1 — but reuse is plan-shape-fragile and the
     # wedge join dominates anyway).
     p = pairs.select("doc_1", "doc_2").localCheckpoint(eager=True)
-    edges = symmetrize(p, "doc_1", "doc_2", "doc_1", "doc_2")
-    deg = edges.groupBy("doc_1").agg(F.count(F.lit(1)).alias("deg"))
-    ea = edges.select(F.col("doc_1").alias("a"), F.col("doc_2").alias("na"))
-    eb = edges.select(F.col("doc_1").alias("b"), F.col("doc_2").alias("nb"))
+    edges = symmetrize(p)
+    deg = _degrees(edges)
+    ea = edges.select(F.col("src").alias("a"), F.col("dst").alias("na"))
+    eb = edges.select(F.col("src").alias("b"), F.col("dst").alias("nb"))
     common = (
         p.join(ea, p["doc_1"] == ea["a"])
         .join(eb, (p["doc_2"] == eb["b"]) & (ea["na"] == eb["nb"]))
@@ -209,11 +216,8 @@ def node_jaccard(pairs: DataFrame) -> DataFrame:
     )
     return (
         p.join(common, ["doc_1", "doc_2"], "left")
-        .join(deg.select(F.col("doc_1"), F.col("deg").alias("deg_1")), "doc_1")
-        .join(
-            deg.select(F.col("doc_1").alias("doc_2"), F.col("deg").alias("deg_2")),
-            "doc_2",
-        )
+        .join(deg.select(F.col("node").alias("doc_1"), F.col("degree").alias("deg_1")), "doc_1")
+        .join(deg.select(F.col("node").alias("doc_2"), F.col("degree").alias("deg_2")), "doc_2")
         .select(
             "doc_1",
             "doc_2",
@@ -230,11 +234,6 @@ def node_jaccard(pairs: DataFrame) -> DataFrame:
     )
 
 
-def _degrees(edges: DataFrame) -> DataFrame:
-    """``node, degree`` of a symmetrized ``s, d`` edge table."""
-    return edges.groupBy(F.col("s").alias("node")).agg(F.count(F.lit(1)).alias("degree"))
-
-
 def _peel(k: int):
     """One synchronous peel round: drop every directed edge with an
     endpoint of degree below ``k`` — one node-keyed degree aggregation
@@ -242,21 +241,15 @@ def _peel(k: int):
     on node id."""
 
     def step(edges: DataFrame) -> DataFrame:
-        keep = _degrees(edges).filter(F.col("degree") >= k).select(F.col("node").alias("s"))
-        return edges.join(keep, "s", "leftsemi").join(
-            keep.select(F.col("s").alias("d")), "d", "leftsemi"
+        keep = _degrees(edges).filter(F.col("degree") >= k).select(F.col("node").alias("src"))
+        return edges.join(keep, "src", "leftsemi").join(
+            keep.select(F.col("src").alias("dst")), "dst", "leftsemi"
         )
 
     return step
 
 
-def kcore_peel(
-    pairs: DataFrame,
-    k: int = 2,
-    rounds: int = 3,
-    a: str = "doc_1",
-    b: str = "doc_2",
-) -> DataFrame:
+def kcore_peel(pairs: DataFrame, k: int = 2, rounds: int = 3) -> DataFrame:
     """Bounded k-core peeling: ``rounds`` synchronous rounds of
     removing nodes whose current degree is below ``k`` (and their
     edges).  A fixed round count keeps the plan finite and the oracle
@@ -278,16 +271,11 @@ def kcore_peel(
     Output: ``node, degree`` for nodes surviving all rounds, with their
     post-peel degree.
     """
-    edges = symmetrize(pairs, a, b).localCheckpoint(eager=False)
+    edges = symmetrize(pairs).localCheckpoint(eager=False)
     return _degrees(iterate(edges, _peel(k), rounds)).orderBy("node")
 
 
-def lpa_communities(
-    pairs: DataFrame,
-    rounds: int = 2,
-    a: str = "doc_1",
-    b: str = "doc_2",
-) -> DataFrame:
+def lpa_communities(pairs: DataFrame, rounds: int = 2) -> DataFrame:
     """Synchronous label propagation communities over a candidate-pair
     graph, made DETERMINISTIC: each round every node adopts the most
     frequent label among its neighbors, ties broken by smallest label
@@ -305,15 +293,15 @@ def lpa_communities(
     Output: ``node, community`` (community = converged-or-bounded
     label), one row per node appearing in ``pairs``.
     """
-    edges = symmetrize(pairs, a, b).localCheckpoint(eager=False)
-    labels = edges.select(F.col("s").alias("node")).distinct().select(
+    edges = symmetrize(pairs).localCheckpoint(eager=False)
+    labels = edges.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("lbl")
     )
     w = Window.partitionBy("node").orderBy(F.desc("cnt"), F.asc("lbl"))
 
     def propagate(lbl: DataFrame) -> DataFrame:
-        nbr = edges.join(lbl.select(F.col("node").alias("d"), "lbl"), "d").select(
-            F.col("s").alias("node"), "lbl"
+        nbr = edges.join(lbl.select(F.col("node").alias("dst"), "lbl"), "dst").select(
+            F.col("src").alias("node"), "lbl"
         )
         counts = nbr.groupBy("node", "lbl").agg(F.count(F.lit(1)).alias("cnt"))
         return (
@@ -324,3 +312,42 @@ def lpa_communities(
 
     labels = iterate(labels, propagate, rounds)
     return labels.select("node", F.col("lbl").alias("community")).orderBy("node")
+
+
+def harmonic_2hop(pairs: DataFrame) -> DataFrame:
+    """Radius-2 harmonic centrality over an undirected pair frame
+    ``(doc_1, doc_2)``: ``n1 + n2/2`` with n1 = direct neighbors,
+    n2 = nodes at distance exactly 2 (wedge equi-join keyed on the
+    middle node, then direct edges and self anti-joined away).
+
+    Scale bound (pinned by tests/test_properties.py): the radius cap
+    is STRUCTURAL — one wedge join can only reach distance ≤ 2, so
+    unlike iterative BFS there is no frontier growth to cap; the only
+    expansion is the wedge join, whose row count is exactly
+    Σ_mid deg(mid)² (degree-bounded, the triangle-counting shape), and
+    it collapses through distinct before the anti-join.
+
+    Output: ``node, n1, n2, harmonic_2``."""
+    edges = symmetrize(pairs).localCheckpoint(eager=True)
+    two = (
+        edges.alias("e1")
+        .join(edges.select(F.col("src").alias("dst"), F.col("dst").alias("d2")).alias("e2"), "dst")
+        .select("src", "d2")
+        .filter(F.col("src") != F.col("d2"))
+        .distinct()
+        .join(edges.select("src", F.col("dst").alias("d2")), ["src", "d2"], "left_anti")
+        .groupBy(F.col("src").alias("node"))
+        .agg(F.count(F.lit(1)).alias("n2"))
+    )
+    n2 = F.coalesce("n2", F.lit(0))
+    return (
+        _degrees(edges)
+        .join(two, "node", "left")
+        .select(
+            "node",
+            F.col("degree").alias("n1"),
+            n2.alias("n2"),
+            F.round(F.col("degree") + n2 / F.lit(2.0), 6).alias("harmonic_2"),
+        )
+        .orderBy("node")
+    )

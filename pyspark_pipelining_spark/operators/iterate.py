@@ -1,6 +1,6 @@
 """One loop driver for the iterative DataFrame operators
-(``dedup.cluster_assignments``, ``graph.kcore_peel`` /
-``lpa_communities``): the single home of their checkpointing and
+(``dedup.cluster_assignments``, ``graph.pagerank_int`` / ``kcore_peel``
+/ ``lpa_communities``): the single home of their checkpointing and
 convergence control, and the only operator module allowed a driver
 action (``tests/test_operator_actions.py``).
 
@@ -10,8 +10,10 @@ construction time, so plans never grow with the round count (an
 unbounded lineage OOMs the driver in Catalyst long before any data
 moves), a round that reads the previous frame several times shares ONE
 materialization (stage graphs dedupe by RDD identity), and no round
-pays a job of its own: a frame materializes inside the first job that
-reads it.  On a cluster with lost-executor concerns, swap in reliable
+issues a driver action: the round's last stage runs inside the first
+job that reads it.  Under AQE, planning the checkpoint still runs the
+round's shuffle and broadcast stages as jobs of their own, at
+construction time.  On a cluster with lost-executor concerns, swap in reliable
 ``checkpoint()``; semantics are identical.
 
 Fixpoint mode probes a MONOTONE aggregate ``until`` (``F.sum`` of

@@ -9,30 +9,19 @@ exist the count is exact (nothing was ever discarded); otherwise the
 k-th smallest hash h_(k) estimates density and
 ``(k-1) · 2^60 / h_(k)`` estimates the distinct count.
 
-Two physical strategies, same answer (property-tested equal):
+Physical plan: ``distinct`` on (group, hash) — Spark's partial
+aggregation dedups map-side, so the shuffle carries only distinct pairs
+— then a per-group ``row_number() <= k`` window keeps the k smallest.
+Everything stays in whole-stage codegen; the window's per-group sort is
+spill-safe.  The shuffle is sized by the distinct (group, hash)
+cardinality, not the row count, which is storable for vocabulary-like
+domains (tokens, categories, ids-per-tenant) even at 100 TB of raw
+rows.
 
-* ``jvm`` (default): ``distinct`` on (group, hash) — Spark's partial
-  aggregation dedups map-side, so the shuffle carries only distinct
-  pairs — then a per-group ``row_number() <= k`` window keeps the k
-  smallest.  Everything stays in whole-stage codegen; the window's
-  per-group sort is spill-safe.  This is the fast path whenever the
-  distinct (group, hash) cardinality is storable — true for
-  vocabulary-like domains (tokens, categories, ids-per-tenant) even at
-  100 TB of raw rows, because the shuffle is sized by *cardinality*,
-  not row count.
-* ``python``: a ``mapInPandas`` **partial combine** — each task streams
-  its Arrow batches through an O(groups × k) accumulator and emits at
-  most k candidate hashes per (group, task); one groupBy merges the
-  ≤ k × tasks candidates.  Bounded state even when per-group distinct
-  cardinality is adversarial (so large that shuffling the distinct
-  pairs themselves is the bottleneck); the cost is Arrow transfer of
-  every raw hash through Python workers — ~10× the cores of the JVM
-  path.  Keep it as the escape hatch, not the default.
-
-Merge correctness (both paths): every one of the global k smallest
-distinct hashes is among the k smallest of whichever task/partition saw
-it, so it survives any partial step — the final k-min set is
-layout-independent (property-tested under repartitioning).
+Merge correctness: every one of the global k smallest distinct hashes
+is among the k smallest of whichever partition saw it, so it survives
+any partial step — the final k-min set is layout-independent
+(property-tested under repartitioning).
 
 Hashes are md5-derived (``operators/dedup.portable_hash60``, the first
 60 bits of md5), so the DuckDB oracle reproduces the estimate
@@ -41,10 +30,6 @@ bit-for-bit.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -53,31 +38,10 @@ from pyspark_pipelining_spark.operators.dedup import portable_hash60, portable_h
 TWO_60 = 1 << 60
 
 
-def _kmv_partials(
-    hashed: DataFrame, group_col: str, k: int
-) -> DataFrame:
-    """Per-task k-min-distinct candidates: (group, h) → ≤ k rows per
-    group per task, streamed over Arrow batches with bounded state."""
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        best: dict[object, np.ndarray] = {}
-        for pdf in batches:
-            for g, sub in pdf.groupby(group_col, sort=False):
-                vals = sub["h"].to_numpy(dtype=np.int64)
-                cur = best.get(g)
-                pool = vals if cur is None else np.concatenate([cur, vals])
-                uniq = np.unique(pool)  # sorted ascending
-                best[g] = uniq[:k]
-        rows = [(g, int(h)) for g, arr in best.items() for h in arr]
-        yield pd.DataFrame(rows, columns=[group_col, "h"])
-
-    return hashed.mapInPandas(partial, schema=f"{group_col} string, h long")
-
-
-def _kmv_mins_jvm(hashed: DataFrame, group_col: str, k: int) -> DataFrame:
-    """JVM-side k-min: map-side-deduped ``distinct`` so the shuffle
-    carries only distinct (group, h) pairs, then a per-group
-    ``row_number <= k`` window.  No Python workers on the hot path."""
+def _kmv_mins(hashed: DataFrame, group_col: str, k: int) -> DataFrame:
+    """The k smallest distinct ``h`` per group: map-side-deduped
+    ``distinct`` so the shuffle carries only distinct (group, h) pairs,
+    then a per-group ``row_number <= k`` window."""
     from pyspark.sql import Window
 
     w = Window.partitionBy(group_col).orderBy("h")
@@ -89,32 +53,14 @@ def _kmv_mins_jvm(hashed: DataFrame, group_col: str, k: int) -> DataFrame:
     )
 
 
-def kmv_distinct(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    k: int = 16,
-    strategy: str = "jvm",
-) -> DataFrame:
+def kmv_distinct(df: DataFrame, group_col: str, value_col: str, k: int = 16) -> DataFrame:
     """Estimated distinct ``value_col`` per ``group_col`` via a KMV
     sketch.  Output: <group_col>, est_distinct (double, 6dp; exact when
     the group has fewer than k distinct values).
-
-    ``strategy``: ``"jvm"`` (default — codegen distinct + window, fast
-    for storable distinct cardinalities) or ``"python"`` (bounded-state
-    mapInPandas partial — the adversarial-cardinality fallback).  Both
-    produce the identical k-min set; see module docstring.
     """
-    if strategy not in ("jvm", "python"):
-        raise ValueError(f"strategy must be 'jvm' or 'python', got {strategy!r}")
     h = portable_hash60(F.col(value_col))
     hashed = df.select(F.col(group_col), h.alias("h"))
-    cand = (
-        _kmv_mins_jvm(hashed, group_col, k)
-        if strategy == "jvm"
-        else _kmv_partials(hashed, group_col, k)
-    )
-    merged = cand.groupBy(group_col).agg(
+    merged = _kmv_mins(hashed, group_col, k).groupBy(group_col).agg(
         F.slice(F.array_sort(F.collect_set("h")), 1, k).alias("mins")
     )
     n = F.size("mins")
@@ -416,7 +362,7 @@ def kmv_overlap(
     def mins(df: DataFrame, tag: str) -> DataFrame:
         hashed = df.select(F.lit(tag).alias("g"), h.alias("h"))
         return (
-            _kmv_mins_jvm(hashed, "g", k)
+            _kmv_mins(hashed, "g", k)
             .groupBy("g")
             .agg(F.slice(F.array_sort(F.collect_set("h")), 1, k).alias(f"mins_{tag}"))
             .drop("g")

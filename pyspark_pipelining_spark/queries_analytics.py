@@ -685,17 +685,13 @@ def q_node_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_node_jaccard() -> str:
     return f"""
 WITH {_sql_near_dup_pairs()},
-edges AS (
-    SELECT doc_1, doc_2 FROM pairs
-    UNION ALL
-    SELECT doc_2, doc_1 FROM pairs
-),
-deg AS (SELECT doc_1, count(*) AS deg FROM edges GROUP BY doc_1),
+{graph.duck_edges()},
+deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
 common AS (
     SELECT p.doc_1, p.doc_2, count(*) AS common
     FROM pairs p
-    JOIN edges ea ON ea.doc_1 = p.doc_1
-    JOIN edges eb ON eb.doc_1 = p.doc_2 AND eb.doc_2 = ea.doc_2
+    JOIN edges ea ON ea.src = p.doc_1
+    JOIN edges eb ON eb.src = p.doc_2 AND eb.dst = ea.dst
     GROUP BY p.doc_1, p.doc_2
 )
 SELECT p.doc_1, p.doc_2, d1.deg AS deg_1, d2.deg AS deg_2,
@@ -704,8 +700,8 @@ SELECT p.doc_1, p.doc_2, d1.deg AS deg_1, d2.deg AS deg_2,
              / (d1.deg + d2.deg - COALESCE(c.common, 0)), 6) AS jaccard
 FROM pairs p
 LEFT JOIN common c ON c.doc_1 = p.doc_1 AND c.doc_2 = p.doc_2
-JOIN deg d1 ON d1.doc_1 = p.doc_1
-JOIN deg d2 ON d2.doc_1 = p.doc_2
+JOIN deg d1 ON d1.src = p.doc_1
+JOIN deg d2 ON d2.src = p.doc_2
 ORDER BY p.doc_1, p.doc_2
 """
 

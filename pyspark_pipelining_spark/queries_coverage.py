@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pyspark_pipelining_spark.money import D, duck_money_sum
+from pyspark_pipelining_spark.operators import dedup, graph
 from pyspark_pipelining_spark.operators.similarity import duck_cosine
 from pyspark_pipelining_spark.queries_ann_media import FILE_NAME
 from pyspark_pipelining_spark.queries_llm import _sql_near_dup_pairs
@@ -996,8 +997,6 @@ def q_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/graph.kcore_peel over the MinHash-LSH edges): which
     documents sit in densely-duplicated neighborhoods after hair
     removal."""
-    from pyspark_pipelining_spark.operators import dedup, graph
-
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.near_dup_pairs(docs)
     return graph.kcore_peel(pairs, k=2, rounds=3)
@@ -1005,29 +1004,25 @@ def q_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_kcore_peel() -> str:
     peel = []
-    prev = "e0"
+    prev = "edges"
     for r in range(1, 4):
         peel.append(
             f"""k{r} AS (
-    SELECT s FROM {prev} GROUP BY s HAVING count(*) >= 2
+    SELECT src FROM {prev} GROUP BY src HAVING count(*) >= 2
 ),
 e{r} AS (
-    SELECT e.s, e.d FROM {prev} e
-    WHERE e.s IN (SELECT s FROM k{r}) AND e.d IN (SELECT s FROM k{r})
+    SELECT e.src, e.dst FROM {prev} e
+    WHERE e.src IN (SELECT src FROM k{r}) AND e.dst IN (SELECT src FROM k{r})
 )"""
         )
         prev = f"e{r}"
     peels = ",\n".join(peel)
     return f"""
 WITH {_sql_near_dup_pairs()},
-e0 AS (
-    SELECT doc_1 AS s, doc_2 AS d FROM pairs
-    UNION ALL
-    SELECT doc_2 AS s, doc_1 AS d FROM pairs
-),
+{graph.duck_edges()},
 {peels}
-SELECT s AS node, count(*) AS degree
-FROM e3 GROUP BY s
+SELECT src AS node, count(*) AS degree
+FROM e3 GROUP BY src
 ORDER BY node
 """
 

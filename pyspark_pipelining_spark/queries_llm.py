@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pyspark_pipelining_spark.operators import dedup, multimodal, similarity, text
+from pyspark_pipelining_spark.operators import dedup, graph, multimodal, similarity, text
 from pyspark_pipelining_spark.operators.cluster import GRID
 from pyspark_pipelining_spark.operators.dedup import NEAR_DUP_JACCARD, duck_hash60
 from pyspark_pipelining_spark.operators.similarity import duck_cosine, duck_rank
@@ -222,22 +222,9 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_dedup_clusters() -> str:
-    # The oracle computes component min-ids with a recursive reachability
-    # CTE (UNION dedups, so it terminates); fine at oracle scale, while
-    # the engine side uses bounded label propagation.
     return f"""
 WITH RECURSIVE {_sql_near_dup_pairs()},
-edges AS (
-    SELECT doc_1 AS src, doc_2 AS dst FROM pairs
-    UNION ALL
-    SELECT doc_2, doc_1 FROM pairs
-),
-walk(doc_id, lbl) AS (
-    SELECT src, src FROM edges
-    UNION
-    SELECT e.src, w.lbl FROM edges e JOIN walk w ON e.dst = w.doc_id
-),
-comp AS (SELECT doc_id, min(lbl) AS cluster_id FROM walk GROUP BY doc_id)
+{dedup.duck_components()}
 SELECT d.doc_id, coalesce(c.cluster_id, d.doc_id) AS cluster_id
 FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
 """
@@ -280,17 +267,7 @@ def _sql_corpus_prep() -> str:
     score_cols, pred = _lang_fragments()
     return f"""
 WITH RECURSIVE {_sql_near_dup_pairs()},
-edges AS (
-    SELECT doc_1 AS src, doc_2 AS dst FROM pairs
-    UNION ALL
-    SELECT doc_2, doc_1 FROM pairs
-),
-walk(doc_id, lbl) AS (
-    SELECT src, src FROM edges
-    UNION
-    SELECT e.src, w.lbl FROM edges e JOIN walk w ON e.dst = w.doc_id
-),
-comp AS (SELECT doc_id, min(lbl) AS cluster_id FROM walk GROUP BY doc_id),
+{dedup.duck_components()},
 feats AS (
     SELECT doc_id,
            CAST(len(w) AS INTEGER) AS n_words,
@@ -1076,12 +1053,9 @@ def q_pagerank_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic by integer arithmetic.  Nodes = documents appearing
     in an LSH pair at est Jaccard >= 0.5 (isolated documents carry no
     graph signal and are excluded by construction)."""
-    from pyspark_pipelining_spark.operators.graph import pagerank_int, symmetrize
-
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.near_dup_pairs(docs)
-    edges = symmetrize(pairs, "doc_1", "doc_2", "src", "dst")
-    out = pagerank_int(edges, iters=PAGERANK_ITERS)
+    out = graph.pagerank_int(graph.symmetrize(pairs), iters=PAGERANK_ITERS)
     return out.select(F.col("id").alias("doc_id"), "r")
 
 
@@ -1089,9 +1063,7 @@ def _sql_pagerank() -> str:
     """Oracle with the iterations unrolled (fixed count), mirroring the
     engine's integer arithmetic exactly (// == Spark's div on
     non-negative operands)."""
-    from pyspark_pipelining_spark.operators.graph import SCALE as scale
-
-    damp_num, damp_den = 85, 100  # graph.pagerank_int's damping
+    scale, damp_num, damp_den = graph.SCALE, graph.DAMP_NUM, graph.DAMP_DEN
     base = f"(CAST({scale} AS BIGINT) * {damp_den - damp_num} // {damp_den}) // n"
     prev = "r0"
     steps = []
@@ -1112,11 +1084,7 @@ it{i} AS (
         prev = f"it{i}"
     return f"""
 WITH {_sql_near_dup_pairs()},
-edges AS (
-    SELECT doc_1 AS src, doc_2 AS dst FROM pairs
-    UNION ALL
-    SELECT doc_2, doc_1 FROM pairs
-),
+{graph.duck_edges()},
 nodes AS (SELECT DISTINCT src AS id FROM edges),
 nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM nodes),
 deg AS (SELECT src AS id, CAST(count(*) AS BIGINT) AS deg FROM edges GROUP BY src),
@@ -1139,12 +1107,9 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph (operators/graph.triangle_count): dense LSH cliques vs chance
     collisions.  Degree-ordered wedge enumeration keeps the join
     O(m^1.5) on any degree distribution."""
-    from pyspark_pipelining_spark.operators.graph import symmetrize, triangle_count
-
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.near_dup_pairs(docs)
-    edges = symmetrize(pairs, "doc_1", "doc_2", "src", "dst")
-    out = triangle_count(edges)
+    out = graph.triangle_count(graph.symmetrize(pairs))
     return out.select(F.col("id").alias("doc_id"), "triangles")
 
 
@@ -1413,17 +1378,7 @@ def q_dedup_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_dedup_impact() -> str:
     return f"""
 WITH RECURSIVE {_sql_near_dup_pairs()},
-edges AS (
-    SELECT doc_1 AS src, doc_2 AS dst FROM pairs
-    UNION ALL
-    SELECT doc_2, doc_1 FROM pairs
-),
-walk(doc_id, lbl) AS (
-    SELECT src, src FROM edges
-    UNION
-    SELECT e.src, w.lbl FROM edges e JOIN walk w ON e.dst = w.doc_id
-),
-comp AS (SELECT doc_id, min(lbl) AS cluster_id FROM walk GROUP BY doc_id),
+{dedup.duck_components()},
 labeled AS (
     SELECT d.source, d.n_chars,
            CASE WHEN d.doc_id != coalesce(c.cluster_id, d.doc_id)

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pyspark_pipelining_spark.money import cents
+from pyspark_pipelining_spark.operators import dedup, graph
 from pyspark_pipelining_spark.operators.dedup import duck_hash60
 from pyspark_pipelining_spark.queries_llm import _sql_near_dup_pairs
 from pyspark_pipelining_spark.sources.registry import load_table
@@ -30,8 +31,6 @@ def q_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/graph.lpa_communities): most-frequent neighbor label,
     (count desc, label asc) ties — deterministic where classic LPA is
     order-dependent; bounded rounds keep the oracle expressible."""
-    from pyspark_pipelining_spark.operators import dedup, graph
-
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.near_dup_pairs(docs)
     return graph.lpa_communities(pairs, rounds=LPA_ROUNDS)
@@ -44,23 +43,19 @@ def _sql_lpa() -> str:
         round_ctes.append(
             f"""l{r} AS (
     SELECT node, lbl FROM (
-        SELECT e.s AS node, l.lbl, count(*) AS cnt,
-               row_number() OVER (PARTITION BY e.s
+        SELECT e.src AS node, l.lbl, count(*) AS cnt,
+               row_number() OVER (PARTITION BY e.src
                                   ORDER BY count(*) DESC, l.lbl ASC) AS _rn
-        FROM edges e JOIN {prev} l ON e.d = l.node
-        GROUP BY e.s, l.lbl
+        FROM edges e JOIN {prev} l ON e.dst = l.node
+        GROUP BY e.src, l.lbl
     ) WHERE _rn = 1
 )"""
         )
         prev = f"l{r}"
     return f"""
 WITH {_sql_near_dup_pairs()},
-edges AS (
-    SELECT doc_1 AS s, doc_2 AS d FROM pairs
-    UNION ALL
-    SELECT doc_2, doc_1 FROM pairs
-),
-l0 AS (SELECT DISTINCT s AS node, s AS lbl FROM edges),
+{graph.duck_edges()},
+l0 AS (SELECT DISTINCT src AS node, src AS lbl FROM edges),
 {','.join(round_ctes)}
 SELECT node, lbl AS community FROM {prev} ORDER BY node
 """
@@ -481,80 +476,33 @@ ORDER BY event_type
 # ---------------------------------------------------------------------------
 
 
-def harmonic_2hop_from_edges(pairs: DataFrame) -> DataFrame:
-    """Radius-2 harmonic centrality over an undirected pair frame
-    ``(doc_1, doc_2)``: ``n1 + n2/2`` with n1 = direct neighbors,
-    n2 = nodes at distance exactly 2 (wedge equi-join keyed on the
-    middle node, then direct edges and self anti-joined away).
-
-    Scale bound (pinned by tests/test_properties.py): the radius cap
-    is STRUCTURAL — one wedge join can only reach distance ≤ 2, so
-    unlike iterative BFS there is no frontier growth to cap; the only
-    expansion is the wedge join, whose row count is exactly
-    Σ_mid deg(mid)² (degree-bounded, the triangle-counting shape), and
-    it collapses through distinct before the anti-join."""
-    from pyspark_pipelining_spark.operators.graph import symmetrize
-
-    edges = symmetrize(pairs).localCheckpoint(eager=True)
-    deg = edges.groupBy("s").agg(F.count(F.lit(1)).alias("n1"))
-    two = (
-        edges.alias("e1")
-        .join(edges.select(F.col("s").alias("d"), F.col("d").alias("d2")).alias("e2"), "d")
-        .select(F.col("s"), F.col("d2"))
-        .filter(F.col("s") != F.col("d2"))
-        .distinct()
-        .join(edges.select("s", F.col("d").alias("d2")), ["s", "d2"], "left_anti")
-        .groupBy("s")
-        .agg(F.count(F.lit(1)).alias("n2"))
-    )
-    return (
-        deg.join(two, "s", "left")
-        .select(
-            F.col("s").alias("node"),
-            "n1",
-            F.coalesce("n2", F.lit(0)).alias("n2"),
-            F.round(
-                F.col("n1") + F.coalesce("n2", F.lit(0)) / F.lit(2.0), 6
-            ).alias("harmonic_2"),
-        )
-        .orderBy("node")
-    )
-
-
 def q_harmonic_2hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Harmonic centrality truncated at radius 2 over the near-dup
-    graph (:func:`harmonic_2hop_from_edges`).  Bounded-radius
+    graph (:func:`graph.harmonic_2hop`).  Bounded-radius
     centrality is the scale form — full BFS centralities are O(nm);
     two hops is two node-keyed joins."""
-    from pyspark_pipelining_spark.operators import dedup
-
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.near_dup_pairs(docs)
-    return harmonic_2hop_from_edges(pairs)
+    return graph.harmonic_2hop(dedup.near_dup_pairs(docs))
 
 
 def _sql_harmonic() -> str:
     return f"""
 WITH {_sql_near_dup_pairs()},
-edges AS (
-    SELECT doc_1 AS s, doc_2 AS d FROM pairs
-    UNION ALL
-    SELECT doc_2, doc_1 FROM pairs
-),
-deg AS (SELECT s, CAST(count(*) AS BIGINT) AS n1 FROM edges GROUP BY s),
+{graph.duck_edges()},
+deg AS (SELECT src, CAST(count(*) AS BIGINT) AS n1 FROM edges GROUP BY src),
 two AS (
-    SELECT t.s, CAST(count(*) AS BIGINT) AS n2 FROM (
-        SELECT DISTINCT e1.s, e2.d AS d2
-        FROM edges e1 JOIN edges e2 ON e1.d = e2.s
-        WHERE e1.s != e2.d
+    SELECT t.src, CAST(count(*) AS BIGINT) AS n2 FROM (
+        SELECT DISTINCT e1.src, e2.dst AS d2
+        FROM edges e1 JOIN edges e2 ON e1.dst = e2.src
+        WHERE e1.src != e2.dst
     ) t
-    LEFT JOIN edges x ON t.s = x.s AND t.d2 = x.d
-    WHERE x.s IS NULL
-    GROUP BY t.s
+    LEFT JOIN edges x ON t.src = x.src AND t.d2 = x.dst
+    WHERE x.src IS NULL
+    GROUP BY t.src
 )
-SELECT deg.s AS node, n1, coalesce(n2, 0) AS n2,
+SELECT deg.src AS node, n1, coalesce(n2, 0) AS n2,
        round(n1 + coalesce(n2, 0) / 2.0, 6) AS harmonic_2
-FROM deg LEFT JOIN two ON deg.s = two.s
+FROM deg LEFT JOIN two ON deg.src = two.src
 ORDER BY node
 """
 

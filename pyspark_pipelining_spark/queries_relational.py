@@ -1024,14 +1024,14 @@ def q_trailing_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "user_id",
         F.unix_micros("ts").alias("ts_us"),
-        F.sum(F.col("value").cast(D)).over(w).cast("double").alias("trail_value"),
+        money_sum("value", over=w).alias("trail_value"),
         F.count(F.lit(1)).over(w).alias("trail_events"),
     )
 
 
 SQL_TRAILING_USER_VALUE = f"""
 SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-       CAST(sum(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE) AS trail_value,
+       {duck_money_sum("value", over="w")} AS trail_value,
        count(*) OVER w AS trail_events
 FROM events
 WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)

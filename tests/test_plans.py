@@ -798,6 +798,37 @@ def test_rebuilt_query_runs_no_jobs(spark):
     assert jobs == 0
 
 
+@pytest.mark.quick
+def test_pagerank_build_runs_no_driver_action(spark, tmp_path, monkeypatch):
+    """Integer PageRank builds its whole plan without a driver action:
+    the node count is a lazy 1-row crossJoin and the rounds run
+    through ``iterate``'s fixed mode.  Building it over a parquet edge
+    frame calls no DataFrame action.  (The build still runs Spark jobs:
+    under AQE each lazily checkpointed round materializes its shuffle
+    stages when the checkpoint is planned, so a job count cannot tell
+    an action from the loop itself.)"""
+    from pyspark.sql import DataFrame
+
+    from pyspark_pipelining_spark.operators import graph
+
+    path = str(tmp_path / "edges.parquet")
+    pairs = [(0, i) for i in range(1, 5)]
+    spark.createDataFrame(pairs + [(b, a) for a, b in pairs], "src long, dst long").write.parquet(
+        path
+    )
+    edges = spark.read.parquet(path)
+
+    def refuse(self, *args, **kwargs):
+        raise AssertionError("driver action while building pagerank_int")
+
+    with monkeypatch.context() as m:
+        for action in ("collect", "count", "first", "take", "head", "toPandas", "toLocalIterator"):
+            m.setattr(type(edges), action, refuse)
+        out = graph.pagerank_int(edges)
+    assert isinstance(out, DataFrame)
+    assert out.count() == 5
+
+
 def test_tfidf_cosine_postings_are_cached_for_reuse(spark):
     """The postings table feeds the norm fold plus BOTH sides of the
     pair join — it must come from the persisted handle

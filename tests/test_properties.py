@@ -1076,7 +1076,7 @@ def test_harmonic_2hop_matches_bfs_model_and_wedge_bound(spark):
 
     from pyspark.sql import functions as F
 
-    from pyspark_pipelining_spark.queries_mining import harmonic_2hop_from_edges
+    from pyspark_pipelining_spark.operators.graph import harmonic_2hop
 
     # path 1-2-3-4-5 (distance(1,4)=3, distance(1,5)=4) + a branch with
     # a cycle (1-6-7-2) so some 2-hop targets are reachable twice
@@ -1084,7 +1084,7 @@ def test_harmonic_2hop_matches_bfs_model_and_wedge_bound(spark):
     pairs = spark.createDataFrame(pairs_list, "doc_1 bigint, doc_2 bigint")
     got = {
         r["node"]: (r["n1"], r["n2"], r["harmonic_2"])
-        for r in harmonic_2hop_from_edges(pairs).collect()
+        for r in harmonic_2hop(pairs).collect()
     }
     adj = collections.defaultdict(set)
     for a, b in pairs_list:

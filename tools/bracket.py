@@ -7,8 +7,9 @@ outlier can be settled with one command instead of an ad-hoc script:
         [--sf SF_DIR]
 
 Methodology (``runner.timed_runs``, the same loop as bench.py): one
-untimed warm-up execution per query, then N timed repeats to a noop
-sink; persist handles and the session cache dropped between repeats;
+untimed warm-up execution of every listed query before the first timed
+repeat, so the first-listed query's median carries no more JVM warm-up
+than the others', then N timed repeats per query to a noop sink; persist handles and the session cache dropped between repeats;
 ambient load recorded BEFORE the JVM starts (the run itself drives
 load up afterwards).  Prints per-query times, median, and [min, max] —
 compare a disputed number against the bracket, and check the ambient
@@ -44,8 +45,10 @@ def main(argv: list[str]) -> int:
     spark = runner.session("bracket")
     spark.read.parquet(f"{args.sf}/region.parquet").count()
     print(f"ambient load1/load5 before JVM: {ambient}")
+    for fn in queries.values():
+        runner.timed_runs(spark, fn, args.sf, 0)
     for name, fn in queries.items():
-        times = runner.timed_runs(spark, fn, args.sf, args.reps)
+        times = runner.timed_runs(spark, fn, args.sf, args.reps, warmups=0)
         print(
             f"{name}: {times} median={statistics.median(times):.3f}"
             f" bracket=[{min(times):.3f}, {max(times):.3f}]"
