@@ -810,6 +810,7 @@ def test_pagerank_build_runs_no_driver_action(spark, tmp_path, monkeypatch):
     from pyspark.sql import DataFrame
 
     from pyspark_pipelining_spark.operators import graph
+    from tests.test_operator_actions import ACTIONS
 
     path = str(tmp_path / "edges.parquet")
     pairs = [(0, i) for i in range(1, 5)]
@@ -822,7 +823,7 @@ def test_pagerank_build_runs_no_driver_action(spark, tmp_path, monkeypatch):
         raise AssertionError("driver action while building pagerank_int")
 
     with monkeypatch.context() as m:
-        for action in ("collect", "count", "first", "take", "head", "toPandas", "toLocalIterator"):
+        for action in ACTIONS:
             m.setattr(type(edges), action, refuse)
         out = graph.pagerank_int(edges)
     assert isinstance(out, DataFrame)
