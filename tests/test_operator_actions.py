@@ -13,8 +13,8 @@ the Spark-side ``md5 → substring → conv`` hash has one home,
 bit for bit (the hash, the exact-cents sum and cast, the cosine and its
 rank, the blob file name, the little-endian byte read, the WAV features,
 the PNG channel stats, the graph edge table and its component walk) has
-one renderer.  The media family's Spark
-halves are pinned the same way: one WAV fold, one PNG decode shell."""
+one renderer.  The media family's Spark halves are pinned the same way:
+one WAV fold, one PNG decode shell."""
 
 from __future__ import annotations
 
