@@ -9,9 +9,10 @@ outlier can be settled with one command instead of an ad-hoc script:
 Methodology (``runner.timed_runs``, the same loop as bench.py): one
 untimed warm-up execution of every listed query before the first timed
 repeat, so the first-listed query's median carries no more JVM warm-up
-than the others', then N timed repeats per query to a noop sink; persist handles and the session cache dropped between repeats;
-ambient load recorded BEFORE the JVM starts (the run itself drives
-load up afterwards).  Prints per-query times, median, and [min, max] —
+than the others', then N timed repeats per query to a noop sink;
+persist handles and the session cache dropped between repeats; ambient
+load recorded BEFORE the JVM starts (the run itself drives load up
+afterwards).  Prints per-query times, median, and [min, max] —
 compare a disputed number against the bracket, and check the ambient
 load before reading anything into a level shift.  Unknown query names
 exit 2.
